@@ -16,6 +16,7 @@ schema contract here does not change.
 from __future__ import annotations
 
 import os
+import re
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,7 +81,7 @@ _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 _BYTE_SUFFIX = {
-    "b": 1, "k": 1024, "kb": 1024, "m": 1024**2, "mb": 1024**2,
+    "": 1, "b": 1, "k": 1024, "kb": 1024, "m": 1024**2, "mb": 1024**2,
     "g": 1024**3, "gb": 1024**3, "t": 1024**4, "tb": 1024**4,
     "p": 1024**5, "pb": 1024**5,
 }
@@ -88,16 +89,15 @@ _BYTE_SUFFIX = {
 
 def _byte_string_as_bytes(value: str) -> int:
     """Parse a Spark byte-size conf string ("128m", "1g", "134217728")
-    with JavaUtils.byteStringAsBytes semantics: binary (1024-based)
-    suffixes b/k/m/g/t/p (optionally with a trailing 'b'). The
-    previous string-replace shortcut read "128m" as 128e6 (~4.6%
-    under the real 134217728) and raised on "1g"."""
-    s = value.strip().lower()
-    i = len(s)
-    while i > 0 and not s[i - 1].isdigit():
-        i -= 1
-    num, suffix = s[:i], s[i:].strip()
-    return int(num) * _BYTE_SUFFIX.get(suffix, 1)
+    with JavaUtils.byteStringAsBytes semantics: a non-negative integer
+    with an optional binary (1024-based) suffix b/k/m/g/t/p, optionally
+    with a trailing 'b'. Like the JVM parser it raises ValueError on an
+    unknown suffix ("128x"), a sign ("-1g") or a fraction ("1.5g"),
+    rather than reading a misconfigured size as some other size."""
+    m = re.fullmatch(r"([0-9]+)([a-z]*)", value.strip().lower())
+    if m is None or m.group(2) not in _BYTE_SUFFIX:
+        raise ValueError(f"invalid byte-size string: {value!r}")
+    return int(m.group(1)) * _BYTE_SUFFIX[m.group(2)]
 
 
 def invalidate_table_memo(spark: SparkSession | None = None) -> None:

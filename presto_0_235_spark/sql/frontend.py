@@ -48,6 +48,7 @@ DATE/TIMESTAMP literals, TRY_CAST.
 
 from __future__ import annotations
 
+import functools
 import re
 import weakref
 
@@ -6009,9 +6010,16 @@ def _rewrite_order_by_window(masked: str) -> str:
             f"{masked[ob_end:].strip()}").strip()
 
 
+@functools.lru_cache(maxsize=1024)
 def presto_to_spark_sql(sql: str) -> str:
     """Source-level Presto->Spark SQL dialect translation (quote- and
-    comment-aware: rewrites never touch literals)."""
+    comment-aware: rewrites never touch literals).
+
+    Memoized: the translation is a pure function of the text (no pass
+    reads a session, the clock or mutable module state), and an
+    interactive client resends the same statements, whose rewrite
+    passes cost ~15 ms each time. Rejected texts are not cached, so
+    each call raises again."""
     # NUL is never legal in SQL (SqlBase.g4 has no rule producing it)
     # but it IS the mask-placeholder delimiter below — a literal NUL
     # in hostile input could forge a placeholder and crash _unmask.

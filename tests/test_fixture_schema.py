@@ -129,8 +129,19 @@ def test_byte_string_parsing():
     assert _byte_string_as_bytes("128m") == 128 * 1024**2
     assert _byte_string_as_bytes("128mb") == 128 * 1024**2
     assert _byte_string_as_bytes("1g") == 1024**3
+    assert _byte_string_as_bytes("1gb") == 1024**3
     assert _byte_string_as_bytes("512k") == 512 * 1024
     assert _byte_string_as_bytes("2b") == 2
+
+
+@pytest.mark.parametrize("bad", ["128x", "-1g", "1.5g", "", "g"])
+def test_byte_string_rejects_malformed(bad):
+    """A misconfigured size fails loudly, as JavaUtils.byteStringAsBytes
+    does, instead of being read as another size ("128x" as 128)."""
+    from presto_0_235_spark.catalog import _byte_string_as_bytes
+
+    with pytest.raises(ValueError):
+        _byte_string_as_bytes(bad)
 
 
 def test_table_memo_per_session_and_invalidation(spark):

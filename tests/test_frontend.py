@@ -250,6 +250,23 @@ def test_nul_handling_split_by_position():
         presto_to_spark_sql('SELECT "we\x00ird" FROM t')
 
 
+def test_translation_memoized_rejections_not():
+    """A repeated text is a cache hit returning the identical string;
+    a rejected text raises on every call, never cached as a result."""
+    from presto_0_235_spark.sql.frontend import NulInLiteralError
+
+    sql = "SELECT TRY(a / b) AS memo_probe FROM t"
+    first = presto_to_spark_sql(sql)
+    hits = presto_to_spark_sql.cache_info().hits
+    assert presto_to_spark_sql(sql) is first
+    assert presto_to_spark_sql.cache_info().hits == hits + 1
+    for _ in range(2):
+        with pytest.raises(ValueError, match="DECIMAL precision"):
+            presto_to_spark_sql("SELECT CAST(x AS DECIMAL(0))")
+        with pytest.raises(NulInLiteralError):
+            presto_to_spark_sql("SELECT 'memo\x00probe'")
+
+
 def test_url_fn_rewrites():
     from presto_0_235_spark.sql.frontend import presto_to_spark_sql as p2s
 

@@ -4,7 +4,11 @@ For every headline bench query: capture .explain("formatted") to
 plans/r17/<name>_<tag>.txt, and split the wall clock into BUILD
 (builder() call: catalog reads + plan construction, driver-side) vs
 EXEC (noop-sink write) for three runs each, plus job/stage counts so
-plan-shape changes (extra AQE rounds, extra jobs) are attributable.
+plan-shape changes (extra AQE rounds, extra jobs) are attributable,
+and the Janino compilations and compile time each run paid (Spark's
+CodegenMetrics / CodeGenerator.compileTime): after the first run a
+query whose classes stay in the codegen cache compiles nothing, so a
+non-zero warm count flags a cache too small for the working set.
 
 Usage: python tools/profile_bench.py [tag]     (tag default: before)
 Writes plans/r17/*_<tag>.txt and prints one JSON line per query.
@@ -46,6 +50,14 @@ def main() -> None:
         shuffle_partitions=int(cpus) if cpus.isdigit() else 8,
     )
     sc = spark.sparkContext
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    compile_hist = (spark._jvm.org.apache.spark.metrics.source
+                    .CodegenMetrics.METRIC_COMPILATION_TIME())
+
+    def compile_stats() -> tuple[int, int]:
+        """(classes compiled, total compile ns) since the JVM started."""
+        return (compile_hist.getCount(),
+                codegen.CodeGenerator.compileTime())
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r18"))
@@ -64,9 +76,10 @@ def main() -> None:
             v = sc._jsc.sc().dagScheduler().nextJobId()
             return v if isinstance(v, int) else v.get()
 
-        builds, execs, jobs = [], [], []
+        builds, execs, jobs, compiles, compile_ms = [], [], [], [], []
         df = None
         for i in range(3):
+            c0, ns0 = compile_stats()
             t0 = time.perf_counter()
             df = q.builder(spark, sf_dir)
             t1 = time.perf_counter()
@@ -74,9 +87,12 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             j1 = next_job_id()
+            c1, ns1 = compile_stats()
             builds.append(round(t1 - t0, 4))
             execs.append(round(t2 - t1, 4))
             jobs.append(j1 - j0)
+            compiles.append(c1 - c0)
+            compile_ms.append(round((ns1 - ns0) / 1e6, 1))
         # capture the formatted plan of the last-built DataFrame
         try:
             plan = df._jdf.queryExecution().explainString(
@@ -92,6 +108,7 @@ def main() -> None:
             f.write(plan)
         rec = {
             "build": builds, "exec": execs, "jobs_per_run": jobs,
+            "compiles_per_run": compiles, "compile_ms_per_run": compile_ms,
             "best_total": round(min(b + e for b, e in
                                     zip(builds[1:], execs[1:])), 4),
         }
