@@ -14,8 +14,6 @@ nothing here changes plan shape vs the DataFrame twins.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 
 from presto_0_235_spark.catalog import register_views
@@ -2575,39 +2573,6 @@ LIMIT 100
 """
 
 
-def _run_with_materialized_cte(spark, sql: str, cte: str) -> DataFrame:
-    """Engine-side CTE materialization (guide §2.4). Spark inlines a
-    CTE once per reference, re-executing its whole subplan — for a
-    CTE referenced from several FROM positions that is 2-6 redundant
-    executions of a join+aggregate. Split the FIRST CTE (must be
-    ``cte``) out of the text, compute it once into a persisted temp
-    view REGISTERED UNDER THE CTE'S OWN NAME (so the remainder needs
-    no rewriting and resolves identically), and run the remainder.
-    Values are bit-identical: the CTE body text is unchanged and its
-    rows are computed once instead of per-reference. The oracle
-    keeps the original single text (DuckDB materializes CTEs
-    itself). The persisted relation is always an AGGREGATE (one row
-    per group key), never a fact table — scale-safe to cache."""
-    m = re.match(rf"\s*WITH\s+{cte}\s+AS\s*\(", sql)
-    assert m, f"first CTE is not {cte}"
-    i = m.end() - 1
-    depth = 0
-    for j in range(i, len(sql)):
-        if sql[j] == "(":
-            depth += 1
-        elif sql[j] == ")":
-            depth -= 1
-            if depth == 0:
-                break
-    body = sql[i + 1:j]
-    rest = sql[j + 1:].lstrip()
-    if rest.startswith(","):
-        rest = "WITH " + rest[1:].lstrip()
-    df = run_sql(spark, body).persist()
-    df.createOrReplaceTempView(cte)
-    return run_sql(spark, rest)
-
-
 @register("sql_tpcds_q11", oracle=_SQL_TPCDS_Q11)
 def sql_tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-DS Q11's text shape — the year-over-year customer ratio:
@@ -2615,15 +2580,12 @@ def sql_tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     comma-list self-join pinned to consecutive years, keeping
     customers whose second-year/first-year ratio clears a threshold
     (.../tpcds/q11.sql role-mapped onto orders; Q4 is the same
-    skeleton with three channels). r18: the engine materializes
-    year_total ONCE (_run_with_materialized_cte — Spark inlined it
-    per reference before); the oracle keeps the single text. the self-join shuffles on
+    skeleton with three channels). The self-join shuffles on
     customer_id — co-partitioned at 100 TB. Names are unique per
     custkey so ORDER BY customer_name LIMIT is total. Same text is
     the oracle."""
     register_views(spark, sf_dir)
-    return _run_with_materialized_cte(
-        spark, _SQL_TPCDS_Q11, "year_total")
+    return run_sql(spark, _SQL_TPCDS_Q11)
 
 
 _SQL_TPCDS_Q16 = """
@@ -2710,7 +2672,7 @@ def sql_tpcds_q47(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-eligible at any scale. ORDER BY the full grouping key
     is total. Same text is the oracle."""
     register_views(spark, sf_dir)
-    return _run_with_materialized_cte(spark, _SQL_TPCDS_Q47, "v1")
+    return run_sql(spark, _SQL_TPCDS_Q47)
 
 
 _SQL_TPCDS_Q34 = """
@@ -3047,27 +3009,25 @@ WHERE year(o_orderdate) = 1996
 """
 
 
-# The per-customer sales aggregate both max_sales and best_customers
-# derive from — the engine computes it ONCE (below); spelling is
-# verbatim from the CTE so every double is bit-identical.
-_SQL_TPCDS_Q23_CSALES = """
-SELECT o_custkey, CAST(SUM(CAST(round(l_extendedprice * 100)
-       AS BIGINT)) AS DOUBLE) / 100 AS csales
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY o_custkey
-"""
-
-_SQL_TPCDS_Q23_MAIN = """
+# The oracle's shape with its per-customer sales aggregate, spelled
+# verbatim, named once as a CTE that run_sql computes once.
+_SQL_TPCDS_Q23_ENGINE = """
 WITH frequent_items AS (
   SELECT l_partkey AS item_sk
   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
   GROUP BY l_partkey
   HAVING count(DISTINCT CAST(o_orderdate AS DATE)) > 2
 ),
+csales AS (
+  SELECT o_custkey, CAST(SUM(CAST(round(l_extendedprice * 100)
+         AS BIGINT)) AS DOUBLE) / 100 AS csales
+  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  GROUP BY o_custkey
+),
 best_customers AS (
   SELECT o_custkey AS c_sk
-  FROM __q23_csales
-  WHERE csales > 0.5 * (SELECT max(csales) FROM __q23_csales)
+  FROM csales
+  WHERE csales > 0.5 * (SELECT max(csales) FROM csales)
 )
 SELECT round(CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
              AS DOUBLE) / 100, 2) AS sales
@@ -3087,22 +3047,9 @@ def sql_tpcds_q23(spark: SparkSession, sf_dir: str) -> DataFrame:
     subqueries (.../tpcds/q23_1.sql role-mapped onto lineitem/
     orders). The scalar max broadcasts into the HAVING; the two IN
     sets semi-join on their own grouped keys. Exact-cents money
-    end-to-end. The oracle keeps the original single text.
-
-    r18 (guide §2.4): Spark inlines a CTE referenced from two places,
-    so the original text executed the lineitem-orders join FOUR times
-    (16 parquet scans in the plan) and the per-customer sales
-    aggregate TWICE (max_sales and best_customers differ only in
-    what they do with csales). The engine now materializes csales
-    once (persisted per-customer aggregate — scale-safe: one row per
-    customer, never the fact table) and derives both consumers from
-    it; values are bit-identical because the csales spelling is
-    verbatim and max/compare are deterministic over the same rows.
-    Differential green at all three SFs."""
+    end-to-end. The oracle keeps the original single text."""
     register_views(spark, sf_dir)
-    csales = run_sql(spark, _SQL_TPCDS_Q23_CSALES).persist()
-    csales.createOrReplaceTempView("__q23_csales")
-    return run_sql(spark, _SQL_TPCDS_Q23_MAIN)
+    return run_sql(spark, _SQL_TPCDS_Q23_ENGINE)
 
 
 @register(
@@ -3618,14 +3565,10 @@ def sql_tpcds_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     (store/catalog/web -> three order-priority slices) consumed SIX
     times in one self-join, keeping customers whose second-year ratio
     improves in the catalog channel over BOTH other channels
-    (.../tpcds/q04.sql role-mapped; money rides exact cents). r18:
-    the engine materializes year_total ONCE — Spark inlined the
-    3-branch union per reference, executing it SIX times (13 jobs)
-    — and the six references read the persisted per-(customer,
-    year) aggregate. The oracle keeps the single text."""
+    (.../tpcds/q04.sql role-mapped; money rides exact cents). Same
+    text is the oracle."""
     register_views(spark, sf_dir)
-    return _run_with_materialized_cte(
-        spark, _SQL_TPCDS_Q4_R15, "year_total")
+    return run_sql(spark, _SQL_TPCDS_Q4_R15)
 
 
 _SQL_TPCDS_Q30_R15 = """
@@ -5001,39 +4944,30 @@ ORDER BY cs1.product_name, cs1.cnt, cs2.s1
 LIMIT 100
 """
 
-# cross_sales (including its cs_ui cohort gate), verbatim from the
-# CTE text above — the engine materializes it once (below).
-_SQL_TPCDS_Q64_CROSS_SALES = """
-WITH cs_ui AS (
-  SELECT l_orderkey,
-         SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS sale,
-         SUM(CASE WHEN l_returnflag = 'R'
-                  THEN CAST(round(l_extendedprice * 100) AS BIGINT)
-                  ELSE 0 END) AS refund
+# The oracle text with its once-read cs_ui gate inlined, so run_sql can
+# compute cross_sales, which then reads no earlier CTE, once.
+_SQL_TPCDS_Q64_ENGINE = """
+WITH cross_sales AS (
+  SELECT p_name AS product_name, p_partkey AS item_sk,
+         year(CAST(o_orderdate AS DATE)) AS syear,
+         count(*) AS cnt,
+         SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS s1
   FROM lineitem
-  GROUP BY l_orderkey
-  HAVING SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) >
-         2 * SUM(CASE WHEN l_returnflag = 'R'
-                      THEN CAST(round(l_extendedprice * 100) AS BIGINT)
-                      ELSE 0 END)
+  JOIN orders ON l_orderkey = o_orderkey
+  JOIN part ON l_partkey = p_partkey
+  WHERE l_orderkey IN (
+    SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
+    HAVING SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) >
+           2 * SUM(CASE WHEN l_returnflag = 'R'
+                        THEN CAST(round(l_extendedprice * 100) AS BIGINT)
+                        ELSE 0 END))
+    AND p_retailprice BETWEEN 900 AND 1100
+  GROUP BY p_name, p_partkey, year(CAST(o_orderdate AS DATE))
 )
-SELECT p_name AS product_name, p_partkey AS item_sk,
-       year(CAST(o_orderdate AS DATE)) AS syear,
-       count(*) AS cnt,
-       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS s1
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN part ON l_partkey = p_partkey
-WHERE l_orderkey IN (SELECT l_orderkey FROM cs_ui)
-  AND p_retailprice BETWEEN 900 AND 1100
-GROUP BY p_name, p_partkey, year(CAST(o_orderdate AS DATE))
-"""
-
-_SQL_TPCDS_Q64_MAIN = """
 SELECT cs1.product_name, cs1.cnt AS cnt1, cs2.cnt AS cnt2,
        CAST(cs1.s1 AS DOUBLE) / 100 AS s1,
        CAST(cs2.s1 AS DOUBLE) / 100 AS s2
-FROM __q64_cross_sales cs1, __q64_cross_sales cs2
+FROM cross_sales cs1, cross_sales cs2
 WHERE cs1.item_sk = cs2.item_sk
   AND cs1.syear = 1998 AND cs2.syear = 1999
   AND cs2.cnt <= cs1.cnt
@@ -5050,19 +4984,9 @@ def sql_tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
     (.../tpcds/q64.sql role-mapped and reduced to its load-bearing
     joins; the original's twelve-dimension chain adds lookups, not plan
     shape). The cohort IN-gate plans as a semi-join on the order key.
-    The oracle keeps the original single text.
-
-    r18 (guide §2.4, same move as sql_tpcds_q23): Spark inlines the
-    twice-referenced cross_sales CTE, executing the whole
-    cohort-gated 3-way join + aggregate twice (10 parquet scans).
-    The engine materializes cross_sales once (persisted per-(item,
-    year) aggregate — scale-safe, never the fact table) and
-    self-joins the cached table; spellings are verbatim, values
-    bit-identical, differential green at all three SFs."""
+    The oracle keeps the original single text."""
     register_views(spark, sf_dir)
-    cs = run_sql(spark, _SQL_TPCDS_Q64_CROSS_SALES).persist()
-    cs.createOrReplaceTempView("__q64_cross_sales")
-    return run_sql(spark, _SQL_TPCDS_Q64_MAIN)
+    return run_sql(spark, _SQL_TPCDS_Q64_ENGINE)
 
 
 _SQL_TPCDS_Q76_R15 = """
@@ -5597,8 +5521,7 @@ def sql_tpcds_q57(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling). The rank self-joins co-partition on (supplier, brand).
     Same text is the oracle."""
     register_views(spark, sf_dir)
-    return _run_with_materialized_cte(
-        spark, _SQL_TPCDS_Q57_R15, "v1")
+    return run_sql(spark, _SQL_TPCDS_Q57_R15)
 
 
 # ---- r15 twin batch 7 (#85-99): completes the program --------------
@@ -5885,8 +5808,7 @@ def sql_tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
     year_total CTE consumed twice a year apart with the ratio threshold
     (.../tpcds/q74.sql role-mapped). Same text is the oracle."""
     register_views(spark, sf_dir)
-    return _run_with_materialized_cte(
-        spark, _SQL_TPCDS_Q74_R15, "year_total")
+    return run_sql(spark, _SQL_TPCDS_Q74_R15)
 
 
 _SQL_TPCDS_Q79_R15 = """

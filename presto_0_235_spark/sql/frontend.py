@@ -44,12 +44,19 @@ transformation):
 Already identical in both grammars (verified, no rewrite): lambda
 syntax `x -> e`, aggregate FILTER (WHERE ...), INTERVAL literals,
 DATE/TIMESTAMP literals, TRY_CAST.
+
+Shared CTEs: Spark inlines a CTE once per read, so run_sql computes a
+top-level WITH-list CTE read two or more times once, from its
+translated body, persisted (split_shared_ctes). A body that reads an
+earlier CTE or holds its own WITH stays inline: Spark 4.1 does not
+match a cached plan holding a WITH inside a statement that has one.
 """
 
 from __future__ import annotations
 
 import functools
 import re
+import uuid
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -7345,12 +7352,82 @@ def _annotate_numeric_columns_inner(spark, sql: str) -> str:
     return _unmask("".join(out_parts), stash)
 
 
+_CTE_TOKEN = re.compile(r"`(?:[^`]|``)*`|\w+|[(),.]")
+# A comma continues a table list only while the clause it sits in is FROM
+_CTE_CLAUSES = frozenset(
+    "WITH SELECT FROM WHERE GROUP HAVING ORDER SORT CLUSTER DISTRIBUTE LIMIT"
+    " OFFSET WINDOW QUALIFY UNION INTERSECT EXCEPT MINUS VALUES".split())
+
+
+@functools.lru_cache(maxsize=1024)
+def split_shared_ctes(sql: str) -> tuple[str, ...]:
+    """Cut ``sql`` around the bodies of the shared CTEs (module
+    docstring): odd-indexed pieces are those bodies. A read is a table
+    reference (after FROM, JOIN or a FROM-list comma, not ``t.name``)
+    after the CTE. WITH RECURSIVE is left alone."""
+    code = "".join(t if k == "code" else " " * len(t) for k, t in _scan(sql))
+    toks = [(m.start(), m.group().strip("`").upper())
+            for m in _CTE_TOKEN.finditer(code)]
+    words = [w for _, w in toks] + ["", ""]
+    match, stack = {}, []
+    for k, w in enumerate(words):
+        if w == "(":
+            stack.append(k)
+        elif w == ")" and stack:
+            match[stack.pop()] = k
+    ctes, k = [], 0  # (name, index of "(", index of ")") per CTE
+    while words[k] == ("WITH" if k == 0 else ","):
+        name, k = words[k + 1], k + 2
+        if words[k] == "(" and k in match:  # column aliases
+            k = match[k] + 1
+        if words[k] != "AS" or k + 1 not in match:
+            return (sql,)
+        ctes.append((name, k + 1, match[k + 1]))
+        k = match[k + 1] + 1
+    index = {name: c for c, (name, _, _) in enumerate(ctes)}
+    reads, inline, clause = [], set(), [""]  # inline: bodies kept inline
+    for k, w in enumerate(words[:len(toks)]):
+        owner = next((c for c, (_, lo, hi) in enumerate(ctes)
+                      if lo < k < hi), None)
+        c = index.get(w)
+        if w == "(":
+            clause.append("")
+        elif w == ")" and len(clause) > 1:
+            clause.pop()
+        elif w in _CTE_CLAUSES:
+            # EXTRACT(f FROM x) and TRIM(c FROM s) name no table
+            clause[-1] = w if w != "FROM" or clause[-1] == "SELECT" else ""
+            if w == "WITH":
+                inline.add(owner)
+        elif c is not None and k > ctes[c][2] and words[k + 1] != "." and (
+                words[k - 1] == "JOIN" or clause[-1] == "FROM"
+                and words[k - 1] in ("FROM", ",")):
+            reads.append(c)
+            inline.add(owner)
+    cuts = [0, *(p for c, (_, lo, hi) in enumerate(ctes)
+                 if reads.count(c) >= 2 and c not in inline
+                 for p in (toks[lo][0] + 1, toks[hi][0])), len(sql)]
+    return tuple(sql[a:b] for a, b in zip(cuts, cuts[1:]))
+
+
 def run_sql(spark: SparkSession, sql: str) -> DataFrame:
-    """Execute Presto-dialect SQL against the registered catalog."""
+    """Execute Presto-dialect SQL against the registered catalog. The
+    views of the shared CTEs are dropped once the statement is analyzed,
+    via the session catalog, which (unlike spark.catalog) keeps the
+    cache."""
     ensure_session_defaults(spark)
     _ensure_sql_udfs(spark)
     routed = _route_geo_aggregate(spark, sql)
     if routed is not None:
         return routed
-    return spark.sql(presto_to_spark_sql(
-        _annotate_numeric_columns(spark, sql)))
+    pieces = list(split_shared_ctes(presto_to_spark_sql(
+        _annotate_numeric_columns(spark, sql))))
+    views = [f"__cte_{uuid.uuid4().hex}" for _ in pieces[1::2]]
+    try:
+        for i, view in enumerate(views):
+            spark.sql(pieces[2 * i + 1]).persist().createTempView(view)
+            pieces[2 * i + 1] = f"SELECT * FROM {view}"
+        return spark.sql("".join(pieces))
+    finally:
+        for view in views:
+            spark._jsparkSession.sessionState().catalog().dropTempView(view)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -488,6 +489,50 @@ def test_multi_consumer_aggregates_scan_fact_once(
             f"{name}: {n_li} lineitem scans vs {n_cache} cached relations "
             f"— a consumer bypassed the persisted aggregate\n{plan}"
         )
+    finally:
+        spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize(
+    "name,fact,cache_uses,uncached_fact_reads",
+    [
+        ("sql_tpcds_q4", "orders", 6, 0),
+        ("sql_tpcds_q11", "orders", 2, 0),
+        # the final fact scan and frequent_items read lineitem directly
+        ("sql_tpcds_q23", "lineitem", 2, 2),
+        ("sql_tpcds_q47", "lineitem", 3, 0),
+        ("sql_tpcds_q57", "lineitem", 3, 0),
+        ("sql_tpcds_q64", "lineitem", 2, 0),
+        ("sql_tpcds_q74", "orders", 2, 0),
+        ("sql_tpcds_q1", "orders", 2, 0),
+        ("sql_tpcds_q24", "lineitem", 2, 0),
+        ("sql_tpcds_q30", "lineitem", 2, 0),
+        ("sql_tpcds_q31", "orders", 4, 0),
+        ("sql_tpcds_q39", "lineitem", 2, 0),
+        ("sql_tpcds_q59", "lineitem", 2, 0),
+        ("sql_tpcds_q75", "lineitem", 2, 0),
+        ("sql_tpcds_q77", "lineitem", 4, 0),
+        ("sql_tpcds_q81", "lineitem", 2, 0),
+    ],
+)
+def test_shared_ctes_read_the_cache(
+    spark, sf_dir, name, fact, cache_uses, uncached_fact_reads
+):
+    """run_sql computes a WITH-list CTE read two or more times once
+    (frontend.split_shared_ctes): each read of it is an
+    InMemoryRelation, and the fact table it aggregates is scanned
+    inside the cached plan, not again beside it. In the optimized plan
+    a cached plan prints FileScans with their paths, while a direct
+    read prints as a logical ``Relation [<columns>]``."""
+    spark.catalog.clearCache()
+    try:
+        df = _QUERIES[name].builder(spark, sf_dir)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        prefix = spark.table(fact).columns[0].split("_")[0]
+        assert plan.count("InMemoryRelation") >= cache_uses, plan
+        assert f"/{fact}.parquet" in plan, plan
+        assert len(re.findall(rf"\bRelation \[{prefix}_", plan)) \
+            == uncached_fact_reads, plan
     finally:
         spark.catalog.clearCache()
 

@@ -20,6 +20,9 @@ HEADLINE = [
     "win_topn_per_group", "dedup_exact", "dedup_minhash_lsh",
     "ann_cosine_topk", "text_quality_score", "pipeline_corpus_dedup",
     "stream_tumbling_agg",
+    # the shared-CTE twins (frontend.split_shared_ctes)
+    "sql_tpcds_q4", "sql_tpcds_q11", "sql_tpcds_q23", "sql_tpcds_q47",
+    "sql_tpcds_q57", "sql_tpcds_q64", "sql_tpcds_q74",
 ]
 
 
