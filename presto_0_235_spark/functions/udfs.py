@@ -1475,7 +1475,7 @@ def _make_presto_decimal_arith(op: str):
     raises the reference's "Decimal overflow". The SQL emission
     CASTs the returned string back to DECIMAL(rp, rs). Arrow-batched;
     only sites where the pure-Spark rewrite declines
-    (frontend._dca_emit) reach this path."""
+    (frontend._decimal_arith_emit) reach this path."""
 
     @F.pandas_udf(StringType())
     def fn(a: pd.Series, b: pd.Series, rp: pd.Series,

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import re
 
+from presto_0_235_spark.sql.masked import balanced, split_top, stash_lit
+
 # ---------------------------------------------------------------------------
 # type trees: 'json' | 'scalar' | 'unknown'
 #             | ('array', T) | ('map', K, V) | ('row', [T, ...])
@@ -60,36 +62,6 @@ _SCALAR_TYPES = frozenset((
 ))
 
 
-def _balanced(s: str, open_i: int) -> int:
-    """Index just past the bracket matching s[open_i] ('(' or '[')."""
-    close = {"(": ")", "[": "]"}[s[open_i]]
-    depth = 0
-    for k in range(open_i, len(s)):
-        if s[k] in "([":
-            depth += 1
-        elif s[k] in ")]":
-            depth -= 1
-            if depth == 0:
-                if s[k] != close and k == open_i:
-                    raise ValueError("mismatched bracket")
-                return k + 1
-    raise ValueError("unbalanced")
-
-
-def _split_top(s: str, sep: str = ",") -> list[str]:
-    parts, depth, start = [], 0, 0
-    for k, c in enumerate(s):
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == sep and depth == 0:
-            parts.append(s[start:k])
-            start = k + 1
-    parts.append(s[start:])
-    return parts
-
-
 def parse_presto_type(text: str):
     """Type tree for a Presto/Spark type spelling (both the paren
     and angle-bracket container forms), else None."""
@@ -101,7 +73,7 @@ def parse_presto_type(text: str):
         if t[open_i] == "<":
             close_i = _angle_close(t, open_i)
         else:
-            close_i = _balanced(t, open_i) - 1
+            close_i = balanced(t, open_i) - 1
         inner = t[open_i + 1:close_i]
         if t[close_i + 1:].strip():
             return None
@@ -109,7 +81,7 @@ def parse_presto_type(text: str):
             el = parse_presto_type(inner)
             return ("array", el) if el is not None else None
         if head == "MAP":
-            kv = _split_top(inner)
+            kv = split_top(inner)
             if len(kv) != 2:
                 return None
             k, v = parse_presto_type(kv[0]), parse_presto_type(kv[1])
@@ -119,8 +91,7 @@ def parse_presto_type(text: str):
         # bare types; names (when present) are kept for field
         # access on struct-typed columns
         fields, names = [], []
-        for f in _split_top(inner):
-            f = f.strip()
+        for f in split_top(inner):
             name = None
             ft = parse_presto_type(f)
             if ft is None:
@@ -194,7 +165,7 @@ def derive_ptype(expr: str):
     e = expr.strip()
     while e.startswith("(") and not _MAP_CTOR.match(e):
         try:
-            if _balanced(e, 0) != len(e):
+            if balanced(e, 0) != len(e):
                 break
         except ValueError:
             return None
@@ -217,7 +188,7 @@ def derive_ptype(expr: str):
     m = _CAST_HEAD.match(e)
     if m is not None:
         try:
-            if _balanced(e, e.index("(", m.start())) != len(e):
+            if balanced(e, e.index("(", m.start())) != len(e):
                 return None
         except ValueError:
             return None
@@ -239,26 +210,26 @@ def derive_ptype(expr: str):
     if _ARRAY_CTOR.match(e):
         open_i = e.index("[")
         try:
-            if _balanced(e, open_i) != len(e):
+            if balanced(e, open_i) != len(e):
                 return _concat_chain_type(e)
         except ValueError:
             return None
         inner = e[open_i + 1:-1].strip()
         if not inner:
             return ("array", "unknown")
-        el = unify([derive_ptype(x) for x in _split_top(inner)])
+        el = unify([derive_ptype(x) for x in split_top(inner)])
         return ("array", el) if el is not None else None
     if _MAP_CTOR.match(e):
         open_i = e.index("(")
         try:
-            if _balanced(e, open_i) != len(e):
+            if balanced(e, open_i) != len(e):
                 return None
         except ValueError:
             return None
         inner = e[open_i + 1:-1].strip()
         if not inner:
             return ("map", "unknown", "unknown")
-        args = _split_top(inner)
+        args = split_top(inner)
         if len(args) != 2:
             return None
         karr = derive_ptype(args[0])
@@ -275,19 +246,19 @@ def derive_ptype(expr: str):
         # the always-scalar aggregates (count/sum/avg — min/max can
         # carry container types and stay underivable)
         try:
-            if _balanced(e, e.index("(")) == len(e):
+            if balanced(e, e.index("(")) == len(e):
                 return "scalar"
         except ValueError:
             return None
     if _ROW_CTOR.match(e):
         open_i = e.index("(")
         try:
-            if _balanced(e, open_i) != len(e):
+            if balanced(e, open_i) != len(e):
                 return _concat_chain_type(e)
         except ValueError:
             return None
         fields = [derive_ptype(x)
-                  for x in _split_top(e[open_i + 1:-1])]
+                  for x in split_top(e[open_i + 1:-1])]
         if any(f is None for f in fields):
             return None
         return ("row", fields, None)
@@ -433,7 +404,7 @@ def _render_value(expr: str, t, stash, lit, depth: int) -> str | None:
     e = expr.strip()
     while e.startswith("(") and not _MAP_CTOR.match(e):
         try:
-            if _balanced(e, 0) != len(e):
+            if balanced(e, 0) != len(e):
                 break
         except ValueError:
             break
@@ -462,15 +433,15 @@ def _row_ctor_args(e: str) -> list[str] | None:
     if m is not None:
         open_i = e.index("(")
         try:
-            if _balanced(e, open_i) != len(e):
+            if balanced(e, open_i) != len(e):
                 return None
         except ValueError:
             return None
-        return _split_top(e[open_i + 1:-1])
+        return split_top(e[open_i + 1:-1])
     cm = _CAST_HEAD.match(e)
     if cm is not None:
         try:
-            if _balanced(e, e.index("(", cm.start())) != len(e):
+            if balanced(e, e.index("(", cm.start())) != len(e):
                 return None
         except ValueError:
             return None
@@ -506,10 +477,8 @@ def rewrite_container_json_casts(masked: str, stash) -> str:
     Underivable operands (and scalar JSON casts, which the
     template/peephole layer owns where they matter) keep the old
     text."""
-    from presto_0_235_spark.sql.scalar_templates import _stash_lit
-
     def lit(s: str) -> str:
-        return _stash_lit(stash, s)
+        return stash_lit(stash, s)
 
     out = masked
     pos = 0
@@ -519,7 +488,7 @@ def rewrite_container_json_casts(masked: str, stash) -> str:
             return out
         open_i = out.index("(", m.end() - 1)
         try:
-            past = _balanced(out, open_i)
+            past = balanced(out, open_i)
         except ValueError:
             return out
         body = out[open_i + 1:past - 1]
@@ -636,7 +605,7 @@ def _operand_fwd(s: str, i: int):
     if m is not None:
         open_i = start + m.end() - 1
         try:
-            i = _balanced(s, open_i)
+            i = balanced(s, open_i)
         except ValueError:
             return None
         return (i, s[start:i])
@@ -810,12 +779,12 @@ def _array_ctor_elems(e: str):
         return None
     open_i = e.index("[")
     try:
-        if _balanced(e, open_i) != len(e):
+        if balanced(e, open_i) != len(e):
             return None
     except ValueError:
         return None
     inner = e[open_i + 1:-1].strip()
-    return _split_top(inner) if inner else []
+    return split_top(inner) if inner else []
 
 
 _ARRAY_POS_HEAD = re.compile(r"\bARRAY_POSITION\s*\(", re.IGNORECASE)
@@ -833,10 +802,10 @@ def rewrite_decimal_array_ops(masked: str) -> str:
         pos = m.end()
         open_i = m.end() - 1
         try:
-            past = _balanced(out, open_i)
+            past = balanced(out, open_i)
         except ValueError:
             continue
-        args = _split_top(out[open_i + 1:past - 1])
+        args = split_top(out[open_i + 1:past - 1])
         if len(args) != 2:
             continue
         elems = _array_ctor_elems(args[0])

@@ -81,6 +81,10 @@ from __future__ import annotations
 
 import re
 
+from presto_0_235_spark.sql.masked import (
+    INTEGRAL, balanced, decimal_cast_type, is_decimal, lit_of,
+    operand_span, split_top, stash_lit)
+
 _STR_PH = re.compile("^\x00s(\\d+)\x00$")
 _DATE_LIT = re.compile("^DATE\\s*\x00s\\d+\x00$", re.IGNORECASE)
 
@@ -272,114 +276,12 @@ _AGG_TEMPLATE_NAMES = frozenset({
 _AGG_SUFFIX_RE = re.compile(r"\s*(OVER|FILTER|WITHIN)\b", re.IGNORECASE)
 
 
-def _single_decimal_cast_type(arg: str):
-    """(p, s) when the argument is EXACTLY one decimal-typed cast —
-    the first CAST's balanced extent spans the whole argument (r16
-    ADVICE #3: a greedy tail match on compound arguments like
-    `CAST(a AS DECIMAL(10,2)) + CAST(b AS DECIMAL(10,2))` would type
-    the aggregate from the LAST cast where the reference derives the
-    compound's own type); None otherwise."""
-    from presto_0_235_spark.sql.frontend import _balanced
-
-    arg = arg.strip()
-    hm = re.match(r"^(?:TRY_)?CAST\s*\(", arg, re.IGNORECASE)
-    if hm is None:
-        return None
-    try:
-        if _balanced(arg, hm.end() - 1) != len(arg):
-            return None
-    except ValueError:
-        return None
-    tm = re.search(
-        r"\bAS\s+DECIMAL\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)\s*\)\s*$",
-        arg, re.IGNORECASE)
-    if tm is None:
-        return None
-    return int(tm.group(1)), int(tm.group(2)) if tm.group(2) else 0
-
-
-_STATIC_TAIL = re.compile(
-    r"\bAS\s+(TINYINT|SMALLINT|INT|INTEGER|BIGINT|DOUBLE|FLOAT|REAL|"
-    r"DECIMAL\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))\s*\)\s*$", re.IGNORECASE)
-_INT32_MAX = 2 ** 31
-
-
 def _static_arg_type(arg: str):
-    """The statically-derivable type of a template argument:
-    'tinyint'/'smallint'/'int'/'bigint'/'double'/'real',
-    ('decimal', p, s) for a decimal-typed cast, or None. Covers the
-    CAST(... AS T) forms typed literals and catalog-annotated
-    columns lower to, scientific literals (double), and bare integer
-    literals (int/bigint by range, the parser's rule)."""
-    from presto_0_235_spark.sql.frontend import _balanced
-
-    arg = arg.strip()
-    hm = re.match(r"^(?:TRY_)?CAST\s*\(", arg, re.IGNORECASE)
-    if hm is not None:
-        # a CAST that is NOT the entire argument (e.g. the head of
-        # an arithmetic chain) falls through to the chain grammar
-        whole = False
-        try:
-            whole = _balanced(arg, hm.end() - 1) == len(arg)
-        except ValueError:
-            return None
-        tm = _STATIC_TAIL.search(arg) if whole else None
-        if tm is not None:
-            t = tm.group(1).upper()
-            if t.startswith("DECIMAL"):
-                nums = re.findall(r"\d+", t)
-                return ("decimal", int(nums[0]),
-                        int(nums[1]) if len(nums) > 1 else 0)
-            return {"TINYINT": "tinyint", "SMALLINT": "smallint",
-                    "INT": "int", "INTEGER": "int",
-                    "BIGINT": "bigint", "DOUBLE": "double",
-                    "FLOAT": "real", "REAL": "real"}[t]
-        if whole:
-            return None
-    if re.fullmatch(r"[+-]?\d+(?:\.\d+)?[eE][+-]?\d+", arg):
-        return "double"
-    if re.fullmatch(r"[+-]?\d+", arg):
-        return "int" if -_INT32_MAX <= int(arg) < _INT32_MAX \
-            else "bigint"
-    am = re.match(r"(sum|min|max|avg)\s*\(", arg, re.IGNORECASE)
-    if am is not None:
-        # float-preserving aggregate over a statically float-typed
-        # interior (r17: ceil(sum(x)) / round(avg(x), n) — the
-        # aggregate-RESULT operand shapes; sum/min/max keep the
-        # argument's float type, avg(double)->double and
-        # avg(real)->real in the reference). An OVER clause is
-        # type-transparent (the windowed form keeps the same type).
-        # Only the float kinds recurse — integral/decimal aggregate
-        # typing belongs to the dedicated aggregate passes.
-        try:
-            past = _balanced(arg, am.end() - 1)
-            rest_ok = past == len(arg)
-            if not rest_ok:
-                om = re.match(r"\s*OVER\s*(\(|[A-Za-z_]\w*)",
-                              arg[past:], re.IGNORECASE)
-                if om is not None:
-                    if om.group(1) == "(":
-                        rest_ok = _balanced(
-                            arg, past + om.end() - 1) == len(arg)
-                    else:
-                        rest_ok = past + om.end() == len(arg)
-            if rest_ok:
-                t = _static_arg_type(arg[am.end():past - 1])
-                if t in ("double", "real"):
-                    return t
-        except ValueError:
-            pass
-    # compound-argument extent (r17 follow-up): an arithmetic chain
-    # whose operands are all statically float-typed or numeric
-    # literals derives the reference's DOUBLE/REAL result type
-    # (`ceil(x + 1)` over an annotated double column) — reuse the
-    # IEEE detectors' chain grammar
-    from presto_0_235_spark.sql.frontend import _float_chain_kind
-
-    ck = _float_chain_kind(arg)
-    if ck is not None and ck[1]:
-        return ck[0]
-    return None
+    """The Presto static type of a template argument that is one
+    scanned expression (masked.operand_span), in masked's spellings
+    ('int', 'double', ('decimal', p, s), ...); None otherwise."""
+    op = operand_span(arg)
+    return op.type if op is not None else None
 
 
 def _float_round_n(x: str, n: int, kind: str, stash) -> str | None:
@@ -400,7 +302,7 @@ def _float_round_n(x: str, n: int, kind: str, stash) -> str | None:
     finite double (see the call-site comment)."""
     if abs(n) > 22:
         return None
-    inf = _stash_lit(stash, "Infinity")
+    inf = stash_lit(stash, "Infinity")
     fl = f"1E{n}D" if n > 0 else f"{10.0 ** n!r}D"
     xs = f"CAST(({x}) AS DOUBLE)" if kind == "real" else f"({x})"
 
@@ -425,7 +327,7 @@ def _decimal_avg_window(args: list[str], over_text: str):
     frames. Same widen-round-cast construction (and exactness
     bounds) as the plain-aggregate avg template below, with the OVER
     clause consumed inside the ROUND."""
-    ps = _single_decimal_cast_type(args[0])
+    ps = decimal_cast_type(args[0])
     if ps is None:
         return None
     p, s = ps
@@ -523,21 +425,6 @@ _DT_UNITS = {
 _CALENDAR_UNITS = {"day", "week", "month", "quarter", "year"}
 
 
-def _stash_lit(stash: list[tuple[str, str]], text: str) -> str:
-    """Append a string literal to the mask stash, return placeholder."""
-    stash.append(("str", "'" + text.replace("'", "''") + "'"))
-    return f"\x00s{len(stash) - 1}\x00"
-
-
-def _lit_of(arg: str, stash: list[tuple[str, str]]) -> str | None:
-    """The Python string behind a masked literal arg, else None."""
-    m = _STR_PH.match(arg.strip())
-    if m is None:
-        return None
-    _kind, text = stash[int(m.group(1))]
-    return text[1:-1].replace("''", "'")
-
-
 def _raise(msg_expr: str, out_type: str) -> str:
     return f"CAST(raise_error({msg_expr}) AS {out_type})"
 
@@ -566,7 +453,7 @@ _DEC_LIT_CAST = re.compile(
 )
 
 
-def _dec_lit_of(arg: str, stash):
+def _declit_of(arg: str, stash):
     """(Decimal value, precision, scale) when arg is a rewritten
     DECIMAL literal (the CAST(ph AS DECIMAL(p,s)) form the
     typed-literal pass emits), else None."""
@@ -575,7 +462,7 @@ def _dec_lit_of(arg: str, stash):
     m = _DEC_LIT_CAST.match(arg.strip())
     if m is None:
         return None
-    lit = _lit_of(m.group(1), stash)
+    lit = lit_of(m.group(1), stash)
     if lit is None:
         return None
     try:
@@ -587,12 +474,12 @@ def _dec_lit_of(arg: str, stash):
 def _chr_template(n: str, stash: list[tuple[str, str]]) -> str:
     """Unicode code point -> string via explicit UTF-8 bytes."""
     bad = _raise(
-        f"concat({_stash_lit(stash, 'Not a valid Unicode code point: ')}, "
+        f"concat({stash_lit(stash, 'Not a valid Unicode code point: ')}, "
         f"CAST({n} AS STRING))",
         "STRING",
     )
-    utf8 = _stash_lit(stash, "UTF-8")
-    zero = _stash_lit(stash, "0")
+    utf8 = stash_lit(stash, "UTF-8")
+    zero = stash_lit(stash, "0")
     return (
         f"(CASE WHEN {n} < 0 OR {n} > 1114111 THEN {bad} "
         f"WHEN {n} < 128 THEN decode(unhex(lpad(hex({n}), 2, {zero})), {utf8}) "
@@ -670,7 +557,7 @@ def _rewrite_one(
         x = f"CAST({a[0]} AS BIGINT)"
         s = f"CAST({a[1]} AS INT)"
         neg = _raise(
-            _stash_lit(stash, "Shift must be non-negative"), "BIGINT"
+            stash_lit(stash, "Shift must be non-negative"), "BIGINT"
         )
         if name == "bitwise_arithmetic_shift_right":
             body = f"shiftright({x}, {s})"
@@ -695,14 +582,14 @@ def _rewrite_one(
         x = f"CAST({a[0]} AS BIGINT)"
         bits = f"CAST({a[1]} AS INT)"
         bad_bits = _raise(
-            f"concat({_stash_lit(stash, 'Bits specified in bit_count must be between 2 and 64, got ')}, "
+            f"concat({stash_lit(stash, 'Bits specified in bit_count must be between 2 and 64, got ')}, "
             f"CAST({bits} AS STRING))",
             "BIGINT",
         )
         bad_val = _raise(
             f"concat(CAST({x} AS STRING), "
-            f"{_stash_lit(stash, ' can not be represented with ')}, "
-            f"CAST({bits} AS STRING), {_stash_lit(stash, ' bits')})",
+            f"{stash_lit(stash, ' can not be represented with ')}, "
+            f"CAST({bits} AS STRING), {stash_lit(stash, ' bits')})",
             "BIGINT",
         )
         lo = f"(-shiftleft(CAST(1 AS BIGINT), {bits} - 1))"
@@ -719,26 +606,26 @@ def _rewrite_one(
     if name == "from_base" and len(a) == 2:
         s, r = a[0], f"CAST({a[1]} AS INT)"
         bad_radix = _raise(
-            f"concat({_stash_lit(stash, 'Radix must be between 2 and 36, got ')}, "
+            f"concat({stash_lit(stash, 'Radix must be between 2 and 36, got ')}, "
             f"CAST({r} AS STRING))",
             "BIGINT",
         )
         bad_digit = _raise(
-            f"concat({_stash_lit(stash, 'Not a valid base-')}, "
-            f"CAST({r} AS STRING), {_stash_lit(stash, ' number: ')}, {s})",
+            f"concat({stash_lit(stash, 'Not a valid base-')}, "
+            f"CAST({r} AS STRING), {stash_lit(stash, ' number: ')}, {s})",
             "BIGINT",
         )
-        body = f"regexp_replace({s}, {_stash_lit(stash, '^-')}, {_stash_lit(stash, '')})"
+        body = f"regexp_replace({s}, {stash_lit(stash, '^-')}, {stash_lit(stash, '')})"
         # Per-char value check against the radix: digits then letters.
         digit_ok = (
-            f"forall(split(lower({body}), {_stash_lit(stash, '')}), "
+            f"forall(split(lower({body}), {stash_lit(stash, '')}), "
             "c -> (CASE WHEN ascii(c) BETWEEN 48 AND 57 THEN ascii(c) - 48 "
             "WHEN ascii(c) BETWEEN 97 AND 122 THEN ascii(c) - 87 "
             f"ELSE 99 END) < {r})"
         )
         magnitude = f"CAST(conv({body}, {r}, 10) AS DECIMAL(20, 0))"
         signed = (
-            f"(CASE WHEN substring({s}, 1, 1) = {_stash_lit(stash, '-')} "
+            f"(CASE WHEN substring({s}, 1, 1) = {stash_lit(stash, '-')} "
             f"THEN -{magnitude} ELSE {magnitude} END)"
         )
         return (
@@ -750,7 +637,7 @@ def _rewrite_one(
     if name == "to_base" and len(a) == 2:
         x, r = f"CAST({a[0]} AS BIGINT)", f"CAST({a[1]} AS INT)"
         bad_radix = _raise(
-            f"concat({_stash_lit(stash, 'Radix must be between 2 and 36, got ')}, "
+            f"concat({stash_lit(stash, 'Radix must be between 2 and 36, got ')}, "
             f"CAST({r} AS STRING))",
             "STRING",
         )
@@ -759,7 +646,7 @@ def _rewrite_one(
             # magnitude via DECIMAL(20,0) *string* so Long.MIN_VALUE
             # (-2^63, whose magnitude overflows BIGINT under ANSI)
             # renders '-8000000000000000' like Presto's toBase
-            f"WHEN {x} < 0 THEN concat({_stash_lit(stash, '-')}, "
+            f"WHEN {x} < 0 THEN concat({stash_lit(stash, '-')}, "
             f"lower(conv(CAST(-CAST({x} AS DECIMAL(20, 0)) AS STRING), 10, {r}))) "
             f"ELSE lower(conv({x}, 10, {r})) END)"
         )
@@ -775,7 +662,12 @@ def _rewrite_one(
         # the RoundN rule to both arities; the r16 value-pin
         # extraction caught it — TestMathFunctions.java:798-840 pins
         # round(DECIMAL '0.1') = 0 at decimal(1,0).)
-        t0 = _static_arg_type(args[0])
+        # A bare parenthesized argument is the double->integral cast
+        # rewrite's own ROUND((x)) emission, already Presto's
+        # rounding: it is not rewritten again.
+        op0 = operand_span(args[0])
+        t0 = None if op0 is None or (
+            not op0.ops and args[0].lstrip()[:1] == "(") else op0.type
         if t0 in ("double", "real"):
             # Presto's float round is sign-aware — num < 0 computes
             # -(round(-num, n)) (MathFunctions.java:757-763), so
@@ -824,7 +716,7 @@ def _rewrite_one(
             # (min(38, p+1), s) with a NULL value
             # (TestMathFunctions.java:938)
             ps = (int(mdec.group(2)), int(mdec.group(3))) if mdec \
-                else _single_decimal_cast_type(args[0])
+                else decimal_cast_type(args[0])
             if ps is None:
                 return None
             p, s = ps
@@ -838,7 +730,7 @@ def _rewrite_one(
             # the outer cast carries the reference type and can
             # never overflow (the rounded magnitude needs at most
             # p-s+1 integer digits).
-            ps = _single_decimal_cast_type(args[0])
+            ps = decimal_cast_type(args[0])
             if ps is None:
                 return None
             p, s = ps
@@ -855,7 +747,7 @@ def _rewrite_one(
                 return f"CAST({a[0]} AS DECIMAL({rp}, {s}))"
             return (f"CAST(ROUND({a[0]}, {n}) "
                     f"AS DECIMAL({rp}, {s}))")
-        lit = _lit_of(mdec.group(1), stash)
+        lit = lit_of(mdec.group(1), stash)
         if lit is None:
             return None
         if len(a) == 2:
@@ -885,9 +777,9 @@ def _rewrite_one(
             unscaled = int(r.scaleb(rs))
         if abs(unscaled) >= 10 ** rp:
             return _raise(
-                _stash_lit(stash, "Decimal overflow"),
+                stash_lit(stash, "Decimal overflow"),
                 f"DECIMAL({rp}, {rs})")
-        return (f"CAST({_stash_lit(stash, str(r))} "
+        return (f"CAST({stash_lit(stash, str(r))} "
                 f"AS DECIMAL({rp}, {rs}))")
 
     if name == "truncate" and len(a) in (1, 2):
@@ -902,8 +794,8 @@ def _rewrite_one(
             # default decimal(1,0) (TestMathFunctions.java:310
             # truncate(NULL, NULL) = NULL decimal(1,0))
             return "CAST(NULL AS DECIMAL(1, 0))"
-        ps = None if _dec_lit_of(args[0], stash) is not None \
-            else _single_decimal_cast_type(args[0])
+        ps = None if _declit_of(args[0], stash) is not None \
+            else decimal_cast_type(args[0])
         if ps is not None:
             # r16 (verdict #6): statically-typed decimal CASTs
             # (columns, NULL casts, bare-numeric literal casts)
@@ -927,7 +819,7 @@ def _rewrite_one(
                 "0." + "0" * (n - 1) + "1"
             return (f"CAST(({a[0]}) - (({a[0]}) % {mod}) "
                     f"AS DECIMAL({p}, {s}))")
-        dl = _dec_lit_of(args[0], stash)
+        dl = _declit_of(args[0], stash)
         if dl is not None:
             from decimal import ROUND_DOWN, Decimal, localcontext
 
@@ -952,7 +844,7 @@ def _rewrite_one(
                             r = v.scaleb(n).to_integral_value(
                                 rounding=ROUND_DOWN).scaleb(-n)
                         r = r.quantize(Decimal(1).scaleb(-rs))
-                return (f"CAST({_stash_lit(stash, str(r))} "
+                return (f"CAST({stash_lit(stash, str(r))} "
                         f"AS DECIMAL({rp}, {rs}))")
 
     if name == "truncate" and len(a) == 1:
@@ -962,7 +854,7 @@ def _rewrite_one(
         # itself; the negative branch computes on -x and negates.
         x = a[0]
         case = (
-            f"(CASE WHEN isnan({x}) OR abs({x}) = CAST({_stash_lit(stash, 'Infinity')} AS DOUBLE) "
+            f"(CASE WHEN isnan({x}) OR abs({x}) = CAST({stash_lit(stash, 'Infinity')} AS DOUBLE) "
             f"OR ({x}) = 0D THEN {x} "
             f"WHEN ({x}) > 0D THEN ({x}) - (({x}) % 1) "
             f"ELSE -((-({x})) - ((-({x})) % 1)) END)"
@@ -1009,8 +901,7 @@ def _rewrite_one(
         fn, mirror = ("FLOOR", "CEIL") if is_floor else ("CEIL",
                                                          "FLOOR")
         x = a[0]
-        if t in ("tinyint", "smallint", "int", "bigint") or (
-                isinstance(t, tuple) and t[2] == 0):
+        if t in INTEGRAL or (is_decimal(t) and t[2] == 0):
             return f"({x})"
         if t == "double":
             return (f"(CASE WHEN isnan({x}) OR abs({x}) >= "
@@ -1033,7 +924,7 @@ def _rewrite_one(
     if name == "codepoint" and len(a) == 1:
         s = a[0]
         bad = _raise(
-            f"concat({_stash_lit(stash, 'Input string must be exactly one codepoint: ')}, {s})",
+            f"concat({stash_lit(stash, 'Input string must be exactly one codepoint: ')}, {s})",
             "INT",
         )
         return (
@@ -1044,7 +935,7 @@ def _rewrite_one(
     if name == "hamming_distance" and len(a) == 2:
         x, y = a
         bad = _raise(
-            _stash_lit(
+            stash_lit(
                 stash,
                 "The input strings to hamming_distance function must "
                 "have the same length",
@@ -1066,21 +957,21 @@ def _rewrite_one(
         # rewrite time; an expression goes through \\Q...\\E (the
         # one caveat: a delimiter VALUE containing \\E, which no
         # sane delimiter does).
-        d_lit = _lit_of(args[1], stash)
+        d_lit = lit_of(args[1], stash)
         if d_lit is not None:
-            quoted = _stash_lit(
+            quoted = stash_lit(
                 stash, re.sub(r"([\\.\[\]{}()*+?^$|-])", r"\\\1", d_lit)
             )
         else:
-            q, e = _stash_lit(stash, "\\Q"), _stash_lit(stash, "\\E")
+            q, e = stash_lit(stash, "\\Q"), stash_lit(stash, "\\E")
             quoted = f"concat({q}, {a[1]}, {e})"
         if len(a) == 3:
             # StringFunctions.java:411-412 limit validation (r13
             # leniency conversion: Spark's split treats limit<=0 as
             # 'no limit')
-            badpos = _raise(_stash_lit(stash, "Limit must be positive"),
+            badpos = _raise(stash_lit(stash, "Limit must be positive"),
                             "INT")
-            badbig = _raise(_stash_lit(stash, "Limit is too large"),
+            badbig = _raise(stash_lit(stash, "Limit is too large"),
                             "INT")
             lim = (f", (CASE WHEN ({a[2]}) <= 0 THEN {badpos} "
                    f"WHEN ({a[2]}) > 2147483647 THEN {badbig} "
@@ -1105,7 +996,7 @@ def _rewrite_one(
         # by the value-pin extraction.)
         if len(a) == 2:
             return f"{name}({a[1]}, {a[0]})"
-        ws = _stash_lit(stash, (
+        ws = stash_lit(stash, (
             "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f "
             "\u1680\u2000\u2001\u2002\u2003\u2004"
             "\u2005\u2006\u2008\u2009\u200a\u2028"
@@ -1123,12 +1014,12 @@ def _rewrite_one(
         # escaped for its $group/backslash syntax); non-literal
         # search args stay Spark-native (residual: a runtime-empty
         # search no-ops).
-        s_lit = _lit_of(args[1], stash)
-        r_lit = _lit_of(args[2], stash)
+        s_lit = lit_of(args[1], stash)
+        r_lit = lit_of(args[2], stash)
         if s_lit == "" and r_lit is not None:
-            rep = _stash_lit(
+            rep = stash_lit(
                 stash, r_lit.replace("\\", "\\\\").replace("$", "\\$"))
-            empty = _stash_lit(stash, "")
+            empty = stash_lit(stash, "")
             return f"regexp_replace({a[0]}, {empty}, {rep})"
         return None
 
@@ -1146,16 +1037,16 @@ def _rewrite_one(
         # greater than zero' — negative-index raise is an r13
         # leniency conversion; Spark's split_part counts from the
         # end). try_element_at keeps genuinely-empty fields as ''.
-        d_lit = _lit_of(args[1], stash)
+        d_lit = lit_of(args[1], stash)
         if d_lit is not None:
-            quoted = _stash_lit(
+            quoted = stash_lit(
                 stash, re.sub(r"([\\.\[\]{}()*+?^$|-])", r"\\\1", d_lit)
             )
         else:
-            q, e = _stash_lit(stash, "\\Q"), _stash_lit(stash, "\\E")
+            q, e = stash_lit(stash, "\\Q"), stash_lit(stash, "\\E")
             quoted = f"concat({q}, {a[1]}, {e})"
         badix = _raise(
-            _stash_lit(stash, "Index must be greater than zero"),
+            stash_lit(stash, "Index must be greater than zero"),
             "INT")
         ix = (f"(CASE WHEN ({a[2]}) <= 0 THEN {badix} "
               f"ELSE CAST(({a[2]}) AS INT) END)")
@@ -1191,7 +1082,7 @@ def _rewrite_one(
             return None
         s, start = a[0], a[1]
         tail = f", {a[2]}" if len(a) == 3 else ""
-        empty = _stash_lit(stash, "")
+        empty = stash_lit(stash, "")
         return (
             f"(CASE WHEN {start} = 0 OR {start} < -length({s}) THEN {empty} "
             f"ELSE substr({s}, {start}{tail}) END)"
@@ -1201,8 +1092,8 @@ def _rewrite_one(
         # Presto: ln(0) = -Infinity, ln(negative) = NaN
         # (MathFunctions.java ln); Spark returns NULL for both.
         x = a[0]
-        ninf = f"CAST({_stash_lit(stash, '-Infinity')} AS DOUBLE)"
-        nan = f"CAST({_stash_lit(stash, 'NaN')} AS DOUBLE)"
+        ninf = f"CAST({stash_lit(stash, '-Infinity')} AS DOUBLE)"
+        nan = f"CAST({stash_lit(stash, 'NaN')} AS DOUBLE)"
         return (
             f"(CASE WHEN {x} = 0 THEN {ninf} WHEN {x} < 0 THEN {nan} "
             f"ELSE {name}({x}) END)"
@@ -1210,7 +1101,7 @@ def _rewrite_one(
 
     if name in ("is_finite", "is_infinite") and len(a) == 1:
         x = f"CAST({a[0]} AS DOUBLE)"
-        inf = f"CAST({_stash_lit(stash, 'Infinity')} AS DOUBLE)"
+        inf = f"CAST({stash_lit(stash, 'Infinity')} AS DOUBLE)"
         if name == "is_infinite":
             return f"(abs({x}) = {inf})"
         return f"(abs({x}) <> {inf} AND NOT isnan({x}))"
@@ -1218,7 +1109,7 @@ def _rewrite_one(
     if name in ("date_parse", "date_format", "format_datetime", "parse_datetime"):
         if len(a) != 2:
             return None
-        fmt = _lit_of(args[1], stash)
+        fmt = lit_of(args[1], stash)
         if fmt is None:
             return None  # non-literal pattern: no source-level rewrite
         from presto_0_235_spark.functions.scalar import (
@@ -1234,7 +1125,7 @@ def _rewrite_one(
             java = mysql_to_java_pattern(fmt)
         else:
             java = joda_to_java_pattern(fmt)
-        ph = _stash_lit(stash, java)
+        ph = stash_lit(stash, java)
         fn = (
             "to_timestamp"
             if name in ("date_parse", "parse_datetime")
@@ -1245,7 +1136,7 @@ def _rewrite_one(
     if name in ("date_add", "date_diff"):
         if len(a) != 3:
             return None
-        unit = _lit_of(args[0], stash)
+        unit = lit_of(args[0], stash)
         if unit is None or unit.lower() not in _DT_UNITS:
             return None
         spark_unit = _DT_UNITS[unit.lower()]
@@ -1282,7 +1173,7 @@ def _rewrite_one(
         # Presto's 2-arg form deletes matches
         # (RegexpFunctions.java regexpReplace); Spark's regexp_replace
         # is 3-arg only.
-        return f"regexp_replace({a[0]}, {a[1]}, {_stash_lit(stash, '')})"
+        return f"regexp_replace({a[0]}, {a[1]}, {stash_lit(stash, '')})"
 
     if name == "regexp_replace" and len(a) == 3 and "->" in args[2]:
         # LAMBDA form: regexp_replace(string, pattern, x -> body)
@@ -1301,8 +1192,8 @@ def _rewrite_one(
         # Java's leftmost-greedy + empty-match advancement for the
         # pinned patterns. Non-literal operands decline (they could
         # never run before either: Spark rejects the lambda).
-        s_lit = _lit_of(args[0], stash)
-        p_lit = _lit_of(args[1], stash)
+        s_lit = lit_of(args[0], stash)
+        p_lit = lit_of(args[1], stash)
         lm = re.match(r"^\s*\(?\s*([A-Za-z_]\w*)\s*\)?\s*->\s*(.+)$",
                       args[2].strip(), re.DOTALL)
         if lm is None:
@@ -1332,33 +1223,33 @@ def _rewrite_one(
                     # Presto array subscript (the lambda receives an
                     # ARRAY, ArraySubscriptOperator checkArrayIndex)
                     return _raise(
-                        _stash_lit(stash,
-                                   "SQL array indices start at 1"),
+                        stash_lit(stash,
+                                  "SQL array indices start at 1"),
                         "STRING")
                 if k > (cre.groups or 0):
                     return _raise(
-                        _stash_lit(
+                        stash_lit(
                             stash,
                             "Array subscript must be less than or "
                             "equal to array length"),
                         "STRING")
                 g = mo.group(k)
-                return null_str if g is None else _stash_lit(stash, g)
+                return null_str if g is None else stash_lit(stash, g)
 
             bodies.append("(" + re.sub(
                 rf"(?<![\w.\x00]){re.escape(var)}\s*\[\s*(\d+)\s*\]",
                 sub_group, body) + ")")
         segs.append(s_lit[last:])
         if not bodies:
-            return _stash_lit(stash, s_lit)
+            return stash_lit(stash, s_lit)
         parts: list[str] = []
         for i, seg in enumerate(segs):
             if seg:
-                parts.append(_stash_lit(stash, seg))
+                parts.append(stash_lit(stash, seg))
             if i < len(bodies):
                 parts.append(bodies[i])
         result = (f"concat({', '.join(parts)})" if len(parts) > 1
-                  else parts[0] if parts else _stash_lit(stash, ""))
+                  else parts[0] if parts else stash_lit(stash, ""))
         null_guard = " OR ".join(f"{b} IS NULL" for b in bodies)
         return (f"(CASE WHEN {null_guard} THEN {null_str} "
                 f"ELSE {result} END)")
@@ -1372,8 +1263,8 @@ def _rewrite_one(
         # literals (the reference validates when compiling the
         # replacement) — r13 leniency conversion; non-literal forms
         # pass through untouched.
-        pat_lit = _lit_of(args[1], stash)
-        rep_lit = _lit_of(args[2], stash)
+        pat_lit = lit_of(args[1], stash)
+        rep_lit = lit_of(args[2], stash)
         if pat_lit is not None and rep_lit is not None:
             # capture-group numbering: walk the pattern tracking
             # escapes and character classes; each bare '(' that is
@@ -1422,7 +1313,7 @@ def _rewrite_one(
                     j += 1
             if bad_ref is not None:
                 return _raise(
-                    _stash_lit(
+                    stash_lit(
                         stash,
                         "Invalid replacement sequence: unknown "
                         "group { " + bad_ref + " }"),
@@ -1430,7 +1321,7 @@ def _rewrite_one(
             new_rep = "".join(out_rep)
             if new_rep != rep_lit:
                 return (f"regexp_replace({a[0]}, {a[1]}, "
-                        f"{_stash_lit(stash, new_rep)})")
+                        f"{stash_lit(stash, new_rep)})")
         return None
 
     if name == "regexp_split" and len(args) == 2:
@@ -1441,15 +1332,15 @@ def _rewrite_one(
         # ['', 'a', ..., ''] (AbstractTestRegexpFunctions:231) where
         # Spark's split drops the edge empties. Python re.split
         # replays the reference exactly for literal args.
-        lit_s = _lit_of(args[0], stash)
-        lit_p = _lit_of(args[1], stash)
+        lit_s = lit_of(args[0], stash)
+        lit_p = lit_of(args[1], stash)
         if lit_s is not None and lit_p is not None:
             try:
                 parts = re.split(lit_p, lit_s)
                 # Spark-native array(): the Presto ARRAY[...] lowering
                 # pass has already run by template time
                 return ("array(" + ", ".join(
-                    _stash_lit(stash, x) for x in parts) + ")")
+                    stash_lit(stash, x) for x in parts) + ")")
             except re.error:
                 pass
         return None  # column args: the rename pass maps to split()
@@ -1468,8 +1359,8 @@ def _rewrite_one(
         # (indistinguishable from a matched-empty group post-hoc).
         # Python re declines Joni-only syntax at compile time, which
         # keeps the fold conservative.
-        lit_s = _lit_of(args[0], stash)
-        lit_p = _lit_of(args[1], stash)
+        lit_s = lit_of(args[0], stash)
+        lit_p = lit_of(args[1], stash)
         g_txt = args[2].strip() if len(args) == 3 else "0"
         if lit_s is not None and lit_p is not None \
                 and re.fullmatch(r"\d+", g_txt):
@@ -1480,7 +1371,7 @@ def _rewrite_one(
                     m = pat.search(lit_s)
                     if m is None or m.group(gi) is None:
                         return "CAST(NULL AS STRING)"
-                    return _stash_lit(stash, m.group(gi))
+                    return stash_lit(stash, m.group(gi))
                 # group out of range: keep the runtime raise path
             except re.error:
                 pass
@@ -1510,7 +1401,7 @@ def _rewrite_one(
         # raise branch types as INT regardless of the array element
         # type (a CASE around the whole call could not type the
         # raise branch polymorphically)
-        bad = _raise(_stash_lit(stash, "N must be positive"), "INT")
+        bad = _raise(stash_lit(stash, "N must be positive"), "INT")
         lo = f"(CASE WHEN {n} <= 0 THEN {bad} ELSE 1 END)"
         return (
             f"transform(sequence({lo}, "
@@ -1529,24 +1420,24 @@ def _rewrite_one(
         # entries are not.
         quoted = []
         for arg in (args[1], args[2]):
-            lit = _lit_of(arg, stash)
+            lit = lit_of(arg, stash)
             if lit is not None:
-                quoted.append(_stash_lit(
+                quoted.append(stash_lit(
                     stash, re.sub(r"([\\.\[\]{}()*+?^$|-])", r"\\\1", lit)
                 ))
             else:
-                q, e = _stash_lit(stash, "\\Q"), _stash_lit(stash, "\\E")
+                q, e = stash_lit(stash, "\\Q"), stash_lit(stash, "\\E")
                 quoted.append(f"concat({q}, ({arg.strip()}), {e})")
-        empty = _stash_lit(stash, "")
+        empty = stash_lit(stash, "")
         raw = f"split({a[0]}, {quoted[0]}, -1)"
         ents = (f"(CASE WHEN element_at({raw}, size({raw})) = {empty} "
                 f"AND size({raw}) > 1 "
                 f"THEN slice({raw}, 1, size({raw}) - 1) "
                 f"ELSE {raw} END)")
-        badent_prefix = _stash_lit(
+        badent_prefix = stash_lit(
             stash, "Key-value delimiter must appear exactly once in "
                    "each entry. Bad input: '")
-        badent_q = _stash_lit(stash, "'")
+        badent_q = stash_lit(stash, "'")
         badent = _raise(
             f"concat({badent_prefix}, "
             f"element_at(filter({ents}, "
@@ -1555,22 +1446,22 @@ def _rewrite_one(
             "MAP<STRING, STRING>")
         keys = f"transform({ents}, p -> element_at(split(p, {quoted[1]}, -1), 1))"
         dup = _raise(
-            _stash_lit(stash, "Duplicate keys are not allowed"),
+            stash_lit(stash, "Duplicate keys are not allowed"),
             "MAP<STRING, STRING>")
         # empty delimiters raise BEFORE any scanning — the reference's
         # checkCondition runs even for empty input
         # (SplitToMapFunction.java:53-54: 'entryDelimiter is empty' /
         # 'keyValueDelimiter is empty')
-        ed_empty = _raise(_stash_lit(stash, "entryDelimiter is empty"),
+        ed_empty = _raise(stash_lit(stash, "entryDelimiter is empty"),
                           "MAP<STRING, STRING>")
         kvd_empty = _raise(
-            _stash_lit(stash, "keyValueDelimiter is empty"),
+            stash_lit(stash, "keyValueDelimiter is empty"),
             "MAP<STRING, STRING>")
         return (
             f"(CASE WHEN length({a[1]}) = 0 THEN {ed_empty} "
             f"WHEN length({a[2]}) = 0 THEN {kvd_empty} "
             f"WHEN ({a[1]}) = ({a[2]}) THEN "
-            + _raise(_stash_lit(stash, "entryDelimiter and "
+            + _raise(stash_lit(stash, "entryDelimiter and "
                                        "keyValueDelimiter must not be "
                                        "the same"),
                      "MAP<STRING, STRING>")
@@ -1588,7 +1479,7 @@ def _rewrite_one(
         )
 
     if name == "to_utf8" and len(a) == 1:
-        return f"encode({a[0]}, {_stash_lit(stash, 'UTF-8')})"
+        return f"encode({a[0]}, {stash_lit(stash, 'UTF-8')})"
 
     if name == "from_utf8" and len(a) in (1, 2):
         # Presto from_utf8 REPLACES each malformed sequence
@@ -1599,10 +1490,10 @@ def _rewrite_one(
         # from_utf8_replace UDF (functions/udfs.py — the same
         # malformed-run stepping as Java's CharsetDecoder).
         if len(a) == 1:
-            repl = _stash_lit(stash, "�")
+            repl = stash_lit(stash, "�")
         elif re.fullmatch(r"\s*\d+\s*", args[1]):
             # codepoint overload, literal form
-            repl = _stash_lit(stash, chr(int(args[1])))
+            repl = stash_lit(stash, chr(int(args[1])))
         else:
             repl = a[1]
         return f"from_utf8_replace({a[0]}, {repl})"
@@ -1612,7 +1503,7 @@ def _rewrite_one(
         # KEYWORD in Presto's grammar; lower it to a string arg of
         # the registered unicode_normalize pandas UDF.
         if len(a) == 1:
-            form = _stash_lit(stash, "NFC")
+            form = stash_lit(stash, "NFC")
         else:
             kw = args[1].strip().upper()
             km = _STR_PH.match(kw)
@@ -1623,10 +1514,10 @@ def _rewrite_one(
                 # an unknown form previously fell through to an
                 # unresolved-routine error)
                 return _raise(
-                    _stash_lit(stash, "Normalization form must be "
+                    stash_lit(stash, "Normalization form must be "
                                       "one of [NFD, NFC, NFKD, NFKC]"),
                     "STRING")
-            form = _stash_lit(stash, kw)
+            form = stash_lit(stash, kw)
         return f"unicode_normalize({form}, {a[0]})"
 
     if name in ("lpad", "rpad") and len(a) == 3:
@@ -1635,10 +1526,10 @@ def _rewrite_one(
         # string) and empty pad strings.
         s_, n, pad = a
         badlen = _raise(
-            _stash_lit(stash, "Target length must be in the range "
+            stash_lit(stash, "Target length must be in the range "
                               "[0..2147483647]"), "STRING")
         badpad = _raise(
-            _stash_lit(stash, "Padding string must not be empty"),
+            stash_lit(stash, "Padding string must not be empty"),
             "STRING")
         return (
             f"(CASE WHEN {n} < 0 OR {n} > 2147483647 THEN {badlen} "
@@ -1651,14 +1542,14 @@ def _rewrite_one(
         # where Spark's date_trunc returns NULL (r12 leniency
         # conversion). Literal units only; the valid set passes
         # through untouched.
-        unit = _lit_of(args[0], stash)
+        unit = lit_of(args[0], stash)
         if unit is not None and unit.lower() not in (
                 "millisecond", "second", "minute", "hour", "day",
                 "week", "month", "quarter", "year"):
             return _raise(
-                _stash_lit(stash,
-                           f"'{unit.lower()}' is not a valid "
-                           "Timestamp field"),
+                stash_lit(stash,
+                          f"'{unit.lower()}' is not a valid "
+                          "Timestamp field"),
                 "TIMESTAMP")
         return None
 
@@ -1672,8 +1563,8 @@ def _rewrite_one(
         # TestJsonFunctions.java:280). The engine's JSON type is the
         # canonical STRING.
         bad = _raise(
-            f"concat({_stash_lit(stash, 'Cannot convert ')}, {a[0]}, "
-            f"{_stash_lit(stash, ' to JSON')})", "STRING")
+            f"concat({stash_lit(stash, 'Cannot convert ')}, {a[0]}, "
+            f"{stash_lit(stash, ' to JSON')})", "STRING")
         return (f"(CASE WHEN {a[0]} IS NULL THEN CAST(NULL AS STRING) "
                 f"WHEN json_invalid({a[0]}) THEN {bad} "
                 f"ELSE to_json(parse_json({a[0]})) END)")
@@ -1758,14 +1649,14 @@ def _rewrite_one(
         # excludes it.
         j, v = _unwrap_json_literal(a[0]), a[1]
         arr = f"from_json(CAST({j} AS STRING), " \
-              f"{_stash_lit(stash, 'array<variant>')})"
+              f"{stash_lit(stash, 'array<variant>')})"
         sv = "schema_of_variant(e)"
         int_kinds = ", ".join(
-            _stash_lit(stash, k)
+            stash_lit(stash, k)
             for k in ("tinyint", "smallint", "int", "bigint"))
         dbl = f"CAST({v} AS DOUBLE)"
         lit = {
-            s: _stash_lit(stash, s)
+            s: stash_lit(stash, s)
             for s in ("BIGINT", "DOUBLE", "DECIMAL(%", "decimal(%",
                       "BOOLEAN", "STRING", "double", "float",
                       "boolean", "Infinity")
@@ -1816,13 +1707,13 @@ def _rewrite_one(
             # ArrayCombinationsFunction.java:59 (r12 leniency
             # conversion)
             return _raise(
-                _stash_lit(stash,
-                           f"combination size must not be negative: {n}"),
+                stash_lit(stash,
+                          f"combination size must not be negative: {n}"),
                 "ARRAY<STRING>")
         if n > 5:
             return _raise(
-                _stash_lit(stash,
-                           f"combination size must not exceed 5: {n}"),
+                stash_lit(stash,
+                          f"combination size must not exceed 5: {n}"),
                 "ARRAY<STRING>")
         if n == 0:
             return "array(array())"
@@ -1841,7 +1732,7 @@ def _rewrite_one(
                     f"(CAST(size({arr}) AS BIGINT) - {j})"
                     for j in range(n))
                 toobig = _raise(
-                    _stash_lit(stash, "combinations exceed max size"),
+                    stash_lit(stash, "combinations exceed max size"),
                     "INT")
                 hi = (f"(CASE WHEN ({ccount}) / {fact} * {n} > 100000 "
                       f"THEN {toobig} ELSE {hi} END)")
@@ -1874,7 +1765,7 @@ def _rewrite_one(
         # (functions/udfs.py from_ieee754_64;
         # TestVarbinaryFunctions.java:235,266)
         t = "DOUBLE" if name.endswith("64") else "FLOAT"
-        nan = _stash_lit(stash, "NaN")
+        nan = stash_lit(stash, "NaN")
         return (f"(CASE WHEN ({a[0]}) IS NULL THEN CAST(NULL AS {t}) "
                 f"ELSE coalesce({name}({a[0]}), "
                 f"CAST({nan} AS {t})) END)")
@@ -1882,14 +1773,14 @@ def _rewrite_one(
     if name == "parse_presto_data_size" and len(a) == 1:
         # '2.2kB' -> DECIMAL bytes (DataSizeFunctions.java; binary
         # units). Literal argument resolved at rewrite time.
-        lit = _lit_of(args[0], stash)
+        lit = lit_of(args[0], stash)
         if lit is None:
             return None
         m = re.match(r"^\s*(\d+(?:\.\d+)?)\s*([a-zA-Z]+)\s*$", lit)
         units = {"B": 0, "kB": 1, "MB": 2, "GB": 3, "TB": 4,
                  "PB": 5, "EB": 6, "ZB": 7, "YB": 8}
         if m is None or m.group(2) not in units:
-            bad = _stash_lit(
+            bad = stash_lit(
                 stash, f"Invalid data size: '{lit}'"
             )
             return _raise(bad, "DECIMAL(38, 0)")
@@ -1904,19 +1795,19 @@ def _rewrite_one(
             ctx.prec = 90
             value = int(_D(m.group(1)) *
                         (1 << (10 * units[m.group(2)])))
-        return f"CAST({_stash_lit(stash, str(value))} AS DECIMAL(38, 0))"
+        return f"CAST({stash_lit(stash, str(value))} AS DECIMAL(38, 0))"
 
     if name == "parse_duration" and len(a) == 1:
         # '5m' -> INTERVAL DAY TO SECOND (DateTimeFunctions.java
         # parseDuration via airlift Duration). Literal only.
-        lit = _lit_of(args[0], stash)
+        lit = lit_of(args[0], stash)
         if lit is None:
             return None
         m = re.match(r"^\s*(\d+(?:\.\d+)?)\s*([a-z]+)\s*$", lit)
         secs_per = {"ns": 1e-9, "us": 1e-6, "ms": 1e-3, "s": 1.0,
                     "m": 60.0, "h": 3600.0, "d": 86400.0}
         if m is None or m.group(2) not in secs_per:
-            bad = _stash_lit(stash, f"duration is not a valid data duration string: {lit}")
+            bad = stash_lit(stash, f"duration is not a valid data duration string: {lit}")
             return _raise(bad, "INTERVAL DAY TO SECOND")
         total = float(m.group(1)) * secs_per[m.group(2)]
         return f"make_dt_interval(0, 0, 0, CAST({total!r} AS DECIMAL(18, 6)))"
@@ -1937,10 +1828,10 @@ def _rewrite_one(
         # form (runtime DATE columns would get T00:00:00.000 — the
         # documented static-rewrite limitation).
         if _DATE_LIT.match(args[0].strip()):
-            return f"date_format({a[0]}, {_stash_lit(stash, 'yyyy-MM-dd')})"
+            return f"date_format({a[0]}, {stash_lit(stash, 'yyyy-MM-dd')})"
         return (
             f"date_format({a[0]}, "
-            f"{_stash_lit(stash, chr(39).join(['yyyy-MM-dd', 'T', 'HH:mm:ss.SSS']))})"
+            f"{stash_lit(stash, chr(39).join(['yyyy-MM-dd', 'T', 'HH:mm:ss.SSS']))})"
         )
 
     if name == "millisecond" and len(a) == 1:
@@ -1958,18 +1849,18 @@ def _rewrite_one(
         )
 
     if name == "current_timezone" and len(a) in (0, 1):
-        return _stash_lit(stash, "UTC")
+        return stash_lit(stash, "UTC")
 
     if name == "to_base64url" and len(a) == 1:
-        plus, dash = _stash_lit(stash, "+/"), _stash_lit(stash, "-_")
+        plus, dash = stash_lit(stash, "+/"), stash_lit(stash, "-_")
         return f"translate(base64({a[0]}), {plus}, {dash})"
 
     if name == "from_base64url" and len(a) == 1:
-        plus, dash = _stash_lit(stash, "+/"), _stash_lit(stash, "-_")
+        plus, dash = stash_lit(stash, "+/"), stash_lit(stash, "-_")
         return f"unbase64(translate({a[0]}, {dash}, {plus}))"
 
     if name == "to_big_endian_32" and len(a) == 1:
-        z = _stash_lit(stash, "0")
+        z = stash_lit(stash, "0")
         return (
             f"unhex(lpad(hex(CAST(CAST({a[0]} AS INT) AS BIGINT) "
             f"& 4294967295), 8, {z}))"
@@ -1979,7 +1870,7 @@ def _rewrite_one(
         # exactly 4 bytes or raise (VarbinaryFunctions.java:203 —
         # r13 leniency conversion)
         badlen = _raise(
-            f"concat({_stash_lit(stash, 'expected 4-byte input, but got instead: ')}, "
+            f"concat({stash_lit(stash, 'expected 4-byte input, but got instead: ')}, "
             f"CAST(length({a[0]}) AS STRING))", "INT")
         u = f"CAST(conv(hex({a[0]}), 16, 10) AS BIGINT)"
         return (
@@ -1995,12 +1886,12 @@ def _rewrite_one(
         # byte' (r13 leniency conversion; the previous lowering was a
         # bare rename to unhex, which returns NULL/truncates)
         x = f"CAST({a[0]} AS STRING)"
-        nonhex = _stash_lit(stash, "[^0-9a-fA-F]")
+        nonhex = stash_lit(stash, "[^0-9a-fA-F]")
         badlen = _raise(
-            f"concat({_stash_lit(stash, 'invalid input length ')}, "
+            f"concat({stash_lit(stash, 'invalid input length ')}, "
             f"CAST(length({x}) AS STRING))", "BINARY")
         badbyte = _raise(
-            f"concat({_stash_lit(stash, 'invalid hex byte: ')}, "
+            f"concat({stash_lit(stash, 'invalid hex byte: ')}, "
             f"regexp_extract({x}, {nonhex}, 0))", "BINARY")
         return (
             f"(CASE WHEN {a[0]} IS NULL THEN CAST(NULL AS BINARY) "
@@ -2014,7 +1905,7 @@ def _rewrite_one(
         # arguments (r13 leniency conversion; Spark's concat('') is
         # the identity)
         return _raise(
-            _stash_lit(stash, "There must be two or more "
+            stash_lit(stash, "There must be two or more "
                               "concatenation arguments"), "STRING")
 
     if name == "map_from_entries" and len(a) == 1:
@@ -2024,7 +1915,7 @@ def _rewrite_one(
         # cannot name map<K,V>); the NULL arm is unreachable.
         guard = (
             f"assert_true(NOT exists({a[0]}, e -> e IS NULL), "
-            f"{_stash_lit(stash, 'map entry cannot be null')})"
+            f"{stash_lit(stash, 'map entry cannot be null')})"
         )
         return (f"map_from_entries(IF(isnull({guard}), {a[0]}, "
                 f"NULL))")
@@ -2042,7 +1933,7 @@ def _rewrite_one(
             return None  # not a 2-param lambda: leave untouched
         x, y, body = lm.group(1), lm.group(2), lm.group(3)
         bad = _raise(
-            _stash_lit(stash, "Lambda comparator must return either "
+            stash_lit(stash, "Lambda comparator must return either "
                               "-1, 0, or 1"), "INT")
         return (
             f"array_sort({a[0]}, ({x}, {y}) -> "
@@ -2075,7 +1966,7 @@ def _rewrite_one(
             f"filter(sequence(1, length({s})), "
             f"p -> substr({s}, p, length({sub})) = {sub})"
         )
-        msg = _stash_lit(stash, "'instance' must be a positive number.")
+        msg = stash_lit(stash, "'instance' must be a positive number.")
         return (
             f"(CASE WHEN ({n}) <= 0 THEN "
             f"CAST(raise_error({msg}) AS BIGINT) "
@@ -2094,15 +1985,15 @@ def _rewrite_one(
         # array_repeat with the reference's bounds (negative raises,
         # count capped at 10000: RepeatFunction.java:36,146).
         x, n = a
-        msg = _stash_lit(
+        msg = stash_lit(
             stash,
             "count argument of repeat function must be less than or "
             "equal to 10000",
         )
-        neg = _stash_lit(stash, "count argument of repeat function "
+        neg = stash_lit(stash, "count argument of repeat function "
                                 "must be greater than or equal to 0")
         toobig = _raise(
-            _stash_lit(stash, "result of repeat function must not "
+            stash_lit(stash, "result of repeat function must not "
                               "take more than 1000000 bytes"), "INT")
         # byte cap (RepeatFunction.checkMaxSize: bytes <= (1MB +
         # count)/count): exact for VARCHAR elements (Slice length ==
@@ -2115,7 +2006,7 @@ def _rewrite_one(
             f"WHEN ({n}) > 10000 THEN "
             f"array_repeat({x}, CAST(raise_error({msg}) AS INT)) "
             f"WHEN ({n}) > 0 AND "
-            f"startswith(typeof({x}), {_stash_lit(stash, 'string')}) "
+            f"startswith(typeof({x}), {stash_lit(stash, 'string')}) "
             f"AND octet_length(CAST({x} AS STRING)) > "
             f"CAST((1000000 + ({n})) DIV ({n}) AS BIGINT) THEN "
             f"array_repeat({x}, {toobig}) "
@@ -2169,22 +2060,22 @@ def _rewrite_one(
                           f"CAST({a[2]} AS DOUBLE)",
                           f"CAST({a[3]} AS BIGINT)")
         badc = _raise(
-            _stash_lit(stash, "bucketCount must be greater than 0"),
+            stash_lit(stash, "bucketCount must be greater than 0"),
             "BIGINT")
         nan = _raise(
-            _stash_lit(stash, "operand must not be NaN"), "BIGINT")
+            stash_lit(stash, "operand must not be NaN"), "BIGINT")
         beq = _raise(
-            _stash_lit(stash, "bounds cannot equal each other"),
+            stash_lit(stash, "bounds cannot equal each other"),
             "BIGINT")
         bf1 = _raise(
-            _stash_lit(stash, "first bound must be finite"), "BIGINT")
+            stash_lit(stash, "first bound must be finite"), "BIGINT")
         bf2 = _raise(
-            _stash_lit(stash, "second bound must be finite"), "BIGINT")
-        infv = f"CAST({_stash_lit(stash, 'Infinity')} AS DOUBLE)"
+            stash_lit(stash, "second bound must be finite"), "BIGINT")
+        infv = f"CAST({stash_lit(stash, 'Infinity')} AS DOUBLE)"
         oflow = _raise(
-            f"concat({_stash_lit(stash, 'Bucket for value ')}, "
+            f"concat({stash_lit(stash, 'Bucket for value ')}, "
             f"CAST({x} AS STRING), "
-            f"{_stash_lit(stash, ' is out of range')})", "BIGINT")
+            f"{stash_lit(stash, ' is out of range')})", "BIGINT")
         # Exact replica of the reference's unified arithmetic
         # (MathFunctions.java:1172-1195): r over (lower, upper) =
         # (min, max), THEN flip r -> cnt - r + 1 when bound1 > bound2.
@@ -2217,7 +2108,7 @@ def _rewrite_one(
         # double, a silent wrong-TYPE trap the r12 sweep closed.
         n = a[0]
         bad = _raise(
-            _stash_lit(stash, "bound must be positive"), "BIGINT")
+            stash_lit(stash, "bound must be positive"), "BIGINT")
         return (
             f"(CASE WHEN {n} <= 0 THEN {bad} "
             f"ELSE CAST(floor(rand() * {n}) AS BIGINT) END)"
@@ -2231,7 +2122,7 @@ def _rewrite_one(
         # expression appears twice).
         seq = f"sequence({', '.join(x.strip() for x in args)})"
         toobig = _raise(
-            _stash_lit(stash, "result of sequence function must not "
+            stash_lit(stash, "result of sequence function must not "
                               "have more than 10000 entries"), "INT")
         lo = f"(CASE WHEN size({seq}) > 10000 THEN {toobig} ELSE 1 END)"
         return f"slice({seq}, {lo}, size({seq}))"
@@ -2256,9 +2147,9 @@ def _rewrite_one(
         # reference rejects (TestJsonFunctions.java:48-51, r13
         # leniency conversion); the first non-space char classifies.
         j = a[0]
-        bracket = _stash_lit(stash, "^[\\[{]")
+        bracket = stash_lit(stash, "^[\\[{]")
         bad = _raise(
-            f"concat({_stash_lit(stash, 'Invalid JSON value: ')}, {j})",
+            f"concat({stash_lit(stash, 'Invalid JSON value: ')}, {j})",
             "BOOLEAN")
         return (
             f"(CASE WHEN {j} IS NULL THEN CAST(NULL AS BOOLEAN) "
@@ -2284,12 +2175,12 @@ def _rewrite_one(
         # 1e2 -> '100.0'), untested in the reference suite.
         j = f"CAST({_unwrap_json_literal(a[0])} AS STRING)"
         idx = a[1]
-        arr = f"from_json({j}, {_stash_lit(stash, 'array<variant>')})"
+        arr = f"from_json({j}, {stash_lit(stash, 'array<variant>')})"
         i2 = (f"(CASE WHEN ({idx}) >= 0 THEN ({idx}) "
               f"ELSE size({arr}) + ({idx}) END)")
         long_min = "(CAST(-9223372036854775807 AS BIGINT) - 1)"
-        path = (f"concat({_stash_lit(stash, '$[')}, "
-                f"CAST({i2} AS STRING), {_stash_lit(stash, ']')})")
+        path = (f"concat({stash_lit(stash, '$[')}, "
+                f"CAST({i2} AS STRING), {stash_lit(stash, ']')})")
         return (
             f"(CASE WHEN ({a[0]}) IS NULL OR ({idx}) IS NULL "
             f"THEN CAST(NULL AS STRING) "
@@ -2348,14 +2239,14 @@ def _rewrite_one(
         nulls = " OR ".join(f"({x}) IS NULL" for x in a)
         whens = " ".join(
             f"WHEN NOT ({cond}) THEN "
-            f"{_raise(_stash_lit(stash, msg), 'DOUBLE')}"
+            f"{_raise(stash_lit(stash, msg), 'DOUBLE')}"
             for cond, msg in guards
         )
         return (f"(CASE WHEN {nulls} THEN CAST(NULL AS DOUBLE) "
                 f"{whens} ELSE {call} END)")
 
     if name in ("hmac_md5", "hmac_sha1", "hmac_sha512") and len(a) == 2:
-        algo = _stash_lit(stash, name.removeprefix("hmac_"))
+        algo = stash_lit(stash, name.removeprefix("hmac_"))
         return f"unhex(hmac_any_hex({algo}, {a[0]}, {a[1]}))"
 
     if name in ("wilson_interval_lower", "wilson_interval_upper") and len(a) == 3:
@@ -2377,7 +2268,7 @@ def _rewrite_one(
         )
         whens = " ".join(
             f"WHEN NOT ({cond}) THEN "
-            f"{_raise(_stash_lit(stash, msg), 'DOUBLE')}"
+            f"{_raise(stash_lit(stash, msg), 'DOUBLE')}"
             for cond, msg in (
                 (f"{s_} >= 0",
                  "number of successes must not be negative"),
@@ -2399,15 +2290,15 @@ def _rewrite_one(
         # map K -> array of ALL values (SplitToMultimapFunction.java).
         quoted = []
         for arg in (args[1], args[2]):
-            lit = _lit_of(arg, stash)
+            lit = lit_of(arg, stash)
             if lit is not None:
-                quoted.append(_stash_lit(
+                quoted.append(stash_lit(
                     stash, re.sub(r"([\\.\[\]{}()*+?^$|-])", r"\\\1", lit)
                 ))
             else:
-                q, e = _stash_lit(stash, "\\Q"), _stash_lit(stash, "\\E")
+                q, e = stash_lit(stash, "\\Q"), stash_lit(stash, "\\E")
                 quoted.append(f"concat({q}, ({arg.strip()}), {e})")
-        empty = _stash_lit(stash, "")
+        empty = stash_lit(stash, "")
         raw = f"split({a[0]}, {quoted[0]}, -1)"
         ents = (f"(CASE WHEN element_at({raw}, size({raw})) = {empty} "
                 f"AND size({raw}) > 1 "
@@ -2415,31 +2306,31 @@ def _rewrite_one(
                 f"ELSE {raw} END)")
         entries = (
             f"transform({ents}, p -> named_struct("
-            f"{_stash_lit(stash, 'k')}, element_at(split(p, {quoted[1]}, -1), 1), "
-            f"{_stash_lit(stash, 'v')}, element_at(split(p, {quoted[1]}, -1), 2)))"
+            f"{stash_lit(stash, 'k')}, element_at(split(p, {quoted[1]}, -1), 1), "
+            f"{stash_lit(stash, 'v')}, element_at(split(p, {quoted[1]}, -1), 2)))"
         )
         keys = f"array_distinct(transform({entries}, x -> x.k))"
         # r13 leniency conversions (SplitToMultimapFunction.java:
         # same contract as split_to_map — delimiter equality and the
         # kv-delimiter-exactly-once-per-entry rule raise)
-        mm_prefix = _stash_lit(
+        mm_prefix = stash_lit(
             stash, "Key-value delimiter must appear exactly once in "
                    "each entry. Bad input: '")
-        mm_q = _stash_lit(stash, "'")
+        mm_q = stash_lit(stash, "'")
         badent = _raise(
             f"concat({mm_prefix}, element_at(filter({ents}, "
             f"p -> size(split(p, {quoted[1]}, -1)) != 2), 1), {mm_q})",
             "MAP<STRING, ARRAY<STRING>>")
         samedelim = _raise(
-            _stash_lit(stash, "entryDelimiter and keyValueDelimiter "
+            stash_lit(stash, "entryDelimiter and keyValueDelimiter "
                               "must not be the same"),
             "MAP<STRING, ARRAY<STRING>>")
         # same pre-scan empty-delimiter raises as split_to_map
         # (SplitToMultimapFunction.java checkCondition order)
-        mm_ed = _raise(_stash_lit(stash, "entryDelimiter is empty"),
+        mm_ed = _raise(stash_lit(stash, "entryDelimiter is empty"),
                        "MAP<STRING, ARRAY<STRING>>")
         mm_kvd = _raise(
-            _stash_lit(stash, "keyValueDelimiter is empty"),
+            stash_lit(stash, "keyValueDelimiter is empty"),
             "MAP<STRING, ARRAY<STRING>>")
         return (
             f"(CASE WHEN length({a[1]}) = 0 THEN {mm_ed} "
@@ -2464,7 +2355,7 @@ def _rewrite_one(
             f"filter(sequence(1, length({hay})), "
             f"p -> substr({hay}, p, length({sub})) = {sub})"
         )
-        msg = _stash_lit(stash, "'instance' must be a positive "
+        msg = stash_lit(stash, "'instance' must be a positive "
                                 "number.")
         return (
             f"(CASE WHEN ({hay}) IS NULL OR ({sub}) IS NULL "
@@ -2488,7 +2379,7 @@ def _rewrite_one(
         kinds = {_static_arg_type(raw) for raw in args}
         if kinds & {"double", "real"}:
             t = "DOUBLE" if "double" in kinds else "FLOAT"
-            nan = _stash_lit(stash, "NaN")
+            nan = stash_lit(stash, "NaN")
             x, y = a
             return (
                 f"CAST((CASE WHEN ({x}) IS NULL OR ({y}) IS NULL "
@@ -2523,14 +2414,14 @@ def _rewrite_one(
             float_args = [x for x, raw in zip(a, args)
                           if _static_arg_type(raw) in ("double",
                                                        "real")]
-            msg = _stash_lit(
+            msg = stash_lit(
                 stash, f"Invalid argument to {name}(): NaN")
             nan_cond = " OR ".join(f"isnan(({x}))"
                                    for x in float_args)
             nan_guard = (f"WHEN {nan_cond} THEN "
                          f"CAST(raise_error({msg}) AS DOUBLE) ")
         elif float_kinds == {"real"}:
-            lose = _stash_lit(
+            lose = stash_lit(
                 stash, "-Infinity" if name == "greatest"
                 else "Infinity")
             nan_guard = (f"WHEN isnan(({a[0]})) THEN "
@@ -2575,7 +2466,7 @@ def _rewrite_one(
         # WordStemFunction.java 2-arg form; only the English stemmer
         # is carried (the container has no Snowball library — the
         # 1-arg UDF is a documented s-stemmer approximation)
-        lang = _lit_of(args[1], stash)
+        lang = lit_of(args[1], stash)
         if lang is not None and lang.strip().lower() == "en":
             return f"word_stem({a[0]})"
         return None
@@ -2585,11 +2476,11 @@ def _rewrite_one(
         # ($["foo.bar"], JsonExtract.java tokenizePath); Spark's
         # get_json_object wants single quotes — normalize literal
         # paths, leave dynamic ones to the name mapping
-        path = _lit_of(args[1], stash)
+        path = lit_of(args[1], stash)
         if path is not None and '["' in path:
             fixed = path.replace('["', "['").replace('"]', "']")
             return (
-                f"get_json_object({a[0]}, {_stash_lit(stash, fixed)})"
+                f"get_json_object({a[0]}, {stash_lit(stash, fixed)})"
             )
         return None
 
@@ -2632,7 +2523,7 @@ def _rewrite_one(
         # 8-byte big-endian two's complement (VarbinaryFunctions.java
         # toBigEndian64) — hex() of BIGINT is already BE two's
         # complement, left-padded to the full width.
-        return f"unhex(lpad(hex(CAST({a[0]} AS BIGINT)), 16, {_stash_lit(stash, '0')}))"
+        return f"unhex(lpad(hex(CAST({a[0]} AS BIGINT)), 16, {stash_lit(stash, '0')}))"
 
     if name == "from_big_endian_64" and len(a) == 1:
         # conv() reads the hex as UNSIGNED 64-bit; values >= 2^63
@@ -2640,7 +2531,7 @@ def _rewrite_one(
         # (exact in DECIMAL(20,0)). Exactly 8 bytes or raise
         # (VarbinaryFunctions.java:182 — r13 leniency conversion).
         badlen = _raise(
-            f"concat({_stash_lit(stash, 'expected 8-byte input, but got instead: ')}, "
+            f"concat({stash_lit(stash, 'expected 8-byte input, but got instead: ')}, "
             f"CAST(length({a[0]}) AS STRING))", "BIGINT")
         h = f"hex({a[0]})"
         u = f"CAST(conv({h}, 16, 10) AS DECIMAL(20, 0))"
@@ -2654,7 +2545,7 @@ def _rewrite_one(
 
     if name in ("array_min", "array_max") and len(a) == 1:
         x = a[0]
-        nan = _stash_lit(stash, "NaN")
+        nan = stash_lit(stash, "NaN")
         has_nan = (
             f"coalesce(exists({x}, e -> CAST(e AS STRING) = {nan}), false)"
         )
@@ -2713,7 +2604,7 @@ def _rewrite_one(
         if is_null:
             return f"{name}({a[0]}, 2147483647)"
         def _lit_digit(mm: re.Match) -> str:
-            text = _lit_of(mm.group(1), stash)
+            text = lit_of(mm.group(1), stash)
             return text if text is not None and text.isdigit() else "x"
 
         plain = re.sub(
@@ -2759,7 +2650,7 @@ def _rewrite_one(
         #     where the reference's overflow-counter state keeps
         #     averaging — a raise, never a wrong value. p > 30
         #     (k < 2) declines: bounds too weak to claim.
-        ps = _single_decimal_cast_type(args[0])
+        ps = decimal_cast_type(args[0])
         if ps is None:
             return None
         p, s = ps
@@ -2781,7 +2672,7 @@ def _rewrite_one(
         # (38, s) — accumulation semantics AND declared type match
         # with no outer cast, so OVER/FILTER call shapes compose
         # unchanged. Non-decimal / non-static args pass through.
-        ps = _single_decimal_cast_type(args[0])
+        ps = decimal_cast_type(args[0])
         if ps is None:
             return None
         p, s = ps
@@ -2796,7 +2687,7 @@ def _rewrite_one(
         # yields NULL. n >= 3 with a NULL Spark result can only mean
         # zero variance (all-null input falls in the n < 3 branch).
         x = f"CAST({a[0]} AS DOUBLE)"
-        nan = _stash_lit(stash, "NaN")
+        nan = stash_lit(stash, "NaN")
         return (
             f"(CASE WHEN count({x}) < 3 THEN CAST(NULL AS DOUBLE) "
             f"WHEN skewness({x}) IS NULL THEN CAST({nan} AS DOUBLE) "
@@ -2812,7 +2703,7 @@ def _rewrite_one(
         x = f"CAST({a[0]} AS DOUBLE)"
         n = f"count({x})"
         ks = f"kurtosis({x})"
-        nan = _stash_lit(stash, "NaN")
+        nan = stash_lit(stash, "NaN")
         return (
             f"(CASE WHEN {n} < 4 THEN CAST(NULL AS DOUBLE) "
             f"WHEN {ks} IS NULL THEN CAST({nan} AS DOUBLE) "
@@ -2845,7 +2736,7 @@ def _rewrite_one(
         # count < 0 raises, count = 0 contributes nothing, empty or
         # zero-sum input -> 0.0 (not NULL), output clamped at >= 0.
         c = a[0]
-        msg = _stash_lit(
+        msg = stash_lit(
             stash, "Entropy count argument must be non-negative"
         )
         sc = (
@@ -2873,8 +2764,8 @@ def _rewrite_one(
         # Spark's ln() would NULL those out, so the CASE spells the
         # Java values explicitly.
         x = a[0]
-        ninf = _stash_lit(stash, "-Infinity")
-        nan = _stash_lit(stash, "NaN")
+        ninf = stash_lit(stash, "-Infinity")
+        nan = stash_lit(stash, "NaN")
         return (
             f"exp(avg(CASE WHEN {x} IS NULL THEN CAST(NULL AS DOUBLE) "
             f"WHEN {x} > 0 THEN ln(CAST({x} AS DOUBLE)) "
@@ -2904,7 +2795,7 @@ def _rewrite_one(
         # MapAggregationFunction via KeyValuePairs: null keys
         # skipped, duplicate keys keep the FIRST occurrence
         # (TypedSet.contains gate), empty -> NULL.
-        lk, lv = _stash_lit(stash, "k"), _stash_lit(stash, "v")
+        lk, lv = stash_lit(stash, "k"), stash_lit(stash, "v")
         entries = (
             f"collect_list(CASE WHEN {a[0]} IS NOT NULL THEN "
             f"named_struct({lk}, {a[0]}, {lv}, {a[1]}) END)"
@@ -2920,7 +2811,7 @@ def _rewrite_one(
     if name == "multimap_agg" and len(a) == 2:
         # MultimapAggregationFunction: key -> array of ALL values in
         # arrival order; null keys skipped, empty -> NULL.
-        lk, lv = _stash_lit(stash, "k"), _stash_lit(stash, "v")
+        lk, lv = stash_lit(stash, "k"), stash_lit(stash, "v")
         entries = (
             f"collect_list(CASE WHEN {a[0]} IS NOT NULL THEN "
             f"named_struct({lk}, {a[0]}, {lv}, {a[1]}) END)"
@@ -2942,7 +2833,7 @@ def _rewrite_one(
         # (functions/xxhash.py — reference type-hash mixes + public
         # XXH64); the sum runs exact in DECIMAL and wraps once.
         x = a[0]
-        bin_t = _stash_lit(stash, "binary")
+        bin_t = stash_lit(stash, "binary")
         rendered = (
             f"(CASE WHEN typeof({x}) = {bin_t} THEN hex({x}) "
             f"ELSE CAST({x} AS STRING) END)"
@@ -2955,7 +2846,7 @@ def _rewrite_one(
             f"CAST((CASE WHEN {tot} >= 9223372036854775808 "
             f"THEN {tot} - 18446744073709551616 ELSE {tot} END) AS BIGINT)"
         )
-        zero = _stash_lit(stash, "0")
+        zero = stash_lit(stash, "0")
         hx = f"lpad(hex({signed}), 16, {zero})"
         le = ", ".join(
             f"substr({hx}, {pos}, 2)" for pos in (15, 13, 11, 9, 7, 5, 3, 1)
@@ -2985,7 +2876,7 @@ def _rewrite_one(
         # Presto leaves key ties arbitrary — the comparator breaks
         # them by value ascending so the result is deterministic
         # (and matches an ORDER BY key [DESC], value oracle).
-        lk, lv = _stash_lit(stash, "k"), _stash_lit(stash, "v")
+        lk, lv = stash_lit(stash, "k"), stash_lit(stash, "v")
         if name == "max_by":
             cmp_ = (
                 "CASE WHEN __l.k < __r.k THEN 1 "
@@ -3046,7 +2937,7 @@ def _rewrite_one(
         if parsed is None:
             return None
         value, keys = parsed
-        lv = _stash_lit(stash, "v")
+        lv = stash_lit(stash, "v")
         if not keys:
             if len(args) != 1:
                 return None
@@ -3058,7 +2949,7 @@ def _rewrite_one(
         fields = [f"{lv}, ({value})"]
         clauses: list[str] = []
         for i, (key, direction, nulls_last) in enumerate(keys):
-            kn = _stash_lit(stash, f"k{i}")
+            kn = stash_lit(stash, f"k{i}")
             fields.append(f"{kn}, ({key})")
             null_side = "1" if nulls_last else "-1"
             null_other = "-1" if nulls_last else "1"
@@ -3095,8 +2986,6 @@ def rewrite_scalar_templates(
     emitted replacement: several templates legitimately emit their
     own function name (regexp_extract's guard, array_min's fallback)
     and must never be re-matched."""
-    from presto_0_235_spark.sql.frontend import _balanced, _split_top_comma
-
     pos = 0
     while True:
         m = _SCALAR_CALL.search(masked, pos)
@@ -3104,11 +2993,11 @@ def rewrite_scalar_templates(
             break
         open_i = m.end() - 1
         try:
-            past = _balanced(masked, open_i)
+            past = balanced(masked, open_i)
         except ValueError:
             break
         inner = rewrite_scalar_templates(masked[open_i + 1 : past - 1], stash)
-        args = _split_top_comma(inner)
+        args = split_top(inner)
         name = m.group(1).lower()
         if name in _AGG_TEMPLATE_NAMES and (
             _AGG_SUFFIX_RE.match(masked, past)
@@ -3128,7 +3017,7 @@ def rewrite_scalar_templates(
                               re.IGNORECASE)
                 if om:
                     try:
-                        wpast = _balanced(
+                        wpast = balanced(
                             masked, past + om.end() - 1)
                     except ValueError:
                         wpast = None

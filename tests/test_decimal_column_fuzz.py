@@ -30,7 +30,7 @@ SEED = 20260815
 
 
 def _rewriter_declines(op, p1, s1, p2, s2):
-    """Mirror of _dca_emit's remaining decline: only the
+    """Mirror of _decimal_arith_emit's remaining decline: only the
     analysis-reject multiply (result scale > 38 — Presto refuses the
     TYPE) stays un-rewritten; every other site now emits either the
     provably-exact pure-Spark form or the exact-arithmetic UDF."""

@@ -630,7 +630,7 @@ CASES = [
     # (e) multiply whose derived scale exceeds 38: the reference's
     # ANALYZER rejects the result type (createDecimalType refuses
     # scale > precision cap); statically-typed operand sites replay
-    # the raise at translate time (_dca_emit r15) — narrows the
+    # the raise at translate time (_decimal_arith_emit r15) — narrows the
     # non-static-decimal leniency class to genuinely-underivable
     # operand types
     ('type/TestDecimalOperators.java', 0,

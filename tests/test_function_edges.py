@@ -1225,6 +1225,17 @@ VALUE_CASES += [
           "sized cast truncates like Presto)"),
     _case("map_element_at_missing", "element_at(map(ARRAY[1,2], ARRAY['a','b']), 9)",
           None, "MapFunctions.java element_at (missing key -> NULL)"),
+    # a parenthesized or negated DOUBLE/REAL operand keeps its type, so
+    # the cast to integral still rounds HALF_UP
+    _case("double_cast_bigint_paren_halfup",
+          "CAST((DOUBLE '2.5') AS BIGINT)", 3,
+          "type/TestDoubleOperators.java castToLong (parenthesized)"),
+    _case("real_cast_bigint_paren_halfup",
+          "CAST((REAL '2.5') AS BIGINT)", 3,
+          "type/TestRealOperators.java castToLong (parenthesized)"),
+    _case("double_cast_bigint_negated_halfup",
+          "CAST(-CAST(2.5 AS DOUBLE) AS BIGINT)", -3,
+          "type/TestDoubleOperators.java castToLong (negated operand)"),
 ]
 
 ERROR_CASES3 = [

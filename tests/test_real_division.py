@@ -95,3 +95,16 @@ def test_double_division_is_ieee(spark):
     assert got == float("-inf")
     t, got = _one(spark, "SELECT 0.0e0 / 0.0e0 AS r")
     assert math.isnan(got) and t == "double"
+    # nan()/infinity() are DOUBLE-typed operands on either side of the
+    # operator, so a zero divisor gives IEEE NaN/Infinity here too
+    # (DoubleOperators.divide / modulus are Java's `/` and `%`)
+    t, got = _one(spark, "SELECT 0 / nan() AS r")
+    assert math.isnan(got) and t == "double"
+    t, got = _one(spark, "SELECT nan() / 0 AS r")
+    assert math.isnan(got) and t == "double"
+    _, got = _one(spark, "SELECT infinity() / 0 AS r")
+    assert got == float("inf")
+    _, got = _one(spark, "SELECT -infinity() / 0 AS r")
+    assert got == float("-inf")
+    t, got = _one(spark, "SELECT nan() % 0 AS r")
+    assert math.isnan(got) and t == "double"
