@@ -12,10 +12,12 @@ for fast iteration; CI-style runs use sf0.01 like the driver).
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import decimal
 import math
 import os
+import uuid
 from collections import Counter
 
 import duckdb
@@ -116,6 +118,21 @@ def assert_df_matches_oracle(df, duck_con, oracle: str) -> None:
             f"row multisets differ (cols={sorted(spark_cols)}); "
             f"spark-only: {only_spark}; duck-only: {only_duck}"
         )
+
+
+@contextlib.contextmanager
+def jobs_submitted(spark):
+    """Collect the ids of the Spark jobs the block submits from this
+    thread, read from the status tracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-probe-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc._jsc.clearJobGroup()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pytest_collection_modifyitems(config, items):

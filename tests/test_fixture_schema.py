@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import types as T
 
 from presto_0_235_spark.catalog import TABLES, load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_submitted
 
 # Physical ts encodings normalize_events_ts knows how to restore.
 KNOWN_TS_LAYOUTS = {"timestamp[ns]", "timestamp[us]", "int64"}
@@ -146,16 +146,79 @@ def test_byte_string_rejects_malformed(bad):
 
 def test_table_memo_per_session_and_invalidation(spark):
     """The load_table memo freezes a table's plan per (session,
-    sf_dir, name); invalidate_table_memo must drop it (the contract
-    for mutable tables), and a session absent from the memo re-lists
-    on next load."""
+    sf_dir, name) and its footer schema per process;
+    invalidate_table_memo must drop both (the contract for mutable
+    tables), and a session absent from the memo re-lists on next
+    load."""
     from presto_0_235_spark import catalog as cat
 
+    path = f"{SF_DIR}/nation.parquet"
+
+    def schema_memoized() -> bool:
+        return any(key[0] == path for key in cat._SCHEMA_MEMO)
+
+    cat.invalidate_table_memo(spark)
     df1 = cat.load_table(spark, SF_DIR, "nation")
+    assert schema_memoized()
     assert cat.load_table(spark, SF_DIR, "nation") is df1
     cat.invalidate_table_memo(spark)
-    df2 = cat.load_table(spark, SF_DIR, "nation")
+    assert not schema_memoized()
+    with jobs_submitted(spark) as jobs:
+        df2 = cat.load_table(spark, SF_DIR, "nation")
     assert df2 is not df1  # fresh plan => fresh footer read + listing
+    assert jobs  # the schema was inferred again
     assert df2.schema == df1.schema
     cat.invalidate_table_memo()  # global form clears every session
-    assert cat.load_table(spark, SF_DIR, "nation") is not df2
+    assert not schema_memoized()
+    with jobs_submitted(spark) as jobs:
+        assert cat.load_table(spark, SF_DIR, "nation") is not df2
+    assert jobs
+
+
+def test_later_session_loads_fixtures_without_jobs(spark):
+    """Only a process's first session infers the fixtures' footer
+    schemas; a later session (one per client) loads all ten tables
+    without a Spark job and sees the same schemas."""
+    from presto_0_235_spark import catalog as cat
+
+    cat.invalidate_table_memo(spark)
+    first = {n: cat.load_table(spark, SF_DIR, n).schema for n in TABLES}
+    later = spark.newSession()
+    with jobs_submitted(spark) as jobs:
+        second = {n: cat.load_table(later, SF_DIR, n).schema
+                  for n in TABLES}
+    assert jobs == []
+    assert second == first
+
+
+def test_schema_memo_keyed_on_inference_confs(spark, tmp_path):
+    """A session whose confs change what parquet inference returns
+    infers its own schema; a later session with the same confs reuses
+    it without a job."""
+    import pyarrow as pa
+
+    from presto_0_235_spark import catalog as cat
+
+    pq.write_table(pa.table({
+        "r_regionkey": pa.array([1], pa.int64()),
+        "r_name": pa.array([b"AFRICA"], pa.binary()),
+    }), tmp_path / "region.parquet")
+    sf_dir = str(tmp_path)
+
+    def binary_as_string_session():
+        s = spark.newSession()
+        s.conf.set("spark.sql.parquet.binaryAsString", "true")
+        return s
+
+    plain = cat.load_table(spark.newSession(), sf_dir, "region")
+    assert dict(plain.dtypes)["r_name"] == "binary"
+    with jobs_submitted(spark) as jobs:
+        as_string = cat.load_table(binary_as_string_session(), sf_dir,
+                                   "region")
+    assert jobs  # inferred, not served from the plain session's entry
+    assert dict(as_string.dtypes)["r_name"] == "string"
+    assert as_string.collect()[0].r_name == "AFRICA"
+    with jobs_submitted(spark) as jobs:
+        again = cat.load_table(binary_as_string_session(), sf_dir, "region")
+    assert jobs == []
+    assert again.schema == as_string.schema

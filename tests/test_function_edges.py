@@ -1426,7 +1426,22 @@ def _value_chunks():
 def test_edge_values_chunk(spark, cases):
     sel = ", ".join(f"({p.values[0]}) AS c{i}"
                     for i, p in enumerate(cases))
-    row = run_sql(spark, f"SELECT {sel}").collect()[0]
+    try:
+        row = run_sql(spark, f"SELECT {sel}").collect()[0]
+    except Exception:
+        # one pin's error fails the whole SELECT; rerun the pins one
+        # at a time to name the pin(s) that raise
+        raised = []
+        for p in cases:
+            try:
+                _eval(spark, p.values[0])
+            except Exception as ex:
+                raised.append(f"{p.id}: {p.values[0]} [{p.values[2]}]: "
+                              f"raised {type(ex).__name__}: "
+                              f"{(str(ex).splitlines() or [''])[0][:200]}")
+        if not raised:
+            raise
+        pytest.fail("\n".join(raised))
     bad = []
     for i, p in enumerate(cases):
         expr, expected, cite = p.values

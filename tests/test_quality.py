@@ -148,7 +148,7 @@ def test_split_assign_proportions_and_stability(spark, sf_dir):
 
 def test_worker_package_ships_and_closures_shrink(spark):
     """r14 (r13 verdict item #3): ensure_session_defaults ships the
-    package zip to executor Pythons once per session (addPyFile) and
+    package zip to executor Pythons once per SparkContext (addPyFile) and
     switches engine modules from pickle-BY-VALUE to by-reference —
     the geometry-aggregate cold path's dominant cost was shipping
     multi-hundred-KB module closures to 32 fresh workers. Pins all
@@ -159,7 +159,7 @@ def test_worker_package_ships_and_closures_shrink(spark):
     from presto_0_235_spark.session import ensure_session_defaults
 
     ensure_session_defaults(spark)
-    assert S._SHIPPED_ANY and spark in S._SHIPPED_SESSIONS
+    assert S._SHIPPED_ANY and spark.sparkContext in S._SHIPPED_CONTEXTS
     from pyspark import cloudpickle as cp
 
     assert len(cp.dumps(geo_agg.union_fold)) < 2000  # was ~234 KB

@@ -1,12 +1,23 @@
-"""Session-layer settings that only build_session can apply."""
+"""Session-layer settings that only build_session can apply, and the
+cost of preparing a session the engine did not build."""
 
 from __future__ import annotations
 
 import functools
+import os
+import subprocess
+import sys
 
 from pyspark.sql import DataFrame
 
-from presto_0_235_spark.session import CODEGEN_CACHE_ENTRIES
+import presto_0_235_spark.session as S
+from presto_0_235_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    ensure_session_defaults,
+)
+from tests.conftest import jobs_submitted
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _compilations(spark) -> int:
@@ -37,3 +48,42 @@ def test_codegen_cache_reuses_compiled_classes(spark):
     before = _compilations(spark)
     run_pass()
     assert _compilations(spark) - before == 0
+
+
+def test_ensure_defaults_submits_no_job(spark, monkeypatch):
+    """Preparing a fresh session runs no Spark job: Python workers fork
+    on the first plan that needs them, not at session start, and the
+    former opt-in warm-up variable is no longer read."""
+    monkeypatch.setenv("SPARK_GRAFT_WARMUP", "1")
+    fresh = spark.newSession()
+    with jobs_submitted(spark) as jobs:
+        ensure_session_defaults(fresh)
+    assert jobs == []
+
+
+def test_package_ships_once_per_context(spark):
+    """Sessions sharing a SparkContext share its shipped package zip: a
+    new session adds no second copy to the tasks' Python includes."""
+    ensure_session_defaults(spark)
+    sc = spark.sparkContext
+    includes = list(sc._python_includes)
+    ensure_session_defaults(spark.newSession())
+    assert sc in S._SHIPPED_CONTEXTS
+    assert sc._python_includes == includes
+
+
+def test_package_zip_removed_at_exit(tmp_path):
+    """The package zip a process builds for its workers is gone once
+    the process exits."""
+    code = ("import os\n"
+            "from presto_0_235_spark.session import _package_zip\n"
+            "path = _package_zip()\n"
+            "assert os.path.getsize(path) > 0\n"
+            "print(path)\n")
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run([sys.executable, "-c", code], cwd=ROOT, env=env,
+                         capture_output=True, text=True, check=True,
+                         timeout=120)
+    path = out.stdout.strip()
+    assert os.path.dirname(path) == str(tmp_path)
+    assert os.listdir(tmp_path) == []

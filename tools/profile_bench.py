@@ -39,7 +39,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
-    os.environ.setdefault("SPARK_GRAFT_WARMUP", "1")
 
     from presto_0_235_spark.session import build_session
     from presto_0_235_spark.queries.registry import all_queries
