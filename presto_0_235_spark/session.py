@@ -89,12 +89,9 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     Python workers (see warmup_python_workers).
     """
     for key, value in SESSION_DEFAULTS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # Static conf on this build — keep going; defaults are
-            # best-effort hardening, not correctness-critical.
-            pass
+        # every key is runtime-modifiable: a static one raises here
+        # rather than leaving the session silently misconfigured
+        spark.conf.set(key, value)
     _ship_package(spark)
     return spark
 
@@ -322,7 +319,7 @@ def build_session(
     )
     # Each generated class compiles once per JVM instead of once per
     # statement (module docstring). Static conf: it cannot live in
-    # SESSION_DEFAULTS, where the runtime set would fail silently.
+    # SESSION_DEFAULTS, whose runtime set would raise.
     builder = builder.config(
         "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
     )

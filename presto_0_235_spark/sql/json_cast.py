@@ -34,14 +34,14 @@ from __future__ import annotations
 
 import re
 
-from presto_0_235_spark.sql.masked import balanced, split_top, stash_lit
+from presto_0_235_spark.sql.masked import (
+    STR_PH, balanced, decimal_of, literal_span, split_top, stash_lit)
 
 # ---------------------------------------------------------------------------
 # type trees: 'json' | 'scalar' | 'unknown'
 #             | ('array', T) | ('map', K, V) | ('row', [T, ...])
 # ---------------------------------------------------------------------------
 
-_STR_PH = re.compile(r"^\x00s(\d+)\x00$")
 _CAST_HEAD = re.compile(r"^(?:TRY_)?CAST\s*\(", re.IGNORECASE)
 _ARRAY_CTOR = re.compile(r"^ARRAY\s*\[", re.IGNORECASE)
 _MAP_CTOR = re.compile(r"^MAP\s*\(", re.IGNORECASE)
@@ -179,7 +179,7 @@ def derive_ptype(expr: str):
         # to_json rendering uses BigDecimal.toString (scientific for
         # small magnitudes) where the reference writes the plain form
         return "decimal"
-    if _STR_PH.match(e) or _NUM_LIT.match(e) \
+    if STR_PH.match(e) or _NUM_LIT.match(e) \
             or _TYPED_SCALAR_LIT.match(e) or _NILADIC_DOUBLE.match(e) \
             or e.upper() in ("TRUE", "FALSE"):
         return "scalar"
@@ -756,20 +756,18 @@ def rewrite_array_element_concat(masked: str) -> str:
 # (TestArrayOperators.java:679-682, 1349)
 # ---------------------------------------------------------------------------
 
-_DEC_NUM = re.compile(r"^[+-]?(?:\d+(?:\.\d*)?|\.\d+)$")
-
-
 def _numeric_literal_scales(exprs):
-    """Scales when every expr is a plain numeric literal or NULL;
-    None otherwise."""
+    """Scales when every expr is a plain (optionally signed) integer or
+    decimal literal or NULL; None otherwise."""
     scales = set()
     for e in exprs:
-        e = e.strip()
-        if e.upper() == "NULL":
+        if e.strip().upper() == "NULL":
             continue
-        if not _DEC_NUM.match(e):
+        lit = literal_span(e)
+        ps = None if lit is None or "(" in e else decimal_of(lit.type)
+        if ps is None:
             return None
-        scales.add(len(e.split(".", 1)[1]) if "." in e else 0)
+        scales.add(ps[1])
     return scales
 
 

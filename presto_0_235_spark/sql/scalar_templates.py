@@ -83,9 +83,8 @@ import re
 
 from presto_0_235_spark.sql.masked import (
     INTEGRAL, balanced, decimal_cast_type, is_decimal, lit_of,
-    operand_span, split_top, stash_lit)
+    literal_span, operand_span, split_top, stash_lit)
 
-_STR_PH = re.compile("^\x00s(\\d+)\x00$")
 _DATE_LIT = re.compile("^DATE\\s*\x00s\\d+\x00$", re.IGNORECASE)
 
 _TEMPLATE_NAMES = (
@@ -447,28 +446,12 @@ def _unwrap_json_literal(arg: str) -> str:
     return m.group(1) if m else arg
 
 
-_DEC_LIT_CAST = re.compile(
-    r"^\s*CAST\(\s*(\x00s\d+\x00)\s+AS\s+"
-    r"DECIMAL\((\d+),\s*(\d+)\)\s*\)\s*$"
-)
-
-
-def _declit_of(arg: str, stash):
-    """(Decimal value, precision, scale) when arg is a rewritten
-    DECIMAL literal (the CAST(ph AS DECIMAL(p,s)) form the
-    typed-literal pass emits), else None."""
-    from decimal import Decimal
-
-    m = _DEC_LIT_CAST.match(arg.strip())
-    if m is None:
-        return None
-    lit = lit_of(m.group(1), stash)
-    if lit is None:
-        return None
-    try:
-        return Decimal(lit), int(m.group(2)), int(m.group(3))
-    except Exception:
-        return None
+def _decimal_literal(arg: str, stash):
+    """The Literal when arg is a lowered DECIMAL literal, CAST('<n>' AS
+    DECIMAL(p, s)) as the typed-literal pass emits it, else None."""
+    lit = literal_span(arg, stash)
+    return lit if lit and lit.form == "cast" and is_decimal(lit.type) \
+        else None
 
 
 def _chr_template(n: str, stash: list[tuple[str, str]]) -> str:
@@ -706,22 +689,17 @@ def _rewrite_one(
             args[1].strip().upper() == "NULL"
             or re.fullmatch(r"CAST\s*\(\s*NULL\s+AS\s+\w+\s*\)",
                             args[1].strip(), re.IGNORECASE))
-        mdec = re.match(
-            r"^\s*CAST\(\s*(\x00s\d+\x00)\s+AS\s+"
-            r"DECIMAL\((\d+),\s*(\d+)\)\s*\)\s*$",
-            args[0].strip(),
-        )
+        dec = _decimal_literal(args[0], stash)
         if null_n:
             # a NULL round scale keeps RoundN's result TYPE
             # (min(38, p+1), s) with a NULL value
             # (TestMathFunctions.java:938)
-            ps = (int(mdec.group(2)), int(mdec.group(3))) if mdec \
-                else decimal_cast_type(args[0])
+            ps = dec.type[1:] if dec else decimal_cast_type(args[0])
             if ps is None:
                 return None
             p, s = ps
             return f"CAST(NULL AS DECIMAL({min(38, p + 1)}, {s}))"
-        if mdec is None:
+        if dec is None:
             # r16 (verdict #6): a statically-typed decimal COLUMN
             # cast (the annotation pass's CAST(col AS DECIMAL(p,s))
             # form, or a bare-numeric literal cast) rewrites at
@@ -747,9 +725,6 @@ def _rewrite_one(
                 return f"CAST({a[0]} AS DECIMAL({rp}, {s}))"
             return (f"CAST(ROUND({a[0]}, {n}) "
                     f"AS DECIMAL({rp}, {s}))")
-        lit = lit_of(mdec.group(1), stash)
-        if lit is None:
-            return None
         if len(a) == 2:
             try:
                 n = int(args[1].strip())
@@ -759,10 +734,9 @@ def _rewrite_one(
             n = None
         from decimal import ROUND_HALF_UP, Decimal, localcontext
 
-        p, s = int(mdec.group(2)), int(mdec.group(3))
+        v, (_, p, s) = dec.value, dec.type
         with localcontext() as ctx:
             ctx.prec = 90
-            v = Decimal(lit)
             if n is None:
                 rp, rs = min(38, p - s + min(1, s)), 0
                 r = v.to_integral_value(rounding=ROUND_HALF_UP)
@@ -794,8 +768,8 @@ def _rewrite_one(
             # default decimal(1,0) (TestMathFunctions.java:310
             # truncate(NULL, NULL) = NULL decimal(1,0))
             return "CAST(NULL AS DECIMAL(1, 0))"
-        ps = None if _declit_of(args[0], stash) is not None \
-            else decimal_cast_type(args[0])
+        dl = _decimal_literal(args[0], stash)
+        ps = None if dl else decimal_cast_type(args[0])
         if ps is not None:
             # r16 (verdict #6): statically-typed decimal CASTs
             # (columns, NULL casts, bare-numeric literal casts)
@@ -819,11 +793,10 @@ def _rewrite_one(
                 "0." + "0" * (n - 1) + "1"
             return (f"CAST(({a[0]}) - (({a[0]}) % {mod}) "
                     f"AS DECIMAL({p}, {s}))")
-        dl = _declit_of(args[0], stash)
         if dl is not None:
             from decimal import ROUND_DOWN, Decimal, localcontext
 
-            v, p, s = dl
+            v, (_, p, s) = dl.value, dl.type
             n = None
             if len(a) == 2:
                 try:
@@ -1506,9 +1479,6 @@ def _rewrite_one(
             form = stash_lit(stash, "NFC")
         else:
             kw = args[1].strip().upper()
-            km = _STR_PH.match(kw)
-            if km is not None:
-                kw = stash[int(km.group(1))][1][1:-1].upper()
             if kw not in ("NFC", "NFD", "NFKC", "NFKD"):
                 # StringFunctions.java:846 (r12 leniency conversion —
                 # an unknown form previously fell through to an

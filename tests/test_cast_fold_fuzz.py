@@ -1,6 +1,6 @@
 """Differential fuzz for the r15 literal folds.
 
-1. Bare-literal -> integral casts (frontend._BARE_DEC_TO_INT_CAST):
+1. Bare-literal -> integral casts (frontend._fold_decimal_literal_casts):
    a bare dotted literal is DECIMAL in the reference, so the cast
    rounds HALF_UP (DecimalCasts.java); an exponent literal is DOUBLE
    and goes through Math.round = floor(x + 0.5)

@@ -267,6 +267,31 @@ def test_lsh_incremental_cap_excludes_only_oversized_index_buckets(spark):
     assert (601, 500) in got
 
 
+def test_connected_components_small_graph(spark):
+    """Both connected-components operators label a chain, a star and
+    an isolated pair with each component's minimum id, as a Python
+    union-find does."""
+    edges_py = ([(0, 1), (1, 2), (2, 3)]           # chain
+                + [(4, 5), (4, 6), (4, 7)]         # star
+                + [(9, 8)])                        # isolated pair
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for a, b in edges_py:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {(v, find(v)) for v in parent}
+    edges = spark.createDataFrame(edges_py, schema="id1 long, id2 long")
+    for cc in (dd.connected_components, dd.connected_components_star):
+        got = {(r.vertex, r.label) for r in cc(edges).collect()}
+        assert got == want, cc.__name__
+
+
 @pytest.mark.slow
 def test_connected_components_deep_chain_converges(spark):
     """A 40-vertex path graph (diameter >> checkpoint stride) still

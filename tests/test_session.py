@@ -8,6 +8,7 @@ import os
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import DataFrame
 
 import presto_0_235_spark.session as S
@@ -59,6 +60,16 @@ def test_ensure_defaults_submits_no_job(spark, monkeypatch):
     with jobs_submitted(spark) as jobs:
         ensure_session_defaults(fresh)
     assert jobs == []
+
+
+def test_static_default_fails_loudly(spark, monkeypatch):
+    """A static conf among SESSION_DEFAULTS cannot be set on a live
+    session: preparing one raises instead of leaving it silently
+    misconfigured."""
+    monkeypatch.setitem(S.SESSION_DEFAULTS,
+                        "spark.sql.codegen.cache.maxEntries", "2000")
+    with pytest.raises(Exception, match="codegen.cache.maxEntries"):
+        ensure_session_defaults(spark.newSession())
 
 
 def test_package_ships_once_per_context(spark):

@@ -70,6 +70,42 @@ CASES = [
      "SELECT CAST(x AS DECIMAL(10,2)) * 0.5, "
      "typeof(CAST(x AS DECIMAL(10,2)) * 0.5) FROM (VALUES 1.25) t(x)",
      (Decimal("0.625"), "decimal(11,3)")),
+    # literal arithmetic folds type each literal as Decimals.parse
+    # does: 0.1, 0.2 and 0.5 are decimal(1,1), 0.25 is decimal(2,2)
+    # (add/sub DecimalOperators.java:91-92, multiply :251-252)
+    ("decimal_typed_literal_sum_leading_zero",
+     "SELECT DECIMAL '0.1' + DECIMAL '0.2', "
+     "typeof(DECIMAL '0.1' + DECIMAL '0.2')",
+     (Decimal("0.3"), "decimal(2,1)")),
+    ("decimal_literal_product_leading_zero",
+     "SELECT 0.5 * 0.5, typeof(0.5 * 0.5)",
+     (Decimal("0.25"), "decimal(2,2)")),
+    ("decimal_literal_sum_leading_zero",
+     "SELECT 0.5 + 0.25, typeof(0.5 + 0.25)",
+     (Decimal("0.75"), "decimal(3,2)")),
+    ("decimal_typed_literal_product_leading_zero",
+     "SELECT DECIMAL '0.5' * DECIMAL '0.5', "
+     "typeof(DECIMAL '0.5' * DECIMAL '0.5')",
+     (Decimal("0.25"), "decimal(2,2)")),
+    # an exponent literal is one DOUBLE operand: its exponent digits
+    # are not a literal of their own for the literal folds
+    ("exponent_literal_divided",
+     "SELECT 79.18e-2 / 2", (0.3959,)),
+    ("exponent_literal_times_decimal",
+     "SELECT 4.5e-1 * 2.0", (0.9,)),
+    # a VALUES column mixing TINYINT/SMALLINT with DECIMAL unifies
+    # through tinyint -> decimal(3,0) and smallint -> decimal(5,0)
+    # (TypeRegistry), so the column is decimal(3,1) / decimal(5,1)
+    # and x * 2 (integer -> decimal(10,0)) is decimal(14,1) /
+    # decimal(16,1)
+    ("values_tinyint_decimal_unify",
+     "SELECT x * 2, typeof(x * 2) FROM "
+     "(VALUES (TINYINT '1'), (DECIMAL '1.5')) t(x) ORDER BY x LIMIT 1",
+     (Decimal("2.0"), "decimal(14,1)")),
+    ("values_smallint_decimal_unify",
+     "SELECT x * 2, typeof(x * 2) FROM "
+     "(VALUES (SMALLINT '1'), (DECIMAL '1.5')) t(x) ORDER BY x LIMIT 1",
+     (Decimal("2.0"), "decimal(16,1)")),
 ]
 
 

@@ -18,6 +18,17 @@ prints every input whose translation or exception type differs, then a
 count line, and exits 1 if any differs. Replay starts a local
 SparkContext first: the scalar templates import functions/udfs.py,
 whose pandas_udf decorators parse DDL through the JVM.
+
+Compare two recorded corpora:
+
+    python tools/translation_corpus.py diff old.json new.json
+
+prints every input recorded in only one of them and every input whose
+recorded result differs, then a count line, and exits 1 if there are
+any. `check` replays only the old corpus's inputs, so it cannot see an
+input that a change upstream of the translation (the run_sql column
+annotation, say) hands to presto_to_spark_sql for the first time;
+`diff` does.
 """
 
 from __future__ import annotations
@@ -100,7 +111,35 @@ def check(path: str) -> int:
     return 1 if differ else 0
 
 
+def _result(rec: dict) -> str:
+    return rec.get("out", rec.get("raises"))
+
+
+def diff(old_path: str, new_path: str) -> int:
+    corpora = []
+    for path in (old_path, new_path):
+        with open(path) as f:
+            corpora.append({r["sql"]: r for r in json.load(f)})
+    old, new = corpora
+    only_old = sorted(old.keys() - new.keys())
+    only_new = sorted(new.keys() - old.keys())
+    changed = sorted(k for k in old.keys() & new.keys() if old[k] != new[k])
+    for label, keys in (("only in old", only_old),
+                        ("only in new", only_new)):
+        for sql in keys:
+            rec = old.get(sql) or new[sql]
+            print(f"--- {label}\n{sql}\n--- result\n{_result(rec)}\n")
+    for sql in changed:
+        print(f"--- input\n{sql}\n--- old\n{_result(old[sql])}\n"
+              f"--- new\n{_result(new[sql])}\n")
+    print(f"{len(only_old)} only in old, {len(only_new)} only in new, "
+          f"{len(changed)} differ")
+    return 1 if only_old or only_new or changed else 0
+
+
 if __name__ == "__main__":
-    if len(sys.argv) != 3 or sys.argv[1] != "check":
-        sys.exit("usage: translation_corpus.py check FILE")
-    sys.exit(check(sys.argv[2]))
+    if len(sys.argv) == 3 and sys.argv[1] == "check":
+        sys.exit(check(sys.argv[2]))
+    if len(sys.argv) == 4 and sys.argv[1] == "diff":
+        sys.exit(diff(sys.argv[2], sys.argv[3]))
+    sys.exit("usage: translation_corpus.py check FILE | diff OLD NEW")
