@@ -21,7 +21,14 @@ Layout:
   queries/      the verified query inventory (drives __spark_entry__)
 """
 
-from presto_0_235_spark.session import build_session, ensure_session_defaults
+from presto_0_235_spark.session import (
+    build_session,
+    ensure_session_defaults,
+    trim_worker_importers,
+)
+
+# a worker importing the engine stops re-reading archives every task
+trim_worker_importers()
 
 __all__ = ["build_session", "ensure_session_defaults"]
 

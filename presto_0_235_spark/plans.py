@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from presto_0_235_spark.session import local_rows
+
 # Deterministic metric keys (row/file/partition counts). Timing
 # metrics are returned too but are inherently run-specific — queries
 # registering EXPLAIN ANALYZE output for differential checks should
@@ -75,6 +77,6 @@ def explain_analyze(spark: SparkSession, df: DataFrame) -> DataFrame:
     df.collect()  # execute THIS dataset so metrics land on its plan
     rows: list = []
     _walk(df._jdf.queryExecution().executedPlan(), rows, [0])
-    return spark.createDataFrame(
-        rows, schema="op_id int, operator string, metric string, value long"
+    return local_rows(
+        spark, rows, "op_id int, operator string, metric string, value long"
     )

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from presto_0_235_spark.catalog import load_table
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults
+from presto_0_235_spark.session import ensure_session_defaults, local_rows
 
 # Scratch roots keyed by (format, sf) so concurrent scales never
 # collide; mode("overwrite") keeps reruns idempotent.
@@ -339,9 +339,7 @@ def io_system_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in spark.catalog.listTables()
         if t.tableType == "TEMPORARY"
     ]
-    return spark.createDataFrame(
-        sorted(rows), schema="table_name string, n_columns int"
-    )
+    return local_rows(spark, sorted(rows), "table_name string, n_columns int")
 
 
 @register("io_roundtrip_sequencefile", oracle=_ORDERS_SLICE_ORACLE)

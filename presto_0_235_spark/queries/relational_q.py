@@ -14,7 +14,7 @@ from presto_0_235_spark.catalog import load_table, register_views
 from presto_0_235_spark.functions.compat import dec_sum, oracle_dec_sum
 from presto_0_235_spark.operators import joins, sample, setops, sort
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults
+from presto_0_235_spark.session import ensure_session_defaults, local_rows
 from presto_0_235_spark.sql.frontend import run_sql
 
 # --------------------------------------------------------------------------
@@ -128,9 +128,10 @@ SELECT id, name, CAST(score AS DOUBLE) AS score FROM (
 def values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Literal VALUES rows (ValuesOperator.java:27)."""
     ensure_session_defaults(spark)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(1, "alpha", 9.5), (2, "beta", 7.25), (3, "gamma", None)],
-        schema="id int, name string, score double",
+        "id int, name string, score double",
     )
 
 
@@ -355,9 +356,10 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tiny VALUES side replicated."""
     ensure_session_defaults(spark)
     part = load_table(spark, sf_dir, "part")
-    buckets = spark.createDataFrame(
+    buckets = local_rows(
+        spark,
         [("small", 1, 10), ("mid", 11, 25), ("large", 26, 50)],
-        schema="label string, lo int, hi int",
+        "label string, lo int, hi int",
     )
     return (
         joins.theta_join(

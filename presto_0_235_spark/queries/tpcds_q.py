@@ -40,7 +40,7 @@ from presto_0_235_spark.functions.compat import (
     oracle_dec_sum,
 )
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults
+from presto_0_235_spark.session import ensure_session_defaults, local_rows
 
 
 def _fact_dims(spark: SparkSession, sf_dir: str):
@@ -5022,7 +5022,8 @@ def tpcds_q84_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
-    bands = spark.createDataFrame(
+    bands = local_rows(
+        spark,
         [(1, 0.0, 2500.0), (2, 2500.0, 5000.0), (3, 5000.0, 7500.0),
          (4, 7500.0, 10000.0)],
         "ib_sk int, lower_bound double, upper_bound double",
@@ -5411,7 +5412,8 @@ def tpcds_q8_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     supp = load_table(spark, sf_dir, "supplier")
     zip_of = F.lpad((F.col("c_custkey") % 100).cast("string"), 2, "0")
-    zip_list = spark.createDataFrame(
+    zip_list = local_rows(
+        spark,
         [(z,) for z in ["07", "13", "21", "29", "33", "41", "47",
                         "55", "63", "71", "77", "85", "93", "99",
                         "03"]],

@@ -38,7 +38,7 @@ import os
 import sys
 import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Entries of Spark's generated-code cache; see the module docstring.
 CODEGEN_CACHE_ENTRIES = 2000
@@ -94,6 +94,34 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
         spark.conf.set(key, value)
     _ship_package(spark)
     return spark
+
+
+def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-side rows that plans as a LocalRelation.
+
+    The constant-rows node of Presto (ValuesNode, run in-process by
+    ValuesOperator.java). ``spark.createDataFrame(<list>, schema)``
+    plans a LogicalRDD instead, and every execution of it runs one
+    Python task per defaultParallelism slice (~0.46 s for four rows on
+    4 vCPUs). Built through Arrow, the same rows plan as a
+    LocalRelation that Spark evaluates on the driver: no job, no Python
+    worker. ``rows`` is a sequence of tuples in ``schema`` order (a
+    StructType or a DDL string); longs stay exact and None is null.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type)
+         for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 _WARMED_SESSIONS: "weakref.WeakSet" = weakref.WeakSet()
@@ -177,11 +205,47 @@ def warmup_python_workers(spark: SparkSession) -> None:
 # remain as the fallback for sessions the ship could not reach
 # (register_worker_module keeps by-value until the first successful
 # ship, then unregisters).
+#
+# Per-task import cost in the worker. pyspark (4.1) calls
+# importlib.invalidate_caches() before EVERY task a Python worker runs
+# (worker_util.setup_spark_files). On Python < 3.13 that calls
+# invalidate_caches() on every zipimporter in sys.path_importer_cache,
+# and each one re-reads its archive's whole central directory. After
+# one engine task a worker caches a zipimporter per package it
+# imported from an archive: 12 on pyspark.zip (1,328 entries each),
+# 2 on the spark-core jar (5,359 each), plus py4j's and the engine
+# zip's. That is ~26.7k directory entries re-read per task,
+# 0.18-0.27 s on 4 vCPUs: most of a small task's wall time.
+# trim_worker_importers drops the per-package importers (those keyed
+# on a path INSIDE an archive) when an engine module is imported in a
+# worker; the call then costs 0.04-0.07 s. This is safe: each sys.path
+# archive keeps its root importer, which still refreshes zipimport's
+# directory cache every task, and a later import from a dropped
+# package rebuilds its importer from that cache without reading the
+# file. Dropping the root importers as well gains nothing: the
+# worker's own first-time imports after the trim (pyarrow's pandas
+# shim, concurrent.futures) recreate them before the next task.
+# Python 3.13's zipimport re-reads lazily, so there the trim only
+# saves dict entries.
 
 _WORKER_MODULES: list = []
 _SHIPPED_CONTEXTS: "weakref.WeakSet" = weakref.WeakSet()
 _PKG_ZIP: str | None = None
 _SHIPPED_ANY = False
+
+
+def trim_worker_importers() -> None:
+    """Inside a Python worker, drop the per-package zipimporters from
+    sys.path_importer_cache (see the comment above). A no-op on the
+    driver."""
+    files = sys.modules.get("pyspark.core.files")
+    if files is None or not files.SparkFiles._is_running_on_worker:
+        return
+    import zipimport
+
+    for key, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
+            del sys.path_importer_cache[key]
 
 
 def register_worker_module(mod) -> None:
@@ -193,6 +257,7 @@ def register_worker_module(mod) -> None:
     smaller and faster.
     """
     _WORKER_MODULES.append(mod)
+    trim_worker_importers()
     if _SHIPPED_ANY:
         return
     try:  # pragma: no cover - environment-dependent

@@ -339,30 +339,32 @@ def write_avro_dataframe(df, path: str) -> int:
 
 
 def read_avro_dataframe(spark, path: str, spark_schema):
-    """Distributed Avro source: one decode task per container file
-    (file listing is driver-side metadata, exactly like any file
+    """Distributed Avro source: one decode task per container file.
+    The file listing is driver-side metadata, exactly like any file
     source's split planning; at 100 TB the listing is the cheap part
-    and every file decodes independently). ``spark_schema`` is the
-    declared read schema — no inference at query time, matching the
-    engine's fixed-schema connector model."""
+    and every file decodes independently. The listing rides in the
+    decode closure and ``spark.range(0, n, 1, n)`` schedules the n
+    splits, one id per task, so the read is one job of n tasks with
+    no shuffle. An empty sink reads as an empty LocalRelation.
+    ``spark_schema`` is the declared read schema — no inference at
+    query time, matching the engine's fixed-schema connector model."""
     import glob
     import os
 
     import pandas as pd
 
+    from presto_0_235_spark.session import local_rows
+
     files = sorted(glob.glob(os.path.join(path, "*.avro")))
     if not files:
-        return spark.createDataFrame([], spark_schema)
-    fdf = spark.createDataFrame(
-        [(f,) for f in files], "path string"
-    ).repartition(len(files))
+        return local_rows(spark, [], spark_schema)
 
     col_names = [f.name for f in spark_schema.fields]
 
     def decode_files(batches):
         for pdf in batches:
-            for p in pdf["path"]:
-                with open(p, "rb") as fh:
+            for i in pdf["id"]:
+                with open(files[i], "rb") as fh:
                     fields, rows = read_container(fh.read())
                 names = [n for n, _ in fields]
                 if names != col_names:
@@ -371,4 +373,5 @@ def read_avro_dataframe(spark, path: str, spark_schema):
                     )
                 yield pd.DataFrame(rows, columns=names, dtype=object)
 
-    return fdf.mapInPandas(decode_files, spark_schema)
+    n = len(files)
+    return spark.range(0, n, 1, n).mapInPandas(decode_files, spark_schema)

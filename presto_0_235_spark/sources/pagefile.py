@@ -517,11 +517,17 @@ def read_pagefile_dataframe(spark, path: str, spark_schema):
     """Distributed PAGEFILE source with STRIPE-granular splits: the
     driver reads each footer (bounded tail read) and schedules one
     task per stripe, so one big file still parallelizes — the same
-    splittability contract PageFilePageSourceFactory provides."""
+    splittability contract PageFilePageSourceFactory provides. The
+    (file, start, end) split list rides in the decode closure and
+    ``spark.range(0, n, 1, n)`` schedules the n splits, one id per
+    task: one job of n tasks, no shuffle. An empty sink reads as an
+    empty LocalRelation."""
     import glob
     import os
 
     import pandas as pd
+
+    from presto_0_235_spark.session import local_rows
 
     kinds = spark_kinds(spark_schema)
     col_names = [f.name for f in spark_schema.fields]
@@ -533,17 +539,16 @@ def read_pagefile_dataframe(spark, path: str, spark_schema):
             end = offsets[i + 1] if i + 1 < len(offsets) else footer_offset
             splits.append((f, start, end))
     if not splits:
-        return spark.createDataFrame([], spark_schema)
-    sdf = spark.createDataFrame(
-        splits, "path string, start long, end long"
-    ).repartition(len(splits))
+        return local_rows(spark, [], spark_schema)
 
     def decode_splits(batches):
         for pdf in batches:
-            for p, start, end in pdf.itertuples(index=False, name=None):
-                for cols in read_stripe(p, int(start), int(end), kinds):
+            for i in pdf["id"]:
+                p, start, end = splits[i]
+                for cols in read_stripe(p, start, end, kinds):
                     yield pd.DataFrame(
                         dict(zip(col_names, cols)), dtype=object
                     )
 
-    return sdf.mapInPandas(decode_splits, spark_schema)
+    n = len(splits)
+    return spark.range(0, n, 1, n).mapInPandas(decode_splits, spark_schema)

@@ -473,28 +473,32 @@ def write_rcfile_dataframe(df, path: str, serde: str = "binary") -> int:
 def read_rcfile_dataframe(spark, path: str, spark_schema,
                           serde: str = "binary"):
     """Distributed RCFILE source: one task per file (files are
-    written one per task, so read parallelism tracks the layout)."""
+    written one per task, so read parallelism tracks the layout).
+    The file listing rides in the decode closure and
+    ``spark.range(0, n, 1, n)`` schedules the n splits, one id per
+    task: one job of n tasks, no shuffle. An empty sink reads as an
+    empty LocalRelation."""
     import glob
     import os
 
     import pandas as pd
+
+    from presto_0_235_spark.session import local_rows
 
     kinds = spark_kinds(spark_schema)
     col_names = [f.name for f in spark_schema.fields]
 
     files = sorted(glob.glob(os.path.join(path, "*.rc")))
     if not files:
-        return spark.createDataFrame([], spark_schema)
-    sdf = spark.createDataFrame(
-        [(f,) for f in files], "path string"
-    ).repartition(len(files))
+        return local_rows(spark, [], spark_schema)
 
     def decode_files(batches):
         for pdf in batches:
-            for (p,) in pdf.itertuples(index=False, name=None):
-                cols = read_file(p, kinds, serde)
+            for i in pdf["id"]:
+                cols = read_file(files[i], kinds, serde)
                 yield pd.DataFrame(
                     dict(zip(col_names, cols)), dtype=object
                 )
 
-    return sdf.mapInPandas(decode_files, spark_schema)
+    n = len(files)
+    return spark.range(0, n, 1, n).mapInPandas(decode_files, spark_schema)

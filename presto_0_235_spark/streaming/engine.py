@@ -113,4 +113,10 @@ def run_to_batch(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
         spark.conf.set(nodata_key, before_nodata)
-    return spark.table(name)
+    # The sink's temp view is only a name for its plan, and the
+    # analyzed result holds that plan: drop the view so replays leave
+    # none behind (via the session catalog, as run_sql does for its
+    # CTE views).
+    result = spark.table(name)
+    spark._jsparkSession.sessionState().catalog().dropTempView(name)
+    return result

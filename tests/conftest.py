@@ -135,6 +135,15 @@ def jobs_submitted(spark):
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def tasks_of(spark, job_ids) -> list[int]:
+    """The task count of every stage of the given jobs, in stage order,
+    read from the status tracker."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = sorted({s for j in job_ids
+                     for s in tracker.getJobInfo(j).stageIds})
+    return [tracker.getStageInfo(s).numTasks for s in stages]
+
+
 def pytest_collection_modifyitems(config, items):
     """Default-skip @pytest.mark.slow tests (opt back in with
     SPARK_GRAFT_SLOW_TESTS=1).

@@ -17,6 +17,7 @@ from presto_0_235_spark.functions.scalar import mysql_to_java_pattern
 from presto_0_235_spark.operators import dedup as dd
 from presto_0_235_spark.operators import similarity as sim
 from presto_0_235_spark.operators import text as tx
+from tests.conftest import jobs_submitted, tasks_of
 
 
 def test_shingles_edge_cases(spark):
@@ -562,9 +563,34 @@ def test_avro_multi_file_roundtrip(spark, tmp_path):
     assert n_files == 4
     back = read_avro_dataframe(spark, path, src.schema)
     assert back.count() == 1000
-    assert sorted(map(tuple, back.collect())) == sorted(
-        map(tuple, src.collect())
+    with jobs_submitted(spark) as jobs:
+        rows = back.collect()
+    assert tasks_of(spark, jobs) == [4]
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, src.collect()))
+
+
+@pytest.mark.parametrize("fmt", ["avro", "rcfile", "pagefile"])
+def test_codec_source_runs_one_task_per_split(spark, tmp_path, fmt):
+    """A one-file sink reads back in one job of one task, with no
+    shuffle: the split list rides in the decode closure and
+    spark.range schedules one id per split."""
+    import importlib
+
+    codec = importlib.import_module(f"presto_0_235_spark.sources.{fmt}")
+    src = spark.range(50, numPartitions=1).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
     )
+    path = str(tmp_path / fmt)
+    assert getattr(codec, f"write_{fmt}_dataframe")(src, path) == 1
+    back = getattr(codec, f"read_{fmt}_dataframe")(spark, path, src.schema)
+    with jobs_submitted(spark) as jobs:
+        rows = back.collect()
+    assert len(jobs) == 1
+    assert tasks_of(spark, jobs) == [1]
+    assert "Exchange" not in back._jdf.queryExecution().executedPlan(
+    ).toString()
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, src.collect()))
 
 
 class TestRcFileCodec:

@@ -15,6 +15,7 @@ import presto_0_235_spark.session as S
 from presto_0_235_spark.session import (
     CODEGEN_CACHE_ENTRIES,
     ensure_session_defaults,
+    local_rows,
 )
 from tests.conftest import jobs_submitted
 
@@ -98,3 +99,87 @@ def test_package_zip_removed_at_exit(tmp_path):
     path = out.stdout.strip()
     assert os.path.dirname(path) == str(tmp_path)
     assert os.listdir(tmp_path) == []
+
+
+def test_local_rows_plans_as_local_relation(spark):
+    """Driver-side rows become a LocalRelation: collecting them runs no
+    Spark job (a list fed to createDataFrame runs one Python task per
+    slice), and longs beyond 2^53 and nulls come back exactly."""
+    rows = [(2**62 + 1, "a", 1.5), (None, None, None), (-(2**63), "", 0.0)]
+    df = local_rows(spark, rows, "k bigint, s string, v double")
+    assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+    with jobs_submitted(spark) as jobs:
+        got = [tuple(r) for r in df.collect()]
+    assert jobs == []
+    assert got == rows
+    empty = local_rows(spark, [], df.schema)
+    assert empty.schema == df.schema
+    assert empty.collect() == []
+
+
+def test_worker_trims_per_package_zip_importers(spark):
+    """Once a Python worker imports an engine worker module, no
+    zipimporter keyed on a package inside an archive is left in
+    sys.path_importer_cache, so pyspark's per-task
+    importlib.invalidate_caches() re-reads each archive once, not once
+    per imported package. A first import of a pyspark submodule in that
+    worker still succeeds: its importer is rebuilt from zipimport's
+    directory cache."""
+    import pandas as pd
+
+    ensure_session_defaults(spark)
+    fresh_candidates = ("pyspark.sql.avro.functions",
+                        "pyspark.sql.protobuf.functions",
+                        "pyspark.mllib.common")
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        for _ in batches:
+            pass
+        # a fresh import of a worker module, whatever this worker ran
+        sys.modules.pop("presto_0_235_spark.functions.murmur3", None)
+        importlib.import_module("presto_0_235_spark.functions.murmur3")
+        zips = [f for f in sys.path_importer_cache.values()
+                if isinstance(f, zipimport.zipimporter)]
+        nested = [f.archive + "/" + f.prefix for f in zips if f.prefix]
+        fresh = next((m for m in fresh_candidates
+                      if m not in sys.modules), None)
+        loaded = importlib.import_module(fresh).__file__ if fresh else ""
+        yield pd.DataFrame({"archives": [len(zips)],
+                            "nested": [repr(nested)],
+                            "loaded": [loaded]})
+
+    row = spark.range(1, numPartitions=1).mapInPandas(
+        probe, "archives int, nested string, loaded string").collect()[0]
+    # Spark puts pyspark.zip on the worker's path: archives are in play
+    assert row.archives >= 1
+    assert row.nested == "[]"
+    assert row.loaded
+
+
+def test_driver_rows_go_through_local_rows():
+    """Only the local_rows helper and the RDD-fed sequencefile reader
+    call createDataFrame: a list handed to it plans a LogicalRDD that
+    runs Python tasks on every execution."""
+    import ast
+
+    pkg = os.path.join(ROOT, "presto_0_235_spark")
+    calls = set()
+    for dirpath, _dirs, files in os.walk(pkg):
+        for name in (f for f in files if f.endswith(".py")):
+            path = os.path.join(dirpath, name)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for top in tree.body:  # a call counts against its top-level def
+                if any(isinstance(node, ast.Call)
+                       and isinstance(node.func, ast.Attribute)
+                       and node.func.attr == "createDataFrame"
+                       for node in ast.walk(top)):
+                    calls.add((os.path.relpath(path, pkg),
+                               getattr(top, "name", "<module>")))
+    assert calls == {("session.py", "local_rows"),
+                     (os.path.join("queries", "io_q.py"),
+                      "io_roundtrip_sequencefile")}
