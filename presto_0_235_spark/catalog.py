@@ -22,7 +22,6 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from presto_0_235_spark.session import ensure_session_defaults
 
 # The ten driver fixtures (FIXTURES.md). TPC-H-subset star schema +
 # events stream + LLM-pipeline tables.
@@ -168,7 +167,6 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
-    ensure_session_defaults(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         memo = _TABLE_MEMO.setdefault(spark, {})
@@ -238,7 +236,6 @@ def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None
 ) -> dict[str, DataFrame]:
     """Load several fixture tables at once."""
-    ensure_session_defaults(spark)
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
 
 

@@ -26,7 +26,6 @@ from presto_0_235_spark.functions.aggregate import (
 )
 from presto_0_235_spark.functions.compat import dec_sum, oracle_dec_sum
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults
 
 
 @register(
@@ -44,7 +43,6 @@ GROUP BY l_returnflag
 def agg_variance_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """var/stddev samp+pop (VarianceAggregation.java). l_discount is
     O(0.05), fp noise O(1e-17) — rounding at 1e-10 is exact."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -71,7 +69,6 @@ FROM lineitem
 def agg_corr_covar_regr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """corr/covar/regr family (DoubleCorrelationAggregation.java,
     DoubleCovarianceAggregation.java, DoubleRegressionAggregation)."""
-    ensure_session_defaults(spark)
     return load_table(spark, sf_dir, "lineitem").agg(
         F.round(F.corr("l_quantity", "l_extendedprice"), 8).alias(
             "c_qty_price"
@@ -101,7 +98,6 @@ def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """skewness/kurtosis (CentralMomentsAggregation.java). Spark
     computes population moments (excess kurtosis); the oracle states
     the same formula because DuckDB's aggregates are bias-corrected."""
-    ensure_session_defaults(spark)
     return load_table(spark, sf_dir, "events").agg(
         F.round(F.skewness("value"), 6).alias("skew"),
         F.round(F.kurtosis("value"), 6).alias("kurt"),
@@ -121,7 +117,6 @@ GROUP BY c_nationkey
 )
 def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """min_by/max_by (minmaxby/AbstractMinMaxBy.java)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "customer")
         .groupBy("c_nationkey")
@@ -149,7 +144,6 @@ def agg_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (arrayagg/ArrayAggregationFunction.java; ordered agg is
     AggregationNode.java:81) — collect_list/collect_set + sort_array,
     serialized to strings for engine-independent comparison."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "nation")
         .groupBy("n_regionkey")
@@ -183,7 +177,6 @@ def agg_map_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """map_agg(k, v) (MapAggregationFunction.java) — built as
     map_from_entries(collect_list(struct)); compared through sorted
     entry strings since map cell ordering is engine-specific."""
-    ensure_session_defaults(spark)
     m = map_agg("n_name", "n_nationkey")
     return (
         load_table(spark, sf_dir, "nation")
@@ -226,7 +219,6 @@ def agg_bool_bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (BitwiseAndAggregation.java, BitwiseOrAggregation.java — Spark
     spells them bit_and/bit_or), plus bit_xor (checksum's combine
     primitive)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
@@ -255,7 +247,6 @@ GROUP BY l_linestatus
 )
 def agg_count_if(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count_if (CountIfAggregation.java) + sum(CASE) equivalent."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_linestatus")
@@ -283,7 +274,6 @@ def agg_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles — the oracle-checkable side of Presto's
     approx_percentile family (linear interpolation = quantile_cont);
     the sketch-based variant is agg_approx (rows-only)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -304,7 +294,6 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle check. Accuracy itself is asserted in tests/test_approx.py.
     The percentile sketch output is projected to scalar columns so the
     result is hashable by any downstream canonicalizer."""
-    ensure_session_defaults(spark)
     agged = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -340,7 +329,6 @@ GROUP BY l_returnflag
 def agg_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """checksum() (ChecksumAggregationFunction.java): order-independent
     content hash per group via portable md5-derived row hashes."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.aggregate import portable_hash64
 
     row_key = F.concat(
@@ -374,7 +362,6 @@ FROM (SELECT exp(AVG(ln(l_quantity))) AS gm FROM lineitem),
 def agg_geometric_mean_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """geometric_mean (GeometricMeanAggregations.java) + entropy
     (EntropyAggregation.java) compositions."""
-    ensure_session_defaults(spark)
     gm = (
         load_table(spark, sf_dir, "lineitem")
         .agg(geometric_mean("l_quantity", "gm"))
@@ -402,7 +389,6 @@ def agg_reduce_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     """reduce_agg user-lambda aggregation
     (ReduceAggregationFunction.java) — aggregate() lambda over the
     collected group; oracle states the equivalent plain SUM."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -427,7 +413,6 @@ def agg_histogram_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """numeric_histogram / width_bucket (NumericHistogram.java;
     MathFunctions width_bucket) — bucket + count shape; the oracle
     spells out width_bucket(x, 1, 51, 10) arithmetic."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .select(
@@ -455,7 +440,6 @@ def agg_arbitrary(spark: SparkSession, sf_dir: str) -> DataFrame:
     yields exactly one row whose pick IS a member of the group
     (semi-join back against the group's values). A non-member or a
     missing group drops the row -> row-count/hash mismatch."""
-    ensure_session_defaults(spark)
     orders = load_table(spark, sf_dir, "orders")
     picked = orders.groupBy("o_orderstatus").agg(
         F.any_value("o_orderpriority").alias("some_priority")
@@ -531,7 +515,6 @@ def agg_hll_mergeable_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole pipeline replayable in DuckDB (oracle above);
     tests/test_approx.py additionally asserts the error bound and
     that merge(sketches) == direct global sketch exactly."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators import sketches as sk
 
     orders = load_table(spark, sf_dir, "orders")
@@ -572,7 +555,6 @@ def agg_map_union_multimap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine really materializes the merged map and multimap, the
     output flattens them into engine-independent scalars (sorted key
     list, key count, min value under one key)."""
-    ensure_session_defaults(spark)
     kv = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 2000)
@@ -647,7 +629,6 @@ def agg_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates from cumulative bins. Integer-exact end to end, so the
     differential gate verifies the *sketch pipeline itself*, which
     the reference can only unit-test."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators import sketches as sk
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -703,7 +684,6 @@ def agg_minmax_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on the (already hash-partitioned) group key."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     price = F.round(F.col("o_totalprice"), 2)
     yx = F.struct(price.alias("y"), F.col("o_orderkey").alias("x"))
     base = (
@@ -781,7 +761,6 @@ def agg_interval_sum_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the result converts to whole seconds for the gate; the
     oracle replays the same long arithmetic (floor on the average —
     the reference's long division truncates)."""
-    ensure_session_defaults(spark)
     hours = (F.col("o_orderkey") % 24).cast("int")
     ivl = F.expr("make_dt_interval(0, CAST(o_orderkey % 24 AS INT), 0, 0)")
     return (
@@ -847,7 +826,6 @@ def agg_classification_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     training pipeline, runnable at corpus scale: one broadcast of the
     threshold spine, one (threshold) shuffle, counts via map-side
     partial agg."""
-    ensure_session_defaults(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     pred = (
         F.conv(
@@ -930,7 +908,6 @@ def agg_differential_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     total) with map-side partial aggregation — the same plan family
     as any histogram aggregate; bins are bounded (support/width), so
     the collected term list is <= support/binwidth elements."""
-    ensure_session_defaults(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         (F.col("value") >= 0) & (F.col("value") < 1000)
     )
@@ -980,7 +957,6 @@ def agg_hll_wire_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-aggregated register table, and the merge touches only
     |groups| rows of bytes — this is exactly why engines exchange
     sketches instead of raw distincts."""
-    ensure_session_defaults(spark)
     import pandas as pd
 
     from presto_0_235_spark.operators import sketches as sk
@@ -1055,7 +1031,6 @@ def agg_hll_sparse_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-byte entries per group — the low-cardinality regime it exists
     for; groups past the entry limit convert to dense exactly as
     airlift does (documented in hll_presto_sparse_entries)."""
-    ensure_session_defaults(spark)
     import pandas as pd
 
     from presto_0_235_spark.operators import sketches as sk
@@ -1149,7 +1124,6 @@ def agg_tdigest_wire_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     of input rows; the shuffle moves only wire sketches (KBs per
     group), and the per-batch Python cost is O(bins) thanks to the
     equal-weight numpy pre-binning — no per-row Python anywhere."""
-    ensure_session_defaults(spark)
     import pandas as pd
 
     from presto_0_235_spark.operators import tdigest as td
@@ -1251,7 +1225,6 @@ def agg_qdigest_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: digest size is bounded by the compression invariant
     (O(log(U)/accuracy) nodes) regardless of input rows; a hot group
     concentrates digests, never raw values."""
-    ensure_session_defaults(spark)
     import pandas as pd
 
     from presto_0_235_spark.operators import qdigest as qd
@@ -1307,7 +1280,6 @@ def agg_hll_presto_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to agg_hll_wire_format — registers collapse
     map-side to <= 2^p rows per group; sketches are ~1 KB."""
-    ensure_session_defaults(spark)
     import pandas as pd
 
     from presto_0_235_spark.operators import sketches as sk
@@ -1408,7 +1380,6 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-priority estimates PLUS the global estimate from MERGING
     the per-priority sketches; everything replays in SQL because
     hash, ranks, and the single final division are deterministic."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators import sketches as sk
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1457,7 +1428,6 @@ def agg_khll_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-hash HLL — identical semantics, deterministic, and
     SQL-replayable; the HLL only matters when a single value's user
     set is itself huge. Sample join is a broadcast of k=256 keys."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators import sketches as sk
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1525,7 +1495,6 @@ def agg_setdigest_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmv_registers state as the KHLL surface (operators/sketches.py
     kmv_jaccard); one <= 2k-row window + a single-row size bound,
     all deterministic, full SQL replay."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators import sketches as sk
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1603,7 +1572,6 @@ def agg_qdigest_scale_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantiles are INVARIANT under scaling while the total weight
     multiplies. Same rows-as-state qhist machinery as
     agg_quantile_sketch; everything integer-exact."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators import sketches as sk
 
     orders = load_table(spark, sf_dir, "orders").select(

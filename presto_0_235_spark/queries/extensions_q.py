@@ -21,7 +21,6 @@ from presto_0_235_spark.operators import multimodal as mm
 from presto_0_235_spark.operators import similarity as sim
 from presto_0_235_spark.operators import text as tx
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults
 
 # ---------------------------------------------------------------------------
 # deduplication
@@ -44,7 +43,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy keeping the smallest doc_id. At 100 TB this is a single
     uniform-key shuffle (no skew: md5 keys are uniform), with map-side
     partial aggregation halving shuffle volume."""
-    ensure_session_defaults(spark)
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5(dd.normalized_text("text")).alias("content_key"))
@@ -80,7 +78,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the small-block verifier; the scale path is
     dedup_minhash_lsh (candidates first, verify after). The lang join
     key is low-cardinality/skewed — at scale, salt it or go LSH."""
-    ensure_session_defaults(spark)
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 200)
@@ -150,7 +147,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (uniform composite key, O(n*B) rows) and the two candidate
     lookups; never O(n^2). At 1000 executors this is the textbook
     LSH dedup layout."""
-    ensure_session_defaults(spark)
     # Shingle table persisted: read by the signature pass and twice by
     # the verification joins — without the cache the shingling (split
     # + slide + distinct per doc) runs three times.
@@ -209,7 +205,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     >=1 identical chunk) -> hamming filter. Integer-only arithmetic,
     engine-exact. 32-bit here for test speed; production uses 64-bit
     (one constant in operators/dedup.py)."""
-    ensure_session_defaults(spark)
     docs = (
         load_table(spark, sf_dir, "documents", spread=True)
         .withColumn(
@@ -262,7 +257,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup on a label-blocked self-join —
     the semantic-dedup verifier (block here = cluster label; at scale
     the block is an LSH/IVF bucket, see ann_lsh_bucketed)."""
-    ensure_session_defaults(spark)
     # Norm precompute below the self-join (see ann_cosine_topk): each
     # side pays one |v|^2 fold per ROW instead of per PAIR.
     e = (
@@ -328,7 +322,6 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over all candidates, and the per-query top-k is a window that
     Spark executes with partial top-k per partition (InferWindowGroupLimit),
     so nothing N-sized ever shuffles."""
-    ensure_session_defaults(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     # Squared norms are projected once per row BELOW the join
     # (sq_norm/cosine_pre): the per-pair score is then a single
@@ -404,7 +397,6 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow projection; the join only scores same-bucket candidates,
     cutting compute ~2^P-fold at a recall cost tuned by P. At 100B
     vectors: partition candidates by bucket once, broadcast queries."""
-    ensure_session_defaults(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     # Same norm-precompute as ann_cosine_topk: one fold per pair.
     q = emb.filter(F.col("vec_id") < 5).select(
@@ -462,7 +454,6 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-tokenization (letter runs | digit runs | single symbol) —
     the unit a token-budgeted pipeline meters by. Narrow projection;
     pipelines inside the scan at any scale."""
-    ensure_session_defaults(spark)
     norm = dd.normalized_text("text")
     return load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -489,7 +480,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic tie-break. (The synthetic corpus is English-ish for
     every lang label, so guesses won't match `declared_lang` — the
     operator and its oracle recompute the same heuristic.)"""
-    ensure_session_defaults(spark)
     toks = tx.ws_tokens("text")
     return load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -525,7 +515,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios — the standard cheap pre-filter before expensive model
     scoring. Pure per-row arithmetic on integer counts: bit-identical
     across engines with no rounding."""
-    ensure_session_defaults(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         tx.ws_tokens("text").alias("toks"),
@@ -563,7 +552,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: polynomial rolling hash (base 31 mod
     2^31-1) over the normalized prefix + distinct-shingle count.
     Integer fold -> engine-exact; prefix cap bounds per-row cost."""
-    ensure_session_defaults(spark)
     return load_table(spark, sf_dir, "documents").select(
         "doc_id",
         tx.rolling_fingerprint(dd.normalized_text("text")).alias("fp"),
@@ -600,7 +588,6 @@ def mm_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions over the typed meta struct — filters/plans on
     metadata never touch payload bytes, so at 100 TB the scan prunes
     the binary column entirely (ReadSchema shows meta-only)."""
-    ensure_session_defaults(spark)
     media = mm.as_media_table(load_table(spark, sf_dir, "documents"))
     return mm.resize_plan(media)
 
@@ -633,7 +620,6 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayable in SQL — the oracle recomputes payload digests and
     frame-sample indices in DuckDB. The frame list is projected to
     (count, csv) so the output is scalar-typed end to end."""
-    ensure_session_defaults(spark)
     media = mm.as_media_table(
         load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     )
@@ -672,7 +658,6 @@ def events_decode_json_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed columns). Here: events.props is the raw message; the
     decoder is from_json-style extraction inside the scan, grouped by
     type with the _timestamp pseudo-column analog (ts)."""
-    ensure_session_defaults(spark)
     events = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k")
     return events.groupBy("event_type").agg(
@@ -698,7 +683,6 @@ def join_asof_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
     it. One shuffle + window pass (operators/asof.py); the oracle is
     DuckDB's native ASOF LEFT JOIN — two independent formulations,
     same rows."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators.asof import asof_join_backward
 
     events = load_table(spark, sf_dir, "events")
@@ -777,7 +761,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe the nProbe=2 nearest lists per query, score only those
     lists. Compute cut ~ |lists|/nProbe at recall controlled by
     nProbe."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -902,7 +885,6 @@ def pipeline_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     they compose — the thing a 100 TB curation job actually runs.
     Shuffle inventory: content-key agg, band join, two candidate
     lookups, final group-by — all uniform keys."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     toks = tx.ws_tokens("text")
@@ -986,7 +968,6 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     one metric row asserts the recall floor (0.2, the same floor
     tests/test_quality.py holds for the sampled-centroid twin). A
     recall regression flips meets_floor -> hash mismatch."""
-    ensure_session_defaults(spark)
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
     from pyspark.sql import Window
@@ -1083,7 +1064,6 @@ def events_decode_csv_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     line (the raw message), then decode back into typed columns with
     split + casts — round-trip through the decoder proves field
     alignment and type coercion."""
-    ensure_session_defaults(spark)
     events = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 500)
     line = F.concat_ws(
         ",",
@@ -1128,7 +1108,6 @@ def mm_chunk_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows WITH ORDINALITY, all JVM-side (binary substring), no
     decode needed. At 100 TB this runs inside the scan stage; chunks
     feed the Arrow decode stub downstream."""
-    ensure_session_defaults(spark)
     media = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 100)
@@ -1171,7 +1150,6 @@ def text_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode -> count -> group-limit shape that vocabulary/contamination
     analyses run at corpus scale; shuffle keys are (lang, gram) —
     high-cardinality, uniform."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     grams = load_table(spark, sf_dir, "documents").select(
@@ -1239,7 +1217,6 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     RECURSIVE CTE — the reference has neither (0.235 CTEs are
     non-recursive, SURVEY §2.8), making this a beyond-reference
     iterative-algorithm entry that is still exactly verified."""
-    ensure_session_defaults(spark)
     d = (
         load_table(spark, sf_dir, "documents", spread=True)
         .select("doc_id", dd.word_shingles("text").alias("sh"))
@@ -1260,7 +1237,6 @@ def dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.connected_components_star — O(log n) rounds vs
     graph diameter; Kiveris et al.). Identical oracle: both variants
     must land on the same clusters — and do, exactly."""
-    ensure_session_defaults(spark)
     d = (
         load_table(spark, sf_dir, "documents", spread=True)
         .select("doc_id", dd.word_shingles("text").alias("sh"))
@@ -1308,7 +1284,6 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles; cost is one narrow pass over train shingles.
     Beyond-reference surface (closest reference machinery:
     SemiJoinNode + MarkDistinct)."""
-    ensure_session_defaults(spark)
     docs = load_table(spark, sf_dir, "documents", spread=True)
     sh = docs.select(
         "doc_id", F.explode(dd.word_shingles("text")).alias("s")
@@ -1348,7 +1323,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     under retries/stragglers at 1000 executors, and join-free (no
     shuffle at all; reference analog: SampleNode BERNOULLI, which is
     RNG-based and NOT reproducible)."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.aggregate import portable_hash64
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1384,7 +1358,6 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     of duplicate word 2-grams, 1 - distinct/total. Pure per-row
     expressions — zero shuffles at any scale; composes with
     text_quality_score as another filter column."""
-    ensure_session_defaults(spark)
     words = F.split(dd.normalized_text(F.col("text")), " ")
     starts = F.sequence(
         F.lit(1), F.greatest(F.size(words) - 1, F.lit(1))
@@ -1448,7 +1421,6 @@ def ts_rollup_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation; the spine is generated from per-type bounds
     (tiny) and the gap-fill join is spine-sized, not event-sized; the
     LOCF window partitions by type — no global ordering anywhere."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
     from presto_0_235_spark.functions.compat import dec_sum
 
@@ -1516,7 +1488,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     true pairs), the interval-binning layout Spark needs at 100 TB.
     The oracle is the direct quadratic range join on DuckDB — same
     pairs, proving the binning loses nothing."""
-    ensure_session_defaults(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 25 == 0)
@@ -1606,7 +1577,6 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window). One shuffle on user_id serves both windows and
     the final aggregate — Spark reuses the partitioning. DuckDB
     replays the identical window algebra."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     e = (
@@ -1666,7 +1636,6 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     and within 1e-6 of the unquantized mean. The reference has no
     vector aggregate at all. 1-based dim matches DuckDB's
     generate_subscripts."""
-    ensure_session_defaults(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     dims = emb.select(
         (F.col("vec_id") % 4).alias("shard"),
@@ -1729,7 +1698,6 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny quantized query set; per-query top-k is the same
     InferWindowGroupLimit partial top-k as the float path — nothing
     N-sized shuffles."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1801,7 +1769,6 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure per-row expressions, zero shuffles — runs at scan
     speed on any corpus size."""
-    ensure_session_defaults(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     raw = F.concat(
         F.col("text"),
@@ -1858,7 +1825,6 @@ def docs_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: narrow per-row projection, zero shuffles; at 100 TB the
     split column is computed at scan speed and usually written back
     as a partition column."""
-    ensure_session_defaults(spark)
     docs = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
@@ -1898,7 +1864,6 @@ def docs_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-K per partition BEFORE the shuffle, so only ~K rows per
     domain per partition move; skewed domains (the exact problem this
     op exists to fix) never concentrate on one task."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1953,7 +1918,6 @@ def docs_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions. At 100 TB the pack group adds a date/shard
     component so no single partition holds a whole language.
     """
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2029,7 +1993,6 @@ def join_spatial_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates are O(density), the exact filter prunes the rest), and
     AQE handles any dense-cell skew; the reference's KDB-tree
     partition count maps to cell granularity r."""
-    ensure_session_defaults(spark)
     r = 2.0  # radius; cell size == r
 
     def pts(df, key_col):
@@ -2124,7 +2087,6 @@ def docs_pack_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same single (lang-bin) shuffle as the assignment query;
     sequence payloads are budget-bounded (~2048 tokens) so no group
     blows up a task."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
@@ -2191,7 +2153,6 @@ def sample_reservoir_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     size per group)."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.aggregate import portable_hash64
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2268,7 +2229,6 @@ def join_spatial_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     blowup, AQE absorbs dense-cell skew; cell size tunes the
     replication/selectivity trade exactly like the reference's
     KDB-tree leaf granularity."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     r, s = _DIAMOND_R, 4.0
@@ -2388,7 +2348,6 @@ def docs_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_keep; results are unchanged (n_keep <= max_keep always)."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.aggregate import portable_hash64
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2457,7 +2416,6 @@ def agg_spatial_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX_SAMPLE points); the ntile windows shuffle once per level on
     uniform keys and every cell's population is n/16 by
     construction, which is the whole point."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     def coord(axis):
@@ -2508,7 +2466,6 @@ def agg_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex, explicit seq order), so rows+schema pin it; the
     two-phase == single-pass equality and the all-points-inside
     property are pinned in tests/test_operators.py."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.geo import convex_hull_agg
 
     k = F.col("o_orderkey")
@@ -2555,7 +2512,6 @@ def events_decode_raw_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same aggregate straight from the source table: any
     encode/decode discrepancy (offset, sign, endianness, utf8 tail)
     breaks the match. Pure Column expressions end to end."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import scalar as ps
 
     events = load_table(spark, sf_dir, "events")
@@ -2606,7 +2562,6 @@ def events_decode_avro_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas UDFs over the bytes column. The oracle recomputes the
     aggregate from the source: any varint/union/float encoding slip
     breaks the match."""
-    ensure_session_defaults(spark)
     import io as _io
 
     import pandas as pd
@@ -2711,7 +2666,6 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     key (one exchange each for the step aggregates, no re-exchange
     of probe sides); step tables only shrink down the funnel. The
     conversion-rate divisions are exact-integer ratios."""
-    ensure_session_defaults(spark)
     events = load_table(spark, sf_dir, "events")
 
     def first_after(step_type: str, prior: DataFrame, bound: str,
@@ -2781,7 +2735,6 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id builds both the cohort table and the distinct
     activity set; the join re-uses that partitioning; the final
     (cohort, offset) aggregate is tiny (weeks x weeks)."""
-    ensure_session_defaults(spark)
     events = load_table(spark, sf_dir, "events")
     wk = F.floor(
         F.datediff(F.to_date("ts"), F.lit("2024-01-01")) / 7
@@ -2865,7 +2818,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the persisted artifact a production pipeline reuses across
     batches (operators/dedup.py lsh_incremental_pairs). Fixture
     split: doc_id < 600 is the corpus, the rest the batch."""
-    ensure_session_defaults(spark)
     d = (
         load_table(spark, sf_dir, "documents", spread=True)
         .select("doc_id", dd.word_shingles("text").alias("sh"))
@@ -2964,7 +2916,6 @@ def dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain, recursive-CTE components included. Plan: the arg-max is
     one row_number window over the (tiny) cluster-membership table;
     everything upstream is the already-bounded LSH/CC machinery."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     d = (
@@ -3067,7 +3018,6 @@ def join_spatial_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: candidates are O(density) per probe and the rank window
     partitions on the probe id — InferWindowGroupLimit pre-prunes to
     k per partition before the shuffle."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     r = 2.0
@@ -3190,7 +3140,6 @@ def sql_geometry_union_agg_scale(
     gaps-and-islands SQL while Spark computes them geometrically
     from the folded WKT. Plan shape pinned in
     tests/test_plans.py::test_geometry_union_agg_partials_below_shuffle."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators import geo_agg
     from presto_0_235_spark.sql.frontend import _ensure_sql_udfs
 
@@ -3264,7 +3213,6 @@ def sql_convex_hull_agg_scale(
     compute the hull ring's vertex count (distinct k + closing
     point), shoelace area, and bounds in closed form while Spark
     reads them off the folded hull polygon."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators import geo_agg
     from presto_0_235_spark.sql.frontend import _ensure_sql_udfs
 

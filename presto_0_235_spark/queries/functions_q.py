@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from presto_0_235_spark.catalog import load_table
 from presto_0_235_spark.functions import scalar as ps
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults
 
 
 @register(
@@ -45,7 +44,6 @@ def fn_string_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Core string functions (StringFunctions.java:927 — length,
     substr/trim/upper/lower/replace/reverse/lpad/concat/split_part/
     strpos; all 1-based like Presto)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") < 500)
@@ -83,7 +81,6 @@ def fn_string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String distances + translate/repeat (levenshtein_distance,
     hamming_distance in StringFunctions.java; hamming built UDF-free
     from zip_with per scalar.hamming_distance)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") < 300)
@@ -120,7 +117,6 @@ def fn_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex family (JoniRegexpFunctions.java:319 — regexp_like,
     regexp_extract, regexp_extract_all, regexp_replace). Patterns kept
     in the Joni/RE2/Java-common subset."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 30)
@@ -163,7 +159,6 @@ def fn_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time family (DateTimeFunctions.java:1401 — extract
     fields, ISO dow/week, date_trunc, date_add/date_diff with
     unit-first Presto signatures, date_format, to_unixtime)."""
-    ensure_session_defaults(spark)
     od = F.col("o_orderdate")
     return (
         load_table(spark, sf_dir, "orders")
@@ -215,7 +210,6 @@ FROM lineitem WHERE l_orderkey < 300
 def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math family (MathFunctions.java:1291 — abs/ceil/floor/round/
     sign/mod/sqrt/cbrt/exp/ln/log/power/trig/degrees/is_nan)."""
-    ensure_session_defaults(spark)
     q = F.col("l_quantity")
     return (
         load_table(spark, sf_dir, "lineitem")
@@ -262,7 +256,6 @@ FROM nation
 def fn_bitwise_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise ops (BitwiseFunctions.java:136) + from_base/to_base
     radix conversion (MathFunctions.java)."""
-    ensure_session_defaults(spark)
     k = F.col("n_nationkey")
     return load_table(spark, sf_dir, "nation").select(
         "n_nationkey",
@@ -307,7 +300,6 @@ def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     element_at, sequence; Presto subscripts are 1-based and
     element_at returns NULL out-of-bounds, matching Spark
     element_at/try_element_at)."""
-    ensure_session_defaults(spark)
     words = F.split(F.col("p_name"), " ")
     seq = F.sequence(F.lit(1), F.col("p_size") % 10 + 1)
     return (
@@ -366,7 +358,6 @@ def fn_array_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     array row): flatten, zip_with, arrays_overlap, union/except
     counts, word bigrams (ngrams), negative indexing, descending
     sort."""
-    ensure_session_defaults(spark)
     words = F.split(F.col("p_name"), " ")
     chars = F.split(F.col("p_type"), "")
     n = F.least(F.size(words), F.size(chars))
@@ -419,7 +410,6 @@ def fn_map_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     row). The engine really builds maps and zips them; the oracle
     states the expected flattened representation (DuckDB's map
     surface is too thin to mirror the lambda ops)."""
-    ensure_session_defaults(spark)
     m1 = F.map_from_entries(
         F.array(
             F.struct(F.lit("count").alias("key"), F.lit(1).cast("long").alias("value")),
@@ -467,7 +457,6 @@ def fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     The engine side really builds/concats/transforms maps; the oracle
     states the expected entry strings directly (DuckDB's map surface
     is too thin to mirror the operations)."""
-    ensure_session_defaults(spark)
     base = F.create_map(
         F.lit("brand"), F.col("p_brand"), F.lit("type"), F.col("p_type")
     )
@@ -523,7 +512,6 @@ def fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON family (JsonFunctions.java:502 — json_extract_scalar,
     json_array_length, is_json_scalar; Spark get_json_object /
     json_array_length)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 100)
@@ -569,7 +557,6 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     port path); every URL has a fragment. DuckDB has no URL
     functions; the oracle emulates with regexes over the same
     constructed URLs."""
-    ensure_session_defaults(spark)
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 50)
@@ -617,7 +604,6 @@ def fn_crypto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary/crypto family (VarbinaryFunctions.java:479 — md5, sha2,
     base64, hex; sha1/crc32/xxhash64 live in
     fn_crypto_engine_specific since DuckDB lacks them)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 50)
@@ -638,7 +624,6 @@ def fn_crypto_engine_specific(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sha1 / crc32 / xxhash64 / hmac_sha256 — standard digests DuckDB
     cannot cross-check; values are still deterministic (hmac via
     pandas UDF, functions/udfs.py)."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.udfs import hmac_sha256
 
     return (
@@ -673,7 +658,6 @@ def fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TryFunction.java, TryCastFunction.java, Greatest.java, Nvl.java).
     ANSI mode makes division-by-zero raise exactly like Presto;
     try_divide is the TRY() wrapper."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 2000)
@@ -714,7 +698,6 @@ def fn_datetime_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scalar.mysql_to_java_pattern — the SURVEY §7 Phase 3 'hard
     list' item); DuckDB's strftime/strptime speak the MySQL-style
     patterns natively, so the oracle uses the original strings."""
-    ensure_session_defaults(spark)
     od = F.col("o_orderdate")
     return (
         load_table(spark, sf_dir, "orders")
@@ -754,7 +737,6 @@ def fn_misc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SplitToMapFunction.java), greatest/least (Greatest.java). The
     engine builds a real map from kv text; DuckDB mirrors with
     map()/map_extract."""
-    ensure_session_defaults(spark)
     kv = F.str_to_map(
         F.concat_ws(
             ",",
@@ -785,7 +767,6 @@ def fn_python_udfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """word_stem + inverse_normal_cdf — the two §2.9 functions with no
     Spark expression form, as Arrow-batched pandas UDFs
     (functions/udfs.py). Deterministic, rows-only check."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.udfs import (
         inverse_normal_cdf,
         normalize_nfc,
@@ -836,7 +817,6 @@ def fn_cdf_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle restates the closed forms; round(10) absorbs the
     last-ulp libm differences.
     z = 1.96: z^2 = 3.8416, z^2/2 = 1.9208, z^4/4 = 0.9604."""
-    ensure_session_defaults(spark)
     size = F.col("p_size").cast("double")
     return (
         load_table(spark, sf_dir, "part")
@@ -875,7 +855,6 @@ def fn_cdf_gamma_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists, so the driver gate is rows-only; the real checks are
     tests/test_semantics.py's monotonicity + inverse roundtrip
     properties."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.udfs import (
         beta_cdf,
         binomial_cdf,
@@ -930,7 +909,6 @@ def fn_scalar_helpers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (MathFunctions.java cosineSimilarity), to_unixtime/from_unixtime
     roundtrip — every helper in functions/scalar.py is exercised by
     some oracle-checked query."""
-    ensure_session_defaults(spark)
     vec_a = F.array(
         F.col("l_quantity"),
         F.col("l_discount") * 100,
@@ -986,7 +964,6 @@ def fn_decimal_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     and C engines (round from binary) legitimately disagree — the
     engine's rule is divide in double or use exact unscaled-integer
     division (compat.py discussion)."""
-    ensure_session_defaults(spark)
     d = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
     out = lambda c: c.cast("decimal(18,4)")  # noqa: E731
     return (
@@ -1026,7 +1003,6 @@ def fn_interval_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 months, so `+ INTERVAL 90 DAY` next to `+ INTERVAL 3 MONTH`
     gets CSE-folded into one expression — the oracle adds integer
     days to a DATE instead.)"""
-    ensure_session_defaults(spark)
     od = F.col("o_orderdate")
     return (
         load_table(spark, sf_dir, "orders")
@@ -1074,7 +1050,6 @@ def fn_datetime_joda(spark: SparkSession, sf_dir: str) -> DataFrame:
     java.time would read it as WEEK-year and diverge for end-of-
     December dates — the oracle proves the translation, not just the
     happy path. roundtrip = parse(format(ts)) must be the identity."""
-    ensure_session_defaults(spark)
     od = F.col("o_orderdate")
     return (
         load_table(spark, sf_dir, "orders")
@@ -1124,7 +1099,6 @@ def fn_timezone(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2024-03-10 spring-forward: 10:30 UTC -> 03:30 PDT;
     2024-11-03 fall-back: 09:30 UTC -> 01:30 PST). DuckDB replays via
     ICU timezone(); both engines read the same IANA tzdb."""
-    ensure_session_defaults(spark)
     od = F.col("o_orderdate")
     return (
         load_table(spark, sf_dir, "orders")
@@ -1181,7 +1155,6 @@ def fn_decimal38(spark: SparkSession, sf_dir: str) -> DataFrame:
         divergence (general decimal division rounds HALF_UP in the
         JVM vs from-binary in C engines — documented in
         fn_decimal_arithmetic; exact quotients sidestep it)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") < 300)
@@ -1223,7 +1196,6 @@ def fn_row_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ordering of row values inside arrays (RowComparisonOperators
     — lexicographic by field), mapped onto Spark structs. DuckDB
     structs replay all of it for the oracle."""
-    ensure_session_defaults(spark)
     k, v = F.col("o_orderkey"), F.col("o_totalprice")
     pair = F.struct(k.alias("k"), v.alias("v"))
     alt = F.struct((k % 7).alias("k"), (v / 2).alias("v"))
@@ -1304,7 +1276,6 @@ def fn_color_bar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure per-row string/arithmetic expressions — zero
     shuffles; the width-bounded transform stays inside codegen."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import color as cf
 
     df = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 300)
@@ -1336,7 +1307,6 @@ def fn_binary_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     two's-complement hex of be32 and the bit-exact roundtrips;
     tests/test_semantics.py pins the IEEE754 bit patterns against
     known constants."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.udfs import (
         from_ieee754_32,
         from_ieee754_64,
@@ -1418,7 +1388,6 @@ def fn_scalar_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists), and wilson_interval_lower (MathFunctions.java:1230 —
     closed-form arithmetic, identical double expression both
     engines). Every column is a pure per-row expression."""
-    ensure_session_defaults(spark)
     k = F.col("o_orderkey")
     dur_s = F.concat((k % 90).cast("string"), F.lit(".5m"))
     dur_num = F.regexp_extract(dur_s, r"([0-9.]+)([a-z]+)", 1).cast("double")
@@ -1528,7 +1497,6 @@ def fn_array_map_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimap_from_entries (MapFunctions — duplicate keys collect into
     arrays; emitted as sorted key array + per-key value arrays so the
     gate compares plain lists). All pure per-row expressions."""
-    ensure_session_defaults(spark)
     words = F.split(F.col("p_name"), " ")
     kvs = F.concat(
         F.col("p_name"), F.lit("=a;"), F.col("p_brand"), F.lit("=b;"),
@@ -1614,7 +1582,6 @@ def fn_misc_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ip_prefix(addr, p) canonical network string plus
     ip_subnet_min/max (emitted as integers — octet math is exact
     integer arithmetic on both engines)."""
-    ensure_session_defaults(spark)
     k = F.col("o_orderkey")
     dsize = F.concat(
         (k % 9).cast("string"), F.lit("."), (k % 4).cast("string"), F.lit("MB")
@@ -1722,7 +1689,6 @@ def fn_ipv6_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     so masks land in every group position, including the keep=0 and
     keep=16 boundary groups. Pure per-row group arithmetic — exact
     integers on both engines, no UDFs."""
-    ensure_session_defaults(spark)
     k = F.col("o_orderkey")
     group_exprs = [
         F.lit(8193),
@@ -1802,7 +1768,6 @@ def fn_geospatial_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     library); polygon containment is fn_geospatial_polygon, the
     spatial-join paths are join_spatial_radius and
     join_spatial_contains."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     k = F.col("o_orderkey")
@@ -1872,7 +1837,6 @@ def fn_json_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Row fields are projected out (engines render raw structs
     differently; the VALUES are the contract). json_size = element
     count of the array/object at the path, emitted per row."""
-    ensure_session_defaults(spark)
     k = F.col("event_id")
     arr_json = F.concat(
         F.lit("["),
@@ -1990,7 +1954,6 @@ def fn_geospatial_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     surgery in DuckDB. Multi-
     geometries / polygon holes stay a documented gap (real parser
     territory)."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     k = F.col("o_orderkey")
@@ -2073,7 +2036,6 @@ def fn_geospatial_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines compute the same doubles. Per-row whole-stage-codegen
     math — no shuffle, no UDF; the distributed join shape over this
     predicate is join_spatial_contains."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     def ring_lit(vs):
@@ -2156,7 +2118,6 @@ def fn_char_time_tz(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually PARSES them with the regex parser (functions/scalar.py
     parse_time_tz), the oracle recomputes the packed values from the
     components — a differential check of parser + arithmetic."""
-    ensure_session_defaults(spark)
     k = F.col("o_orderkey")
     raw = F.concat(
         F.lit("VL"), F.substring("o_orderstatus", 1, 1),
@@ -2255,7 +2216,6 @@ def fn_geospatial_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     each other and with the oracle's edge-unrolled arithmetic.
     Points inside a hole report NOT contained; holes make crossing
     totals of 0..4 all occur."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     rings_lit = F.array(
@@ -2313,7 +2273,6 @@ def fn_geospatial_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     form n/2*r^2*sin(2pi/n) at 6 dp, it must contain its center and
     must not contain a point 3r away. Buffer ring feeds the SAME
     st_area/st_contains_ring code paths as hand-built rings."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     k = F.col("o_orderkey")
@@ -2453,7 +2412,6 @@ def fn_geospatial_multipolygon(
     union (member concat -> area adds) and point-set union (dedup
     count). All pure Column string/array expressions — scan-speed at
     100 TB, no UDFs, no shuffle."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     def ring_lit(vs):
@@ -2558,7 +2516,6 @@ def fn_geospatial_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary. The oracle unrolls the identical clamp/projection
     arithmetic segment-by-segment. Pure Column math, O(vertices) per
     row, whole-stage codegen — scan-speed at 100 TB."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     k = F.col("o_orderkey")
@@ -2655,7 +2612,6 @@ def fn_geospatial_intersects(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical orientation arithmetic per segment pair. Touching
     endpoints land on the collinear/zero-orientation branch — exact
     in doubles, identical on both engines."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     k = F.col("o_orderkey")
@@ -2743,7 +2699,6 @@ def fn_bing_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes tile coordinates, quadkey, packed encoding,
     neighbor count, and the envelope corner from the same Mercator
     formulas."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     k = F.col("o_orderkey")
@@ -2863,7 +2818,6 @@ def fn_scalar_gaps2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IpPrefixFunctions.java:115,126), typed json_array_contains
     incl. NULL-on-malformed (JsonFunctions.java), and typeof
     (TypeOfFunction.java)."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions.udfs import fnv1_64, fnv1a_64
 
     k = F.col("o_orderkey")
@@ -2966,7 +2920,6 @@ def fn_time_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the reference's comparison (TimeType operators compare
     the long). Everything is integer Column arithmetic replayed
     identically by the oracle."""
-    ensure_session_defaults(spark)
     k = F.col("o_orderkey")
     m = (k * 37137) % 86400000
     m2 = (k * 9901) % 86400000
@@ -3085,7 +3038,6 @@ def fn_bing_tiles_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayable. The oracle pins the corner tiles plus tile count and
     the row-major coordinate sums in closed form — the enumeration
     itself, not just its envelope."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.functions import geo
 
     k = F.col("o_orderkey")
@@ -3173,7 +3125,6 @@ def fn_geospatial_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the kernel runs per-row inside Arrow mapInPandas batches
     on executors; no shuffle beyond the scan."""
-    ensure_session_defaults(spark)
     import pandas as pd
 
     from presto_0_235_spark.functions import geo_clip as gc
@@ -3265,7 +3216,6 @@ def fn_geospatial_union_holed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-row kernel inside Arrow mapInPandas on executors; no
     shuffle beyond the scan."""
-    ensure_session_defaults(spark)
     import pandas as pd
 
     from presto_0_235_spark.functions import geo_clip as gc
@@ -3334,7 +3284,6 @@ def fn_geospatial_buffer(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the differential check.
 
     Scale: per-row kernel inside Arrow mapInPandas; no shuffle."""
-    ensure_session_defaults(spark)
     import math
 
     import pandas as pd

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from presto_0_235_spark.catalog import load_table
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults, local_rows
+from presto_0_235_spark.session import local_rows
 
 # Scratch roots keyed by (format, sf) so concurrent scales never
 # collide; mode("overwrite") keeps reruns idempotent.
@@ -106,7 +106,6 @@ def io_roundtrip_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet write -> commit -> read-back. The round-tripped values
     must equal the oracle computed from the source — verifying writer
     encode + commit + reader decode, not just the API."""
-    ensure_session_defaults(spark)
     path = _sink_path("parquet", sf_dir)
     _orders_slice(spark, sf_dir).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
@@ -116,7 +115,6 @@ def io_roundtrip_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def io_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC write/read-back — the reference's default Hive format
     (HiveStorageFormat.java:42, native reader presto-orc/)."""
-    ensure_session_defaults(spark)
     path = _sink_path("orc", sf_dir)
     _orders_slice(spark, sf_dir).write.mode("overwrite").orc(path)
     return spark.read.orc(path)
@@ -127,7 +125,6 @@ def io_roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines write/read-back with an explicit read schema (the
     engine's declared-schema model — no inference at query time,
     matching ConnectorTableMetadata fixed schemas)."""
-    ensure_session_defaults(spark)
     path = _sink_path("json", sf_dir)
     src = _orders_slice(spark, sf_dir)
     src.write.mode("overwrite").json(path)
@@ -142,7 +139,6 @@ def io_roundtrip_textfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     source -> split + sentinel-aware typed casts — the
     declared-schema decode the reference's SerDe performs, all in
     JVM expressions."""
-    ensure_session_defaults(spark)
     path = _sink_path("textfile", sf_dir)
     src = _orders_slice(spark, sf_dir)
     src.select(_lazy_serde_encode(src)).write.mode("overwrite").text(path)
@@ -154,7 +150,6 @@ def io_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV write/read-back with header + explicit schema. Doubles
     survive exactly (Java shortest-roundtrip formatting); dates via
     ISO format."""
-    ensure_session_defaults(spark)
     path = _sink_path("csv", sf_dir)
     src = _orders_slice(spark, sf_dir)
     src.write.mode("overwrite").option("header", True).csv(path)
@@ -182,7 +177,6 @@ def io_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision that deletes the biggest shuffle in the workload
     (reference analog: grouped execution over bucketed Hive tables,
     MAIN/operator/StageExecutionDescriptor.java)."""
-    ensure_session_defaults(spark)
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     li_tbl, o_tbl = f"li_bucketed_{tag}", f"o_bucketed_{tag}"
     if not spark.catalog.tableExists(li_tbl):
@@ -243,7 +237,6 @@ def io_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     only matching partitions (reference analog: TupleDomain partition
     pruning via PickTableLayout.java + MetadataDeleteOperator's
     partition model)."""
-    ensure_session_defaults(spark)
     path = _sink_path("part_year", sf_dir)
     src = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -272,7 +265,6 @@ def io_partition_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog: ALTER TABLE ... DROP PARTITION on a partitioned catalog
     table — an O(1) metadata operation at any scale; the read-back
     proves the partition's rows are gone."""
-    ensure_session_defaults(spark)
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tbl = f"orders_part_{tag}"
     path = _sink_path("part_delete", sf_dir)
@@ -309,7 +301,6 @@ def io_memory_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     in RAM across queries): CACHE TABLE pins the relation in the
     in-memory columnar store (eager), and subsequent queries scan
     InMemoryRelation instead of the source files."""
-    ensure_session_defaults(spark)
     load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 200000
     ).createOrReplaceTempView("mem_big_orders")
@@ -330,7 +321,6 @@ def io_system_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     system.runtime.*, information_schema): the catalog answers
     queries about itself. Output is engine-specific (rows-only):
     registered table names + column counts from the session catalog."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.catalog import register_views
 
     register_views(spark, sf_dir)
@@ -354,7 +344,6 @@ def io_roundtrip_sequencefile(spark: SparkSession, sf_dir: str) -> DataFrame:
     supported vanilla-Spark path, no extra jars). Decode is the same
     declared-schema split + typed casts, back in DataFrame land
     immediately."""
-    ensure_session_defaults(spark)
     path = _sink_path("sequencefile", sf_dir)
     src = _orders_slice(spark, sf_dir)
     encoded = src.select(
@@ -384,7 +373,6 @@ def io_roundtrip_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pinned by tests/test_operators.py::test_avro_java_interop, which
     reads a codec-written file through org.apache.avro via the
     session JVM)."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.sources.avro import (
         read_avro_dataframe,
         write_avro_dataframe,
@@ -414,7 +402,6 @@ def io_roundtrip_pagefile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_operators.py::TestPageFileCodec; ZSTD page compression
     (airlift-compatible standard frames, COMPRESSED marker bit,
     0.8 min-ratio gate) exercised there too."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.sources.pagefile import (
         read_pagefile_dataframe,
         write_pagefile_dataframe,
@@ -435,7 +422,6 @@ def io_roundtrip_pagefile_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_operators.py). Same differential gate as the
     uncompressed roundtrip — the written bytes must decode to the
     oracle's values through the compressed frames."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.sources.pagefile import (
         read_pagefile_dataframe,
         write_pagefile_dataframe,
@@ -463,7 +449,6 @@ def io_roundtrip_rcfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions in tests/test_operators.py::TestRcFileCodec (the
     session JVM's hive-exec reads codec-written files and vice
     versa)."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.sources.rcfile import (
         read_rcfile_dataframe,
         write_rcfile_dataframe,
@@ -486,7 +471,6 @@ def io_roundtrip_rcbinary(spark: SparkSession, sf_dir: str) -> DataFrame:
     worker-side codec as io_roundtrip_rcfile with the binary serde;
     Hive-class byte interop pinned both directions in
     tests/test_operators.py::TestRcFileCodec."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.sources.rcfile import (
         read_rcfile_dataframe,
         write_rcfile_dataframe,

@@ -11,6 +11,24 @@ plus the LLM-pipeline extensions) registers here as a named query:
     semantics are not SQL-expressible (approx sketches, streaming,
     sampling) register with ``oracle=None`` → rows-only check.
 
+Two registration forms:
+  - ``@register(name, oracle=...)`` on a builder function. The
+    registry keeps (and returns) a wrapper that applies the engine's
+    session defaults (session.ensure_session_defaults) once before the
+    body runs, so a builder works on a session the engine did not
+    build — the session is per-query state owned by the one entry
+    point, as Presto's dispatcher builds a query's Session once, not
+    by each operator the query reaches;
+  - ``register_sql(name, text, oracle=...)`` declares a query that is
+    Presto-dialect SQL text: its builder registers the fixture views
+    and runs ``text`` through the front door (sql/frontend.run_sql).
+    The oracle defaults to the same text; pass ``oracle=`` when
+    DuckDB needs a different spelling, or ``oracle=None`` for a
+    rows-only query.
+Both builders look up ``ensure_session_defaults``, ``register_views``
+and ``run_sql`` through this module's globals at call time, so a
+wrapper installed on those names (perfbench's tracer) sees every call.
+
 Determinism rules every registered query follows (so the value-hash
 comparison is exact, not fuzzy):
   - money sums go through DECIMAL(18,4) so addition is exact and
@@ -24,10 +42,15 @@ comparison is exact, not fuzzy):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from presto_0_235_spark.catalog import register_views
+from presto_0_235_spark.session import ensure_session_defaults
+from presto_0_235_spark.sql.frontend import run_sql
 
 QueryBuilder = Callable[[SparkSession, str], DataFrame]
 
@@ -37,24 +60,44 @@ class Query:
     name: str
     builder: QueryBuilder
     oracle: str | None
-    doc: str
 
 
 _REGISTRY: dict[str, Query] = {}
+# register_sql's default oracle: the query's own text
+_SAME_TEXT = object()
 
 
 def register(
-    name: str, oracle: str | None = None, doc: str = ""
+    name: str, oracle: str | None = None
 ) -> Callable[[QueryBuilder], QueryBuilder]:
-    """Decorator: add a builder to the registry under ``name``."""
+    """Decorator: add a builder to the registry under ``name``; returns
+    the wrapper that applies the session defaults first."""
 
     def wrap(fn: QueryBuilder) -> QueryBuilder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = Query(name, fn, oracle, doc or (fn.__doc__ or ""))
-        return fn
+
+        @functools.wraps(fn)
+        def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ensure_session_defaults(spark)
+            return fn(spark, sf_dir)
+
+        _REGISTRY[name] = Query(name, builder, oracle)
+        return builder
 
     return wrap
+
+
+def register_sql(name: str, text: str, oracle=_SAME_TEXT) -> None:
+    """Declare a query whose builder runs ``text`` through the front
+    door over the fixture views; the oracle defaults to ``text``."""
+
+    def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir)
+        return run_sql(spark, text)
+
+    builder.__name__ = builder.__qualname__ = name
+    register(name, text if oracle is _SAME_TEXT else oracle)(builder)
 
 
 # Registration order determines the order downstream harnesses see the

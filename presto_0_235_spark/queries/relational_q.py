@@ -10,12 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from presto_0_235_spark.catalog import load_table, register_views
+from presto_0_235_spark.catalog import load_table
 from presto_0_235_spark.functions.compat import dec_sum, oracle_dec_sum
 from presto_0_235_spark.operators import joins, sample, setops, sort
-from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults, local_rows
-from presto_0_235_spark.sql.frontend import run_sql
+from presto_0_235_spark.queries.registry import register, register_sql
+from presto_0_235_spark.session import local_rows
 
 # --------------------------------------------------------------------------
 # §2.1 / §2.2 — scan, filter, project, values
@@ -38,7 +37,6 @@ def scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     .explain shows PushedFilters for l_linenumber and a pruned
     ReadSchema — the projection never reads untouched columns.
     """
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_linenumber") == 1)
@@ -69,7 +67,6 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (FilterAndProjectOperator.java:32; IN codegen InCodeGenerator.java,
     LIKE via Joni regex in the reference — Spark compiles all four
     into one WholeStageCodegen filter)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "orders")
         .filter(
@@ -100,7 +97,6 @@ def filter_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     COALESCE/NULLIF — Presto special forms
     (SPI/relation/SpecialFormExpression). Spark: <=>, when/otherwise,
     coalesce, nullif."""
-    ensure_session_defaults(spark)
     status = F.nullif(F.col("o_orderstatus"), F.lit("O"))
     return (
         load_table(spark, sf_dir, "orders")
@@ -127,7 +123,6 @@ SELECT id, name, CAST(score AS DOUBLE) AS score FROM (
 )
 def values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Literal VALUES rows (ValuesOperator.java:27)."""
-    ensure_session_defaults(spark)
     return local_rows(
         spark,
         [(1, "alpha", 9.5), (2, "beta", 7.25), (3, "gamma", None)],
@@ -151,7 +146,6 @@ GROUP BY o_orderstatus
 )
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash inner join (LookupJoinOperator.java:53 INNER)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -175,7 +169,6 @@ WHERE o_orderkey % 50 = 0
 def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer hash join (PROBE_OUTER,
     LookupJoinOperators.java:32-37) — null-producing right side."""
-    ensure_session_defaults(spark)
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 50 == 0
     )
@@ -200,7 +193,6 @@ WHERE c_custkey % 20 = 0
 )
 def join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right outer hash join (LOOKUP_OUTER)."""
-    ensure_session_defaults(spark)
     big = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 400000
     )
@@ -228,7 +220,6 @@ FROM c FULL OUTER JOIN s ON c.nk = s.nk
 )
 def join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer hash join (FULL_OUTER) between two aggregates."""
-    ensure_session_defaults(spark)
     cust = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 8000)
@@ -256,7 +247,6 @@ SELECT r_name, n_name FROM region CROSS JOIN nation
 )
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cartesian product (NestedLoopJoinOperator.java:36)."""
-    ensure_session_defaults(spark)
     return joins.cross_join(
         load_table(spark, sf_dir, "region").select("r_name"),
         load_table(spark, sf_dir, "nation").select("n_name"),
@@ -277,7 +267,6 @@ GROUP BY c_mktsegment
 )
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi join / EXISTS (HashSemiJoinOperator.java:32)."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     big = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 300000
@@ -304,7 +293,6 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders so the survivor set is nonempty at every fixture SF (every
     customer has SOME order, so an unfiltered anti join is vacuously
     empty and proves nothing)."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     big = load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 350000
@@ -329,7 +317,6 @@ WHERE o_custkey NOT IN (
 def join_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT IN with three-valued-logic semantics (SemiJoinNode +
     filter in the reference; operators/joins.null_aware_not_in)."""
-    ensure_session_defaults(spark)
     orders = load_table(spark, sf_dir, "orders")
     rich = load_table(spark, sf_dir, "customer").filter(
         F.col("c_acctbal") > 9900
@@ -354,7 +341,6 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-equi (theta) join — Presto runs these as nested-loop joins
     with a residual filter; Spark plans BroadcastNestedLoopJoin with
     the tiny VALUES side replicated."""
-    ensure_session_defaults(spark)
     part = load_table(spark, sf_dir, "part")
     buckets = local_rows(
         spark,
@@ -384,7 +370,6 @@ def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REPLICATED-distribution join: dimension broadcast, fact side
     never shuffles (DetermineJoinDistributionType.java). The plan
     must show BroadcastHashJoin — asserted in tests/test_plans.py."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     return (
@@ -417,7 +402,6 @@ FROM lineitem
 def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global aggregation, no grouping keys
     (AggregationOperator.java:35)."""
-    ensure_session_defaults(spark)
     return load_table(spark, sf_dir, "lineitem").agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("l_orderkey").alias("n_orders"),
@@ -441,7 +425,6 @@ HAVING COUNT(*) > 100
 )
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY + HAVING (filter above HashAggregationOperator)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
@@ -466,7 +449,6 @@ def agg_distinct_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiple DISTINCT aggregates mixed with plain ones — Presto
     plans MarkDistinctOperator (MarkDistinctOperator.java:35); Spark's
     RewriteDistinctAggregates lowers to an Expand, same effect."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -493,7 +475,6 @@ GROUP BY l_returnflag
 def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTER (WHERE ...) on aggregates (grammar SqlBase.g4:450-452,
     rule ImplementFilteredAggregations.java)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -521,7 +502,6 @@ GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets (GroupIdOperator.java:32; grammar
     SqlBase.g4:234-244)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "orders")
         .rollup("o_orderstatus", "o_orderpriority")
@@ -539,7 +519,6 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
@@ -547,9 +526,13 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Explicit GROUPING SETS + grouping() marker
+# (GroupingOperationRewriter.java; QueryPlanner.java:532-536).
+# The gid is composed from per-column GROUPING() so the bit
+# convention is engine-independent.
+register_sql(
     "agg_grouping_sets",
-    oracle="""
+    """
 SELECT l_returnflag, l_linestatus,
        GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS gid,
        COUNT(*) AS n
@@ -557,23 +540,6 @@ FROM lineitem
 GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 """,
 )
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS + grouping() marker
-    (GroupingOperationRewriter.java; QueryPlanner.java:532-536).
-    The gid is composed from per-column GROUPING() so the bit
-    convention is engine-independent."""
-    ensure_session_defaults(spark)
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT l_returnflag, l_linestatus,
-               GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS gid,
-               COUNT(*) AS n
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """,
-    )
 
 
 @register(
@@ -582,7 +548,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT DISTINCT (aggregation without aggregates)."""
-    ensure_session_defaults(spark)
     return (
         load_table(spark, sf_dir, "lineitem")
         .select("l_returnflag", "l_linestatus")
@@ -600,7 +565,6 @@ ORDER BY o_orderpriority LIMIT 3
 def distinct_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT ... LIMIT (DistinctLimitOperator.java:37); ordered for
     a deterministic subset."""
-    ensure_session_defaults(spark)
     return sort.distinct_limit(
         load_table(spark, sf_dir, "orders").select("o_orderpriority"),
         3,
@@ -626,7 +590,6 @@ def orderby_nulls_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Presto null ordering: nulls last for ASC (PlannerUtils.java:
     39-51) — Spark's ASC default is nulls-first, so the engine always
     emits asc_nulls_last (operators/sort.presto_order)."""
-    ensure_session_defaults(spark)
     df = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.nullif(F.col("o_orderpriority"), F.lit("1-URGENT")).alias("pri"),
@@ -645,7 +608,6 @@ def topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TopN (TopNOperator.java:35) — Spark plans
     TakeOrderedAndProject: per-partition top-k then k-row merge, no
     global sort materialization (scale-safe)."""
-    ensure_session_defaults(spark)
     return sort.top_n(
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
@@ -664,7 +626,6 @@ SELECT n_nationkey, n_name FROM nation ORDER BY n_nationkey LIMIT 10
 )
 def limit_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIMIT (LimitOperator.java:24; ordered for determinism)."""
-    ensure_session_defaults(spark)
     return sort.top_n(
         load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name"),
         10,
@@ -699,7 +660,6 @@ SELECT nationkey, src FROM (
 )
 def union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL (UnionNode + SetFlatteningOptimizer)."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_acctbal") > 9500
     )
@@ -724,7 +684,6 @@ SELECT c_nationkey FROM customer WHERE c_mktsegment = 'MACHINERY'
 )
 def union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION DISTINCT."""
-    ensure_session_defaults(spark)
     return setops.union_distinct(
         _seg_keys(spark, sf_dir, "BUILDING"),
         _seg_keys(spark, sf_dir, "MACHINERY"),
@@ -742,7 +701,6 @@ SELECT c_nationkey FROM customer WHERE c_mktsegment = 'FURNITURE'
 def intersect_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (DISTINCT-only in Presto 0.235,
     ImplementIntersectAndExceptAsUnion.java:110)."""
-    ensure_session_defaults(spark)
     return setops.intersect(
         _seg_keys(spark, sf_dir, "BUILDING"),
         _seg_keys(spark, sf_dir, "FURNITURE"),
@@ -763,7 +721,6 @@ def except_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     nations only, so the difference is nonempty at every fixture SF
     (every nation has a BUILDING customer, so subtracting the whole
     segment returned the vacuous empty set)."""
-    ensure_session_defaults(spark)
     rich = (
         load_table(spark, sf_dir, "customer")
         .filter(
@@ -791,7 +748,6 @@ SELECT l_orderkey FROM lineitem WHERE l_quantity > 10
 def intersect_all_ext(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL — beyond-reference extension (Presto 0.235
     rejects ALL, StatementAnalyzer.java:1227; Spark is a superset)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return setops.intersect_all(
         li.filter(F.col("l_linenumber") <= 2).select(
@@ -813,7 +769,6 @@ SELECT l_orderkey FROM lineitem WHERE l_quantity > 10
 )
 def except_all_ext(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL — beyond-reference extension."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return setops.except_all(
         li.filter(F.col("l_linenumber") <= 2).select(
@@ -843,7 +798,6 @@ WHERE doc_id < 20
 def unnest_array_ordinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNNEST(array) WITH ORDINALITY (UnnestOperator.java:48;
     ordinality is 1-based) — Spark posexplode + pos+1."""
-    ensure_session_defaults(spark)
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 20)
@@ -869,7 +823,6 @@ SELECT p_partkey, k AS attr, v AS val FROM (
 def unnest_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNNEST(map) -> (key, value) rows (MapUnnester). The oracle
     states the same semantics as a union of entries."""
-    ensure_session_defaults(spark)
     part = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") < 200)
@@ -888,9 +841,11 @@ def unnest_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# LATERAL correlated subquery (grammar SqlBase.g4:305,
+# LateralJoinNode + decorrelation rules) via Spark lateral join.
+register_sql(
     "lateral_topn_per_group",
-    oracle="""
+    """
 SELECT n_name, top_name, top_bal
 FROM nation
 LEFT JOIN LATERAL (
@@ -902,30 +857,13 @@ LEFT JOIN LATERAL (
 ) ON TRUE
 """,
 )
-def lateral_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LATERAL correlated subquery (grammar SqlBase.g4:305,
-    LateralJoinNode + decorrelation rules) via Spark lateral join."""
-    ensure_session_defaults(spark)
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT n_name, top_name, top_bal
-        FROM nation
-        LEFT JOIN LATERAL (
-          SELECT c_name AS top_name, c_acctbal AS top_bal
-          FROM customer
-          WHERE c_nationkey = n_nationkey
-          ORDER BY c_acctbal DESC, c_custkey
-          LIMIT 1
-        ) ON TRUE
-        """,
-    )
 
 
-@register(
+# Scalar subquery + EnforceSingleRowOperator.java:27 guard;
+# Presto decorrelates to a join (TransformCorrelatedScalar...).
+register_sql(
     "scalar_subquery",
-    oracle="""
+    """
 SELECT o_orderkey, o_totalprice
 FROM orders
 WHERE o_totalprice > 1.5 * (
@@ -934,77 +872,43 @@ WHERE o_totalprice > 1.5 * (
 )
 """,
 )
-def scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar subquery + EnforceSingleRowOperator.java:27 guard;
-    Presto decorrelates to a join (TransformCorrelatedScalar...)."""
-    ensure_session_defaults(spark)
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderkey, o_totalprice
-        FROM orders
-        WHERE o_totalprice > 1.5 * (
-          SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
-                 / COUNT(*)
-          FROM orders
-        )
-        """,
-    )
 
 
-@register(
+# Uncorrelated IN subquery -> semi join
+# (TransformUncorrelatedInPredicateSubqueryToSemiJoin.java).
+register_sql(
     "in_subquery",
-    oracle="""
-SELECT o_orderkey, o_custkey FROM orders
-WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9900)
-""",
-)
-def in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncorrelated IN subquery -> semi join
-    (TransformUncorrelatedInPredicateSubqueryToSemiJoin.java)."""
-    ensure_session_defaults(spark)
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
+    """
         SELECT o_orderkey, o_custkey FROM orders
         WHERE o_custkey IN (
           SELECT c_custkey FROM customer WHERE c_acctbal > 9900
         )
         """,
-    )
-
-
-@register(
-    "quantified_all",
     oracle="""
+SELECT o_orderkey, o_custkey FROM orders
+WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9900)
+""",
+)
+
+
+# Quantified comparison > ALL (Presto lowers via
+# TransformQuantifiedComparisonApplyToLateralJoin.java; our front
+# door rewrites to a MAX scalar subquery — Spark lacks the syntax).
+register_sql(
+    "quantified_all",
+    """
 SELECT s_suppkey, s_acctbal FROM supplier
 WHERE s_acctbal > ALL (
   SELECT c_acctbal FROM customer WHERE c_nationkey = 3
 )
 """,
 )
-def quantified_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantified comparison > ALL (Presto lowers via
-    TransformQuantifiedComparisonApplyToLateralJoin.java; our front
-    door rewrites to a MAX scalar subquery — Spark lacks the syntax)."""
-    ensure_session_defaults(spark)
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT s_suppkey, s_acctbal FROM supplier
-        WHERE s_acctbal > ALL (
-          SELECT c_acctbal FROM customer WHERE c_nationkey = 3
-        )
-        """,
-    )
 
 
-@register(
+# WITH (CTE; grammar SqlBase.g4:130-136, non-recursive).
+register_sql(
     "cte_query",
-    oracle="""
+    """
 WITH big AS (
   SELECT o_custkey, COUNT(*) AS n_big
   FROM orders WHERE o_totalprice > 200000 GROUP BY o_custkey
@@ -1014,23 +918,6 @@ FROM customer JOIN big ON c_custkey = o_custkey
 GROUP BY c_mktsegment
 """,
 )
-def cte_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WITH (CTE; grammar SqlBase.g4:130-136, non-recursive)."""
-    ensure_session_defaults(spark)
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        WITH big AS (
-          SELECT o_custkey, COUNT(*) AS n_big
-          FROM orders WHERE o_totalprice > 200000 GROUP BY o_custkey
-        )
-        SELECT c_mktsegment, COUNT(*) AS n_cust,
-               CAST(SUM(n_big) AS BIGINT) AS big_orders
-        FROM customer JOIN big ON c_custkey = o_custkey
-        GROUP BY c_mktsegment
-        """,
-    )
 
 
 @register(
@@ -1043,7 +930,6 @@ WHERE (o_orderkey * 2654435761) % 100 < 10
 def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash sample — the oracle-checkable analog of
     TABLESAMPLE (operators/sample.deterministic_sample)."""
-    ensure_session_defaults(spark)
     return sample.deterministic_sample(
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
@@ -1057,7 +943,6 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TABLESAMPLE BERNOULLI(10) (ImplementBernoulliSampleAsFilter.
     java) — rand()-based, engine-specific row set -> rows-only check."""
-    ensure_session_defaults(spark)
     return sample.bernoulli_sample(
         load_table(spark, sf_dir, "orders").select("o_orderkey"), 0.1
     )
@@ -1071,7 +956,6 @@ def assign_unique_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AssignUniqueIdOperator.java:29 ->
     monotonically_increasing_id(); ids are engine-specific, so the
     checkable property is uniqueness (n_ids == n_rows)."""
-    ensure_session_defaults(spark)
     with_id = load_table(spark, sf_dir, "lineitem").withColumn(
         "uid", F.monotonically_increasing_id()
     )
@@ -1086,7 +970,6 @@ def sample_system(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TABLESAMPLE SYSTEM(25): split-granularity sampling (grammar
     SqlBase.g4:282-292, SampleNode SYSTEM type) — whole input splits
     kept/dropped. Partition-layout dependent -> rows-only check."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem", spread=True)
     return sample.system_sample(li, 25).select(
         "l_orderkey", "l_linenumber", "l_quantity"
@@ -1112,7 +995,6 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinks S-fold. The deterministic remedy for skew AQE can't fix
     (one giant key can't be split by measurement alone when the
     aggregation keys collide with the join key)."""
-    ensure_session_defaults(spark)
     from presto_0_235_spark.operators.skew import salted_join
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1148,7 +1030,6 @@ def join_null_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity point that separates `=` from IS NOT DISTINCT FROM in a
     join condition. Left rows with NULL keys survive with NULL
     payload; both engines agree."""
-    ensure_session_defaults(spark)
     left = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 1000)
@@ -1191,7 +1072,6 @@ def pivot_unpivot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts to one column per status (missing combos coalesced to 0,
     the dense-matrix contract), then unpivots back to long form —
     proving both reshapes preserve every cell."""
-    ensure_session_defaults(spark)
     statuses = ["O", "F", "P"]
     pivoted = (
         load_table(spark, sf_dir, "orders")

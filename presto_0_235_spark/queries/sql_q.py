@@ -17,17 +17,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from presto_0_235_spark.catalog import register_views
-from presto_0_235_spark.queries.registry import register
+from presto_0_235_spark.queries.registry import register, register_sql
 from presto_0_235_spark.sql.frontend import run_sql
 
-# The oracle strings below are near-identical to the submitted SQL —
-# that is the point: the front door accepts ANSI/Presto SQL and the
-# differential gate replays it on DuckDB.
+# Most queries here are register_sql declarations: one text that the
+# front door runs and DuckDB replays as the oracle — that is the point:
+# the front door accepts ANSI/Presto SQL. A declaration passes oracle=
+# only where DuckDB needs a different spelling (or None: rows-only).
 
 
-@register(
+# TPC-H Q6 submitted as SQL text through the front door
+# (scan+filter+global agg; BETWEEN predicate — reference grammar
+# SqlBase.g4 predicated rules, InCodeGenerator/LIKE compiled
+# filters).
+register_sql(
     "sql_tpch_q6",
-    oracle="""
+    """
 SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))
             AS DOUBLE) AS revenue
 FROM lineitem
@@ -37,29 +42,15 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
   AND l_quantity < 24
 """,
 )
-def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 submitted as SQL text through the front door
-    (scan+filter+global agg; BETWEEN predicate — reference grammar
-    SqlBase.g4 predicated rules, InCodeGenerator/LIKE compiled
-    filters)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))
-                    AS DOUBLE) AS revenue
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate < TIMESTAMP '1997-01-01'
-          AND l_discount BETWEEN 0.05 AND 0.07
-          AND l_quantity < 24
-        """,
-    )
 
 
-@register(
+# CTEs + INTERSECT + ordered LIMIT via SQL (grammar
+# SqlBase.g4:130-136 for WITH, :205-210 for set ops; lowering
+# ImplementIntersectAndExceptAsUnion.java:110 — Spark plans a
+# left-semi join instead, same semantics).
+register_sql(
     "sql_cte_setops",
-    oracle="""
+    """
 WITH big AS (
   SELECT o_custkey AS k FROM orders WHERE o_totalprice > 250000
 ),
@@ -73,28 +64,6 @@ ORDER BY k
 LIMIT 50
 """,
 )
-def sql_cte_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CTEs + INTERSECT + ordered LIMIT via SQL (grammar
-    SqlBase.g4:130-136 for WITH, :205-210 for set ops; lowering
-    ImplementIntersectAndExceptAsUnion.java:110 — Spark plans a
-    left-semi join instead, same semantics)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        WITH big AS (
-          SELECT o_custkey AS k FROM orders WHERE o_totalprice > 250000
-        ),
-        urgent AS (
-          SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'
-        )
-        SELECT k FROM (
-          SELECT k FROM big INTERSECT SELECT k FROM urgent
-        ) t
-        ORDER BY k
-        LIMIT 50
-        """,
-    )
 
 
 @register(
@@ -158,9 +127,13 @@ def sql_unnest_multi_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).selectExpr("p_partkey", "w", "CAST(n AS BIGINT) AS n")
 
 
-@register(
+# Quantified comparison `> ALL (subquery)` — Presto lowers it to
+# an aggregate (TransformQuantifiedComparisonApplyToLateralJoin.java);
+# the frontend applies the same MAX/MIN rewrite since Spark SQL has
+# no quantified comparisons.
+register_sql(
     "sql_quantified_all",
-    oracle="""
+    """
 SELECT o_orderkey, o_totalprice
 FROM orders
 WHERE o_totalprice > ALL (
@@ -169,28 +142,15 @@ WHERE o_totalprice > ALL (
 ORDER BY o_orderkey
 """,
 )
-def sql_quantified_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantified comparison `> ALL (subquery)` — Presto lowers it to
-    an aggregate (TransformQuantifiedComparisonApplyToLateralJoin.java);
-    the frontend applies the same MAX/MIN rewrite since Spark SQL has
-    no quantified comparisons."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderkey, o_totalprice
-        FROM orders
-        WHERE o_totalprice > ALL (
-          SELECT o_totalprice FROM orders WHERE o_orderpriority = '5-LOW'
-        )
-        ORDER BY o_orderkey
-        """,
-    )
 
 
-@register(
+# Predicate surface via SQL: searched CASE, LIKE, IN-list,
+# BETWEEN, COALESCE/NULLIF (reference compiled predicates —
+# InCodeGenerator.java, LikeFunctions Joni regex,
+# SqlBase.g4 predicate rules).
+register_sql(
     "sql_case_like_in",
-    oracle="""
+    """
 SELECT p_partkey,
        CASE WHEN p_size < 10 THEN 'small'
             WHEN p_size < 30 THEN 'medium'
@@ -203,31 +163,24 @@ FROM part
 WHERE p_partkey < 500
 """,
 )
-def sql_case_like_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Predicate surface via SQL: searched CASE, LIKE, IN-list,
-    BETWEEN, COALESCE/NULLIF (reference compiled predicates —
-    InCodeGenerator.java, LikeFunctions Joni regex,
-    SqlBase.g4 predicate rules)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT p_partkey,
-               CASE WHEN p_size < 10 THEN 'small'
-                    WHEN p_size < 30 THEN 'medium'
-                    ELSE 'large' END AS size_class,
-               p_name LIKE '%red%' AS is_red,
-               p_brand IN ('Brand#1', 'Brand#2', 'Brand#3') AS is_low_brand,
-               p_size BETWEEN 10 AND 20 AS mid_size,
-               coalesce(nullif(p_brand, 'Brand#33'), 'other') AS brand_or_other
-        FROM part
-        WHERE p_partkey < 500
-        """,
-    )
 
 
-@register(
+# Correlated LATERAL subquery (grammar SqlBase.g4:305,
+# LateralJoinNode + decorrelation rules; Spark 3.2+ lateral join
+# support — both engines decorrelate to an aggregate+join).
+register_sql(
     "sql_lateral_join",
+    """
+        SELECT n.n_name, t.top_price
+        FROM nation n
+        JOIN LATERAL (
+          SELECT max(o_totalprice) AS top_price
+          FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+          WHERE c.c_nationkey = n.n_nationkey
+        ) t
+        WHERE n.n_nationkey < 10
+        ORDER BY n.n_name
+        """,
     oracle="""
 SELECT n.n_name, t.top_price
 FROM nation n
@@ -240,25 +193,6 @@ WHERE n.n_nationkey < 10
 ORDER BY n.n_name
 """,
 )
-def sql_lateral_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery (grammar SqlBase.g4:305,
-    LateralJoinNode + decorrelation rules; Spark 3.2+ lateral join
-    support — both engines decorrelate to an aggregate+join)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT n.n_name, t.top_price
-        FROM nation n
-        JOIN LATERAL (
-          SELECT max(o_totalprice) AS top_price
-          FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-          WHERE c.c_nationkey = n.n_nationkey
-        ) t
-        WHERE n.n_nationkey < 10
-        ORDER BY n.n_name
-        """,
-    )
 
 
 @register(
@@ -349,8 +283,20 @@ def sql_ddl_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Presto TRY(...) (MAIN/operator/scalar/TryFunction.java —
+# errors become NULL) through the dialect rewrite: TRY(CAST ...)
+# lowers to TRY_CAST, TRY(a / b) to try_divide. The division by
+# (o_orderkey % 3) = 0 raises under the session's ANSI mode without
+# the rewrite — the NULLs prove the TRY path executed.
+register_sql(
     "sql_try_expr",
+    """
+        SELECT o_orderkey,
+               TRY(CAST(o_orderpriority AS INTEGER)) AS pri_int,
+               TRY(CAST(substr(o_orderpriority, 1, 1) AS INTEGER)) AS pri_digit,
+               TRY(o_totalprice / (o_orderkey % 3)) AS safe_div
+        FROM orders WHERE o_orderkey < 500
+        """,
     oracle="""
 SELECT o_orderkey,
        TRY_CAST(o_orderpriority AS INTEGER) AS pri_int,
@@ -361,27 +307,25 @@ SELECT o_orderkey,
 FROM orders WHERE o_orderkey < 500
 """,
 )
-def sql_try_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Presto TRY(...) (MAIN/operator/scalar/TryFunction.java —
-    errors become NULL) through the dialect rewrite: TRY(CAST ...)
-    lowers to TRY_CAST, TRY(a / b) to try_divide. The division by
-    (o_orderkey % 3) = 0 raises under the session's ANSI mode without
-    the rewrite — the NULLs prove the TRY path executed."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderkey,
-               TRY(CAST(o_orderpriority AS INTEGER)) AS pri_int,
-               TRY(CAST(substr(o_orderpriority, 1, 1) AS INTEGER)) AS pri_digit,
-               TRY(o_totalprice / (o_orderkey % 3)) AS safe_div
-        FROM orders WHERE o_orderkey < 500
-        """,
-    )
 
 
-@register(
+# Presto 1-based subscripts and ARRAY[...]/MAP(ARRAY..) literals
+# (ArraySubscriptOperator.java is 1-based — Spark's native a[i] is
+# 0-based, so a pass-through would silently shift every element;
+# SqlBase.g4 ARRAY/MAP constructors). The frontend rewrites a[i] ->
+# element_at(a, i), ARRAY[..] -> array(..), MAP(ARRAY..,ARRAY..) ->
+# map_from_arrays. DuckDB subscripts are natively 1-based.
+register_sql(
     "sql_subscript_array_literal",
+    """
+        SELECT p_partkey,
+               split(p_name, ' ')[1] AS first_word,
+               split(p_name, ' ')[2] AS second_word,
+               ARRAY['small', 'medium', 'large'][1 + (p_size % 3)]
+                 AS size_bucket,
+               MAP(ARRAY['s', 'm'], ARRAY[1, 2])['m'] AS map_val
+        FROM part WHERE p_partkey < 300
+        """,
     oracle="""
 SELECT p_partkey,
        str_split(p_name, ' ')[1] AS first_word,
@@ -391,30 +335,23 @@ SELECT p_partkey,
 FROM part WHERE p_partkey < 300
 """,
 )
-def sql_subscript_array_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Presto 1-based subscripts and ARRAY[...]/MAP(ARRAY..) literals
-    (ArraySubscriptOperator.java is 1-based — Spark's native a[i] is
-    0-based, so a pass-through would silently shift every element;
-    SqlBase.g4 ARRAY/MAP constructors). The frontend rewrites a[i] ->
-    element_at(a, i), ARRAY[..] -> array(..), MAP(ARRAY..,ARRAY..) ->
-    map_from_arrays. DuckDB subscripts are natively 1-based."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT p_partkey,
-               split(p_name, ' ')[1] AS first_word,
-               split(p_name, ' ')[2] AS second_word,
-               ARRAY['small', 'medium', 'large'][1 + (p_size % 3)]
-                 AS size_bucket,
-               MAP(ARRAY['s', 'm'], ARRAY[1, 2])['m'] AS map_val
-        FROM part WHERE p_partkey < 300
-        """,
-    )
 
 
-@register(
+# Aggregate FILTER (WHERE ...) straight through the front door —
+# identical grammar in Presto (SqlBase.g4:450-452 filter rule,
+# lowered by AggregationNode masks) and Spark; the frontend's
+# quote-aware passes must leave it untouched.
+register_sql(
     "sql_filter_clause",
+    """
+        SELECT o_orderpriority,
+               count(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,6)))
+                      FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS sum_f,
+               max(o_totalprice) FILTER (WHERE o_orderstatus = 'O') AS max_open
+        FROM orders
+        GROUP BY o_orderpriority
+        """,
     oracle="""
 SELECT o_orderpriority,
        CAST(count(*) FILTER (WHERE o_totalprice > 150000) AS BIGINT)
@@ -427,28 +364,35 @@ FROM orders
 GROUP BY o_orderpriority
 """,
 )
-def sql_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate FILTER (WHERE ...) straight through the front door —
-    identical grammar in Presto (SqlBase.g4:450-452 filter rule,
-    lowered by AggregationNode masks) and Spark; the frontend's
-    quote-aware passes must leave it untouched."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderpriority,
-               count(*) FILTER (WHERE o_totalprice > 150000) AS n_big,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,6)))
-                      FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS sum_f,
-               max(o_totalprice) FILTER (WHERE o_orderstatus = 'O') AS max_open
-        FROM orders
-        GROUP BY o_orderpriority
-        """,
-    )
 
 
-@register(
+# Presto lambda syntax `x -> e` (SqlBase.g4 lambda rule,
+# LambdaDefinitionExpression) — char-identical in Spark; the
+# rewrite passes must not corrupt `->` or fire renames incorrectly
+# inside lambda bodies. aggregate/transform/filter cover the
+# higher-order family (reference ArrayTransformFunction.java,
+# ArrayFilterFunction.java, ArrayReduceFunction.java).
+#
+# Gate-facing variant: the lambda results are flattened to scalar
+# strings with array_join so every output column is a hashable
+# scalar the external harness's pandas canonicalizer can sort
+# (an array-typed column crashed the r10 driver gate — the
+# array-output twin lives on as ``sql_lambda_arrays`` outside the
+# priority prefix).
+register_sql(
     "sql_lambda_functions",
+    """
+        SELECT p_partkey,
+               array_join(
+                 transform(split(p_name, ' '), x -> upper(x)), '|')
+                 AS words_up,
+               array_join(
+                 filter(split(p_name, ' '), x -> length(x) > 5), '|')
+                 AS long_words,
+               aggregate(transform(split(p_name, ' '), x -> length(x)),
+                         0L, (s, x) -> s + x) AS total_len
+        FROM part WHERE p_partkey < 200
+        """,
     oracle="""
 SELECT p_partkey,
        COALESCE(array_to_string(
@@ -462,40 +406,23 @@ SELECT p_partkey,
 FROM part WHERE p_partkey < 200
 """,
 )
-def sql_lambda_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Presto lambda syntax `x -> e` (SqlBase.g4 lambda rule,
-    LambdaDefinitionExpression) — char-identical in Spark; the
-    rewrite passes must not corrupt `->` or fire renames incorrectly
-    inside lambda bodies. aggregate/transform/filter cover the
-    higher-order family (reference ArrayTransformFunction.java,
-    ArrayFilterFunction.java, ArrayReduceFunction.java).
 
-    Gate-facing variant: the lambda results are flattened to scalar
-    strings with array_join so every output column is a hashable
-    scalar the external harness's pandas canonicalizer can sort
-    (an array-typed column crashed the r10 driver gate — the
-    array-output twin lives on as ``sql_lambda_arrays`` outside the
-    priority prefix)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
+
+# The array-output lambda variant (top-level ARRAY<STRING>
+# columns) — kept OUT of the priority prefix: the local harness
+# canonicalizes array cells to tuples before sorting, the external
+# one does not (r10 gate crash). Covers the same higher-order
+# surface as sql_lambda_functions with the raw array schema.
+register_sql(
+    "sql_lambda_arrays",
+    """
         SELECT p_partkey,
-               array_join(
-                 transform(split(p_name, ' '), x -> upper(x)), '|')
-                 AS words_up,
-               array_join(
-                 filter(split(p_name, ' '), x -> length(x) > 5), '|')
-                 AS long_words,
+               transform(split(p_name, ' '), x -> upper(x)) AS words_up,
+               filter(split(p_name, ' '), x -> length(x) > 5) AS long_words,
                aggregate(transform(split(p_name, ' '), x -> length(x)),
                          0L, (s, x) -> s + x) AS total_len
         FROM part WHERE p_partkey < 200
         """,
-    )
-
-
-@register(
-    "sql_lambda_arrays",
     oracle="""
 SELECT p_partkey,
        list_transform(str_split(p_name, ' '), x -> upper(x)) AS words_up,
@@ -505,28 +432,25 @@ SELECT p_partkey,
 FROM part WHERE p_partkey < 200
 """,
 )
-def sql_lambda_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The array-output lambda variant (top-level ARRAY<STRING>
-    columns) — kept OUT of the priority prefix: the local harness
-    canonicalizes array cells to tuples before sorting, the external
-    one does not (r10 gate crash). Covers the same higher-order
-    surface as sql_lambda_functions with the raw array schema."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT p_partkey,
-               transform(split(p_name, ' '), x -> upper(x)) AS words_up,
-               filter(split(p_name, ' '), x -> length(x) > 5) AS long_words,
-               aggregate(transform(split(p_name, ' '), x -> length(x)),
-                         0L, (s, x) -> s + x) AS total_len
-        FROM part WHERE p_partkey < 200
-        """,
-    )
 
 
-@register(
+# Presto INTERVAL literals — day-time AND year-month
+# (StandardTypes.java:31-32 INTERVAL_YEAR_TO_MONTH /
+# INTERVAL_DAY_TO_SECOND; grammar intervalLiteral): quoted
+# single-field and YEAR TO MONTH forms parse unchanged in Spark.
+# The `'1-2' YEAR TO MONTH` literal is 14 months — the oracle
+# states it in months (DuckDB lacks the compound literal).
+register_sql(
     "sql_interval_literals",
+    """
+        SELECT o_orderkey,
+               CAST(o_orderdate + INTERVAL '3' DAY AS DATE) AS plus_3d,
+               CAST(o_orderdate + INTERVAL '1-2' YEAR TO MONTH AS DATE)
+                 AS plus_1y2m,
+               o_orderdate - INTERVAL '36' HOUR AS minus_36h,
+               (CAST(o_orderdate AS DATE) > DATE '1996-06-30') AS after_cutoff
+        FROM orders WHERE o_orderkey < 400
+        """,
     oracle="""
 SELECT o_orderkey,
        CAST(o_orderdate + INTERVAL 3 DAY AS DATE) AS plus_3d,
@@ -536,31 +460,16 @@ SELECT o_orderkey,
 FROM orders WHERE o_orderkey < 400
 """,
 )
-def sql_interval_literals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Presto INTERVAL literals — day-time AND year-month
-    (StandardTypes.java:31-32 INTERVAL_YEAR_TO_MONTH /
-    INTERVAL_DAY_TO_SECOND; grammar intervalLiteral): quoted
-    single-field and YEAR TO MONTH forms parse unchanged in Spark.
-    The `'1-2' YEAR TO MONTH` literal is 14 months — the oracle
-    states it in months (DuckDB lacks the compound literal)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderkey,
-               CAST(o_orderdate + INTERVAL '3' DAY AS DATE) AS plus_3d,
-               CAST(o_orderdate + INTERVAL '1-2' YEAR TO MONTH AS DATE)
-                 AS plus_1y2m,
-               o_orderdate - INTERVAL '36' HOUR AS minus_36h,
-               (CAST(o_orderdate AS DATE) > DATE '1996-06-30') AS after_cutoff
-        FROM orders WHERE o_orderkey < 400
-        """,
-    )
 
 
-@register(
+# Presto double-quoted identifiers (SqlBase.g4 quotedIdentifier)
+# -> Spark backticks, with quote-aware rewriting: the string
+# literal and comment deliberately contain `strpos(` and `ARRAY[`,
+# which the masked passes must NOT rewrite. DuckDB reads the
+# double-quoted originals natively.
+register_sql(
     "sql_quoted_identifiers",
-    oracle="""
+    """
 SELECT "o_orderkey" AS key_col,
        'contains strpos( and ARRAY[ 1 ] inside' AS tricky_literal,
        "o_orderpriority" AS "mixed Case alias"
@@ -568,28 +477,17 @@ FROM orders
 WHERE "o_orderkey" < 100 -- strpos( in a comment stays put
 """,
 )
-def sql_quoted_identifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Presto double-quoted identifiers (SqlBase.g4 quotedIdentifier)
-    -> Spark backticks, with quote-aware rewriting: the string
-    literal and comment deliberately contain `strpos(` and `ARRAY[`,
-    which the masked passes must NOT rewrite. DuckDB reads the
-    double-quoted originals natively."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT "o_orderkey" AS key_col,
-               'contains strpos( and ARRAY[ 1 ] inside' AS tricky_literal,
-               "o_orderpriority" AS "mixed Case alias"
-        FROM orders
-        WHERE "o_orderkey" < 100 -- strpos( in a comment stays put
-        """,
-    )
 
 
-@register(
+# Quantified-comparison edge semantics that the naive MIN/MAX
+# lowering gets wrong (Presto's count-guarded lowering,
+# TransformQuantifiedComparisonApplyToLateralJoin.java): `> ALL
+# (empty)` must be TRUE, `> ANY (empty)` FALSE, and a NULL-bearing
+# subquery yields UNKNOWN unless a definite witness exists. DuckDB
+# evaluates native quantified comparisons as the oracle.
+register_sql(
     "sql_quantified_edge",
-    oracle="""
+    """
 SELECT o_orderkey,
        o_totalprice > ALL (SELECT o_totalprice FROM orders WHERE 1 = 0)
          AS gt_all_empty,
@@ -603,30 +501,6 @@ SELECT o_orderkey,
 FROM orders WHERE o_orderkey < 60
 """,
 )
-def sql_quantified_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantified-comparison edge semantics that the naive MIN/MAX
-    lowering gets wrong (Presto's count-guarded lowering,
-    TransformQuantifiedComparisonApplyToLateralJoin.java): `> ALL
-    (empty)` must be TRUE, `> ANY (empty)` FALSE, and a NULL-bearing
-    subquery yields UNKNOWN unless a definite witness exists. DuckDB
-    evaluates native quantified comparisons as the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderkey,
-               o_totalprice > ALL (SELECT o_totalprice FROM orders WHERE 1 = 0)
-                 AS gt_all_empty,
-               o_totalprice > ANY (SELECT o_totalprice FROM orders WHERE 1 = 0)
-                 AS gt_any_empty,
-               o_totalprice < ALL (
-                 SELECT CASE WHEN o2.o_orderkey % 2 = 0 THEN NULL
-                             ELSE o2.o_totalprice + 500000 END
-                 FROM orders o2 WHERE o2.o_orderkey < 40
-               ) AS lt_all_nullmix
-        FROM orders WHERE o_orderkey < 60
-        """,
-    )
 
 
 _QUANTIFIED_EQUALITY_SQL = """
@@ -656,24 +530,21 @@ FROM probe
 """
 
 
-@register("sql_quantified_equality", oracle=_QUANTIFIED_EQUALITY_SQL)
-def sql_quantified_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equality-form quantified comparisons `= ANY / <> ALL / = ALL /
-    <> ANY` — the r10 front-door lowering
-    (TransformQuantifiedComparisonApplyToLateralJoin.java's
-    count-guarded 3-valued semantics), promoted from the reference
-    corpus into the registry so the external gate hash-checks the
-    surface directly. Covers: plain membership, NULL lhs with a
-    non-empty subquery (-> NULL), a NULL-bearing subquery without a
-    definite witness (-> NULL), `= ALL` over an empty subquery
-    (-> TRUE), and `<> ANY` over a null mix. All outputs are scalar
-    booleans (gate-harness-safe). DuckDB evaluates the identical
-    text natively as the oracle. Since r11 the lowering reads its
-    guards from a single struct scalar subquery (one scan; = ANY
-    membership keeps one extra IN semi-join — see sql/frontend.py
-    _quantified_equality)."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _QUANTIFIED_EQUALITY_SQL)
+# Equality-form quantified comparisons `= ANY / <> ALL / = ALL /
+# <> ANY` — the r10 front-door lowering
+# (TransformQuantifiedComparisonApplyToLateralJoin.java's
+# count-guarded 3-valued semantics), promoted from the reference
+# corpus into the registry so the external gate hash-checks the
+# surface directly. Covers: plain membership, NULL lhs with a
+# non-empty subquery (-> NULL), a NULL-bearing subquery without a
+# definite witness (-> NULL), `= ALL` over an empty subquery
+# (-> TRUE), and `<> ANY` over a null mix. All outputs are scalar
+# booleans (gate-harness-safe). DuckDB evaluates the identical
+# text natively as the oracle. Since r11 the lowering reads its
+# guards from a single struct scalar subquery (one scan; = ANY
+# membership keeps one extra IN semi-join — see sql/frontend.py
+# _quantified_equality).
+register_sql("sql_quantified_equality", _QUANTIFIED_EQUALITY_SQL)
 
 
 @register(
@@ -724,16 +595,15 @@ def sql_explain_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scan.unionByName(final_agg)
 
 
-@register("sql_explain", oracle=None)
-def sql_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXPLAIN through the front door (ExplainAnalyzeOperator /
-    EXPLAIN task in the reference). Plan text is engine-specific —
-    rows-only check."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        "EXPLAIN SELECT l_returnflag, count(*) FROM lineitem GROUP BY l_returnflag",
-    )
+# EXPLAIN through the front door (ExplainAnalyzeOperator /
+# EXPLAIN task in the reference). Plan text is engine-specific —
+# rows-only check.
+register_sql(
+    "sql_explain",
+    "EXPLAIN SELECT l_returnflag, count(*) FROM lineitem "
+    "GROUP BY l_returnflag",
+    oracle=None,
+)
 
 
 @register(
@@ -981,16 +851,13 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
-@register("sql_tpch_q1", oracle=_SQL_Q1)
-def sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 as SQL text through the front door — the pricing
-    summary report with its INTERVAL-literal date arithmetic
-    (reference grammar SqlBase.g4 interval rule; the dialect layer
-    normalizes Presto INTERVAL '90' DAY). Money sums cross the exact
-    DECIMAL(18,6) hop in the text itself, so the same statement is
-    exact on Spark and on the DuckDB oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_Q1)
+# TPC-H Q1 as SQL text through the front door — the pricing
+# summary report with its INTERVAL-literal date arithmetic
+# (reference grammar SqlBase.g4 interval rule; the dialect layer
+# normalizes Presto INTERVAL '90' DAY). Money sums cross the exact
+# DECIMAL(18,6) hop in the text itself, so the same statement is
+# exact on Spark and on the DuckDB oracle.
+register_sql("sql_tpch_q1", _SQL_Q1)
 
 
 _SQL_Q5 = """
@@ -1011,20 +878,41 @@ ORDER BY revenue DESC, n_name
 """
 
 
-@register("sql_tpch_q5", oracle=_SQL_Q5)
-def sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 as SQL text through the front door: the 6-way star
-    join with a compound join predicate and year-interval date
-    arithmetic. The text carries no distribution hints — join order
-    and broadcast choices belong entirely to the optimizer, exactly
-    how a Presto user runs it (ReorderJoins.java +
-    DetermineJoinDistributionType.java; Catalyst + AQE here)."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_Q5)
+# TPC-H Q5 as SQL text through the front door: the 6-way star
+# join with a compound join predicate and year-interval date
+# arithmetic. The text carries no distribution hints — join order
+# and broadcast choices belong entirely to the optimizer, exactly
+# how a Presto user runs it (ReorderJoins.java +
+# DetermineJoinDistributionType.java; Catalyst + AQE here).
+register_sql("sql_tpch_q5", _SQL_Q5)
 
 
-@register(
+# Presto URL functions typed as SQL through the front door
+# (UrlFunctions.java:45-193): the dialect layer rewrites
+# url_extract_protocol/host/port/path/fragment/parameter into
+# parse_url templates (frontend._rewrite_url_fns) — not lexical
+# renames, since parse_url takes a part selector and PORT needs an
+# expression.
+register_sql(
     "sql_url_functions",
+    """
+        SELECT doc_id,
+               url_extract_protocol(url) AS proto,
+               url_extract_host(url) AS host,
+               url_extract_port(url) AS port,
+               url_extract_path(url) AS path,
+               url_extract_fragment(url) AS frag,
+               url_extract_parameter(url, 'id') AS id_param
+        FROM (
+          SELECT doc_id,
+                 'https://host.example'
+                   || CASE WHEN doc_id % 2 = 0 THEN ':9000' ELSE '' END
+                   || '/d/' || CAST(doc_id AS VARCHAR)
+                   || '?id=' || CAST(doc_id AS VARCHAR)
+                   || '#f' || CAST(doc_id AS VARCHAR) AS url
+          FROM documents WHERE doc_id < 40
+        )
+        """,
     oracle="""
 SELECT doc_id,
        regexp_extract(url, '^([a-z]+)://', 1) AS proto,
@@ -1045,35 +933,6 @@ FROM (
 )
 """,
 )
-def sql_url_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Presto URL functions typed as SQL through the front door
-    (UrlFunctions.java:45-193): the dialect layer rewrites
-    url_extract_protocol/host/port/path/fragment/parameter into
-    parse_url templates (frontend._rewrite_url_fns) — not lexical
-    renames, since parse_url takes a part selector and PORT needs an
-    expression."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT doc_id,
-               url_extract_protocol(url) AS proto,
-               url_extract_host(url) AS host,
-               url_extract_port(url) AS port,
-               url_extract_path(url) AS path,
-               url_extract_fragment(url) AS frag,
-               url_extract_parameter(url, 'id') AS id_param
-        FROM (
-          SELECT doc_id,
-                 'https://host.example'
-                   || CASE WHEN doc_id % 2 = 0 THEN ':9000' ELSE '' END
-                   || '/d/' || CAST(doc_id AS VARCHAR)
-                   || '?id=' || CAST(doc_id AS VARCHAR)
-                   || '#f' || CAST(doc_id AS VARCHAR) AS url
-          FROM documents WHERE doc_id < 40
-        )
-        """,
-    )
 
 
 _SQL_TPCDS_Q3 = """
@@ -1091,16 +950,13 @@ LIMIT 100
 """
 
 
-@register("sql_tpcds_q3", oracle=_SQL_TPCDS_Q3)
-def sql_tpcds_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q3's star-rollup shape as SQL TEXT through the Presto
-    front door (the reference's benchto corpus runs these as text:
-    presto-benchto-benchmarks/.../tpcds/q03.sql) — the DataFrame twin
-    is tpcds_q3_adapted; this one proves the dialect layer carries
-    the TPC-DS text shape. Money sum through the DECIMAL hop inside
-    the statement itself."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q3)
+# TPC-DS Q3's star-rollup shape as SQL TEXT through the Presto
+# front door (the reference's benchto corpus runs these as text:
+# presto-benchto-benchmarks/.../tpcds/q03.sql) — the DataFrame twin
+# is tpcds_q3_adapted; this one proves the dialect layer carries
+# the TPC-DS text shape. Money sum through the DECIMAL hop inside
+# the statement itself.
+register_sql("sql_tpcds_q3", _SQL_TPCDS_Q3)
 
 
 _SQL_TPCDS_Q36 = """
@@ -1129,16 +985,13 @@ FROM agg
 """
 
 
-@register("sql_tpcds_q36", oracle=_SQL_TPCDS_Q36)
-def sql_tpcds_q36(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q36's ROLLUP + GROUPING() + rank-within-parent as SQL
-    text through the front door — grouping-set functions and windows
-    over grouped output crossing the dialect layer in one statement
-    (tpcds/q36.sql; DataFrame twin tpcds_q36_adapted). The running
-    sums cross the DECIMAL hop; both engines evaluate the identical
-    text."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q36)
+# TPC-DS Q36's ROLLUP + GROUPING() + rank-within-parent as SQL
+# text through the front door — grouping-set functions and windows
+# over grouped output crossing the dialect layer in one statement
+# (tpcds/q36.sql; DataFrame twin tpcds_q36_adapted). The running
+# sums cross the DECIMAL hop; both engines evaluate the identical
+# text.
+register_sql("sql_tpcds_q36", _SQL_TPCDS_Q36)
 
 
 _SQL_TPCDS_Q38 = """
@@ -1159,15 +1012,12 @@ FROM (
 """
 
 
-@register("sql_tpcds_q38", oracle=_SQL_TPCDS_Q38)
-def sql_tpcds_q38(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q38's three-way INTERSECT of DISTINCT sets as SQL text
-    through the Presto front door (tpcds/q38.sql; DataFrame twin
-    tpcds_q38_adapted) — chained set operations with embedded
-    DISTINCT subqueries crossing the dialect layer in one statement;
-    both engines evaluate the identical text."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q38)
+# TPC-DS Q38's three-way INTERSECT of DISTINCT sets as SQL text
+# through the Presto front door (tpcds/q38.sql; DataFrame twin
+# tpcds_q38_adapted) — chained set operations with embedded
+# DISTINCT subqueries crossing the dialect layer in one statement;
+# both engines evaluate the identical text.
+register_sql("sql_tpcds_q38", _SQL_TPCDS_Q38)
 
 
 @register(
@@ -1248,8 +1098,17 @@ def sql_geospatial(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+# AbstractTestQueries.java:843 testComplexQuery — group + HAVING
+# + window + ordered LIMIT in one text ("forces the planner to
+# stack every clause type"). Same text replays on DuckDB.
+register_sql(
     "sql_corpus_complex_topn",
+    """
+        SELECT sum(o_orderkey) AS s,
+               row_number() OVER (ORDER BY o_orderkey) AS rn
+        FROM orders WHERE o_orderkey <= 10 GROUP BY o_orderkey
+        HAVING sum(o_orderkey) >= 3 ORDER BY o_orderkey DESC LIMIT 3
+        """,
     oracle="""
 SELECT CAST(sum(o_orderkey) AS BIGINT) AS s,
        row_number() OVER (ORDER BY o_orderkey) AS rn
@@ -1257,70 +1116,32 @@ FROM orders WHERE o_orderkey <= 10 GROUP BY o_orderkey
 HAVING sum(o_orderkey) >= 3 ORDER BY o_orderkey DESC LIMIT 3
 """,
 )
-def sql_corpus_complex_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AbstractTestQueries.java:843 testComplexQuery — group + HAVING
-    + window + ordered LIMIT in one text ("forces the planner to
-    stack every clause type"). Same text replays on DuckDB."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT sum(o_orderkey) AS s,
-               row_number() OVER (ORDER BY o_orderkey) AS rn
-        FROM orders WHERE o_orderkey <= 10 GROUP BY o_orderkey
-        HAVING sum(o_orderkey) >= 3 ORDER BY o_orderkey DESC LIMIT 3
-        """,
-    )
 
 
-@register(
+# AbstractTestQueries.java:878 testDistinctJoin — COUNT(DISTINCT
+# CAST(...)) over a fact join, the MarkDistinct-under-join shape.
+register_sql(
     "sql_corpus_distinct_join",
-    oracle="""
+    """
 SELECT COUNT(DISTINCT CAST(b.l_quantity AS BIGINT)) AS cnt,
        a.o_orderstatus
 FROM orders a JOIN lineitem b ON a.o_orderkey = b.l_orderkey
 GROUP BY a.o_orderstatus
 """,
 )
-def sql_corpus_distinct_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AbstractTestQueries.java:878 testDistinctJoin — COUNT(DISTINCT
-    CAST(...)) over a fact join, the MarkDistinct-under-join shape."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT COUNT(DISTINCT CAST(b.l_quantity AS BIGINT)) AS cnt,
-               a.o_orderstatus
-        FROM orders a JOIN lineitem b ON a.o_orderkey = b.l_orderkey
-        GROUP BY a.o_orderstatus
-        """,
-    )
 
 
-@register(
+# AbstractTestQueries.java:1607 testJoinWithLessThanInJoinClause
+# — theta join with NULL keys in the build side (null rows must not
+# match the < predicate).
+register_sql(
     "sql_corpus_theta_join_null_build",
-    oracle="""
+    """
 SELECT t.b AS b FROM nation n,
 (VALUES (0, CAST(-1 AS BIGINT)), (0, NULL), (0, CAST(0 AS BIGINT))) t(a, b)
 WHERE n.n_regionkey - 100 < t.b AND n.n_nationkey = t.a
 """,
 )
-def sql_corpus_theta_join_null_build(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """AbstractTestQueries.java:1607 testJoinWithLessThanInJoinClause
-    — theta join with NULL keys in the build side (null rows must not
-    match the < predicate)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT t.b AS b FROM nation n,
-        (VALUES (0, CAST(-1 AS BIGINT)), (0, NULL),
-                (0, CAST(0 AS BIGINT))) t(a, b)
-        WHERE n.n_regionkey - 100 < t.b AND n.n_nationkey = t.a
-        """,
-    )
 
 
 @register(
@@ -1346,32 +1167,36 @@ def sql_corpus_order_by_nulls_limit(
     )
 
 
-@register(
+# AbstractTestAggregations.java:227 testCountDistinct family —
+# mixed COUNT(DISTINCT) + SUM(DISTINCT) per group (the
+# MarkDistinct / Expand lowering).
+register_sql(
     "sql_corpus_mixed_distinct",
+    """
+        SELECT o_custkey, o_orderstatus,
+               COUNT(DISTINCT o_orderkey) AS cd,
+               SUM(DISTINCT o_orderkey) AS sd
+        FROM orders GROUP BY o_custkey, o_orderstatus
+        """,
     oracle="""
 SELECT o_custkey, o_orderstatus, COUNT(DISTINCT o_orderkey) AS cd,
        CAST(SUM(DISTINCT o_orderkey) AS BIGINT) AS sd
 FROM orders GROUP BY o_custkey, o_orderstatus
 """,
 )
-def sql_corpus_mixed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AbstractTestAggregations.java:227 testCountDistinct family —
-    mixed COUNT(DISTINCT) + SUM(DISTINCT) per group (the
-    MarkDistinct / Expand lowering)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_custkey, o_orderstatus,
-               COUNT(DISTINCT o_orderkey) AS cd,
-               SUM(DISTINCT o_orderkey) AS sd
-        FROM orders GROUP BY o_custkey, o_orderstatus
-        """,
-    )
 
 
-@register(
+# AbstractTestAggregations.java:320 testAggregationFilter — the
+# FILTER (WHERE ...) clause on two aggregates at once (grammar
+# SqlBase.g4:450-452, ImplementFilteredAggregations.java).
+register_sql(
     "sql_corpus_agg_filter",
+    """
+        SELECT count(1) FILTER (WHERE o_orderstatus = 'O') AS c_open,
+               sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                 FILTER (WHERE o_orderpriority = '1-URGENT') AS s_urgent
+        FROM orders
+        """,
     oracle="""
 SELECT count(1) FILTER (WHERE o_orderstatus = 'O') AS c_open,
        CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
@@ -1380,53 +1205,29 @@ SELECT count(1) FILTER (WHERE o_orderstatus = 'O') AS c_open,
 FROM orders
 """,
 )
-def sql_corpus_agg_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AbstractTestAggregations.java:320 testAggregationFilter — the
-    FILTER (WHERE ...) clause on two aggregates at once (grammar
-    SqlBase.g4:450-452, ImplementFilteredAggregations.java)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT count(1) FILTER (WHERE o_orderstatus = 'O') AS c_open,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                 FILTER (WHERE o_orderpriority = '1-URGENT') AS s_urgent
-        FROM orders
-        """,
-    )
 
 
-@register(
+# AbstractTestQueries.java:1697
+# testJoinWithLessThanOnDatesInJoinClause — equi join with a date
+# interval residual (INTERVAL literal arithmetic in the ON
+# clause).
+register_sql(
     "sql_corpus_join_date_interval",
-    oracle="""
+    """
 SELECT o.o_orderkey AS orderkey, o.o_orderdate AS orderdate,
        l.l_shipdate AS shipdate
 FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
 AND l.l_shipdate < o.o_orderdate + INTERVAL '10' DAY
 """,
 )
-def sql_corpus_join_date_interval(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """AbstractTestQueries.java:1697
-    testJoinWithLessThanOnDatesInJoinClause — equi join with a date
-    interval residual (INTERVAL literal arithmetic in the ON
-    clause)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o.o_orderkey AS orderkey, o.o_orderdate AS orderdate,
-               l.l_shipdate AS shipdate
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        AND l.l_shipdate < o.o_orderdate + INTERVAL '10' DAY
-        """,
-    )
 
 
-@register(
+# AbstractTestQueries.java:2722 testOuterJoinWithNullsOnProbe —
+# NULL probe keys never match but their rows survive the LEFT
+# join.
+register_sql(
     "sql_corpus_outer_join_null_probe",
-    oracle="""
+    """
 SELECT o.k AS probe_key, l.l_orderkey AS build_key
 FROM (SELECT CASE WHEN o_orderkey % 2 = 0 THEN NULL
              ELSE o_orderkey END AS k FROM orders) o
@@ -1434,27 +1235,23 @@ LEFT JOIN (SELECT DISTINCT l_orderkey FROM lineitem) l
 ON o.k = l.l_orderkey
 """,
 )
-def sql_corpus_outer_join_null_probe(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """AbstractTestQueries.java:2722 testOuterJoinWithNullsOnProbe —
-    NULL probe keys never match but their rows survive the LEFT
-    join."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o.k AS probe_key, l.l_orderkey AS build_key
-        FROM (SELECT CASE WHEN o_orderkey % 2 = 0 THEN NULL
-                     ELSE o_orderkey END AS k FROM orders) o
-        LEFT JOIN (SELECT DISTINCT l_orderkey FROM lineitem) l
-        ON o.k = l.l_orderkey
-        """,
-    )
 
 
-@register(
+# AbstractTestQueries.java:1318/:1373 testGrouping — Presto's
+# multi-argument grouping(c1, ..., cn) bitmask
+# (GroupingOperationRewriter.java, leftmost = most significant
+# bit). The front door rewrites it to Spark's grouping_id; the
+# oracle spells the same bitmask from single-arg grouping()s.
+register_sql(
     "sql_corpus_grouping_multiarg",
+    """
+        SELECT o_orderstatus, o_orderpriority,
+               CAST(grouping(o_orderstatus, o_orderpriority)
+                    AS BIGINT) AS g,
+               COUNT(*) AS c
+        FROM orders GROUP BY GROUPING SETS ((o_orderstatus),
+          (o_orderpriority), (o_orderstatus, o_orderpriority))
+        """,
     oracle="""
 SELECT o_orderstatus, o_orderpriority,
        CAST(2 * grouping(o_orderstatus) + grouping(o_orderpriority)
@@ -1464,26 +1261,6 @@ FROM orders GROUP BY GROUPING SETS ((o_orderstatus),
   (o_orderpriority), (o_orderstatus, o_orderpriority))
 """,
 )
-def sql_corpus_grouping_multiarg(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """AbstractTestQueries.java:1318/:1373 testGrouping — Presto's
-    multi-argument grouping(c1, ..., cn) bitmask
-    (GroupingOperationRewriter.java, leftmost = most significant
-    bit). The front door rewrites it to Spark's grouping_id; the
-    oracle spells the same bitmask from single-arg grouping()s."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               CAST(grouping(o_orderstatus, o_orderpriority)
-                    AS BIGINT) AS g,
-               COUNT(*) AS c
-        FROM orders GROUP BY GROUPING SETS ((o_orderstatus),
-          (o_orderpriority), (o_orderstatus, o_orderpriority))
-        """,
-    )
 
 
 @register(
@@ -1532,17 +1309,14 @@ LIMIT 100
 """
 
 
-@register("sql_tpcds_q67", oracle=_SQL_TPCDS_Q67_ORACLE)
-def sql_tpcds_q67(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q67's rank-over-ROLLUP as SQL text through the front
-    door (tpcds/q67.sql; DataFrame twin tpcds_q67_adapted) — a
-    window function FILTERED IN THE WHERE CLAUSE over a rollup's
-    mixed-grouping output in subquery form (both engines reject
-    window functions directly in WHERE); the point is the rollup +
-    NULL-partition rank + front-door NULLS FIRST handling crossing
-    the dialect layer as one statement."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q67_ORACLE)
+# TPC-DS Q67's rank-over-ROLLUP as SQL text through the front
+# door (tpcds/q67.sql; DataFrame twin tpcds_q67_adapted) — a
+# window function FILTERED IN THE WHERE CLAUSE over a rollup's
+# mixed-grouping output in subquery form (both engines reject
+# window functions directly in WHERE); the point is the rollup +
+# NULL-partition rank + front-door NULLS FIRST handling crossing
+# the dialect layer as one statement.
+register_sql("sql_tpcds_q67", _SQL_TPCDS_Q67_ORACLE)
 
 
 _SQL_TPCDS_Q9 = """
@@ -1570,19 +1344,35 @@ FROM b
 """
 
 
-@register("sql_tpcds_q9", oracle=_SQL_TPCDS_Q9)
-def sql_tpcds_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q9's scalar-subquery bucket report as SQL text through
-    the front door (tpcds/q09.sql; DataFrame twin tpcds_q9_adapted)
-    — the fused one-pass formulation submitted as text: nested CASEs
-    folding per-bucket threshold choices over one grouped CTE. Both
-    engines run the identical statement."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q9)
+# TPC-DS Q9's scalar-subquery bucket report as SQL text through
+# the front door (tpcds/q09.sql; DataFrame twin tpcds_q9_adapted)
+# — the fused one-pass formulation submitted as text: nested CASEs
+# folding per-bucket threshold choices over one grouped CTE. Both
+# engines run the identical statement.
+register_sql("sql_tpcds_q9", _SQL_TPCDS_Q9)
 
 
-@register(
+# Presto statistical-aggregate semantics through the SQL front
+# door (r11 aggregate templates, sql/scalar_templates.py): skewness
+# is the POPULATION g1 = sqrt(n)*m3/m2^1.5 with an n<3 NULL guard
+# (CentralMomentsAggregation.java:58-68 — DuckDB's skewness is the
+# bias-corrected G1, hence the oracle's (n-2)/sqrt(n(n-1)) back-
+# conversion), kurtosis is the SAMPLE excess G2
+# (CentralMomentsAggregation.java:70-86 — matches DuckDB directly,
+# while Spark's native kurtosis is population g2), and corr guards
+# ANSI division-by-zero to NULL like the reference's
+# isFinite gate (DoubleCorrelationAggregation.java:49-58).
+register_sql(
     "sql_agg_presto_stats",
+    """
+        SELECT l_returnflag,
+               ROUND(var_samp(l_discount), 10) AS var_s,
+               ROUND(corr(l_quantity, l_extendedprice), 8) AS c_qp,
+               ROUND(skewness(l_discount), 8) AS skew,
+               ROUND(kurtosis(l_discount), 8) AS kurt
+        FROM lineitem
+        GROUP BY l_returnflag
+        """,
     oracle="""
 SELECT l_returnflag,
        ROUND(var_samp(l_discount), 10) AS var_s,
@@ -1594,55 +1384,17 @@ FROM lineitem
 GROUP BY l_returnflag
 """,
 )
-def sql_agg_presto_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Presto statistical-aggregate semantics through the SQL front
-    door (r11 aggregate templates, sql/scalar_templates.py): skewness
-    is the POPULATION g1 = sqrt(n)*m3/m2^1.5 with an n<3 NULL guard
-    (CentralMomentsAggregation.java:58-68 — DuckDB's skewness is the
-    bias-corrected G1, hence the oracle's (n-2)/sqrt(n(n-1)) back-
-    conversion), kurtosis is the SAMPLE excess G2
-    (CentralMomentsAggregation.java:70-86 — matches DuckDB directly,
-    while Spark's native kurtosis is population g2), and corr guards
-    ANSI division-by-zero to NULL like the reference's
-    isFinite gate (DoubleCorrelationAggregation.java:49-58)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT l_returnflag,
-               ROUND(var_samp(l_discount), 10) AS var_s,
-               ROUND(corr(l_quantity, l_extendedprice), 8) AS c_qp,
-               ROUND(skewness(l_discount), 8) AS skew,
-               ROUND(kurtosis(l_discount), 8) AS kurt
-        FROM lineitem
-        GROUP BY l_returnflag
-        """,
-    )
 
 
-@register(
+# histogram / multimap_agg through the SQL front door (r11
+# aggregate templates): HistogramAggregation (map value->count,
+# nulls skipped) and MultimapAggregationFunction (key -> all
+# values), probed via gate-safe scalar projections
+# (cardinality/element_at) so the output is canonicalizer-friendly;
+# the oracle states the same facts as plain counts.
+register_sql(
     "sql_agg_map_histogram",
-    oracle="""
-SELECT CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS npri,
-       CAST(count(*) FILTER (WHERE o_orderpriority = '1-URGENT')
-            AS BIGINT) AS urgent_cnt,
-       CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS nstat,
-       CAST(count(*) FILTER (WHERE o_orderstatus = 'F')
-            AS BIGINT) AS f_orders
-FROM orders
-""",
-)
-def sql_agg_map_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """histogram / multimap_agg through the SQL front door (r11
-    aggregate templates): HistogramAggregation (map value->count,
-    nulls skipped) and MultimapAggregationFunction (key -> all
-    values), probed via gate-safe scalar projections
-    (cardinality/element_at) so the output is canonicalizer-friendly;
-    the oracle states the same facts as plain counts."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
+    """
         SELECT CAST(cardinality(histogram(o_orderpriority)) AS BIGINT)
                  AS npri,
                element_at(histogram(o_orderpriority), '1-URGENT')
@@ -1654,11 +1406,35 @@ def sql_agg_map_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS BIGINT) AS f_orders
         FROM orders
         """,
-    )
+    oracle="""
+SELECT CAST(count(DISTINCT o_orderpriority) AS BIGINT) AS npri,
+       CAST(count(*) FILTER (WHERE o_orderpriority = '1-URGENT')
+            AS BIGINT) AS urgent_cnt,
+       CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS nstat,
+       CAST(count(*) FILTER (WHERE o_orderstatus = 'F')
+            AS BIGINT) AS f_orders
+FROM orders
+""",
+)
 
 
-@register(
+# array_agg ORDER BY (sorted-aggregation comparator lowering),
+# 2-arg max(x, n) top-N (MaxNAggregation) and 3-arg max_by
+# (MaxByNAggregation) through the SQL front door — all emitted as
+# array_join'd scalars so the external gate's pandas canonicalizer
+# digests the output shape (the r10 lesson). n_nationkey is unique,
+# so every ordering is tie-free and deterministic.
+register_sql(
     "sql_agg_array_order",
+    """
+        SELECT n_regionkey,
+               array_join(array_agg(n_name ORDER BY n_name DESC), ',')
+                 AS names_desc,
+               array_join(max(n_name, 2), ',') AS top2,
+               array_join(max_by(n_name, n_nationkey, 2), ',') AS latest2
+        FROM nation
+        GROUP BY n_regionkey
+        """,
     oracle="""
 SELECT n_regionkey,
        array_to_string(array_agg(n_name ORDER BY n_name DESC), ',')
@@ -1672,30 +1448,20 @@ FROM nation
 GROUP BY n_regionkey
 """,
 )
-def sql_agg_array_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """array_agg ORDER BY (sorted-aggregation comparator lowering),
-    2-arg max(x, n) top-N (MaxNAggregation) and 3-arg max_by
-    (MaxByNAggregation) through the SQL front door — all emitted as
-    array_join'd scalars so the external gate's pandas canonicalizer
-    digests the output shape (the r10 lesson). n_nationkey is unique,
-    so every ordering is tie-free and deterministic."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT n_regionkey,
-               array_join(array_agg(n_name ORDER BY n_name DESC), ',')
-                 AS names_desc,
-               array_join(max(n_name, 2), ',') AS top2,
-               array_join(max_by(n_name, n_nationkey, 2), ',') AS latest2
-        FROM nation
-        GROUP BY n_regionkey
-        """,
-    )
 
 
-@register(
+# entropy (EntropyAggregation.java: log-2 entropy of count
+# weights — NOT DuckDB's value-frequency entropy, hence the
+# explicit closed-form oracle) and geometric_mean
+# (DoubleGeometricMeanAggregation: exp(mean(ln x))) through the SQL
+# front door.
+register_sql(
     "sql_agg_entropy_geomean",
+    """
+        SELECT ROUND(entropy(l_linenumber), 8) AS ent,
+               ROUND(geometric_mean(l_quantity), 8) AS gm
+        FROM lineitem
+        """,
     oracle="""
 WITH s AS (SELECT SUM(l_linenumber) AS sc,
                   SUM(l_linenumber * ln(l_linenumber)) AS slc
@@ -1705,39 +1471,21 @@ SELECT ROUND(greatest((ln(sc) - slc / sc) / ln(2), 0), 8) AS ent,
 FROM s
 """,
 )
-def sql_agg_entropy_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """entropy (EntropyAggregation.java: log-2 entropy of count
-    weights — NOT DuckDB's value-frequency entropy, hence the
-    explicit closed-form oracle) and geometric_mean
-    (DoubleGeometricMeanAggregation: exp(mean(ln x))) through the SQL
-    front door."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT ROUND(entropy(l_linenumber), 8) AS ent,
-               ROUND(geometric_mean(l_quantity), 8) AS gm
-        FROM lineitem
-        """,
-    )
 
 
-@register("sql_agg_checksum", oracle=None)
-def sql_agg_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-exact CHECKSUM through the SQL front door
-    (ChecksumAggregationFunction.java:107-132: order-independent
-    wrapping sum of type.hash * PRIME64 terms, 8 LE bytes as
-    VARBINARY; type hashes per AbstractLongType.java:137 and XXH64
-    seed 0 — functions/xxhash.py). No cross-engine oracle exists for
-    the engine-specific bytes (rows-only here); the byte pins and the
-    public-spec/Spark cross-validation live in
-    tests/test_checksum_wire.py. Output columns are hex strings plus
-    the order-independence witness: the checksum over a reversed scan
-    must equal the forward one (combine() is addition)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
+# Byte-exact CHECKSUM through the SQL front door
+# (ChecksumAggregationFunction.java:107-132: order-independent
+# wrapping sum of type.hash * PRIME64 terms, 8 LE bytes as
+# VARBINARY; type hashes per AbstractLongType.java:137 and XXH64
+# seed 0 — functions/xxhash.py). No cross-engine oracle exists for
+# the engine-specific bytes (rows-only here); the byte pins and the
+# public-spec/Spark cross-validation live in
+# tests/test_checksum_wire.py. Output columns are hex strings plus
+# the order-independence witness: the checksum over a reversed scan
+# must equal the forward one (combine() is addition).
+register_sql(
+    "sql_agg_checksum",
+    """
         WITH fwd AS (SELECT checksum(o_orderkey) c1,
                             checksum(o_orderpriority) c2,
                             checksum(o_totalprice) c3
@@ -1751,11 +1499,73 @@ def sql_agg_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
                fwd.c1 = rev.c1 AS order_independent
         FROM fwd, rev
         """,
-    )
+    oracle=None,
+)
 
 
-@register(
+# The r12 geometry SQL surface as an oracle-backed registry
+# query: overlay ops (ST_Intersection/ST_Union areas), DE-9IM
+# predicates (ST_Contains/ST_Intersects/ST_Relate),
+# simplify_geometry, and geometry_to_bing_tiles cardinality over
+# per-row axis-aligned rectangles derived from orders. Coordinates
+# sit on a 1/64 grid (A) and 1/128 grid (B) so rectangle edges are
+# exact binary doubles that never coincide (no degenerate
+# line-intersection results) and never land on zoom-8 Bing tile
+# boundaries (the oracle's tile-count formula then needs no
+# border-shift term). The DuckDB oracle computes every column in
+# closed form: rectangle overlap algebra, bounds comparisons, and
+# the Mercator tile arithmetic from BingTileFunctions.java.
+#
+# 100 TB: one scan, per-row Arrow-batched UDFs, no shuffle, no
+# collect — embarrassingly parallel.
+register_sql(
     "sql_geometry_suite",
+    """
+        WITH g AS (
+          SELECT o_orderkey AS k,
+                 (o_orderkey % 7) * 0.25 + 0.015625 AS ax,
+                 (o_orderkey % 5) * 0.25 + 0.015625 AS ay,
+                 1.5 + (o_orderkey % 3) * 0.25 AS aw,
+                 1.25 + (o_orderkey % 4) * 0.25 AS ah,
+                 (o_orderkey % 7) * 0.25 + (o_orderkey % 9) * 0.25
+                   - 1.0 + 0.0234375 AS bx,
+                 (o_orderkey % 5) * 0.25 + (o_orderkey % 6) * 0.25
+                   - 0.75 + 0.0234375 AS by
+          FROM orders WHERE o_orderkey < 400
+        ),
+        w AS (
+          SELECT k, ax, ay, aw, ah,
+                 ST_GeometryFromText(concat(
+                   'POLYGON ((', CAST(ax AS VARCHAR), ' ',
+                   CAST(ay AS VARCHAR), ', ', CAST(ax AS VARCHAR), ' ',
+                   CAST(ay + ah AS VARCHAR), ', ',
+                   CAST(ax + aw AS VARCHAR), ' ',
+                   CAST(ay + ah AS VARCHAR), ', ',
+                   CAST(ax + aw AS VARCHAR), ' ', CAST(ay AS VARCHAR),
+                   ', ', CAST(ax AS VARCHAR), ' ', CAST(ay AS VARCHAR),
+                   '))')) AS ga,
+                 ST_GeometryFromText(concat(
+                   'POLYGON ((', CAST(bx AS VARCHAR), ' ',
+                   CAST(by AS VARCHAR), ', ', CAST(bx AS VARCHAR), ' ',
+                   CAST(by + 1.5 AS VARCHAR), ', ',
+                   CAST(bx + 1.75 AS VARCHAR), ' ',
+                   CAST(by + 1.5 AS VARCHAR), ', ',
+                   CAST(bx + 1.75 AS VARCHAR), ' ',
+                   CAST(by AS VARCHAR), ', ', CAST(bx AS VARCHAR), ' ',
+                   CAST(by AS VARCHAR), '))')) AS gb
+          FROM g
+        )
+        SELECT k,
+               ROUND(ST_Area(ST_Intersection(ga, gb)), 9) AS inter_area,
+               ROUND(ST_Area(ST_Union(ga, gb)), 9) AS union_area,
+               ST_Contains(ga, gb) AS contains_b,
+               ST_Intersects(ga, gb) AS intersects_b,
+               ST_Relate(ga, gb, 'T*****FF*') AS relate_contains,
+               cardinality(geometry_to_bing_tiles(ga, 8)) AS n_tiles,
+               ROUND(ST_Area(simplify_geometry(ga, 0.1)), 9)
+                 AS simpl_area
+        FROM w
+        """,
     oracle="""
 WITH g AS (
   SELECT o_orderkey AS k,
@@ -1805,72 +1615,6 @@ SELECT t.k,
 FROM t JOIN tiles ON t.k = tiles.k
 """,
 )
-def sql_geometry_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r12 geometry SQL surface as an oracle-backed registry
-    query: overlay ops (ST_Intersection/ST_Union areas), DE-9IM
-    predicates (ST_Contains/ST_Intersects/ST_Relate),
-    simplify_geometry, and geometry_to_bing_tiles cardinality over
-    per-row axis-aligned rectangles derived from orders. Coordinates
-    sit on a 1/64 grid (A) and 1/128 grid (B) so rectangle edges are
-    exact binary doubles that never coincide (no degenerate
-    line-intersection results) and never land on zoom-8 Bing tile
-    boundaries (the oracle's tile-count formula then needs no
-    border-shift term). The DuckDB oracle computes every column in
-    closed form: rectangle overlap algebra, bounds comparisons, and
-    the Mercator tile arithmetic from BingTileFunctions.java.
-
-    100 TB: one scan, per-row Arrow-batched UDFs, no shuffle, no
-    collect — embarrassingly parallel."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        WITH g AS (
-          SELECT o_orderkey AS k,
-                 (o_orderkey % 7) * 0.25 + 0.015625 AS ax,
-                 (o_orderkey % 5) * 0.25 + 0.015625 AS ay,
-                 1.5 + (o_orderkey % 3) * 0.25 AS aw,
-                 1.25 + (o_orderkey % 4) * 0.25 AS ah,
-                 (o_orderkey % 7) * 0.25 + (o_orderkey % 9) * 0.25
-                   - 1.0 + 0.0234375 AS bx,
-                 (o_orderkey % 5) * 0.25 + (o_orderkey % 6) * 0.25
-                   - 0.75 + 0.0234375 AS by
-          FROM orders WHERE o_orderkey < 400
-        ),
-        w AS (
-          SELECT k, ax, ay, aw, ah,
-                 ST_GeometryFromText(concat(
-                   'POLYGON ((', CAST(ax AS VARCHAR), ' ',
-                   CAST(ay AS VARCHAR), ', ', CAST(ax AS VARCHAR), ' ',
-                   CAST(ay + ah AS VARCHAR), ', ',
-                   CAST(ax + aw AS VARCHAR), ' ',
-                   CAST(ay + ah AS VARCHAR), ', ',
-                   CAST(ax + aw AS VARCHAR), ' ', CAST(ay AS VARCHAR),
-                   ', ', CAST(ax AS VARCHAR), ' ', CAST(ay AS VARCHAR),
-                   '))')) AS ga,
-                 ST_GeometryFromText(concat(
-                   'POLYGON ((', CAST(bx AS VARCHAR), ' ',
-                   CAST(by AS VARCHAR), ', ', CAST(bx AS VARCHAR), ' ',
-                   CAST(by + 1.5 AS VARCHAR), ', ',
-                   CAST(bx + 1.75 AS VARCHAR), ' ',
-                   CAST(by + 1.5 AS VARCHAR), ', ',
-                   CAST(bx + 1.75 AS VARCHAR), ' ',
-                   CAST(by AS VARCHAR), ', ', CAST(bx AS VARCHAR), ' ',
-                   CAST(by AS VARCHAR), '))')) AS gb
-          FROM g
-        )
-        SELECT k,
-               ROUND(ST_Area(ST_Intersection(ga, gb)), 9) AS inter_area,
-               ROUND(ST_Area(ST_Union(ga, gb)), 9) AS union_area,
-               ST_Contains(ga, gb) AS contains_b,
-               ST_Intersects(ga, gb) AS intersects_b,
-               ST_Relate(ga, gb, 'T*****FF*') AS relate_contains,
-               cardinality(geometry_to_bing_tiles(ga, 8)) AS n_tiles,
-               ROUND(ST_Area(simplify_geometry(ga, 0.1)), 9)
-                 AS simpl_area
-        FROM w
-        """,
-    )
 
 
 # --- r12: the heaviest window/aggregate edge semantics promoted from
@@ -1879,8 +1623,20 @@ def sql_geometry_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the edge lowerings are exercised on real data volumes. ---
 
 
-@register(
+# Per-row ntile(expr) — the reference's NTileFunction.java:46-72
+# bucket arithmetic (the front door lowers non-literal bucket
+# counts to it) — over lineitem at scale. The oracle computes the
+# same arithmetic from row_number/count, so the differential pins
+# the lowering's formula, not DuckDB's ntile.
+register_sql(
     "sql_win_ntile_expr_scale",
+    """
+        SELECT l_orderkey, l_linenumber,
+               ntile(1 + l_suppkey % 4) OVER (
+                 PARTITION BY l_returnflag
+                 ORDER BY l_orderkey, l_linenumber) AS bucket
+        FROM lineitem WHERE l_orderkey < 1000
+        """,
     oracle="""
 WITH t AS (
   SELECT l_orderkey, l_linenumber, l_returnflag,
@@ -1897,27 +1653,21 @@ SELECT l_orderkey, l_linenumber,
 FROM t
 """,
 )
-def sql_win_ntile_expr_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-row ntile(expr) — the reference's NTileFunction.java:46-72
-    bucket arithmetic (the front door lowers non-literal bucket
-    counts to it) — over lineitem at scale. The oracle computes the
-    same arithmetic from row_number/count, so the differential pins
-    the lowering's formula, not DuckDB's ntile."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT l_orderkey, l_linenumber,
-               ntile(1 + l_suppkey % 4) OVER (
-                 PARTITION BY l_returnflag
-                 ORDER BY l_orderkey, l_linenumber) AS bucket
-        FROM lineitem WHERE l_orderkey < 1000
-        """,
-    )
 
 
-@register(
+# Unordered ranking specs (cume_dist()/percent_rank()/rank()
+# OVER (PARTITION BY ...) with no ORDER BY — all rows peers, the
+# r11 window-corpus gap) at orders scale. The closed-form oracle IS
+# the peers semantics: cume_dist 1, percent_rank 0, rank 1.
+register_sql(
     "sql_win_unordered_ranking_scale",
+    """
+        SELECT o_orderkey,
+               cume_dist() OVER (PARTITION BY o_orderstatus) AS cd,
+               percent_rank() OVER (PARTITION BY o_orderstatus) AS pr,
+               rank() OVER (PARTITION BY o_orderstatus) AS rk
+        FROM orders WHERE o_orderkey < 2000
+        """,
     oracle="""
 SELECT o_orderkey,
        CAST(1 AS DOUBLE) AS cd, CAST(0 AS DOUBLE) AS pr,
@@ -1925,28 +1675,25 @@ SELECT o_orderkey,
 FROM orders WHERE o_orderkey < 2000
 """,
 )
-def sql_win_unordered_ranking_scale(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Unordered ranking specs (cume_dist()/percent_rank()/rank()
-    OVER (PARTITION BY ...) with no ORDER BY — all rows peers, the
-    r11 window-corpus gap) at orders scale. The closed-form oracle IS
-    the peers semantics: cume_dist 1, percent_rank 0, rank 1."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderkey,
-               cume_dist() OVER (PARTITION BY o_orderstatus) AS cd,
-               percent_rank() OVER (PARTITION BY o_orderstatus) AS pr,
-               rank() OVER (PARTITION BY o_orderstatus) AS rk
-        FROM orders WHERE o_orderkey < 2000
-        """,
-    )
 
 
-@register(
+# lag/lead offset edges at scale (LagFunction.java:55-75):
+# explicit default, offset 0 (the row itself), an offset past every
+# partition (default fills), and a NULL offset (NULL result — the
+# r11 corpus gap; the oracle states it as a literal since DuckDB
+# rejects non-constant offsets).
+register_sql(
     "sql_win_lag_offset_scale",
+    """
+        SELECT o_orderkey,
+               lag(o_totalprice, 2, -1.0) OVER w AS l2,
+               lag(o_totalprice, 0) OVER w AS l0,
+               lead(o_totalprice, 100000, -2.0) OVER w AS ld_big,
+               lag(o_totalprice, CAST(NULL AS INTEGER)) OVER w
+                 AS l_null_off
+        FROM orders WHERE o_orderkey < 2000
+        WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_orderkey)
+        """,
     oracle="""
 SELECT o_orderkey,
        lag(o_totalprice, 2, -1.0) OVER w AS l2,
@@ -1957,49 +1704,15 @@ FROM orders WHERE o_orderkey < 2000
 WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_orderkey)
 """,
 )
-def sql_win_lag_offset_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead offset edges at scale (LagFunction.java:55-75):
-    explicit default, offset 0 (the row itself), an offset past every
-    partition (default fills), and a NULL offset (NULL result — the
-    r11 corpus gap; the oracle states it as a literal since DuckDB
-    rejects non-constant offsets)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderkey,
-               lag(o_totalprice, 2, -1.0) OVER w AS l2,
-               lag(o_totalprice, 0) OVER w AS l0,
-               lead(o_totalprice, 100000, -2.0) OVER w AS ld_big,
-               lag(o_totalprice, CAST(NULL AS INTEGER)) OVER w
-                 AS l_null_off
-        FROM orders WHERE o_orderkey < 2000
-        WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_orderkey)
-        """,
-    )
 
 
-@register(
+# min(x,n)/max(x,n) (MinMaxNAggregation) and 3-arg min_by/max_by
+# (MinMaxByNAggregation) over full lineitem — the r11 lowerings
+# exercised on real volumes with a tie-free key expression so the
+# top-N is deterministic.
+register_sql(
     "sql_agg_minmax_n_scale",
-    oracle="""
-SELECT o_orderpriority,
-       array_to_string((array_agg(o_orderstatus ORDER BY o_orderstatus))[1:2], ',') AS min2,
-       array_to_string((array_agg(o_orderstatus ORDER BY o_orderstatus DESC))[1:2], ',') AS max2,
-       array_to_string((array_agg(o_orderstatus ORDER BY o_orderkey))[1:3], ',') AS first3,
-       array_to_string((array_agg(o_orderstatus ORDER BY o_orderkey DESC))[1:3], ',') AS last3
-FROM orders
-GROUP BY o_orderpriority
-""",
-)
-def sql_agg_minmax_n_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """min(x,n)/max(x,n) (MinMaxNAggregation) and 3-arg min_by/max_by
-    (MinMaxByNAggregation) over full lineitem — the r11 lowerings
-    exercised on real volumes with a tie-free key expression so the
-    top-N is deterministic."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
+    """
         SELECT o_orderpriority,
                array_join(min(o_orderstatus, 2), ',') AS min2,
                array_join(max(o_orderstatus, 2), ',') AS max2,
@@ -2010,11 +1723,36 @@ def sql_agg_minmax_n_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
         GROUP BY o_orderpriority
         """,
-    )
+    oracle="""
+SELECT o_orderpriority,
+       array_to_string((array_agg(o_orderstatus ORDER BY o_orderstatus))[1:2], ',') AS min2,
+       array_to_string((array_agg(o_orderstatus ORDER BY o_orderstatus DESC))[1:2], ',') AS max2,
+       array_to_string((array_agg(o_orderstatus ORDER BY o_orderkey))[1:3], ',') AS first3,
+       array_to_string((array_agg(o_orderstatus ORDER BY o_orderkey DESC))[1:3], ',') AS last3
+FROM orders
+GROUP BY o_orderpriority
+""",
+)
 
 
-@register(
+# Multi-key array_agg ORDER BY (sorted-aggregation comparator
+# with DESC/ASC mix and tiebreaks) over lineitem groups at scale —
+# the fixture-scale r11 surface on real volumes, sliced to the
+# leading elements so outputs stay gate-shaped.
+register_sql(
     "sql_agg_array_order_scale",
+    """
+        SELECT l_suppkey,
+               array_join(slice(array_agg(l_linestatus
+                 ORDER BY l_extendedprice DESC, l_orderkey DESC,
+                          l_linenumber DESC), 1, 5), ',') AS by_price,
+               array_join(slice(array_agg(CAST(l_orderkey AS VARCHAR)
+                 ORDER BY l_orderkey, l_linenumber), 1, 3), ',')
+                 AS first_keys
+        FROM lineitem
+        WHERE l_suppkey < 40
+        GROUP BY l_suppkey
+        """,
     oracle="""
 SELECT l_suppkey,
        array_to_string(
@@ -2030,32 +1768,15 @@ WHERE l_suppkey < 40
 GROUP BY l_suppkey
 """,
 )
-def sql_agg_array_order_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-key array_agg ORDER BY (sorted-aggregation comparator
-    with DESC/ASC mix and tiebreaks) over lineitem groups at scale —
-    the fixture-scale r11 surface on real volumes, sliced to the
-    leading elements so outputs stay gate-shaped."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT l_suppkey,
-               array_join(slice(array_agg(l_linestatus
-                 ORDER BY l_extendedprice DESC, l_orderkey DESC,
-                          l_linenumber DESC), 1, 5), ',') AS by_price,
-               array_join(slice(array_agg(CAST(l_orderkey AS VARCHAR)
-                 ORDER BY l_orderkey, l_linenumber), 1, 3), ',')
-                 AS first_keys
-        FROM lineitem
-        WHERE l_suppkey < 40
-        GROUP BY l_suppkey
-        """,
-    )
 
 
-@register(
+# nth_value / first_value over sliding ROWS frames plus a
+# running sum — the frame-edge semantics from the window corpus on
+# orders at scale (o_totalprice is DECIMAL so the running sum is
+# exact and order-independent for the hash compare).
+register_sql(
     "sql_win_nth_frame_scale",
-    oracle="""
+    """
 SELECT o_orderkey,
        nth_value(o_totalprice, 3) OVER (
          PARTITION BY o_orderstatus ORDER BY o_orderkey
@@ -2069,48 +1790,15 @@ SELECT o_orderkey,
 FROM orders WHERE o_orderkey < 2000
 """,
 )
-def sql_win_nth_frame_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nth_value / first_value over sliding ROWS frames plus a
-    running sum — the frame-edge semantics from the window corpus on
-    orders at scale (o_totalprice is DECIMAL so the running sum is
-    exact and order-independent for the hash compare)."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT o_orderkey,
-               nth_value(o_totalprice, 3) OVER (
-                 PARTITION BY o_orderstatus ORDER BY o_orderkey
-                 ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING) AS nth3,
-               first_value(o_totalprice) OVER (
-                 PARTITION BY o_orderstatus ORDER BY o_orderkey
-                 ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS fv,
-               sum(CAST(o_totalprice AS DECIMAL(18, 4))) OVER (
-                 PARTITION BY o_orderstatus ORDER BY o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS running
-        FROM orders WHERE o_orderkey < 2000
-        """,
-    )
 
 
-@register(
+# The 0.235 approx_percentile forms incl. the weighted
+# (value, percentile, weight) signature
+# (ApproximateLongPercentileAggregations.java:60-80) over lineitem at
+# scale; rows-only because the estimates are sketch-dependent.
+register_sql(
     "sql_agg_approx_percentile_scale",
-    # no oracle: approx_percentile is sketch-estimated on both
-    # engines (qdigest vs GK) — rows-only, like the reference's own
-    # approx tests which assert within error bounds only
-)
-def sql_agg_approx_percentile_scale(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The 0.235 approx_percentile forms incl. the weighted
-    (value, percentile, weight) signature
-    (ApproximateLongPercentileAggregations.java:60-80) over lineitem at
-    scale; rows-only because the estimates are sketch-dependent."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
+    """
         SELECT l_returnflag,
                approx_percentile(l_extendedprice, 0.5) AS p50,
                approx_percentile(l_extendedprice, 0.5,
@@ -2119,44 +1807,27 @@ def sql_agg_approx_percentile_scale(
         FROM lineitem
         GROUP BY l_returnflag
         """,
-    )
+    # no oracle: approx_percentile is sketch-estimated on both
+    # engines (qdigest vs GK) — rows-only, like the reference's own
+    # approx tests which assert within error bounds only
+    oracle=None,
+)
 
 
-@register(
+# Column-operand decimal arithmetic with the REFERENCE's type
+# derivation (DecimalOperators.java:91,251,316,480) over lineitem
+# money columns at scale — the r14 schema-aware rewrite
+# (sql/frontend._rewrite_decimal_column_arith). unit_price pins the
+# divide semantics on real data: Presto scale max(s1,s2)=2 with
+# HALF_UP (Spark's native derivation would produce scale 15); the
+# DuckDB oracle replays HALF_UP with exact integer arithmetic
+# ((2a+b)//(2b) on cents), so a Spark-derivation regression
+# hash-mismatches. The money columns integerize to exact cents
+# first (round(x*100)) so the double->decimal boundary is
+# rounding-mode-proof on both engines.
+register_sql(
     "sql_decimal_column_arith_scale",
-    oracle="""
-WITH m AS (
-  SELECT l_orderkey, l_linenumber,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS pc,
-         CAST(round(l_discount * 100) AS BIGINT) AS dc,
-         CAST(l_quantity AS BIGINT) AS qi
-  FROM lineitem WHERE l_orderkey < 1000
-)
-SELECT l_orderkey, l_linenumber,
-       CAST(pc * (100 - dc) AS DOUBLE) / 10000 AS disc_price,
-       CAST((2 * pc + qi) // (2 * qi) AS DOUBLE) / 100 AS unit_price,
-       CAST(pc % 700 AS DOUBLE) / 100 AS price_mod
-FROM m
-""",
-)
-def sql_decimal_column_arith_scale(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Column-operand decimal arithmetic with the REFERENCE's type
-    derivation (DecimalOperators.java:91,251,316,480) over lineitem
-    money columns at scale — the r14 schema-aware rewrite
-    (sql/frontend._rewrite_decimal_column_arith). unit_price pins the
-    divide semantics on real data: Presto scale max(s1,s2)=2 with
-    HALF_UP (Spark's native derivation would produce scale 15); the
-    DuckDB oracle replays HALF_UP with exact integer arithmetic
-    ((2a+b)//(2b) on cents), so a Spark-derivation regression
-    hash-mismatches. The money columns integerize to exact cents
-    first (round(x*100)) so the double->decimal boundary is
-    rounding-mode-proof on both engines."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
+    """
         SELECT l_orderkey, l_linenumber,
                CAST(
                  (CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
@@ -2177,11 +1848,46 @@ def sql_decimal_column_arith_scale(
                  AS DOUBLE) AS price_mod
         FROM lineitem WHERE l_orderkey < 1000
         """,
-    )
+    oracle="""
+WITH m AS (
+  SELECT l_orderkey, l_linenumber,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS pc,
+         CAST(round(l_discount * 100) AS BIGINT) AS dc,
+         CAST(l_quantity AS BIGINT) AS qi
+  FROM lineitem WHERE l_orderkey < 1000
+)
+SELECT l_orderkey, l_linenumber,
+       CAST(pc * (100 - dc) AS DOUBLE) / 10000 AS disc_price,
+       CAST((2 * pc + qi) // (2 * qi) AS DOUBLE) / 100 AS unit_price,
+       CAST(pc % 700 AS DOUBLE) / 100 AS price_mod
+FROM m
+""",
+)
 
 
-@register(
+# sum/avg over decimal columns with the REFERENCE's aggregate
+# semantics at scale: sum(decimal(p,s)) -> decimal(38,s)
+# (DecimalSumAggregation.java — the template widens the argument so
+# Spark's accumulator IS (38,s)), avg(decimal(p,s)) -> decimal(p,s)
+# with sum/count ROUND_HALF_UP at s
+# (DecimalAverageAggregation.java:207 — r14 conversion). The DuckDB
+# oracle replays both in exact integer arithmetic on cents
+# (avg via (2S+n)//(2n), the positive-sum HALF_UP form), so a
+# regression to Spark's (p+4, s+4) unrounded avg hash-mismatches.
+register_sql(
     "sql_decimal_agg_scale",
+    """
+        SELECT l_returnflag,
+               CAST(sum(CAST(CAST(round(l_extendedprice * 100) AS
+                    BIGINT) AS DECIMAL(14,0)) / DECIMAL '100.00')
+                    AS DOUBLE) AS sum_price,
+               CAST(avg(CAST(CAST(round(l_extendedprice * 100) AS
+                    BIGINT) AS DECIMAL(14,0)) / DECIMAL '100.00')
+                    AS DOUBLE) AS avg_price,
+               count(*) AS n
+        FROM lineitem WHERE l_orderkey < 5000
+        GROUP BY l_returnflag
+        """,
     oracle="""
 WITH m AS (
   SELECT l_returnflag,
@@ -2196,36 +1902,29 @@ SELECT l_returnflag,
 FROM m GROUP BY l_returnflag
 """,
 )
-def sql_decimal_agg_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sum/avg over decimal columns with the REFERENCE's aggregate
-    semantics at scale: sum(decimal(p,s)) -> decimal(38,s)
-    (DecimalSumAggregation.java — the template widens the argument so
-    Spark's accumulator IS (38,s)), avg(decimal(p,s)) -> decimal(p,s)
-    with sum/count ROUND_HALF_UP at s
-    (DecimalAverageAggregation.java:207 — r14 conversion). The DuckDB
-    oracle replays both in exact integer arithmetic on cents
-    (avg via (2S+n)//(2n), the positive-sum HALF_UP form), so a
-    regression to Spark's (p+4, s+4) unrounded avg hash-mismatches."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT l_returnflag,
-               CAST(sum(CAST(CAST(round(l_extendedprice * 100) AS
-                    BIGINT) AS DECIMAL(14,0)) / DECIMAL '100.00')
-                    AS DOUBLE) AS sum_price,
-               CAST(avg(CAST(CAST(round(l_extendedprice * 100) AS
-                    BIGINT) AS DECIMAL(14,0)) / DECIMAL '100.00')
-                    AS DOUBLE) AS avg_price,
-               count(*) AS n
-        FROM lineitem WHERE l_orderkey < 5000
-        GROUP BY l_returnflag
-        """,
-    )
 
 
-@register(
+# Column-operand INTEGRAL division with the REFERENCE's
+# truncating semantics at scale (TestIntegerOperators.testDivide /
+# TestBigintOperators:90) — the r14 catalog-aware typing pass
+# (frontend._annotate_numeric_columns) + integral-division rewrite
+# (frontend._int_div_pass). qneg exercises negative dividends
+# (truncation toward zero, where floor division would differ on
+# ~half the rows) through the parenthesized-chain type derivation
+# (COUNT-operand division is pinned in
+# tests/test_int_column_division.py). The DuckDB
+# oracle replays with '//', DuckDB's truncating integral division —
+# a regression to Spark's double '/' hash-mismatches on type AND
+# value.
+register_sql(
     "sql_int_column_division_scale",
+    """
+        SELECT l_orderkey, l_linenumber,
+               l_orderkey / l_linenumber AS q,
+               (l_partkey - l_suppkey) / l_linenumber AS qneg,
+               l_orderkey / 7 AS q7
+        FROM lineitem WHERE l_orderkey < 2000
+        """,
     oracle="""
 SELECT l_orderkey, l_linenumber,
        l_orderkey // l_linenumber AS q,
@@ -2234,32 +1933,6 @@ SELECT l_orderkey, l_linenumber,
 FROM lineitem WHERE l_orderkey < 2000
 """,
 )
-def sql_int_column_division_scale(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Column-operand INTEGRAL division with the REFERENCE's
-    truncating semantics at scale (TestIntegerOperators.testDivide /
-    TestBigintOperators:90) — the r14 catalog-aware typing pass
-    (frontend._annotate_numeric_columns) + integral-division rewrite
-    (frontend._int_div_pass). qneg exercises negative dividends
-    (truncation toward zero, where floor division would differ on
-    ~half the rows) through the parenthesized-chain type derivation
-    (COUNT-operand division is pinned in
-    tests/test_int_column_division.py). The DuckDB
-    oracle replays with '//', DuckDB's truncating integral division —
-    a regression to Spark's double '/' hash-mismatches on type AND
-    value."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT l_orderkey, l_linenumber,
-               l_orderkey / l_linenumber AS q,
-               (l_partkey - l_suppkey) / l_linenumber AS qneg,
-               l_orderkey / 7 AS q7
-        FROM lineitem WHERE l_orderkey < 2000
-        """,
-    )
 
 
 @register(
@@ -2319,8 +1992,31 @@ def sql_decimal_agg_column_scale(
     )
 
 
-@register(
+# Decimal round/truncate over statically-typed COLUMN casts at
+# scale (r16 — the value-pin extraction's semantics surface):
+# 1-arg round lands the reference's decimal(min(38, p-s+min(1,s)),
+# 0) INTEGER type (MathFunctions.java Round :788-792), truncate
+# the decimal(max(1, p-s), 0) toward-zero type (Truncate
+# :902-907), and 2-arg round keeps (p, s) at min(38, p+1) (RoundN
+# :838-840) — all HALF_UP away from zero. The DuckDB oracle
+# replays the three in exact integer cents (prices are positive,
+# so (pc+50)//100 IS half-away-from-zero and pc//100 IS
+# toward-zero); a regression to Spark's own derivations
+# hash-mismatches on type-driven value shape.
+register_sql(
     "sql_decimal_round_trunc_scale",
+    """
+        SELECT l_returnflag,
+               CAST(sum(round(CAST(l_extendedprice
+                    AS DECIMAL(12,2)))) AS DOUBLE) AS sum_round,
+               CAST(sum(truncate(CAST(l_extendedprice
+                    AS DECIMAL(12,2)))) AS DOUBLE) AS sum_trunc,
+               CAST(sum(round(CAST(l_extendedprice
+                    AS DECIMAL(12,2)), 1)) AS DOUBLE) AS sum_round1,
+               count(*) AS n
+        FROM lineitem WHERE l_orderkey < 5000
+        GROUP BY l_returnflag
+        """,
     oracle="""
 WITH m AS (
   SELECT l_returnflag,
@@ -2336,40 +2032,42 @@ SELECT l_returnflag,
 FROM m GROUP BY l_returnflag
 """,
 )
-def sql_decimal_round_trunc_scale(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Decimal round/truncate over statically-typed COLUMN casts at
-    scale (r16 — the value-pin extraction's semantics surface):
-    1-arg round lands the reference's decimal(min(38, p-s+min(1,s)),
-    0) INTEGER type (MathFunctions.java Round :788-792), truncate
-    the decimal(max(1, p-s), 0) toward-zero type (Truncate
-    :902-907), and 2-arg round keeps (p, s) at min(38, p+1) (RoundN
-    :838-840) — all HALF_UP away from zero. The DuckDB oracle
-    replays the three in exact integer cents (prices are positive,
-    so (pc+50)//100 IS half-away-from-zero and pc//100 IS
-    toward-zero); a regression to Spark's own derivations
-    hash-mismatches on type-driven value shape."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
+
+
+# The r17 resolved-type numeric-semantics surface over a REAL
+# double column (r16 verdict #1 — the r14-r16 program held only
+# for lexically-visible types): CAST(double_col AS BIGINT) rounds
+# half-away-from-zero (DoubleOperators.java:240 roundToLong
+# HALF_UP; Spark truncates), a zero-able column divisor computes
+# IEEE signed Infinity instead of the ANSI DIVIDE_BY_ZERO raise
+# (TestMathFunctions.java:945), `%` computes IEEE NaN instead of
+# REMAINDER_BY_ZERO (TestRealOperators.java:91), and ceil/floor
+# PRESERVE DOUBLE (TestMathFunctions.java:151-171). All four ride
+# frontend._annotate_numeric_columns threading the catalog's
+# declared schema into the rewrites. The DuckDB oracle spells
+# every expectation in exact integer cents / discount-pivot CASEs
+# (DuckDB's own cast rounds half-even and its zero-divide yields
+# NULL — native forms would diverge); a regression to Spark-ANSI
+# either raises (gate error) or hash-mismatches on sum_cast.
+register_sql(
+    "sql_double_ieee_column_scale",
+    """
         SELECT l_returnflag,
-               CAST(sum(round(CAST(l_extendedprice
-                    AS DECIMAL(12,2)))) AS DOUBLE) AS sum_round,
-               CAST(sum(truncate(CAST(l_extendedprice
-                    AS DECIMAL(12,2)))) AS DOUBLE) AS sum_trunc,
-               CAST(sum(round(CAST(l_extendedprice
-                    AS DECIMAL(12,2)), 1)) AS DOUBLE) AS sum_round1,
+               sum(CAST(l_extendedprice AS BIGINT)) AS sum_cast,
+               CAST(sum(CASE WHEN is_infinite(l_extendedprice /
+                    (l_discount - 0.05E0)) THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_inf,
+               CAST(sum(CASE WHEN is_nan(l_extendedprice %
+                    (l_discount - 0.04E0)) THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_nan,
+               CAST(sum(ceil(l_extendedprice)) AS DOUBLE)
+                    AS sum_ceil,
+               CAST(sum(floor(l_extendedprice)) AS DOUBLE)
+                    AS sum_floor,
                count(*) AS n
         FROM lineitem WHERE l_orderkey < 5000
         GROUP BY l_returnflag
         """,
-    )
-
-
-@register(
-    "sql_double_ieee_column_scale",
     oracle="""
 WITH m AS (
   SELECT l_returnflag, l_discount,
@@ -2388,45 +2086,6 @@ SELECT l_returnflag,
 FROM m GROUP BY l_returnflag
 """,
 )
-def sql_double_ieee_column_scale(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The r17 resolved-type numeric-semantics surface over a REAL
-    double column (r16 verdict #1 — the r14-r16 program held only
-    for lexically-visible types): CAST(double_col AS BIGINT) rounds
-    half-away-from-zero (DoubleOperators.java:240 roundToLong
-    HALF_UP; Spark truncates), a zero-able column divisor computes
-    IEEE signed Infinity instead of the ANSI DIVIDE_BY_ZERO raise
-    (TestMathFunctions.java:945), `%` computes IEEE NaN instead of
-    REMAINDER_BY_ZERO (TestRealOperators.java:91), and ceil/floor
-    PRESERVE DOUBLE (TestMathFunctions.java:151-171). All four ride
-    frontend._annotate_numeric_columns threading the catalog's
-    declared schema into the rewrites. The DuckDB oracle spells
-    every expectation in exact integer cents / discount-pivot CASEs
-    (DuckDB's own cast rounds half-even and its zero-divide yields
-    NULL — native forms would diverge); a regression to Spark-ANSI
-    either raises (gate error) or hash-mismatches on sum_cast."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
-        SELECT l_returnflag,
-               sum(CAST(l_extendedprice AS BIGINT)) AS sum_cast,
-               CAST(sum(CASE WHEN is_infinite(l_extendedprice /
-                    (l_discount - 0.05E0)) THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_inf,
-               CAST(sum(CASE WHEN is_nan(l_extendedprice %
-                    (l_discount - 0.04E0)) THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_nan,
-               CAST(sum(ceil(l_extendedprice)) AS DOUBLE)
-                    AS sum_ceil,
-               CAST(sum(floor(l_extendedprice)) AS DOUBLE)
-                    AS sum_floor,
-               count(*) AS n
-        FROM lineitem WHERE l_orderkey < 5000
-        GROUP BY l_returnflag
-        """,
-    )
 
 
 _SQL_TPCDS_Q51 = """
@@ -2465,17 +2124,14 @@ ORDER BY item, d
 """
 
 
-@register("sql_tpcds_q51", oracle=_SQL_TPCDS_Q51)
-def sql_tpcds_q51(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q51's text shape — two channels' CUMULATIVE window sums
-    over an aggregate (SUM(SUM(..)) OVER — a window over a GROUP BY
-    aggregate, the distinctive q51 construction) FULL OUTER JOINed on
-    the grouping key with a COALESCE comparison filter
-    (presto-benchto-benchmarks .../tpcds/q51.sql role-mapped onto the
-    fixture star: channels = first vs later lineitems). Same text
-    runs on DuckDB as the oracle; money through the DECIMAL hop."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q51)
+# TPC-DS Q51's text shape — two channels' CUMULATIVE window sums
+# over an aggregate (SUM(SUM(..)) OVER — a window over a GROUP BY
+# aggregate, the distinctive q51 construction) FULL OUTER JOINed on
+# the grouping key with a COALESCE comparison filter
+# (presto-benchto-benchmarks .../tpcds/q51.sql role-mapped onto the
+# fixture star: channels = first vs later lineitems). Same text
+# runs on DuckDB as the oracle; money through the DECIMAL hop.
+register_sql("sql_tpcds_q51", _SQL_TPCDS_Q51)
 
 
 _SQL_TPCDS_Q88 = """
@@ -2499,17 +2155,14 @@ FROM (SELECT count(*) AS h1 FROM lineitem
 """
 
 
-@register("sql_tpcds_q88", oracle=_SQL_TPCDS_Q88)
-def sql_tpcds_q88(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q88's text shape — eight single-row aggregate
-    subqueries cross-joined into one row (the time-band battery;
-    .../tpcds/q88.sql role-mapped: hour bands -> quantity bands).
-    Each branch is an independent scan+filter+count; Catalyst plans
-    eight parallel aggregates joined by BroadcastNestedLoopJoin on
-    single rows — the 100 TB posture is eight pushed-filter scans,
-    no shuffle beyond the global counts. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q88)
+# TPC-DS Q88's text shape — eight single-row aggregate
+# subqueries cross-joined into one row (the time-band battery;
+# .../tpcds/q88.sql role-mapped: hour bands -> quantity bands).
+# Each branch is an independent scan+filter+count; Catalyst plans
+# eight parallel aggregates joined by BroadcastNestedLoopJoin on
+# single rows — the 100 TB posture is eight pushed-filter scans,
+# no shuffle beyond the global counts. Same text is the oracle.
+register_sql("sql_tpcds_q88", _SQL_TPCDS_Q88)
 
 
 _SQL_TPCDS_Q1 = """
@@ -2534,20 +2187,17 @@ LIMIT 100
 """
 
 
-@register("sql_tpcds_q1", oracle=_SQL_TPCDS_Q1)
-def sql_tpcds_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q1's text shape — a CTE of per-(customer, store)
-    return totals, filtered by a CORRELATED scalar subquery over the
-    SAME CTE (1.2x the per-store average), joined back to the
-    customer dimension (.../tpcds/q01.sql role-mapped: store_returns
-    -> orders, store -> orderpriority). Presto plans this via
-    TransformCorrelatedScalarAggregationToJoin; Catalyst decorrelates
-    the same shape to an aggregate + join — the 100 TB posture is
-    one shuffle for the CTE aggregate, a broadcast of the tiny
-    per-store averages, and a broadcast customer join. Money totals
-    ride exact cents. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q1)
+# TPC-DS Q1's text shape — a CTE of per-(customer, store)
+# return totals, filtered by a CORRELATED scalar subquery over the
+# SAME CTE (1.2x the per-store average), joined back to the
+# customer dimension (.../tpcds/q01.sql role-mapped: store_returns
+# -> orders, store -> orderpriority). Presto plans this via
+# TransformCorrelatedScalarAggregationToJoin; Catalyst decorrelates
+# the same shape to an aggregate + join — the 100 TB posture is
+# one shuffle for the CTE aggregate, a broadcast of the tiny
+# per-store averages, and a broadcast customer join. Money totals
+# ride exact cents. Same text is the oracle.
+register_sql("sql_tpcds_q1", _SQL_TPCDS_Q1)
 
 
 _SQL_TPCDS_Q11 = """
@@ -2573,19 +2223,16 @@ LIMIT 100
 """
 
 
-@register("sql_tpcds_q11", oracle=_SQL_TPCDS_Q11)
-def sql_tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q11's text shape — the year-over-year customer ratio:
-    one CTE of per-(customer, year) totals consumed TWICE in a
-    comma-list self-join pinned to consecutive years, keeping
-    customers whose second-year/first-year ratio clears a threshold
-    (.../tpcds/q11.sql role-mapped onto orders; Q4 is the same
-    skeleton with three channels). The self-join shuffles on
-    customer_id — co-partitioned at 100 TB. Names are unique per
-    custkey so ORDER BY customer_name LIMIT is total. Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q11)
+# TPC-DS Q11's text shape — the year-over-year customer ratio:
+# one CTE of per-(customer, year) totals consumed TWICE in a
+# comma-list self-join pinned to consecutive years, keeping
+# customers whose second-year/first-year ratio clears a threshold
+# (.../tpcds/q11.sql role-mapped onto orders; Q4 is the same
+# skeleton with three channels). The self-join shuffles on
+# customer_id — co-partitioned at 100 TB. Names are unique per
+# custkey so ORDER BY customer_name LIMIT is total. Same text is
+# the oracle.
+register_sql("sql_tpcds_q11", _SQL_TPCDS_Q11)
 
 
 _SQL_TPCDS_Q16 = """
@@ -2605,18 +2252,15 @@ WHERE o1.o_orderpriority = '1-URGENT'
 """
 
 
-@register("sql_tpcds_q16", oracle=_SQL_TPCDS_Q16)
-def sql_tpcds_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q16's text shape — EXISTS plus NOT EXISTS correlated
-    subqueries under one aggregate (count distinct + money sum):
-    orders with a multi-line shipment and no returned line
-    (.../tpcds/q16.sql role-mapped: catalog_sales -> orders,
-    ws_order_number -> orderkey). Presto plans semi + anti joins
-    (TransformExistsApplyToLateralNode); Catalyst plans
-    LeftSemi + LeftAnti on the same keys — both sides shuffle on
-    orderkey once, the 100 TB posture. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q16)
+# TPC-DS Q16's text shape — EXISTS plus NOT EXISTS correlated
+# subqueries under one aggregate (count distinct + money sum):
+# orders with a multi-line shipment and no returned line
+# (.../tpcds/q16.sql role-mapped: catalog_sales -> orders,
+# ws_order_number -> orderkey). Presto plans semi + anti joins
+# (TransformExistsApplyToLateralNode); Catalyst plans
+# LeftSemi + LeftAnti on the same keys — both sides shuffle on
+# orderkey once, the 100 TB posture. Same text is the oracle.
+register_sql("sql_tpcds_q16", _SQL_TPCDS_Q16)
 
 
 _SQL_TPCDS_Q47 = """
@@ -2659,20 +2303,17 @@ LIMIT 100
 """
 
 
-@register("sql_tpcds_q47", oracle=_SQL_TPCDS_Q47)
-def sql_tpcds_q47(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q47's text shape — the monthly-sales deviation hunt:
-    a CTE mixing GROUP BY with an AVG-of-SUM window (per-category
-    yearly average) and a RANK sequence, then the distinctive
-    rn = rn±1 COMMA-LIST SELF-JOIN pulling the previous/next month's
-    sales alongside each deviating month (.../tpcds/q47.sql
-    role-mapped: item category -> returnflag, store months ->
-    order months). Nested aggregate-in-window crosses the dialect
-    layer; the self-joins shuffle on (category, rn) — bounded keys,
-    broadcast-eligible at any scale. ORDER BY the full grouping key
-    is total. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q47)
+# TPC-DS Q47's text shape — the monthly-sales deviation hunt:
+# a CTE mixing GROUP BY with an AVG-of-SUM window (per-category
+# yearly average) and a RANK sequence, then the distinctive
+# rn = rn±1 COMMA-LIST SELF-JOIN pulling the previous/next month's
+# sales alongside each deviating month (.../tpcds/q47.sql
+# role-mapped: item category -> returnflag, store months ->
+# order months). Nested aggregate-in-window crosses the dialect
+# layer; the self-joins shuffle on (category, rn) — bounded keys,
+# broadcast-eligible at any scale. ORDER BY the full grouping key
+# is total. Same text is the oracle.
+register_sql("sql_tpcds_q47", _SQL_TPCDS_Q47)
 
 
 _SQL_TPCDS_Q34 = """
@@ -2690,18 +2331,15 @@ LIMIT 200
 """
 
 
-@register("sql_tpcds_q34", oracle=_SQL_TPCDS_Q34)
-def sql_tpcds_q34(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q34's text shape (Q73 is the same skeleton with a
-    narrower band) — a grouped HAVING count(*) BETWEEN band in a
-    derived table, joined back to the customer dimension
-    (.../tpcds/q34.sql role-mapped: ticket -> orderkey, the 15-20
-    buying-frequency band -> 5-7 lines per order). The derived
-    aggregate shuffles once on orderkey; the join back to orders is
-    key-aligned and customer broadcasts. ORDER BY (c_name, o_key) is
-    total (orderkey unique). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q34)
+# TPC-DS Q34's text shape (Q73 is the same skeleton with a
+# narrower band) — a grouped HAVING count(*) BETWEEN band in a
+# derived table, joined back to the customer dimension
+# (.../tpcds/q34.sql role-mapped: ticket -> orderkey, the 15-20
+# buying-frequency band -> 5-7 lines per order). The derived
+# aggregate shuffles once on orderkey; the join back to orders is
+# key-aligned and customer broadcasts. ORDER BY (c_name, o_key) is
+# total (orderkey unique). Same text is the oracle.
+register_sql("sql_tpcds_q34", _SQL_TPCDS_Q34)
 
 
 _SQL_TPCDS_Q59 = """
@@ -2733,19 +2371,16 @@ ORDER BY mo
 """
 
 
-@register("sql_tpcds_q59", oracle=_SQL_TPCDS_Q59)
-def sql_tpcds_q59(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q59's text shape — the week-over-week comparison: one
-    CTE pivoting sales into per-category columns via SUM(CASE ...),
-    then a SELF-JOIN one year apart on the aligned period with
-    per-column ratios (.../tpcds/q59.sql role-mapped: day-of-week
-    pivot -> returnflag pivot, week_seq+53 -> yr+1 on the same
-    month). The pivot is one shuffle on (yr, mo); the self-join keys
-    are tiny and broadcast. Exact-cents pivot sums make the ratios
-    deterministic; round(_, 9) absorbs the double division. Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q59)
+# TPC-DS Q59's text shape — the week-over-week comparison: one
+# CTE pivoting sales into per-category columns via SUM(CASE ...),
+# then a SELF-JOIN one year apart on the aligned period with
+# per-column ratios (.../tpcds/q59.sql role-mapped: day-of-week
+# pivot -> returnflag pivot, week_seq+53 -> yr+1 on the same
+# month). The pivot is one shuffle on (yr, mo); the self-join keys
+# are tiny and broadcast. Exact-cents pivot sums make the ratios
+# deterministic; round(_, 9) absorbs the double division. Same
+# text is the oracle.
+register_sql("sql_tpcds_q59", _SQL_TPCDS_Q59)
 
 
 _SQL_TPCDS_Q95 = """
@@ -2766,18 +2401,15 @@ WHERE o_orderpriority = '2-HIGH'
 """
 
 
-@register("sql_tpcds_q95", oracle=_SQL_TPCDS_Q95)
-def sql_tpcds_q95(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q95's text shape — the two-warehouse shipment hunt: a
-    CTE SELF-JOINING the fact table on the same order with a
-    different warehouse, consumed through IN subqueries under one
-    count-distinct + sum aggregate (.../tpcds/q95.sql role-mapped:
-    warehouse -> suppkey, web returns -> returned lines). Both IN
-    subqueries plan as semi joins on orderkey — the same key the
-    self-join shuffles on, so the whole pipeline is co-partitioned at
-    any scale. Money through exact cents. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q95)
+# TPC-DS Q95's text shape — the two-warehouse shipment hunt: a
+# CTE SELF-JOINING the fact table on the same order with a
+# different warehouse, consumed through IN subqueries under one
+# count-distinct + sum aggregate (.../tpcds/q95.sql role-mapped:
+# warehouse -> suppkey, web returns -> returned lines). Both IN
+# subqueries plan as semi joins on orderkey — the same key the
+# self-join shuffles on, so the whole pipeline is co-partitioned at
+# any scale. Money through exact cents. Same text is the oracle.
+register_sql("sql_tpcds_q95", _SQL_TPCDS_Q95)
 
 
 _SQL_TPCDS_Q31 = """
@@ -2816,21 +2448,18 @@ ORDER BY county
 """
 
 
-@register("sql_tpcds_q31", oracle=_SQL_TPCDS_Q31)
-def sql_tpcds_q31(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q31's text shape — the quarter-over-quarter
-    two-channel growth comparison: two channel CTEs (store/web
-    role-mapped to priority bands), each consumed TWICE in a
-    comma-list join pinned to consecutive quarters of the same
-    county, keeping counties where the web channel outgrew the store
-    channel (.../tpcds/q31.sql). Four aliases of two aggregates
-    joined on a low-cardinality key — every join side is
-    broadcast-eligible after the two grouped shuffles. Exact-cents
-    sums; the ratio COMPARISON stays unrounded like the original
-    (both engines evaluate the same doubles from the same exact
-    cents). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q31)
+# TPC-DS Q31's text shape — the quarter-over-quarter
+# two-channel growth comparison: two channel CTEs (store/web
+# role-mapped to priority bands), each consumed TWICE in a
+# comma-list join pinned to consecutive quarters of the same
+# county, keeping counties where the web channel outgrew the store
+# channel (.../tpcds/q31.sql). Four aliases of two aggregates
+# joined on a low-cardinality key — every join side is
+# broadcast-eligible after the two grouped shuffles. Exact-cents
+# sums; the ratio COMPARISON stays unrounded like the original
+# (both engines evaluate the same doubles from the same exact
+# cents). Same text is the oracle.
+register_sql("sql_tpcds_q31", _SQL_TPCDS_Q31)
 
 
 _SQL_TPCDS_Q39 = """
@@ -2856,20 +2485,17 @@ ORDER BY inv1.w_warehouse_sk, inv1.i_item_sk, inv1.d_moy
 """
 
 
-@register("sql_tpcds_q39", oracle=_SQL_TPCDS_Q39)
-def sql_tpcds_q39(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q39's text shape — the inventory volatility hunt: a
-    CTE computing the coefficient of variation
-    (stddev_samp / mean, NULL-guarded like the original's CASE) per
-    (warehouse, item, month), self-joined on the CONSECUTIVE month
-    with a volatility threshold (.../tpcds/q39_1.sql role-mapped:
-    warehouse -> suppkey, inventory qty -> lineitem qty).
-    stddev_samp crosses the dialect layer; round(_, 9) absorbs the
-    double accumulation order on both engines. The self-join key set
-    is the grouped CTE's own key — co-partitioned. ORDER BY the full
-    key is total. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q39)
+# TPC-DS Q39's text shape — the inventory volatility hunt: a
+# CTE computing the coefficient of variation
+# (stddev_samp / mean, NULL-guarded like the original's CASE) per
+# (warehouse, item, month), self-joined on the CONSECUTIVE month
+# with a volatility threshold (.../tpcds/q39_1.sql role-mapped:
+# warehouse -> suppkey, inventory qty -> lineitem qty).
+# stddev_samp crosses the dialect layer; round(_, 9) absorbs the
+# double accumulation order on both engines. The self-join key set
+# is the grouped CTE's own key — co-partitioned. ORDER BY the full
+# key is total. Same text is the oracle.
+register_sql("sql_tpcds_q39", _SQL_TPCDS_Q39)
 
 
 _SQL_TPCDS_Q93 = """
@@ -2893,19 +2519,16 @@ LIMIT 100
 """
 
 
-@register("sql_tpcds_q93", oracle=_SQL_TPCDS_Q93)
-def sql_tpcds_q93(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q93's text shape — returns-adjusted sales: the fact
-    table LEFT-JOINED to its own returns side on (ticket, item), a
-    CASE over the join-miss column choosing the adjusted vs plain
-    quantity, aggregated per customer (.../tpcds/q93.sql
-    role-mapped: store_returns -> returned lines, quantity roles ->
-    linenumber). The left join is key-aligned with the fact shuffle;
-    exact-cents arithmetic keeps the grouped sums order-independent
-    (the CASE arms are integral cents times small ints). ORDER BY
-    (sumsales, customer) is total. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q93)
+# TPC-DS Q93's text shape — returns-adjusted sales: the fact
+# table LEFT-JOINED to its own returns side on (ticket, item), a
+# CASE over the join-miss column choosing the adjusted vs plain
+# quantity, aggregated per customer (.../tpcds/q93.sql
+# role-mapped: store_returns -> returned lines, quantity roles ->
+# linenumber). The left join is key-aligned with the fact shuffle;
+# exact-cents arithmetic keeps the grouped sums order-independent
+# (the CASE arms are integral cents times small ints). ORDER BY
+# (sumsales, customer) is total. Same text is the oracle.
+register_sql("sql_tpcds_q93", _SQL_TPCDS_Q93)
 
 
 _SQL_TPCDS_Q15 = """
@@ -2925,19 +2548,16 @@ ORDER BY n_name
 """
 
 
-@register("sql_tpcds_q15", oracle=_SQL_TPCDS_Q15)
-def sql_tpcds_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q15's text shape — the OR-of-three-qualifier predicate
-    (zip prefix IN / state IN / high-ticket sale) over a
-    fact-customer-geography star, grouped by geography
-    (.../tpcds/q15.sql role-mapped: zip -> nation-name prefix, state
-    -> mktsegment, cs_sales_price -> extendedprice). The disjunction
-    cannot prune any single dimension, so the planner's job is the
-    join order: dims broadcast, the OR evaluates post-join — same
-    plan Presto produces. ORDER BY the grouping key is total. Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q15)
+# TPC-DS Q15's text shape — the OR-of-three-qualifier predicate
+# (zip prefix IN / state IN / high-ticket sale) over a
+# fact-customer-geography star, grouped by geography
+# (.../tpcds/q15.sql role-mapped: zip -> nation-name prefix, state
+# -> mktsegment, cs_sales_price -> extendedprice). The disjunction
+# cannot prune any single dimension, so the planner's job is the
+# join order: dims broadcast, the OR evaluates post-join — same
+# plan Presto produces. ORDER BY the grouping key is total. Same
+# text is the oracle.
+register_sql("sql_tpcds_q15", _SQL_TPCDS_Q15)
 
 
 _SQL_TPCDS_Q8 = """
@@ -2962,19 +2582,16 @@ ORDER BY n_name
 """
 
 
-@register("sql_tpcds_q8", oracle=_SQL_TPCDS_Q8)
-def sql_tpcds_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q8's text shape — store sales restricted to the zip
-    prefixes that are BOTH in a literal-qualifier set AND home to
-    enough preferred customers: an INTERSECT of two substr-keyed
-    subqueries feeding an IN predicate over the main star
-    (.../tpcds/q8.sql role-mapped: zip prefix -> customer-name
-    digits, preferred-flag -> high balance, the >10 count -> active
-    buyers). The INTERSECT output is tiny -> the IN semi join
-    broadcasts; substr evaluates JVM-side in the scan stage. Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q8)
+# TPC-DS Q8's text shape — store sales restricted to the zip
+# prefixes that are BOTH in a literal-qualifier set AND home to
+# enough preferred customers: an INTERSECT of two substr-keyed
+# subqueries feeding an IN predicate over the main star
+# (.../tpcds/q8.sql role-mapped: zip prefix -> customer-name
+# digits, preferred-flag -> high balance, the >10 count -> active
+# buyers). The INTERSECT output is tiny -> the IN semi join
+# broadcasts; substr evaluates JVM-side in the scan stage. Same
+# text is the oracle.
+register_sql("sql_tpcds_q8", _SQL_TPCDS_Q8)
 
 
 _SQL_TPCDS_Q23 = """
@@ -3038,40 +2655,28 @@ WHERE year(o_orderdate) = 1996
 """
 
 
-@register("sql_tpcds_q23", oracle=_SQL_TPCDS_Q23)
-def sql_tpcds_q23(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q23's text shape (the _1 variant) — frequent items
-    (HAVING a distinct-day count), best customers (HAVING above a
-    fraction of a SCALAR MAX SUBQUERY over a nested per-customer
-    aggregate), and the final fact scan filtered by BOTH IN
-    subqueries (.../tpcds/q23_1.sql role-mapped onto lineitem/
-    orders). The scalar max broadcasts into the HAVING; the two IN
-    sets semi-join on their own grouped keys. Exact-cents money
-    end-to-end. The oracle keeps the original single text."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q23_ENGINE)
+# TPC-DS Q23's text shape (the _1 variant) — frequent items
+# (HAVING a distinct-day count), best customers (HAVING above a
+# fraction of a SCALAR MAX SUBQUERY over a nested per-customer
+# aggregate), and the final fact scan filtered by BOTH IN
+# subqueries (.../tpcds/q23_1.sql role-mapped onto lineitem/
+# orders). The scalar max broadcasts into the HAVING; the two IN
+# sets semi-join on their own grouped keys. Exact-cents money
+# end-to-end. The oracle keeps the original single text.
+register_sql("sql_tpcds_q23", _SQL_TPCDS_Q23_ENGINE, oracle=_SQL_TPCDS_Q23)
 
 
-@register(
+# The reference's qdigest SQL surface end-to-end
+# (QuantileDigestAggregationFunction.java /
+# QuantileDigestFunctions.java): qdigest_agg over a GROUP BY routed
+# through the mergeable two-phase operator (partial digests below
+# the exchange — frontend._route_geo_aggregate + operators/qdigest.
+# qdigest_two_phase), with value_at_quantile / values_at_quantiles
+# applied to the per-group digests. Scale: only few-KB wire
+# sketches cross the exchange regardless of group size.
+register_sql(
     "sql_qdigest_agg_scale",
-    # rows-only: qdigest estimates are compression-order dependent
-    # (the same contract as agg_qdigest_semantic); the rank-error
-    # bound, merge law, clamp, and wire roundtrip are pinned in
-    # tests/test_qdigest.py
-)
-def sql_qdigest_agg_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's qdigest SQL surface end-to-end
-    (QuantileDigestAggregationFunction.java /
-    QuantileDigestFunctions.java): qdigest_agg over a GROUP BY routed
-    through the mergeable two-phase operator (partial digests below
-    the exchange — frontend._route_geo_aggregate + operators/qdigest.
-    qdigest_two_phase), with value_at_quantile / values_at_quantiles
-    applied to the per-group digests. Scale: only few-KB wire
-    sketches cross the exchange regardless of group size."""
-    register_views(spark, sf_dir)
-    return run_sql(
-        spark,
-        """
+    """
         SELECT l_returnflag,
                value_at_quantile(qdigest_agg(l_orderkey), 0.5) AS p50,
                value_at_quantile(qdigest_agg(l_orderkey), 0.9) AS p90,
@@ -3080,7 +2685,12 @@ def sql_qdigest_agg_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem
         GROUP BY l_returnflag
         """,
-    )
+    # rows-only: qdigest estimates are compression-order dependent
+    # (the same contract as agg_qdigest_semantic); the rank-error
+    # bound, merge law, clamp, and wire roundtrip are pinned in
+    # tests/test_qdigest.py
+    oracle=None,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3123,19 +2733,16 @@ WHERE y.d_month_seq = z.d_month_seq - 100
 ORDER BY y.d_month_seq
 """
 
-@register("sql_tpcds_q2", oracle=_SQL_TPCDS_Q2_R15)
-def sql_tpcds_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q2's text shape — a UNION ALL channel CTE feeding a second
-    CTE of per-month weekday CASE-pivot sums, consumed TWICE in a self-
-    join one year apart to emit week-over-week ratios
-    (.../tpcds/q02.sql role-mapped: the two web/catalog channels -> two
-    order-priority slices; d_week_seq -> a year*100+month sequence; the
-    weekday comes from a portable date_diff-mod-7 spelling because the
-    fixtures carry no date dimension). The CTE aggregates once, the
-    self-join is a broadcast of a few hundred month rows — flat at 100
-    TB. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q2_R15)
+# TPC-DS Q2's text shape — a UNION ALL channel CTE feeding a second
+# CTE of per-month weekday CASE-pivot sums, consumed TWICE in a self-
+# join one year apart to emit week-over-week ratios
+# (.../tpcds/q02.sql role-mapped: the two web/catalog channels -> two
+# order-priority slices; d_week_seq -> a year*100+month sequence; the
+# weekday comes from a portable date_diff-mod-7 spelling because the
+# fixtures carry no date dimension). The CTE aggregates once, the
+# self-join is a broadcast of a few hundred month rows — flat at 100
+# TB. Same text is the oracle.
+register_sql("sql_tpcds_q2", _SQL_TPCDS_Q2_R15)
 
 
 _SQL_TPCDS_Q21_R15 = """
@@ -3159,19 +2766,16 @@ ORDER BY s_name, p_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q21", oracle=_SQL_TPCDS_Q21_R15)
-def sql_tpcds_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q21's text shape — per-(warehouse, item) before/after-the-
-    event quantity split via CASE sums with a ratio band filter on the
-    outer SELECT (.../tpcds/q21.sql role-mapped: inventory -> lineitem,
-    warehouse -> supplier, the 30-day window around a ship-date
-    cutoff). The band bounds are spelled 2.0E0/3.0E0 (DOUBLE division)
-    because the original's bare 2.0/3.0 is DECIMAL division in the
-    reference — decimal(3,1) HALF_UP = 0.7, a semantics this engine
-    replays but DuckDB does not; the DOUBLE spelling keeps the text a
-    true twin. One shuffle on the group keys. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q21_R15)
+# TPC-DS Q21's text shape — per-(warehouse, item) before/after-the-
+# event quantity split via CASE sums with a ratio band filter on the
+# outer SELECT (.../tpcds/q21.sql role-mapped: inventory -> lineitem,
+# warehouse -> supplier, the 30-day window around a ship-date
+# cutoff). The band bounds are spelled 2.0E0/3.0E0 (DOUBLE division)
+# because the original's bare 2.0/3.0 is DECIMAL division in the
+# reference — decimal(3,1) HALF_UP = 0.7, a semantics this engine
+# replays but DuckDB does not; the DOUBLE spelling keeps the text a
+# true twin. One shuffle on the group keys. Same text is the oracle.
+register_sql("sql_tpcds_q21", _SQL_TPCDS_Q21_R15)
 
 
 _SQL_TPCDS_Q41_R15 = """
@@ -3190,16 +2794,13 @@ ORDER BY p_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q41", oracle=_SQL_TPCDS_Q41_R15)
-def sql_tpcds_q41(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q41's text shape — DISTINCT product names gated by a
-    correlated scalar count over an OR-of-ANDs attribute matrix
-    (.../tpcds/q41.sql role-mapped: i_manufact -> p_brand, the
-    color/size/unit conjunctions -> p_type/p_size bands). Catalyst
-    decorrelates the scalar count to an aggregate-join; the part
-    dimension broadcasts at any scale. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q41_R15)
+# TPC-DS Q41's text shape — DISTINCT product names gated by a
+# correlated scalar count over an OR-of-ANDs attribute matrix
+# (.../tpcds/q41.sql role-mapped: i_manufact -> p_brand, the
+# color/size/unit conjunctions -> p_type/p_size bands). Catalyst
+# decorrelates the scalar count to an aggregate-join; the part
+# dimension broadcasts at any scale. Same text is the oracle.
+register_sql("sql_tpcds_q41", _SQL_TPCDS_Q41_R15)
 
 
 _SQL_TPCDS_Q48_R15 = """
@@ -3215,16 +2816,13 @@ WHERE o_orderkey = l_orderkey
            AND o_totalprice BETWEEN 100000.0 AND 160000.0))
 """
 
-@register("sql_tpcds_q48", oracle=_SQL_TPCDS_Q48_R15)
-def sql_tpcds_q48(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q48's text shape — one scan-aggregate whose predicate is an
-    OR of three (demographic x price-band) conjunctions
-    (.../tpcds/q48.sql role-mapped: marital/education -> c_mktsegment,
-    sales-price bands -> o_totalprice bands). The whole disjunction
-    pushes into one pass over the fact join — no intermediate
-    materialization at 100 TB. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q48_R15)
+# TPC-DS Q48's text shape — one scan-aggregate whose predicate is an
+# OR of three (demographic x price-band) conjunctions
+# (.../tpcds/q48.sql role-mapped: marital/education -> c_mktsegment,
+# sales-price bands -> o_totalprice bands). The whole disjunction
+# pushes into one pass over the fact join — no intermediate
+# materialization at 100 TB. Same text is the oracle.
+register_sql("sql_tpcds_q48", _SQL_TPCDS_Q48_R15)
 
 
 _SQL_TPCDS_Q49_R15 = """
@@ -3254,16 +2852,13 @@ WHERE return_rank <= 10
 ORDER BY channel, return_rank, item
 """
 
-@register("sql_tpcds_q49", oracle=_SQL_TPCDS_Q49_R15)
-def sql_tpcds_q49(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q49's text shape — per-channel return ratios ranked by a
-    window, UNION-deduped, worst-10 per channel (.../tpcds/q49.sql
-    role-mapped: the web/catalog/store channels -> the two l_linestatus
-    slices; currency ratio -> returned-quantity ratio). Each channel is
-    one grouped aggregate + one global rank; UNION dedup is a final
-    few-row shuffle. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q49_R15)
+# TPC-DS Q49's text shape — per-channel return ratios ranked by a
+# window, UNION-deduped, worst-10 per channel (.../tpcds/q49.sql
+# role-mapped: the web/catalog/store channels -> the two l_linestatus
+# slices; currency ratio -> returned-quantity ratio). Each channel is
+# one grouped aggregate + one global rank; UNION dedup is a final
+# few-row shuffle. Same text is the oracle.
+register_sql("sql_tpcds_q49", _SQL_TPCDS_Q49_R15)
 
 
 _SQL_TPCDS_Q70_R15 = """
@@ -3286,17 +2881,14 @@ ORDER BY lochierarchy DESC,
 LIMIT 100
 """
 
-@register("sql_tpcds_q70", oracle=_SQL_TPCDS_Q70_R15)
-def sql_tpcds_q70(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q70's text shape — ROLLUP over a geography hierarchy with
-    RANK() OVER (PARTITION BY grouping(...) + grouping(...)) — rank-
-    within-parent across the rollup levels (.../tpcds/q70.sql role-
-    mapped: state/county -> nation/market-segment; money through exact
-    cents). Exercises grouping() under ROLLUP inside a window PARTITION
-    BY — the expanded grouping sets aggregate once, the rank partitions
-    by grouping level. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q70_R15)
+# TPC-DS Q70's text shape — ROLLUP over a geography hierarchy with
+# RANK() OVER (PARTITION BY grouping(...) + grouping(...)) — rank-
+# within-parent across the rollup levels (.../tpcds/q70.sql role-
+# mapped: state/county -> nation/market-segment; money through exact
+# cents). Exercises grouping() under ROLLUP inside a window PARTITION
+# BY — the expanded grouping sets aggregate once, the rank partitions
+# by grouping level. Same text is the oracle.
+register_sql("sql_tpcds_q70", _SQL_TPCDS_Q70_R15)
 
 
 _SQL_TPCDS_Q75_R15 = """
@@ -3333,17 +2925,14 @@ ORDER BY prev_yr_cnt - curr_yr_cnt DESC, curr_yr.p_brand, curr_yr.p_type
 LIMIT 100
 """
 
-@register("sql_tpcds_q75", oracle=_SQL_TPCDS_Q75_R15)
-def sql_tpcds_q75(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q75's text shape — a UNION ALL of channel sales re-
-    aggregated by (year, brand, type), self-joined a year apart,
-    keeping rows whose sales declined below 0.9x (.../tpcds/q75.sql
-    role-mapped onto lineitem/part with l_linestatus as the channel
-    axis; sales_amt rides exact cents). The CTE shuffles once on the
-    dimension keys; the year-pinned self-join broadcasts. Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q75_R15)
+# TPC-DS Q75's text shape — a UNION ALL of channel sales re-
+# aggregated by (year, brand, type), self-joined a year apart,
+# keeping rows whose sales declined below 0.9x (.../tpcds/q75.sql
+# role-mapped onto lineitem/part with l_linestatus as the channel
+# axis; sales_amt rides exact cents). The CTE shuffles once on the
+# dimension keys; the year-pinned self-join broadcasts. Same text is
+# the oracle.
+register_sql("sql_tpcds_q75", _SQL_TPCDS_Q75_R15)
 
 
 _SQL_TPCDS_Q87_R15 = """
@@ -3364,16 +2953,13 @@ FROM ((SELECT DISTINCT c_name, c_custkey
          AND year(CAST(o_orderdate AS DATE)) = 1998)) cool_cust
 """
 
-@register("sql_tpcds_q87", oracle=_SQL_TPCDS_Q87_R15)
-def sql_tpcds_q87(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q87's text shape — count over a chain of two EXCEPTs of
-    DISTINCT customer cohorts (.../tpcds/q87.sql role-mapped: the
-    store/catalog/web cohort sources -> order-year, returns, and
-    priority cohorts). EXCEPT [DISTINCT] plans as two hash anti-joins
-    on the same distinct keys — co-partitioned, no all-pairs anywhere.
-    Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q87_R15)
+# TPC-DS Q87's text shape — count over a chain of two EXCEPTs of
+# DISTINCT customer cohorts (.../tpcds/q87.sql role-mapped: the
+# store/catalog/web cohort sources -> order-year, returns, and
+# priority cohorts). EXCEPT [DISTINCT] plans as two hash anti-joins
+# on the same distinct keys — co-partitioned, no all-pairs anywhere.
+# Same text is the oracle.
+register_sql("sql_tpcds_q87", _SQL_TPCDS_Q87_R15)
 
 
 _SQL_TPCDS_Q90_R15 = """
@@ -3386,15 +2972,12 @@ ORDER BY am_pm_ratio
 LIMIT 100
 """
 
-@register("sql_tpcds_q90", oracle=_SQL_TPCDS_Q90_R15)
-def sql_tpcds_q90(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q90's text shape — the am/pm ratio: two uncorrelated scalar-
-    count subqueries cross-joined and divided (.../tpcds/q90.sql role-
-    mapped: web_sales time_dim windows -> events hour(ts) windows). Two
-    filtered counts, one row each — the cross join is degenerate at any
-    scale. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q90_R15)
+# TPC-DS Q90's text shape — the am/pm ratio: two uncorrelated scalar-
+# count subqueries cross-joined and divided (.../tpcds/q90.sql role-
+# mapped: web_sales time_dim windows -> events hour(ts) windows). Two
+# filtered counts, one row each — the cross join is degenerate at any
+# scale. Same text is the oracle.
+register_sql("sql_tpcds_q90", _SQL_TPCDS_Q90_R15)
 
 
 _SQL_TPCDS_Q92_R15 = """
@@ -3413,16 +2996,13 @@ ORDER BY excess_discount_amount
 LIMIT 100
 """
 
-@register("sql_tpcds_q92", oracle=_SQL_TPCDS_Q92_R15)
-def sql_tpcds_q92(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q92's text shape — 'excess discount': sum the discount
-    amounts that exceed 1.3x the item's own date-windowed average, via
-    a correlated scalar AVG (.../tpcds/q92.sql role-mapped onto
-    lineitem; money through exact cents). Catalyst decorrelates to a
-    per-item aggregate joined back on l_partkey — two co-partitioned
-    shuffles at 100 TB. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q92_R15)
+# TPC-DS Q92's text shape — 'excess discount': sum the discount
+# amounts that exceed 1.3x the item's own date-windowed average, via
+# a correlated scalar AVG (.../tpcds/q92.sql role-mapped onto
+# lineitem; money through exact cents). Catalyst decorrelates to a
+# per-item aggregate joined back on l_partkey — two co-partitioned
+# shuffles at 100 TB. Same text is the oracle.
+register_sql("sql_tpcds_q92", _SQL_TPCDS_Q92_R15)
 
 
 _SQL_TPCDS_Q97_R15 = """
@@ -3452,16 +3032,13 @@ FULL OUTER JOIN csci ON (ssci.customer_sk = csci.customer_sk
                          AND ssci.item_sk = csci.item_sk)
 """
 
-@register("sql_tpcds_q97", oracle=_SQL_TPCDS_Q97_R15)
-def sql_tpcds_q97(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q97's text shape — channel-overlap counts from a FULL OUTER
-    JOIN of two DISTINCT (customer, item) pair sets (.../tpcds/q97.sql
-    role-mapped: store/catalog channels -> l_linestatus slices). Both
-    sides group to distinct pairs on the same keys, so the full-outer
-    join is co-partitioned; the CASE-sum collapse is map-side. Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q97_R15)
+# TPC-DS Q97's text shape — channel-overlap counts from a FULL OUTER
+# JOIN of two DISTINCT (customer, item) pair sets (.../tpcds/q97.sql
+# role-mapped: store/catalog channels -> l_linestatus slices). Both
+# sides group to distinct pairs on the same keys, so the full-outer
+# join is co-partitioned; the CASE-sum collapse is map-side. Same
+# text is the oracle.
+register_sql("sql_tpcds_q97", _SQL_TPCDS_Q97_R15)
 
 
 _SQL_TPCDS_Q99_R15 = """
@@ -3492,15 +3069,12 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
 
-@register("sql_tpcds_q99", oracle=_SQL_TPCDS_Q99_R15)
-def sql_tpcds_q99(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q99's text shape — ship-lag histogram as five CASE-sum pivot
-    columns of date_diff buckets per priority (.../tpcds/q99.sql role-
-    mapped: warehouse/ship-mode -> o_orderpriority, days-to-ship ->
-    orderdate->shipdate lag). Single fact-fact join on the order key —
-    bucketable; the pivot is map-side combine. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q99_R15)
+# TPC-DS Q99's text shape — ship-lag histogram as five CASE-sum pivot
+# columns of date_diff buckets per priority (.../tpcds/q99.sql role-
+# mapped: warehouse/ship-mode -> o_orderpriority, days-to-ship ->
+# orderdate->shipdate lag). Single fact-fact join on the order key —
+# bucketable; the pivot is map-side combine. Same text is the oracle.
+register_sql("sql_tpcds_q99", _SQL_TPCDS_Q99_R15)
 
 
 # ---- r15 twin batch 2 (#33-42): same methodology -------------------
@@ -3559,16 +3133,13 @@ ORDER BY t_s_secyear.customer_id, t_s_secyear.customer_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q4", oracle=_SQL_TPCDS_Q4_R15)
-def sql_tpcds_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q4's text shape — the three-channel year_total CTE
-    (store/catalog/web -> three order-priority slices) consumed SIX
-    times in one self-join, keeping customers whose second-year ratio
-    improves in the catalog channel over BOTH other channels
-    (.../tpcds/q04.sql role-mapped; money rides exact cents). Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q4_R15)
+# TPC-DS Q4's text shape — the three-channel year_total CTE
+# (store/catalog/web -> three order-priority slices) consumed SIX
+# times in one self-join, keeping customers whose second-year ratio
+# improves in the catalog channel over BOTH other channels
+# (.../tpcds/q04.sql role-mapped; money rides exact cents). Same
+# text is the oracle.
+register_sql("sql_tpcds_q4", _SQL_TPCDS_Q4_R15)
 
 
 _SQL_TPCDS_Q30_R15 = """
@@ -3594,16 +3165,13 @@ ORDER BY c_custkey, c_name, ctr_total_return
 LIMIT 100
 """
 
-@register("sql_tpcds_q30", oracle=_SQL_TPCDS_Q30_R15)
-def sql_tpcds_q30(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q30's text shape — per-customer return totals vs 1.2x the
-    per-state average via a correlated scalar subquery over the same
-    CTE, joined back to the customer dimension (.../tpcds/q30.sql role-
-    mapped: ca_state -> c_nationkey, web returns -> 'R' lineitems).
-    Catalyst decorrelates to a per-state aggregate broadcast. Same text
-    is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q30_R15)
+# TPC-DS Q30's text shape — per-customer return totals vs 1.2x the
+# per-state average via a correlated scalar subquery over the same
+# CTE, joined back to the customer dimension (.../tpcds/q30.sql role-
+# mapped: ca_state -> c_nationkey, web returns -> 'R' lineitems).
+# Catalyst decorrelates to a per-state aggregate broadcast. Same text
+# is the oracle.
+register_sql("sql_tpcds_q30", _SQL_TPCDS_Q30_R15)
 
 
 _SQL_TPCDS_Q33_R15 = """
@@ -3646,16 +3214,13 @@ ORDER BY total_sales DESC, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q33", oracle=_SQL_TPCDS_Q33_R15)
-def sql_tpcds_q33(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q33's text shape — three channel CTEs each restricted to an
-    IN-subquery brand list (manufacturers in a category), UNION ALLed
-    and re-aggregated to total sales per brand (.../tpcds/q33.sql role-
-    mapped: the three channels -> linestatus/returnflag slices). The IN
-    subquery broadcasts; each channel is one grouped scan. Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q33_R15)
+# TPC-DS Q33's text shape — three channel CTEs each restricted to an
+# IN-subquery brand list (manufacturers in a category), UNION ALLed
+# and re-aggregated to total sales per brand (.../tpcds/q33.sql role-
+# mapped: the three channels -> linestatus/returnflag slices). The IN
+# subquery broadcasts; each channel is one grouped scan. Same text is
+# the oracle.
+register_sql("sql_tpcds_q33", _SQL_TPCDS_Q33_R15)
 
 
 _SQL_TPCDS_Q43_R15 = """
@@ -3688,15 +3253,12 @@ ORDER BY s_name, s_suppkey
 LIMIT 100
 """
 
-@register("sql_tpcds_q43", oracle=_SQL_TPCDS_Q43_R15)
-def sql_tpcds_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q43's text shape — the per-store weekday CASE pivot
-    (.../tpcds/q43.sql role-mapped: store -> supplier; d_day_name -> a
-    portable date_diff-mod-7 weekday because the fixtures carry no date
-    dimension). One grouped scan, map-side combine carries seven
-    partial sums. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q43_R15)
+# TPC-DS Q43's text shape — the per-store weekday CASE pivot
+# (.../tpcds/q43.sql role-mapped: store -> supplier; d_day_name -> a
+# portable date_diff-mod-7 weekday because the fixtures carry no date
+# dimension). One grouped scan, map-side combine carries seven
+# partial sums. Same text is the oracle.
+register_sql("sql_tpcds_q43", _SQL_TPCDS_Q43_R15)
 
 
 _SQL_TPCDS_Q53_R15 = """
@@ -3718,15 +3280,12 @@ ORDER BY avg_quarterly_sales, sum_sales, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q53", oracle=_SQL_TPCDS_Q53_R15)
-def sql_tpcds_q53(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q53's text shape — quarterly brand sums compared to their
-    own AVG() OVER (PARTITION BY brand), keeping rows that deviate more
-    than 10% (.../tpcds/q53.sql role-mapped; q63/q89 share the
-    skeleton). A window aggregate OVER a grouped aggregate — two
-    shuffles, both on pruned row counts. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q53_R15)
+# TPC-DS Q53's text shape — quarterly brand sums compared to their
+# own AVG() OVER (PARTITION BY brand), keeping rows that deviate more
+# than 10% (.../tpcds/q53.sql role-mapped; q63/q89 share the
+# skeleton). A window aggregate OVER a grouped aggregate — two
+# shuffles, both on pruned row counts. Same text is the oracle.
+register_sql("sql_tpcds_q53", _SQL_TPCDS_Q53_R15)
 
 
 _SQL_TPCDS_Q58_R15 = """
@@ -3770,16 +3329,13 @@ ORDER BY ss_items.item_id, ss_item_rev
 LIMIT 100
 """
 
-@register("sql_tpcds_q58", oracle=_SQL_TPCDS_Q58_R15)
-def sql_tpcds_q58(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q58's text shape — three per-brand channel revenues joined
-    and kept only when every pairwise ratio is within 10%
-    (.../tpcds/q58.sql role-mapped: the three channels -> uniform
-    l_suppkey%3 slices so the 10% band is actually populated at fixture
-    scale). Three grouped scans joined on the brand key —
-    broadcastable. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q58_R15)
+# TPC-DS Q58's text shape — three per-brand channel revenues joined
+# and kept only when every pairwise ratio is within 10%
+# (.../tpcds/q58.sql role-mapped: the three channels -> uniform
+# l_suppkey%3 slices so the 10% band is actually populated at fixture
+# scale). Three grouped scans joined on the brand key —
+# broadcastable. Same text is the oracle.
+register_sql("sql_tpcds_q58", _SQL_TPCDS_Q58_R15)
 
 
 _SQL_TPCDS_Q61_R15 = """
@@ -3798,15 +3354,12 @@ ORDER BY promo_pct
 LIMIT 100
 """
 
-@register("sql_tpcds_q61", oracle=_SQL_TPCDS_Q61_R15)
-def sql_tpcds_q61(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q61's text shape — the promotional-revenue percentage: two
-    uncorrelated aggregate subqueries cross-joined and divided
-    (.../tpcds/q61.sql role-mapped: promotions -> PROMO part type). Two
-    one-row aggregates; the cross join is degenerate at any scale. Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q61_R15)
+# TPC-DS Q61's text shape — the promotional-revenue percentage: two
+# uncorrelated aggregate subqueries cross-joined and divided
+# (.../tpcds/q61.sql role-mapped: promotions -> PROMO part type). Two
+# one-row aggregates; the cross join is degenerate at any scale. Same
+# text is the oracle.
+register_sql("sql_tpcds_q61", _SQL_TPCDS_Q61_R15)
 
 
 _SQL_TPCDS_Q66_R15 = """
@@ -3867,16 +3420,13 @@ ORDER BY s_name, dyear
 LIMIT 100
 """
 
-@register("sql_tpcds_q66", oracle=_SQL_TPCDS_Q66_R15)
-def sql_tpcds_q66(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q66's text shape — the warehouse monthly-sales pivot: two
-    channels UNION ALLed, each a grouped scan with month CASE-sum
-    columns, re-aggregated per warehouse and year (.../tpcds/q66.sql
-    role-mapped: warehouse -> supplier, six of the twelve month columns
-    kept; money rides exact cents). Map-side combine carries the pivot
-    partials; one shuffle per channel. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q66_R15)
+# TPC-DS Q66's text shape — the warehouse monthly-sales pivot: two
+# channels UNION ALLed, each a grouped scan with month CASE-sum
+# columns, re-aggregated per warehouse and year (.../tpcds/q66.sql
+# role-mapped: warehouse -> supplier, six of the twelve month columns
+# kept; money rides exact cents). Map-side combine carries the pivot
+# partials; one shuffle per channel. Same text is the oracle.
+register_sql("sql_tpcds_q66", _SQL_TPCDS_Q66_R15)
 
 
 _SQL_TPCDS_Q91_R15 = """
@@ -3896,16 +3446,13 @@ ORDER BY returns_loss DESC, n_name, c_mktsegment
 LIMIT 100
 """
 
-@register("sql_tpcds_q91", oracle=_SQL_TPCDS_Q91_R15)
-def sql_tpcds_q91(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q91's text shape — returns loss per (geography, demographic)
-    cohort for one month: a four-table join chain with dimension
-    filters feeding one grouped sum (.../tpcds/q91.sql role-mapped:
-    call center/household demographics -> nation/market segment, cc
-    losses -> 'R' lineitems). Dimension joins broadcast. Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q91_R15)
+# TPC-DS Q91's text shape — returns loss per (geography, demographic)
+# cohort for one month: a four-table join chain with dimension
+# filters feeding one grouped sum (.../tpcds/q91.sql role-mapped:
+# call center/household demographics -> nation/market segment, cc
+# losses -> 'R' lineitems). Dimension joins broadcast. Same text is
+# the oracle.
+register_sql("sql_tpcds_q91", _SQL_TPCDS_Q91_R15)
 
 
 _SQL_TPCDS_Q96_R15 = """
@@ -3918,15 +3465,12 @@ ORDER BY count(*)
 LIMIT 100
 """
 
-@register("sql_tpcds_q96", oracle=_SQL_TPCDS_Q96_R15)
-def sql_tpcds_q96(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q96's text shape — a plain COUNT through time-window +
-    attribute filters (.../tpcds/q96.sql role-mapped: time_dim
-    hour/minute windows -> events hour(ts)/minute(ts),
-    household_demographics -> event_type). Pure pushed-filter scan-
-    count. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q96_R15)
+# TPC-DS Q96's text shape — a plain COUNT through time-window +
+# attribute filters (.../tpcds/q96.sql role-mapped: time_dim
+# hour/minute windows -> events hour(ts)/minute(ts),
+# household_demographics -> event_type). Pure pushed-filter scan-
+# count. Same text is the oracle.
+register_sql("sql_tpcds_q96", _SQL_TPCDS_Q96_R15)
 
 
 # ---- r15 twin batch 3 (#43-54): same methodology -------------------
@@ -3946,16 +3490,13 @@ ORDER BY p_type, revenueratio, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q12", oracle=_SQL_TPCDS_Q12_R15)
-def sql_tpcds_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q12's text shape — per-item revenue with its class-share
-    percentage via SUM(SUM(...)) OVER (PARTITION BY class) in a 30-day
-    window (.../tpcds/q12.sql role-mapped: category/class ->
-    p_type/p_brand; q20 and q98 share the skeleton). Window over
-    grouped aggregate — one shuffle each, the window partitions by the
-    pruned class key. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q12_R15)
+# TPC-DS Q12's text shape — per-item revenue with its class-share
+# percentage via SUM(SUM(...)) OVER (PARTITION BY class) in a 30-day
+# window (.../tpcds/q12.sql role-mapped: category/class ->
+# p_type/p_brand; q20 and q98 share the skeleton). Window over
+# grouped aggregate — one shuffle each, the window partitions by the
+# pruned class key. Same text is the oracle.
+register_sql("sql_tpcds_q12", _SQL_TPCDS_Q12_R15)
 
 
 _SQL_TPCDS_Q17_R15 = """
@@ -3987,16 +3528,13 @@ ORDER BY p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q17", oracle=_SQL_TPCDS_Q17_R15)
-def sql_tpcds_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q17's text shape — quantity count/avg/stddev across sale and
-    return roles joined on (item, order) (.../tpcds/q17.sql role-
-    mapped: store_sales/store_returns -> non-returned/returned lineitem
-    slices on the same order). A fact-fact self-join on the order key —
-    bucket-joinable — feeding multi-statistic aggregates. Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q17_R15)
+# TPC-DS Q17's text shape — quantity count/avg/stddev across sale and
+# return roles joined on (item, order) (.../tpcds/q17.sql role-
+# mapped: store_sales/store_returns -> non-returned/returned lineitem
+# slices on the same order). A fact-fact self-join on the order key —
+# bucket-joinable — feeding multi-statistic aggregates. Same text is
+# the oracle.
+register_sql("sql_tpcds_q17", _SQL_TPCDS_Q17_R15)
 
 
 _SQL_TPCDS_Q22_R15 = """
@@ -4009,15 +3547,12 @@ ORDER BY qoh, p_type, p_brand, p_size
 LIMIT 100
 """
 
-@register("sql_tpcds_q22", oracle=_SQL_TPCDS_Q22_R15)
-def sql_tpcds_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q22's text shape — average quantity over the product-
-    hierarchy ROLLUP (.../tpcds/q22.sql role-mapped:
-    category/brand/product -> p_type/p_brand/p_size). The expanded
-    grouping sets aggregate in one pass; avg's sum/count partials
-    combine map-side. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q22_R15)
+# TPC-DS Q22's text shape — average quantity over the product-
+# hierarchy ROLLUP (.../tpcds/q22.sql role-mapped:
+# category/brand/product -> p_type/p_brand/p_size). The expanded
+# grouping sets aggregate in one pass; avg's sum/count partials
+# combine map-side. Same text is the oracle.
+register_sql("sql_tpcds_q22", _SQL_TPCDS_Q22_R15)
 
 
 _SQL_TPCDS_Q28_R15 = """
@@ -4073,15 +3608,12 @@ FROM (SELECT CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT))
 LIMIT 100
 """
 
-@register("sql_tpcds_q28", oracle=_SQL_TPCDS_Q28_R15)
-def sql_tpcds_q28(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q28's text shape — six quantity-and-price-band buckets of
-    (avg, count, count DISTINCT) cross-joined into a single row
-    (.../tpcds/q28.sql role-mapped onto lineitem). Six filtered single-
-    row aggregates; the DISTINCT counts expand per-bucket, the cross
-    join is degenerate. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q28_R15)
+# TPC-DS Q28's text shape — six quantity-and-price-band buckets of
+# (avg, count, count DISTINCT) cross-joined into a single row
+# (.../tpcds/q28.sql role-mapped onto lineitem). Six filtered single-
+# row aggregates; the DISTINCT counts expand per-bucket, the cross
+# join is degenerate. Same text is the oracle.
+register_sql("sql_tpcds_q28", _SQL_TPCDS_Q28_R15)
 
 
 _SQL_TPCDS_Q35_R15 = """
@@ -4109,16 +3641,13 @@ ORDER BY n_name, c_mktsegment
 LIMIT 100
 """
 
-@register("sql_tpcds_q35", oracle=_SQL_TPCDS_Q35_R15)
-def sql_tpcds_q35(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q35's text shape — demographic group statistics over
-    customers gated by one EXISTS and an OR of two more
-    (.../tpcds/q35.sql role-mapped: ca_state/cd_gender -> nation/market
-    segment; the web/catalog channels -> linestatus slices). Three
-    semi-join gates then one grouped multi-aggregate. Same text is the
-    oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q35_R15)
+# TPC-DS Q35's text shape — demographic group statistics over
+# customers gated by one EXISTS and an OR of two more
+# (.../tpcds/q35.sql role-mapped: ca_state/cd_gender -> nation/market
+# segment; the web/catalog channels -> linestatus slices). Three
+# semi-join gates then one grouped multi-aggregate. Same text is the
+# oracle.
+register_sql("sql_tpcds_q35", _SQL_TPCDS_Q35_R15)
 
 
 _SQL_TPCDS_Q37_R15 = """
@@ -4133,15 +3662,12 @@ ORDER BY p_name, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q37", oracle=_SQL_TPCDS_Q37_R15)
-def sql_tpcds_q37(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q37's text shape — items in a retail-price band with
-    activity inside a 60-day window, deduped by GROUP BY
-    (.../tpcds/q37.sql role-mapped: inventory availability -> lineitem
-    activity; q82 shares the skeleton). Dimension filter broadcasts
-    into the fact scan. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q37_R15)
+# TPC-DS Q37's text shape — items in a retail-price band with
+# activity inside a 60-day window, deduped by GROUP BY
+# (.../tpcds/q37.sql role-mapped: inventory availability -> lineitem
+# activity; q82 shares the skeleton). Dimension filter broadcasts
+# into the fact scan. Same text is the oracle.
+register_sql("sql_tpcds_q37", _SQL_TPCDS_Q37_R15)
 
 
 _SQL_TPCDS_Q40_R15 = """
@@ -4170,16 +3696,13 @@ ORDER BY n_name, p_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q40", oracle=_SQL_TPCDS_Q40_R15)
-def sql_tpcds_q40(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q40's text shape — before/after-the-cutoff net sales per
-    (state, item) with the refunded amount stripped via LEFT JOIN
-    against the returns slice and COALESCE (.../tpcds/q40.sql role-
-    mapped: catalog_returns -> the returnflag='R' self-slice keyed by
-    order+line). The self-left-join co-partitions on the order key.
-    Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q40_R15)
+# TPC-DS Q40's text shape — before/after-the-cutoff net sales per
+# (state, item) with the refunded amount stripped via LEFT JOIN
+# against the returns slice and COALESCE (.../tpcds/q40.sql role-
+# mapped: catalog_returns -> the returnflag='R' self-slice keyed by
+# order+line). The self-left-join co-partitions on the order key.
+# Same text is the oracle.
+register_sql("sql_tpcds_q40", _SQL_TPCDS_Q40_R15)
 
 
 _SQL_TPCDS_Q44_R15 = """
@@ -4219,16 +3742,13 @@ ORDER BY asceding.rnk
 LIMIT 100
 """
 
-@register("sql_tpcds_q44", oracle=_SQL_TPCDS_Q44_R15)
-def sql_tpcds_q44(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q44's text shape — best and worst performing items by ranked
-    average revenue: two rank() subqueries (ASC and DESC) over the same
-    HAVING-gated aggregate, equi-joined rank-to-rank, item names
-    resolved twice (.../tpcds/q44.sql role-mapped: store/col_name ->
-    supplier/returned-average). The rank inputs are tiny post-aggregate
-    sets; both dimension lookups broadcast. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q44_R15)
+# TPC-DS Q44's text shape — best and worst performing items by ranked
+# average revenue: two rank() subqueries (ASC and DESC) over the same
+# HAVING-gated aggregate, equi-joined rank-to-rank, item names
+# resolved twice (.../tpcds/q44.sql role-mapped: store/col_name ->
+# supplier/returned-average). The rank inputs are tiny post-aggregate
+# sets; both dimension lookups broadcast. Same text is the oracle.
+register_sql("sql_tpcds_q44", _SQL_TPCDS_Q44_R15)
 
 
 _SQL_TPCDS_Q45_R15 = """
@@ -4248,16 +3768,13 @@ ORDER BY n_name, c_mktsegment
 LIMIT 100
 """
 
-@register("sql_tpcds_q45", oracle=_SQL_TPCDS_Q45_R15)
-def sql_tpcds_q45(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q45's text shape — geography revenue for customers in an
-    enumerated key list OR an IN-subquery (.../tpcds/q45.sql role-
-    mapped: zip list -> customer key list, the item subquery -> an
-    urgent-high-value order subquery). The OR of a static IN and a
-    semi-join plans as a single filter over the broadcast subquery.
-    Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q45_R15)
+# TPC-DS Q45's text shape — geography revenue for customers in an
+# enumerated key list OR an IN-subquery (.../tpcds/q45.sql role-
+# mapped: zip list -> customer key list, the item subquery -> an
+# urgent-high-value order subquery). The OR of a static IN and a
+# semi-join plans as a single filter over the broadcast subquery.
+# Same text is the oracle.
+register_sql("sql_tpcds_q45", _SQL_TPCDS_Q45_R15)
 
 
 _SQL_TPCDS_Q71_R15 = """
@@ -4292,15 +3809,12 @@ ORDER BY ext_price DESC, p_brand, t_month
 LIMIT 100
 """
 
-@register("sql_tpcds_q71", oracle=_SQL_TPCDS_Q71_R15)
-def sql_tpcds_q71(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q71's text shape — brand revenue by time bucket across three
-    channels UNION ALLed inside the FROM (.../tpcds/q71.sql role-
-    mapped: the three channels -> linestatus/returnflag slices, hour ->
-    month since the fixtures carry no time dimension). Each branch
-    scans pruned; the item join broadcasts. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q71_R15)
+# TPC-DS Q71's text shape — brand revenue by time bucket across three
+# channels UNION ALLed inside the FROM (.../tpcds/q71.sql role-
+# mapped: the three channels -> linestatus/returnflag slices, hour ->
+# month since the fixtures carry no time dimension). Each branch
+# scans pruned; the item join broadcasts. Same text is the oracle.
+register_sql("sql_tpcds_q71", _SQL_TPCDS_Q71_R15)
 
 
 _SQL_TPCDS_Q78_R15 = """
@@ -4346,16 +3860,13 @@ ORDER BY ss_customer_sk, ss_qty DESC, ss_sp DESC,
 LIMIT 100
 """
 
-@register("sql_tpcds_q78", oracle=_SQL_TPCDS_Q78_R15)
-def sql_tpcds_q78(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q78's text shape — yearly per-(customer, item) cross-channel
-    quantity ratios with returned rows stripped via LEFT JOIN + IS NULL
-    in both channel CTEs (.../tpcds/q78.sql role-mapped: ws/ss ->
-    linestatus slices, returns -> the 'R' self-slice). Two anti-join-
-    shaped CTEs, then a co-partitioned (year, item, customer) join.
-    Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q78_R15)
+# TPC-DS Q78's text shape — yearly per-(customer, item) cross-channel
+# quantity ratios with returned rows stripped via LEFT JOIN + IS NULL
+# in both channel CTEs (.../tpcds/q78.sql role-mapped: ws/ss ->
+# linestatus slices, returns -> the 'R' self-slice). Two anti-join-
+# shaped CTEs, then a co-partitioned (year, item, customer) join.
+# Same text is the oracle.
+register_sql("sql_tpcds_q78", _SQL_TPCDS_Q78_R15)
 
 
 _SQL_TPCDS_Q94_R15 = """
@@ -4376,16 +3887,13 @@ ORDER BY count(DISTINCT o1.o_orderkey)
 LIMIT 100
 """
 
-@register("sql_tpcds_q94", oracle=_SQL_TPCDS_Q94_R15)
-def sql_tpcds_q94(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q94's text shape — high-priority orders with a second-
-    supplier line and no returned lines: EXISTS + NOT EXISTS correlated
-    gates under count-DISTINCT and money sums (.../tpcds/q94.sql role-
-    mapped; the TPC-H Q21 cousin). Both gates plan as semi/anti joins
-    on the order key — co-partitioned with the driving join. Same text
-    is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q94_R15)
+# TPC-DS Q94's text shape — high-priority orders with a second-
+# supplier line and no returned lines: EXISTS + NOT EXISTS correlated
+# gates under count-DISTINCT and money sums (.../tpcds/q94.sql role-
+# mapped; the TPC-H Q21 cousin). Both gates plan as semi/anti joins
+# on the order key — co-partitioned with the driving join. Same text
+# is the oracle.
+register_sql("sql_tpcds_q94", _SQL_TPCDS_Q94_R15)
 
 
 # ---- r15 twin batch 4 (#55-62): same methodology -------------------
@@ -4428,16 +3936,13 @@ ORDER BY channel, id
 LIMIT 100
 """
 
-@register("sql_tpcds_q5", oracle=_SQL_TPCDS_Q5_R15)
-def sql_tpcds_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q5's text shape — per-channel profit-and-loss: sales rows
-    and returns rows UNION ALLed with zero-filled opposite columns,
-    summed under ROLLUP (channel, id) (.../tpcds/q05.sql role-mapped:
-    the store/web channels -> linestatus slices, returns -> the 'R'
-    slice). Each branch scans pruned; the rollup aggregates once. Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q5_R15)
+# TPC-DS Q5's text shape — per-channel profit-and-loss: sales rows
+# and returns rows UNION ALLed with zero-filled opposite columns,
+# summed under ROLLUP (channel, id) (.../tpcds/q05.sql role-mapped:
+# the store/web channels -> linestatus slices, returns -> the 'R'
+# slice). Each branch scans pruned; the rollup aggregates once. Same
+# text is the oracle.
+register_sql("sql_tpcds_q5", _SQL_TPCDS_Q5_R15)
 
 
 _SQL_TPCDS_Q13_R15 = """
@@ -4461,16 +3966,13 @@ WHERE ((c_mktsegment = 'BUILDING'
            AND l_quantity BETWEEN 20 AND 40))
 """
 
-@register("sql_tpcds_q13", oracle=_SQL_TPCDS_Q13_R15)
-def sql_tpcds_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q13's text shape — a single bundle of averages under an OR
-    of three (demographic x band) conjunctions (.../tpcds/q13.sql role-
-    mapped: marital/education bands -> market-segment x price x
-    quantity bands; averages replayed in exact integer cents). One pass
-    over the 3-table join, the disjunction fully pushed. Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q13_R15)
+# TPC-DS Q13's text shape — a single bundle of averages under an OR
+# of three (demographic x band) conjunctions (.../tpcds/q13.sql role-
+# mapped: marital/education bands -> market-segment x price x
+# quantity bands; averages replayed in exact integer cents). One pass
+# over the 3-table join, the disjunction fully pushed. Same text is
+# the oracle.
+register_sql("sql_tpcds_q13", _SQL_TPCDS_Q13_R15)
 
 
 _SQL_TPCDS_Q27_R15 = """
@@ -4493,16 +3995,13 @@ ORDER BY p_brand, n_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q27", oracle=_SQL_TPCDS_Q27_R15)
-def sql_tpcds_q27(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q27's text shape — multi-statistic averages over a ROLLUP
-    hierarchy with a fixed demographic filter (.../tpcds/q27.sql role-
-    mapped: gender/marital/education -> market segment, item/state
-    rollup -> brand/nation; averages in exact cents and basis points).
-    Five-table join, dimension sides broadcast, one rollup aggregate.
-    Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q27_R15)
+# TPC-DS Q27's text shape — multi-statistic averages over a ROLLUP
+# hierarchy with a fixed demographic filter (.../tpcds/q27.sql role-
+# mapped: gender/marital/education -> market segment, item/state
+# rollup -> brand/nation; averages in exact cents and basis points).
+# Five-table join, dimension sides broadcast, one rollup aggregate.
+# Same text is the oracle.
+register_sql("sql_tpcds_q27", _SQL_TPCDS_Q27_R15)
 
 
 _SQL_TPCDS_Q54_R15 = """
@@ -4536,17 +4035,14 @@ ORDER BY segment, num_customers
 LIMIT 100
 """
 
-@register("sql_tpcds_q54", oracle=_SQL_TPCDS_Q54_R15)
-def sql_tpcds_q54(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q54's text shape — a cohort CTE (customers who bought the
-    category), their next-window revenue, bucketed into fixed-width
-    segments and counted (.../tpcds/q54.sql role-mapped; the segment
-    division exercises the r15 double-chain HALF_UP cast:
-    CAST(double/100/5000 AS INTEGER) rounds like the reference, not
-    Spark's truncation). Cohort semi-join then one small re-
-    aggregation. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q54_R15)
+# TPC-DS Q54's text shape — a cohort CTE (customers who bought the
+# category), their next-window revenue, bucketed into fixed-width
+# segments and counted (.../tpcds/q54.sql role-mapped; the segment
+# division exercises the r15 double-chain HALF_UP cast:
+# CAST(double/100/5000 AS INTEGER) rounds like the reference, not
+# Spark's truncation). Cohort semi-join then one small re-
+# aggregation. Same text is the oracle.
+register_sql("sql_tpcds_q54", _SQL_TPCDS_Q54_R15)
 
 
 _SQL_TPCDS_Q77_R15 = """
@@ -4579,16 +4075,13 @@ ORDER BY channel, id
 LIMIT 100
 """
 
-@register("sql_tpcds_q77", oracle=_SQL_TPCDS_Q77_R15)
-def sql_tpcds_q77(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q77's text shape — per-location sales and returns CTEs
-    combined channel-by-channel (LEFT and FULL OUTER JOIN variants) and
-    ROLLUPed (.../tpcds/q77.sql role-mapped: store/catalog ->
-    returnflag slices keyed by supplier). The location-keyed joins co-
-    partition; the rollup sees only per-location totals. Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q77_R15)
+# TPC-DS Q77's text shape — per-location sales and returns CTEs
+# combined channel-by-channel (LEFT and FULL OUTER JOIN variants) and
+# ROLLUPed (.../tpcds/q77.sql role-mapped: store/catalog ->
+# returnflag slices keyed by supplier). The location-keyed joins co-
+# partition; the rollup sees only per-location totals. Same text is
+# the oracle.
+register_sql("sql_tpcds_q77", _SQL_TPCDS_Q77_R15)
 
 
 _SQL_TPCDS_Q80_R15 = """
@@ -4635,15 +4128,12 @@ ORDER BY channel, id
 LIMIT 100
 """
 
-@register("sql_tpcds_q80", oracle=_SQL_TPCDS_Q80_R15)
-def sql_tpcds_q80(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q80's text shape — per-store net sales with refunds stripped
-    via LEFT JOIN against the returns self-slice, two channels UNION
-    ALLed under ROLLUP (.../tpcds/q80.sql role-mapped like q40 plus the
-    q5 rollup skeleton). Self-left-joins co-partition on the order key.
-    Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q80_R15)
+# TPC-DS Q80's text shape — per-store net sales with refunds stripped
+# via LEFT JOIN against the returns self-slice, two channels UNION
+# ALLed under ROLLUP (.../tpcds/q80.sql role-mapped like q40 plus the
+# q5 rollup skeleton). Self-left-joins co-partition on the order key.
+# Same text is the oracle.
+register_sql("sql_tpcds_q80", _SQL_TPCDS_Q80_R15)
 
 
 _SQL_TPCDS_Q83_R15 = """
@@ -4696,17 +4186,14 @@ ORDER BY sr_items.item_id, sr_item_qty
 LIMIT 100
 """
 
-@register("sql_tpcds_q83", oracle=_SQL_TPCDS_Q83_R15)
-def sql_tpcds_q83(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q83's text shape — three return-quantity slices joined on
-    the item, each gated by a date IN-subquery, emitting per-channel
-    shares of the three-way total (.../tpcds/q83.sql role-mapped: the
-    three return channels -> returnflag/linestatus slices; d_week_seq
-    subquery -> an order-priority year subquery). The IN-subqueries
-    broadcast; the item joins are post-aggregate and tiny. Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q83_R15)
+# TPC-DS Q83's text shape — three return-quantity slices joined on
+# the item, each gated by a date IN-subquery, emitting per-channel
+# shares of the three-way total (.../tpcds/q83.sql role-mapped: the
+# three return channels -> returnflag/linestatus slices; d_week_seq
+# subquery -> an order-priority year subquery). The IN-subqueries
+# broadcast; the item joins are post-aggregate and tiny. Same text is
+# the oracle.
+register_sql("sql_tpcds_q83", _SQL_TPCDS_Q83_R15)
 
 
 _SQL_TPCDS_Q85_R15 = """
@@ -4738,16 +4225,13 @@ ORDER BY prio
 LIMIT 100
 """
 
-@register("sql_tpcds_q85", oracle=_SQL_TPCDS_Q85_R15)
-def sql_tpcds_q85(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q85's text shape — averages over a returns join gated by TWO
-    independent ORs of (demographic x band) conjunctions
-    (.../tpcds/q85.sql role-mapped: web_returns/reason -> 'R'
-    lineitems/order priority; averages in exact cents/basis points).
-    Both disjunctions push into the one join pass. Same text is the
-    oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q85_R15)
+# TPC-DS Q85's text shape — averages over a returns join gated by TWO
+# independent ORs of (demographic x band) conjunctions
+# (.../tpcds/q85.sql role-mapped: web_returns/reason -> 'R'
+# lineitems/order priority; averages in exact cents/basis points).
+# Both disjunctions push into the one join pass. Same text is the
+# oracle.
+register_sql("sql_tpcds_q85", _SQL_TPCDS_Q85_R15)
 
 
 # ---- r15 twin batch 5 (#63-69): same methodology -------------------
@@ -4788,17 +4272,14 @@ ORDER BY p_brand, sales
 LIMIT 100
 """
 
-@register("sql_tpcds_q14", oracle=_SQL_TPCDS_Q14_R15)
-def sql_tpcds_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q14's text shape — the INTERSECT-driven cross-channel item
-    set (items sold in ALL three channels) gating per-channel brand
-    sums against a CTE average computed from the UNION of every channel
-    (.../tpcds/q14.sql role-mapped: the three channels ->
-    linestatus/returnflag slices). The INTERSECTs plan as co-
-    partitioned semi-joins; the average is a one-row broadcast. Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q14_R15)
+# TPC-DS Q14's text shape — the INTERSECT-driven cross-channel item
+# set (items sold in ALL three channels) gating per-channel brand
+# sums against a CTE average computed from the UNION of every channel
+# (.../tpcds/q14.sql role-mapped: the three channels ->
+# linestatus/returnflag slices). The INTERSECTs plan as co-
+# partitioned semi-joins; the average is a one-row broadcast. Same
+# text is the oracle.
+register_sql("sql_tpcds_q14", _SQL_TPCDS_Q14_R15)
 
 
 _SQL_TPCDS_Q24_R15 = """
@@ -4828,16 +4309,13 @@ ORDER BY c_name, s_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q24", oracle=_SQL_TPCDS_Q24_R15)
-def sql_tpcds_q24(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q24's text shape — net paid on returned sales grouped over a
-    five-way dimension join, re-aggregated with an uncorrelated
-    0.05x-average HAVING gate over the SAME CTE (.../tpcds/q24.sql
-    role-mapped: store_returns -> the 'R' self-slice joined on
-    order+line, i_color -> p_brand). The CTE materializes once for both
-    consumers. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q24_R15)
+# TPC-DS Q24's text shape — net paid on returned sales grouped over a
+# five-way dimension join, re-aggregated with an uncorrelated
+# 0.05x-average HAVING gate over the SAME CTE (.../tpcds/q24.sql
+# role-mapped: store_returns -> the 'R' self-slice joined on
+# order+line, i_color -> p_brand). The CTE materializes once for both
+# consumers. Same text is the oracle.
+register_sql("sql_tpcds_q24", _SQL_TPCDS_Q24_R15)
 
 
 _SQL_TPCDS_Q25_R15 = """
@@ -4865,16 +4343,13 @@ ORDER BY p_brand, s_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q25", oracle=_SQL_TPCDS_Q25_R15)
-def sql_tpcds_q25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q25's text shape — sale, same-order return, and later same-
-    supplier repurchase roles joined across two orders of one customer,
-    max-statistics per (brand, store) (.../tpcds/q25.sql role-mapped;
-    the repurchase edge keys on the supplier since fixture-scale same-
-    part repurchases are empty). Facts co-partition on the order key;
-    the customer bridge is the one reshuffle. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q25_R15)
+# TPC-DS Q25's text shape — sale, same-order return, and later same-
+# supplier repurchase roles joined across two orders of one customer,
+# max-statistics per (brand, store) (.../tpcds/q25.sql role-mapped;
+# the repurchase edge keys on the supplier since fixture-scale same-
+# part repurchases are empty). Facts co-partition on the order key;
+# the customer bridge is the one reshuffle. Same text is the oracle.
+register_sql("sql_tpcds_q25", _SQL_TPCDS_Q25_R15)
 
 
 _SQL_TPCDS_Q46_R15 = """
@@ -4895,16 +4370,13 @@ ORDER BY c_name, c_custkey, o_orderkey, amt
 LIMIT 100
 """
 
-@register("sql_tpcds_q46", oracle=_SQL_TPCDS_Q46_R15)
-def sql_tpcds_q46(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q46's text shape — orders whose transaction geography
-    differs from the customer's CURRENT one: an order-grain aggregate
-    subquery joined to the customer dimension with an inequality on the
-    two geography keys (.../tpcds/q46.sql role-mapped: bought/current
-    city -> supplier/customer nation; q68 shares the skeleton). Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q46_R15)
+# TPC-DS Q46's text shape — orders whose transaction geography
+# differs from the customer's CURRENT one: an order-grain aggregate
+# subquery joined to the customer dimension with an inequality on the
+# two geography keys (.../tpcds/q46.sql role-mapped: bought/current
+# city -> supplier/customer nation; q68 shares the skeleton). Same
+# text is the oracle.
+register_sql("sql_tpcds_q46", _SQL_TPCDS_Q46_R15)
 
 
 _SQL_TPCDS_Q64_R15 = """
@@ -4976,17 +4448,14 @@ LIMIT 100
 """
 
 
-@register("sql_tpcds_q64", oracle=_SQL_TPCDS_Q64_R15)
-def sql_tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q64's text shape (core skeleton) — a gated order cohort CTE
-    (sale > 2x refund), per-(item, year) purchase stats over it,
-    consumed TWICE a year apart with the cnt2 <= cnt1 join predicate
-    (.../tpcds/q64.sql role-mapped and reduced to its load-bearing
-    joins; the original's twelve-dimension chain adds lookups, not plan
-    shape). The cohort IN-gate plans as a semi-join on the order key.
-    The oracle keeps the original single text."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q64_ENGINE)
+# TPC-DS Q64's text shape (core skeleton) — a gated order cohort CTE
+# (sale > 2x refund), per-(item, year) purchase stats over it,
+# consumed TWICE a year apart with the cnt2 <= cnt1 join predicate
+# (.../tpcds/q64.sql role-mapped and reduced to its load-bearing
+# joins; the original's twelve-dimension chain adds lookups, not plan
+# shape). The cohort IN-gate plans as a semi-join on the order key.
+# The oracle keeps the original single text.
+register_sql("sql_tpcds_q64", _SQL_TPCDS_Q64_ENGINE, oracle=_SQL_TPCDS_Q64_R15)
 
 
 _SQL_TPCDS_Q76_R15 = """
@@ -5014,15 +4483,12 @@ ORDER BY channel, col_name, dyear
 LIMIT 100
 """
 
-@register("sql_tpcds_q76", oracle=_SQL_TPCDS_Q76_R15)
-def sql_tpcds_q76(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q76's text shape — per-channel counts and sums of rows whose
-    key attribute IS NULL, three channels UNION ALLed then re-grouped
-    (.../tpcds/q76.sql role-mapped; the fixtures carry no natural
-    NULLs, so NULLIF manufactures the null-attribute rows without
-    changing the shape). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q76_R15)
+# TPC-DS Q76's text shape — per-channel counts and sums of rows whose
+# key attribute IS NULL, three channels UNION ALLed then re-grouped
+# (.../tpcds/q76.sql role-mapped; the fixtures carry no natural
+# NULLs, so NULLIF manufactures the null-attribute rows without
+# changing the shape). Same text is the oracle.
+register_sql("sql_tpcds_q76", _SQL_TPCDS_Q76_R15)
 
 
 _SQL_TPCDS_Q84_R15 = """
@@ -5037,15 +4503,12 @@ ORDER BY c_custkey
 LIMIT 100
 """
 
-@register("sql_tpcds_q84", oracle=_SQL_TPCDS_Q84_R15)
-def sql_tpcds_q84(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q84's text shape — a pure dimension-chain customer lookup
-    (customer -> nation -> region) with an account-band filter and
-    concat'd display name (.../tpcds/q84.sql role-mapped: income band
-    -> account-balance band). All broadcast joins; the band filter
-    pushes to the scan. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q84_R15)
+# TPC-DS Q84's text shape — a pure dimension-chain customer lookup
+# (customer -> nation -> region) with an account-band filter and
+# concat'd display name (.../tpcds/q84.sql role-mapped: income band
+# -> account-balance band). All broadcast joins; the band filter
+# pushes to the scan. Same text is the oracle.
+register_sql("sql_tpcds_q84", _SQL_TPCDS_Q84_R15)
 
 
 # ---- r15 twin batch 6 (#70-84): same methodology -------------------
@@ -5066,16 +4529,13 @@ ORDER BY cnt, n_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q6", oracle=_SQL_TPCDS_Q6_R15)
-def sql_tpcds_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q6's text shape — geographies whose customers bought items
-    priced above their category average (correlated scalar AVG over the
-    item dimension) with a HAVING count floor (.../tpcds/q06.sql role-
-    mapped: state -> nation, the 1.2x ratio eased to 1.05x so the
-    fixture-scale price spread yields rows). The per-category averages
-    broadcast. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q6_R15)
+# TPC-DS Q6's text shape — geographies whose customers bought items
+# priced above their category average (correlated scalar AVG over the
+# item dimension) with a HAVING count floor (.../tpcds/q06.sql role-
+# mapped: state -> nation, the 1.2x ratio eased to 1.05x so the
+# fixture-scale price spread yields rows). The per-category averages
+# broadcast. Same text is the oracle.
+register_sql("sql_tpcds_q6", _SQL_TPCDS_Q6_R15)
 
 
 _SQL_TPCDS_Q7_R15 = """
@@ -5100,14 +4560,11 @@ ORDER BY p_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q7", oracle=_SQL_TPCDS_Q7_R15)
-def sql_tpcds_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q7's text shape — the four-average bundle per item under
-    demographic and promo filters (.../tpcds/q07.sql role-mapped;
-    averages in exact cents/basis points; q26 is the catalog sibling
-    registered alongside). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q7_R15)
+# TPC-DS Q7's text shape — the four-average bundle per item under
+# demographic and promo filters (.../tpcds/q07.sql role-mapped;
+# averages in exact cents/basis points; q26 is the catalog sibling
+# registered alongside). Same text is the oracle.
+register_sql("sql_tpcds_q7", _SQL_TPCDS_Q7_R15)
 
 
 _SQL_TPCDS_Q10_R15 = """
@@ -5132,15 +4589,12 @@ ORDER BY c_mktsegment, n_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q10", oracle=_SQL_TPCDS_Q10_R15)
-def sql_tpcds_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q10's text shape — demographic counts for customers active
-    in a quarter whose activity also shows in either secondary channel:
-    EXISTS + (EXISTS OR EXISTS) gates then a grouped count
-    (.../tpcds/q10.sql role-mapped; q69 is the NOT-EXISTS variant).
-    Plans as chained semi-joins. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q10_R15)
+# TPC-DS Q10's text shape — demographic counts for customers active
+# in a quarter whose activity also shows in either secondary channel:
+# EXISTS + (EXISTS OR EXISTS) gates then a grouped count
+# (.../tpcds/q10.sql role-mapped; q69 is the NOT-EXISTS variant).
+# Plans as chained semi-joins. Same text is the oracle.
+register_sql("sql_tpcds_q10", _SQL_TPCDS_Q10_R15)
 
 
 _SQL_TPCDS_Q18_R15 = """
@@ -5162,14 +4616,11 @@ ORDER BY n_name, c_mktsegment
 LIMIT 100
 """
 
-@register("sql_tpcds_q18", oracle=_SQL_TPCDS_Q18_R15)
-def sql_tpcds_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q18's text shape — the average bundle over a
-    geography/demographic ROLLUP (.../tpcds/q18.sql role-mapped: the
-    decimal-cast averages replayed in exact integer cents). Same text
-    is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q18_R15)
+# TPC-DS Q18's text shape — the average bundle over a
+# geography/demographic ROLLUP (.../tpcds/q18.sql role-mapped: the
+# decimal-cast averages replayed in exact integer cents). Same text
+# is the oracle.
+register_sql("sql_tpcds_q18", _SQL_TPCDS_Q18_R15)
 
 
 _SQL_TPCDS_Q19_R15 = """
@@ -5189,14 +4640,11 @@ ORDER BY ext_price DESC, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q19", oracle=_SQL_TPCDS_Q19_R15)
-def sql_tpcds_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q19's text shape — brand revenue where the selling geography
-    differs from the buyer's (the store-zip <> customer-zip predicate;
-    .../tpcds/q19.sql role-mapped to supplier vs customer nation). Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q19_R15)
+# TPC-DS Q19's text shape — brand revenue where the selling geography
+# differs from the buyer's (the store-zip <> customer-zip predicate;
+# .../tpcds/q19.sql role-mapped to supplier vs customer nation). Same
+# text is the oracle.
+register_sql("sql_tpcds_q19", _SQL_TPCDS_Q19_R15)
 
 
 _SQL_TPCDS_Q20_R15 = """
@@ -5216,13 +4664,10 @@ ORDER BY p_type, revenueratio, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q20", oracle=_SQL_TPCDS_Q20_R15)
-def sql_tpcds_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q20's text shape — Q12's catalog sibling: per-item revenue
-    with its class-share ratio via a window sum over a 30-day window
-    (.../tpcds/q20.sql role-mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q20_R15)
+# TPC-DS Q20's text shape — Q12's catalog sibling: per-item revenue
+# with its class-share ratio via a window sum over a 30-day window
+# (.../tpcds/q20.sql role-mapped). Same text is the oracle.
+register_sql("sql_tpcds_q20", _SQL_TPCDS_Q20_R15)
 
 
 _SQL_TPCDS_Q26_R15 = """
@@ -5247,13 +4692,10 @@ ORDER BY p_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q26", oracle=_SQL_TPCDS_Q26_R15)
-def sql_tpcds_q26(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q26's text shape — Q7's catalog sibling: the same four-
-    average bundle on the other channel slice (.../tpcds/q26.sql role-
-    mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q26_R15)
+# TPC-DS Q26's text shape — Q7's catalog sibling: the same four-
+# average bundle on the other channel slice (.../tpcds/q26.sql role-
+# mapped). Same text is the oracle.
+register_sql("sql_tpcds_q26", _SQL_TPCDS_Q26_R15)
 
 
 _SQL_TPCDS_Q29_R15 = """
@@ -5279,13 +4721,10 @@ ORDER BY p_brand, s_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q29", oracle=_SQL_TPCDS_Q29_R15)
-def sql_tpcds_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q29's text shape — Q25's SUM-statistics sibling over the
-    sale/return/repurchase three-role join (.../tpcds/q29.sql role-
-    mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q29_R15)
+# TPC-DS Q29's text shape — Q25's SUM-statistics sibling over the
+# sale/return/repurchase three-role join (.../tpcds/q29.sql role-
+# mapped). Same text is the oracle.
+register_sql("sql_tpcds_q29", _SQL_TPCDS_Q29_R15)
 
 
 _SQL_TPCDS_Q32_R15 = """
@@ -5305,14 +4744,11 @@ WHERE i.p_size = 27
 LIMIT 100
 """
 
-@register("sql_tpcds_q32", oracle=_SQL_TPCDS_Q32_R15)
-def sql_tpcds_q32(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q32's text shape — 'excess discount' with a dimension gate:
-    sum of discount amounts above 1.3x the item's windowed average via
-    a correlated scalar AVG (.../tpcds/q32.sql role-mapped; Q92's
-    catalog sibling). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q32_R15)
+# TPC-DS Q32's text shape — 'excess discount' with a dimension gate:
+# sum of discount amounts above 1.3x the item's windowed average via
+# a correlated scalar AVG (.../tpcds/q32.sql role-mapped; Q92's
+# catalog sibling). Same text is the oracle.
+register_sql("sql_tpcds_q32", _SQL_TPCDS_Q32_R15)
 
 
 _SQL_TPCDS_Q42_R15 = """
@@ -5329,14 +4765,11 @@ ORDER BY sum_price DESC, dyear, p_type
 LIMIT 100
 """
 
-@register("sql_tpcds_q42", oracle=_SQL_TPCDS_Q42_R15)
-def sql_tpcds_q42(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q42's text shape — the plain (year, category) revenue group-
-    by for one month (.../tpcds/q42.sql role-mapped; the simplest
-    dimensional rollup family, with q52/q55 registered alongside). Same
-    text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q42_R15)
+# TPC-DS Q42's text shape — the plain (year, category) revenue group-
+# by for one month (.../tpcds/q42.sql role-mapped; the simplest
+# dimensional rollup family, with q52/q55 registered alongside). Same
+# text is the oracle.
+register_sql("sql_tpcds_q42", _SQL_TPCDS_Q42_R15)
 
 
 _SQL_TPCDS_Q50_R15 = """
@@ -5367,13 +4800,10 @@ ORDER BY s_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q50", oracle=_SQL_TPCDS_Q50_R15)
-def sql_tpcds_q50(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q50's text shape — Q99's per-store sibling: ship-lag
-    histogram columns per store restricted to returned items
-    (.../tpcds/q50.sql role-mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q50_R15)
+# TPC-DS Q50's text shape — Q99's per-store sibling: ship-lag
+# histogram columns per store restricted to returned items
+# (.../tpcds/q50.sql role-mapped). Same text is the oracle.
+register_sql("sql_tpcds_q50", _SQL_TPCDS_Q50_R15)
 
 
 _SQL_TPCDS_Q52_R15 = """
@@ -5390,12 +4820,9 @@ ORDER BY dyear, ext_price DESC, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q52", oracle=_SQL_TPCDS_Q52_R15)
-def sql_tpcds_q52(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q52's text shape — Q42's brand sibling (.../tpcds/q52.sql
-    role-mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q52_R15)
+# TPC-DS Q52's text shape — Q42's brand sibling (.../tpcds/q52.sql
+# role-mapped). Same text is the oracle.
+register_sql("sql_tpcds_q52", _SQL_TPCDS_Q52_R15)
 
 
 _SQL_TPCDS_Q55_R15 = """
@@ -5412,13 +4839,10 @@ ORDER BY ext_price DESC, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q55", oracle=_SQL_TPCDS_Q55_R15)
-def sql_tpcds_q55(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q55's text shape — one-month brand revenue, the minimal
-    dimensional group-by (.../tpcds/q55.sql role-mapped). Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q55_R15)
+# TPC-DS Q55's text shape — one-month brand revenue, the minimal
+# dimensional group-by (.../tpcds/q55.sql role-mapped). Same text is
+# the oracle.
+register_sql("sql_tpcds_q55", _SQL_TPCDS_Q55_R15)
 
 
 _SQL_TPCDS_Q56_R15 = """
@@ -5458,14 +4882,11 @@ ORDER BY total_sales, p_name
 LIMIT 100
 """
 
-@register("sql_tpcds_q56", oracle=_SQL_TPCDS_Q56_R15)
-def sql_tpcds_q56(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q56's text shape — Q33's sibling with the item set drawn
-    from an attribute subquery (small sizes instead of a category;
-    .../tpcds/q56.sql role-mapped; q60 is the third sibling, registered
-    in batch 7). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q56_R15)
+# TPC-DS Q56's text shape — Q33's sibling with the item set drawn
+# from an attribute subquery (small sizes instead of a category;
+# .../tpcds/q56.sql role-mapped; q60 is the third sibling, registered
+# in batch 7). Same text is the oracle.
+register_sql("sql_tpcds_q56", _SQL_TPCDS_Q56_R15)
 
 
 _SQL_TPCDS_Q57_R15 = """
@@ -5512,16 +4933,13 @@ ORDER BY s_name, p_brand, dyear, dmoy
 LIMIT 100
 """
 
-@register("sql_tpcds_q57", oracle=_SQL_TPCDS_Q57_R15)
-def sql_tpcds_q57(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q57's text shape — monthly (supplier, brand) sums vs the
-    yearly window average with SELF-JOINED lag/lead neighbors via rank
-    arithmetic (v1 joined to itself at rn±1), deviation-filtered
-    (.../tpcds/q57.sql role-mapped: call center -> supplier; Q47's
-    sibling). The rank self-joins co-partition on (supplier, brand).
-    Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q57_R15)
+# TPC-DS Q57's text shape — monthly (supplier, brand) sums vs the
+# yearly window average with SELF-JOINED lag/lead neighbors via rank
+# arithmetic (v1 joined to itself at rn±1), deviation-filtered
+# (.../tpcds/q57.sql role-mapped: call center -> supplier; Q47's
+# sibling). The rank self-joins co-partition on (supplier, brand).
+# Same text is the oracle.
+register_sql("sql_tpcds_q57", _SQL_TPCDS_Q57_R15)
 
 
 # ---- r15 twin batch 7 (#85-99): completes the program --------------
@@ -5562,13 +4980,10 @@ ORDER BY p_brand, total_sales
 LIMIT 100
 """
 
-@register("sql_tpcds_q60", oracle=_SQL_TPCDS_Q60_R15)
-def sql_tpcds_q60(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q60's text shape — the third q33-family channel union, its
-    item set drawn from a category subquery (.../tpcds/q60.sql role-
-    mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q60_R15)
+# TPC-DS Q60's text shape — the third q33-family channel union, its
+# item set drawn from a category subquery (.../tpcds/q60.sql role-
+# mapped). Same text is the oracle.
+register_sql("sql_tpcds_q60", _SQL_TPCDS_Q60_R15)
 
 
 _SQL_TPCDS_Q62_R15 = """
@@ -5594,14 +5009,11 @@ ORDER BY n_name, o_orderpriority
 LIMIT 100
 """
 
-@register("sql_tpcds_q62", oracle=_SQL_TPCDS_Q62_R15)
-def sql_tpcds_q62(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q62's text shape — ship-lag buckets by (geography, ship-
-    mode) — the q99 family's web member (.../tpcds/q62.sql role-mapped:
-    warehouse/web site -> supplier nation/order priority). Same text is
-    the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q62_R15)
+# TPC-DS Q62's text shape — ship-lag buckets by (geography, ship-
+# mode) — the q99 family's web member (.../tpcds/q62.sql role-mapped:
+# warehouse/web site -> supplier nation/order priority). Same text is
+# the oracle.
+register_sql("sql_tpcds_q62", _SQL_TPCDS_Q62_R15)
 
 
 _SQL_TPCDS_Q63_R15 = """
@@ -5622,13 +5034,10 @@ ORDER BY avg_monthly_sales, sum_sales, p_type
 LIMIT 100
 """
 
-@register("sql_tpcds_q63", oracle=_SQL_TPCDS_Q63_R15)
-def sql_tpcds_q63(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q63's text shape — the q53-family manager-level monthly
-    deviation filter (.../tpcds/q63.sql role-mapped). Same text is the
-    oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q63_R15)
+# TPC-DS Q63's text shape — the q53-family manager-level monthly
+# deviation filter (.../tpcds/q63.sql role-mapped). Same text is the
+# oracle.
+register_sql("sql_tpcds_q63", _SQL_TPCDS_Q63_R15)
 
 
 _SQL_TPCDS_Q65_R15 = """
@@ -5657,16 +5066,13 @@ ORDER BY s_name, p_name, sc.revenue
 LIMIT 100
 """
 
-@register("sql_tpcds_q65", oracle=_SQL_TPCDS_Q65_R15)
-def sql_tpcds_q65(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q65's text shape — stores' lowest-revenue items: a per-store
-    average-of-item-revenue subquery joined against per-(store, item)
-    revenue with the 10% threshold (.../tpcds/q65.sql role-mapped; the
-    SQL-text twin of the long-standing tpcds_q65_adapted DataFrame
-    row). Both aggregates shuffle on the store key and co-partition.
-    Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q65_R15)
+# TPC-DS Q65's text shape — stores' lowest-revenue items: a per-store
+# average-of-item-revenue subquery joined against per-(store, item)
+# revenue with the 10% threshold (.../tpcds/q65.sql role-mapped; the
+# SQL-text twin of the long-standing tpcds_q65_adapted DataFrame
+# row). Both aggregates shuffle on the store key and co-partition.
+# Same text is the oracle.
+register_sql("sql_tpcds_q65", _SQL_TPCDS_Q65_R15)
 
 
 _SQL_TPCDS_Q68_R15 = """
@@ -5685,17 +5091,14 @@ FROM (SELECT o_orderkey, o_custkey,
       GROUP BY o_orderkey, o_custkey, s_nationkey) dn
 JOIN customer ON o_custkey = c_custkey
 WHERE c_nationkey <> ship_nation
-ORDER BY c_name, c_custkey, o_orderkey
+ORDER BY c_name, c_custkey, o_orderkey, ship_nation
 LIMIT 100
 """
 
-@register("sql_tpcds_q68", oracle=_SQL_TPCDS_Q68_R15)
-def sql_tpcds_q68(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q68's text shape — Q46's two-sum sibling (extended price +
-    tax per order, geography-mismatch filter; .../tpcds/q68.sql role-
-    mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q68_R15)
+# TPC-DS Q68's text shape — Q46's two-sum sibling (extended price +
+# tax per order, geography-mismatch filter; .../tpcds/q68.sql role-
+# mapped). Same text is the oracle.
+register_sql("sql_tpcds_q68", _SQL_TPCDS_Q68_R15)
 
 
 _SQL_TPCDS_Q69_R15 = """
@@ -5717,13 +5120,10 @@ ORDER BY c_mktsegment
 LIMIT 100
 """
 
-@register("sql_tpcds_q69", oracle=_SQL_TPCDS_Q69_R15)
-def sql_tpcds_q69(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q69's text shape — Q35's NOT-EXISTS sibling: one EXISTS gate
-    and two NOT EXISTS gates (anti-joins) before the demographic count
-    (.../tpcds/q69.sql role-mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q69_R15)
+# TPC-DS Q69's text shape — Q35's NOT-EXISTS sibling: one EXISTS gate
+# and two NOT EXISTS gates (anti-joins) before the demographic count
+# (.../tpcds/q69.sql role-mapped). Same text is the oracle.
+register_sql("sql_tpcds_q69", _SQL_TPCDS_Q69_R15)
 
 
 _SQL_TPCDS_Q72_R15 = """
@@ -5744,17 +5144,14 @@ ORDER BY no_promo DESC, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q72", oracle=_SQL_TPCDS_Q72_R15)
-def sql_tpcds_q72(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q72's text shape — the date-OFFSET self-join: each sale
-    joined to later shipments of the same item within a 5-day horizon
-    having less quantity (inventory-short proxy), counted per brand
-    (.../tpcds/q72.sql role-mapped: inventory -> the lineitem self-
-    slice; the original's d1.d_date < d3.d_date + 5 days offset join is
-    the load-bearing shape). Bounded by the one-month window; co-
-    partitions on the item key. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q72_R15)
+# TPC-DS Q72's text shape — the date-OFFSET self-join: each sale
+# joined to later shipments of the same item within a 5-day horizon
+# having less quantity (inventory-short proxy), counted per brand
+# (.../tpcds/q72.sql role-mapped: inventory -> the lineitem self-
+# slice; the original's d1.d_date < d3.d_date + 5 days offset join is
+# the load-bearing shape). Bounded by the one-month window; co-
+# partitions on the item key. Same text is the oracle.
+register_sql("sql_tpcds_q72", _SQL_TPCDS_Q72_R15)
 
 
 _SQL_TPCDS_Q73_R15 = """
@@ -5769,14 +5166,11 @@ ORDER BY cnt DESC, c_name, c_custkey, dj.o_orderkey
 LIMIT 100
 """
 
-@register("sql_tpcds_q73", oracle=_SQL_TPCDS_Q73_R15)
-def sql_tpcds_q73(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q73's text shape — customers whose orders fall in a line-
-    count band: order-grain HAVING count BETWEEN, joined to the
-    customer dimension (.../tpcds/q73.sql role-mapped; q79's sibling
-    registered alongside). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q73_R15)
+# TPC-DS Q73's text shape — customers whose orders fall in a line-
+# count band: order-grain HAVING count BETWEEN, joined to the
+# customer dimension (.../tpcds/q73.sql role-mapped; q79's sibling
+# registered alongside). Same text is the oracle.
+register_sql("sql_tpcds_q73", _SQL_TPCDS_Q73_R15)
 
 
 _SQL_TPCDS_Q74_R15 = """
@@ -5802,13 +5196,10 @@ ORDER BY 1
 LIMIT 100
 """
 
-@register("sql_tpcds_q74", oracle=_SQL_TPCDS_Q74_R15)
-def sql_tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q74's text shape — Q11's quantity-metric sibling: the
-    year_total CTE consumed twice a year apart with the ratio threshold
-    (.../tpcds/q74.sql role-mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q74_R15)
+# TPC-DS Q74's text shape — Q11's quantity-metric sibling: the
+# year_total CTE consumed twice a year apart with the ratio threshold
+# (.../tpcds/q74.sql role-mapped). Same text is the oracle.
+register_sql("sql_tpcds_q74", _SQL_TPCDS_Q74_R15)
 
 
 _SQL_TPCDS_Q79_R15 = """
@@ -5829,13 +5220,10 @@ ORDER BY c_name, sub.o_orderkey, sub.amt
 LIMIT 100
 """
 
-@register("sql_tpcds_q79", oracle=_SQL_TPCDS_Q79_R15)
-def sql_tpcds_q79(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q79's text shape — per-(customer, order) discount and net-
-    paid sums over high-line-count urgent orders (.../tpcds/q79.sql
-    role-mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q79_R15)
+# TPC-DS Q79's text shape — per-(customer, order) discount and net-
+# paid sums over high-line-count urgent orders (.../tpcds/q79.sql
+# role-mapped). Same text is the oracle.
+register_sql("sql_tpcds_q79", _SQL_TPCDS_Q79_R15)
 
 
 _SQL_TPCDS_Q81_R15 = """
@@ -5861,13 +5249,10 @@ ORDER BY c_custkey, c_name, ctr_total_return
 LIMIT 100
 """
 
-@register("sql_tpcds_q81", oracle=_SQL_TPCDS_Q81_R15)
-def sql_tpcds_q81(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q81's text shape — Q30's catalog sibling: the 1.2x-per-
-    state-average correlated gate over the other return slice
-    (.../tpcds/q81.sql role-mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q81_R15)
+# TPC-DS Q81's text shape — Q30's catalog sibling: the 1.2x-per-
+# state-average correlated gate over the other return slice
+# (.../tpcds/q81.sql role-mapped). Same text is the oracle.
+register_sql("sql_tpcds_q81", _SQL_TPCDS_Q81_R15)
 
 
 _SQL_TPCDS_Q82_R15 = """
@@ -5882,13 +5267,10 @@ ORDER BY p_name, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q82", oracle=_SQL_TPCDS_Q82_R15)
-def sql_tpcds_q82(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q82's text shape — Q37's sibling on a different retail-price
-    band and window (.../tpcds/q82.sql role-mapped to the fixture's
-    900-1000 price range). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q82_R15)
+# TPC-DS Q82's text shape — Q37's sibling on a different retail-price
+# band and window (.../tpcds/q82.sql role-mapped to the fixture's
+# 900-1000 price range). Same text is the oracle.
+register_sql("sql_tpcds_q82", _SQL_TPCDS_Q82_R15)
 
 
 _SQL_TPCDS_Q86_R15 = """
@@ -5911,14 +5293,11 @@ ORDER BY lochierarchy DESC,
 LIMIT 100
 """
 
-@register("sql_tpcds_q86", oracle=_SQL_TPCDS_Q86_R15)
-def sql_tpcds_q86(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q86's text shape — Q70's item-hierarchy sibling: ROLLUP
-    (category, brand) with RANK() OVER (PARTITION BY
-    grouping()+grouping()) rank-within-parent (.../tpcds/q86.sql role-
-    mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q86_R15)
+# TPC-DS Q86's text shape — Q70's item-hierarchy sibling: ROLLUP
+# (category, brand) with RANK() OVER (PARTITION BY
+# grouping()+grouping()) rank-within-parent (.../tpcds/q86.sql role-
+# mapped). Same text is the oracle.
+register_sql("sql_tpcds_q86", _SQL_TPCDS_Q86_R15)
 
 
 _SQL_TPCDS_Q89_R15 = """
@@ -5943,13 +5322,10 @@ ORDER BY sum_sales - avg_monthly_sales, p_type, p_brand, dmoy
 LIMIT 100
 """
 
-@register("sql_tpcds_q89", oracle=_SQL_TPCDS_Q89_R15)
-def sql_tpcds_q89(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q89's text shape — the q53 family's absolute-deviation
-    member over (category, brand, month), ordered by the signed
-    deviation (.../tpcds/q89.sql role-mapped). Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q89_R15)
+# TPC-DS Q89's text shape — the q53 family's absolute-deviation
+# member over (category, brand, month), ordered by the signed
+# deviation (.../tpcds/q89.sql role-mapped). Same text is the oracle.
+register_sql("sql_tpcds_q89", _SQL_TPCDS_Q89_R15)
 
 
 _SQL_TPCDS_Q98_R15 = """
@@ -5970,14 +5346,11 @@ ORDER BY p_type, revenueratio, p_brand
 LIMIT 100
 """
 
-@register("sql_tpcds_q98", oracle=_SQL_TPCDS_Q98_R15)
-def sql_tpcds_q98(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-DS Q98's text shape — the q12 family's store member (class-
-    share window ratio; .../tpcds/q98.sql role-mapped). Completes the
-    twin program: all 99 TPC-DS query texts now have same-text DuckDB-
-    oracle twins. Same text is the oracle."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_TPCDS_Q98_R15)
+# TPC-DS Q98's text shape — the q12 family's store member (class-
+# share window ratio; .../tpcds/q98.sql role-mapped). Completes the
+# twin program: all 99 TPC-DS query texts now have same-text DuckDB-
+# oracle twins. Same text is the oracle.
+register_sql("sql_tpcds_q98", _SQL_TPCDS_Q98_R15)
 
 
 _SQL_CONTAINER_JSON_R17 = """
@@ -6014,18 +5387,19 @@ ORDER BY lang
 """
 
 
-@register("sql_container_json", oracle=_SQL_CONTAINER_JSON_ORACLE)
-def sql_container_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r17 container surface over documents: CAST(array/map AS JSON)
-    in the reference's canonical writer form (rows of aggregates ->
-    JSON arrays, map keys sorted by serialized text — JsonUtil
-    JsonGeneratorWriter), json_array_get with a negative
-    count-from-end index, BIGINT json_array_length / cardinality
-    (JsonFunctions.java:375, jsonArrayLength). The DuckDB oracle
-    spells the expected canonical TEXT with string concatenation —
-    its native JSON rendering differs in key order."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_CONTAINER_JSON_R17)
+# r17 container surface over documents: CAST(array/map AS JSON)
+# in the reference's canonical writer form (rows of aggregates ->
+# JSON arrays, map keys sorted by serialized text — JsonUtil
+# JsonGeneratorWriter), json_array_get with a negative
+# count-from-end index, BIGINT json_array_length / cardinality
+# (JsonFunctions.java:375, jsonArrayLength). The DuckDB oracle
+# spells the expected canonical TEXT with string concatenation —
+# its native JSON rendering differs in key order.
+register_sql(
+    "sql_container_json",
+    _SQL_CONTAINER_JSON_R17,
+    oracle=_SQL_CONTAINER_JSON_ORACLE,
+)
 
 
 _SQL_IP_OPS_R17 = """
@@ -6052,13 +5426,10 @@ ORDER BY c_nationkey
 """
 
 
-@register("sql_ip_address_ops", oracle=_SQL_IP_OPS_ORACLE)
-def sql_ip_address_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r17 IPADDRESS operator surface over customer: runtime
-    varchar->IPADDRESS casts canonicalize (IpAddressOperators
-    castFromVarchar/castToVarchar), and ordering comparisons ride
-    the 16-byte address form (ip_sort_key), which for these v4
-    addresses agrees with the numeric third octet — exactly what
-    the DuckDB oracle computes arithmetically."""
-    register_views(spark, sf_dir)
-    return run_sql(spark, _SQL_IP_OPS_R17)
+# r17 IPADDRESS operator surface over customer: runtime
+# varchar->IPADDRESS casts canonicalize (IpAddressOperators
+# castFromVarchar/castToVarchar), and ordering comparisons ride
+# the 16-byte address form (ip_sort_key), which for these v4
+# addresses agrees with the numeric third octet — exactly what
+# the DuckDB oracle computes arithmetically.
+register_sql("sql_ip_address_ops", _SQL_IP_OPS_R17, oracle=_SQL_IP_OPS_ORACLE)

@@ -40,7 +40,7 @@ from presto_0_235_spark.functions.compat import (
     oracle_dec_sum,
 )
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults, local_rows
+from presto_0_235_spark.session import local_rows
 
 
 def _fact_dims(spark: SparkSession, sf_dir: str):
@@ -74,7 +74,6 @@ def tpcds_q3_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape is the TPC-DS signature: fact scan with two dim hash joins
     (both dims filter-reduced, so the size-based planner broadcasts
     them), two-phase agg, TakeOrderedAndProject."""
-    ensure_session_defaults(spark)
     li, orders, part = _fact_dims(spark, sf_dir)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -119,7 +118,6 @@ def tpcds_q7_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjunction for the p_channel OR, year(o_orderdate) = 2000 for
     d_year. All four AVGs route through the fixed-point hop so the
     hash comparison is exact."""
-    ensure_session_defaults(spark)
     li, orders, part = _fact_dims(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     return (
@@ -172,7 +170,6 @@ def tpcds_q19_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality cannot be a join key, so it must plan as a residual
     filter on the joined row — the same JoinFilterFunction shape the
     reference compiles."""
-    ensure_session_defaults(spark)
     li, orders, part = _fact_dims(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     supp = load_table(spark, sf_dir, "supplier")
@@ -245,7 +242,6 @@ def tpcds_q33_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent too. Plan: three branch aggregations feeding a
     Union, one final hash agg — the reference's
     exchange-under-union shape."""
-    ensure_session_defaults(spark)
     li, orders, part = _fact_dims(spark, sf_dir)
     promo_brands = (
         part.filter(F.col("p_type") == "PROMO").select("p_brand").distinct()
@@ -315,7 +311,6 @@ def tpcds_q36_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     category, p_brand the class. Both margin components go through
     the fixed-point hop and the rank's ORDER BY carries a total
     tiebreak, so ranks are deterministic on both engines."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     li, orders, part = _fact_dims(spark, sf_dir)
@@ -385,7 +380,6 @@ def tpcds_q42_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     one year (d_moy = 11, d_year = 2000), ORDER BY revenue DESC
     first — the top-categories variant of the q3 star. p_type plays
     i_category, p_size < 15 the i_manager_id selector."""
-    ensure_session_defaults(spark)
     li, orders, part = _fact_dims(spark, sf_dir)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -429,7 +423,6 @@ def tpcds_q52_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     year — q3's sibling with the year pinned and ORDER BY year,
     revenue DESC, brand. p_type = 'STANDARD' plays the
     i_manager_id = 1 selector."""
-    ensure_session_defaults(spark)
     li, orders, part = _fact_dims(spark, sf_dir)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -491,7 +484,6 @@ def tpcds_q1_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + broadcast-size join instead of a per-row subquery.
     The second-level average re-scales the (exact-grid) totals to
     longs so it is order-independent too."""
-    ensure_session_defaults(spark)
     li, orders, _ = _fact_dims(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     ctr = (
@@ -551,7 +543,6 @@ def tpcds_q48_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier nation sets x discount bands. The predicate cannot be
     pushed into either dimension alone — it must evaluate on the
     joined row, like the reference's residual filter."""
-    ensure_session_defaults(spark)
     li, orders, _ = _fact_dims(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     supp = load_table(spark, sf_dir, "supplier")
@@ -636,7 +627,6 @@ def tpcds_q51_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     date axis is order month. Running money sums accumulate scaled
     longs (exact, order-independent) and convert to double once per
     row."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     li, orders, part = _fact_dims(spark, sf_dir)
@@ -732,7 +722,6 @@ def tpcds_q88_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row cartesians, the one place a cross join is exactly
     right). Fixture roles: quantity bands x order-priority sets play
     the time-of-day x household-demographics bands."""
-    ensure_session_defaults(spark)
     li, orders, _ = _fact_dims(spark, sf_dir)
     joined = li.join(orders, li.l_orderkey == orders.o_orderkey).filter(
         F.col("l_returnflag") == "N"
@@ -779,7 +768,6 @@ def tpcds_q34_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature is aggregate -> filter-on-aggregate -> dimension
     join, with the count band applied AFTER aggregation (not
     pushable)."""
-    ensure_session_defaults(spark)
     li, orders, _ = _fact_dims(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer")
     dn = (
@@ -846,7 +834,6 @@ def tpcds_q97_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-aggregate CTEs feeding a full-outer set comparison
     whose NULL-ness encodes set membership. Fixture channels are
     the urgent/non-urgent order-priority split."""
-    ensure_session_defaults(spark)
     li, orders, _ = _fact_dims(spark, sf_dir)
     base = li.join(orders, li.l_orderkey == orders.o_orderkey).filter(
         F.year("o_orderdate").between(1996, 1997)
@@ -914,7 +901,6 @@ def tpcds_q38_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT chain to left-semi joins over the deduped sets — no
     row explosion at any scale; the count is a single-row final
     agg."""
-    ensure_session_defaults(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
 
@@ -981,7 +967,6 @@ def tpcds_q65_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     side); supplier/part joins broadcast; TakeOrderedAndProject caps
     the output. The revenue-vs-average comparison runs on exact
     decimal-hopped doubles, so both engines branch identically."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     part = load_table(spark, sf_dir, "part")
@@ -1065,7 +1050,6 @@ def tpcds_q75_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_sales is persisted so the 100 TB fact chain is scanned and
     aggregated ONCE; without it Catalyst prunes the two self-join
     sides differently and re-runs the whole chain per side."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -1181,7 +1165,6 @@ def tpcds_q17_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single-row groups: Spark yields NaN for stddev_samp(n=1) where
     ANSI engines yield NULL — normalized to NULL, matching the
     reference (VarianceAggregation.java output for count < 2)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -1279,7 +1262,6 @@ def tpcds_q93_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-agg is the only further exchange; TakeOrderedAndProject caps
     output. Netting can push a customer negative — kept, as the
     reference keeps negative actuals."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     returns_agg = (
@@ -1370,7 +1352,6 @@ def tpcds_q31_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines branch identically. Each channel aggregate feeds THREE
     join instances, so both are persisted — otherwise Catalyst
     re-runs the 100 TB fact chain once per instance (six scans)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -1485,7 +1466,6 @@ def tpcds_q47_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviation comparison branches identically on both engines —
     a plain window avg of doubles is summation-order-dependent and
     flips knife-edge rows."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1588,7 +1568,6 @@ def tpcds_q49_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ratios are exact-integer divisions (quantities and scaled
     amounts), so ranks are deterministic; rank ties break on the
     item key inside the ORDER BY."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1675,7 +1654,6 @@ def tpcds_q66_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     has one fact). The signature is the WIDTH: 13 independent
     conditional aggregates evaluated in a single grouped pass —
     one shuffle, every sum through the exact decimal hop."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     amt_s = F.round(F.col("l_extendedprice") * 10000).cast("bigint")
@@ -1748,7 +1726,6 @@ def tpcds_q23_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     final restriction is two semi joins with broadcast-able build
     sides; the scalar max is a single-row cross join. The threshold
     comparison runs on exact scaled integers."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     lo = li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -1821,7 +1798,6 @@ def tpcds_q32_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one global aggregate. Plan: one shuffle on l_partkey feeds
     the threshold aggregate; the join back is aggregate-vs-detail
     on the same key."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     amounts = (
@@ -1883,7 +1859,6 @@ def tpcds_q43_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod 7 — Spark's dayofweek() and DuckDB's dayofweek() number
     days differently, so the oracle-exact formulation avoids both).
     One shuffle; every sum through the exact decimal hop."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -1946,7 +1921,6 @@ def tpcds_q50_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sold-vs-returned date pair -> order date vs ship date of
     'R'-flagged lineitems. Integer day differences into CASE bands —
     five conditional counts in one grouped pass, engine-exact."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -2000,7 +1974,6 @@ def tpcds_q90_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     demographics grouping -> event_type. The ratio is an
     exact-integer division; hour() runs in the session's pinned UTC
     on both engines."""
-    ensure_session_defaults(spark)
     events = load_table(spark, sf_dir, "events")
     am = F.sum(F.when(F.hour("ts") < 12, 1).otherwise(0))
     pm = F.sum(F.when(F.hour("ts") >= 12, 1).otherwise(0))
@@ -2042,7 +2015,6 @@ def tpcds_q87_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     roles as q38: channels -> priority bands, the distinct key ->
     (c_name, year). Spark lowers each EXCEPT to a left-anti join
     over the deduped sets."""
-    ensure_session_defaults(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
 
@@ -2095,7 +2067,6 @@ def tpcds_q45_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference applies (TransformExistsApplyToLateralNode ->
     marker-join). Fixture roles: ca_zip list -> nation keys, the
     i_item_id subquery -> p_size-selected parts."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -2167,7 +2138,6 @@ def tpcds_q58_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     band arithmetic runs on exact scaled integers cast to double
     identically on both engines. Plan: one fact shuffle builds the
     channel aggregate; the three-way join runs on the tiny aggregate."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     ch = (
@@ -2250,7 +2220,6 @@ def tpcds_q98_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     division is engine-identical. Plan: one shuffle for the
     aggregate, one window exchange on the class key — both over the
     aggregate's cardinality, not the fact's."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -2310,7 +2279,6 @@ def tpcds_q95_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     'R'-flag rows. Plan: both membership sets aggregate on
     l_orderkey (one shuffle each), then two left-semi joins against
     the orders scan — never a fan-out join."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     multi_supp = (
@@ -2383,7 +2351,6 @@ def tpcds_q39_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation would flip rows between engines; at extreme scale
     the products need decimal(38) headroom, noted). Means surface
     as exact-integer ratios."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("bigint")
     stats = (
@@ -2474,7 +2441,6 @@ def tpcds_q59_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     year-over-year join runs on the (supplier, week) aggregate,
     persisted so the 100 TB fact chain is scanned once for both
     self-join sides."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -2563,7 +2529,6 @@ def tpcds_q41_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     STANDARD/...), the outer manufact-id range -> a p_retailprice
     band. No fact table at all — the whole query runs
     on the (broadcastable) dimension."""
-    ensure_session_defaults(spark)
     part = load_table(spark, sf_dir, "part")
     hit = (
         (F.col("p_type").like("%ECO%") & F.col("p_size").between(5, 20))
@@ -2637,7 +2602,6 @@ def tpcds_q78_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LIMIT order closes over the unique customer key. Plan: the
     anti filter shuffles on the same (orderkey, partkey) key as the
     returns aggregate; the channel pivot is one grouped pass."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     returned = (
@@ -2716,7 +2680,6 @@ def tpcds_q30_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     average divides two exact numbers — the 1.2x comparison branches
     identically. Plan: one shuffle builds the per-customer table;
     the state average aggregates THAT (tiny) and broadcasts back."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -2811,7 +2774,6 @@ def tpcds_q70_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-broken deterministically. Plan: the top-k subquery runs over
     the nation aggregate (25 rows); its result semi-join-filters the
     detail before the rollup."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -2907,7 +2869,6 @@ def tpcds_q5_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     profit -> extendedprice x (1-discount) for sales and the
     negated discount amount for returns. Conditional scaled-integer
     sums + grouping() totals — engine-exact."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     is_r = F.col("l_returnflag") == "R"
@@ -2969,7 +2930,6 @@ def tpcds_q22_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal hop at EVERY grouping level, so ordering by the average
     is deterministic; the LIMIT closes over the full NULLS FIRST
     hierarchy ordering."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     return (
@@ -3052,7 +3012,6 @@ def tpcds_q11_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact) and feeds FOUR join instances, so it is persisted — one
     fact scan builds it, and all four instances broadcast or
     co-partition off the cached aggregate."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     yt = (
@@ -3145,7 +3104,6 @@ def tpcds_q74_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     against 0). The average is a single division of an exact integer
     sum by a count — identical IEEE doubles on both engines. Same
     persist-the-CTE plan note as q11."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     yt = (
@@ -3248,7 +3206,6 @@ def tpcds_q89_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviation ORDER BY carries full tiebreaks under the LIMIT."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -3335,7 +3292,6 @@ def tpcds_q92_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact: discounts ride scaled bigints; the threshold is one
     division. Plan: thresholds is item-sized (broadcastable); the
     brand list prunes the probe early."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -3406,7 +3362,6 @@ def tpcds_q27_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     extendedprice / discount / tax, each an exact-integer sum over a
     single division so both engines emit identical doubles.
     Plan: dims broadcast; ROLLUP is Spark's Expand over one shuffle."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -3496,7 +3451,6 @@ def tpcds_q46_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hd_dep_count/vehicle filter -> priority bands, s_city list ->
     nation list. Plan: the inner aggregate shrinks the fact before
     the customer join; nation dims broadcast; total-order LIMIT."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -3591,7 +3545,6 @@ def tpcds_q54_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar). Plan: the cohort is DISTINCT customer keys
     (broadcastable semi join); the revenue aggregate shuffles once on
     customer; buckets are a second tiny aggregate."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -3701,7 +3654,6 @@ def tpcds_q80_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents. Plan: returns pre-aggregates to the join key before the
     outer join (no fact x fact fanout); dims broadcast; one rollup
     shuffle."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -3814,7 +3766,6 @@ def tpcds_q35_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans the same shape). avg rides exact cents / count.
     Plan: three semi-join build sides are year-filtered order keys
     (small); the outer customer scan survives once."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     orders = load_table(spark, sf_dir, "orders")
@@ -3916,7 +3867,6 @@ def tpcds_q72_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality as residual (the reference's planner does exactly
     this split at ExtractCommonPredicates/EqualityInference); promo
     is a broadcast LEFT JOIN; one aggregate shuffle after."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -4092,7 +4042,6 @@ def tpcds_q14_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark lowers INTERSECT to two left-semi joins over DISTINCT
     (ReplaceIntersectWithSemiJoin — the analog of the reference's
     ImplementIntersectAndExceptAsUnion lowering)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -4260,7 +4209,6 @@ def tpcds_q64_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: cs_ui is item-sized (broadcast semi); cross_sales feeds
     both self-join sides -> persisted (one pass over the deep
     join); dims broadcast; the self-join runs on the aggregate."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -4399,7 +4347,6 @@ def tpcds_q6_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents / count. Plan: type_avg is category-sized -> broadcast
     back onto part; pricey_parts enters the fact as a broadcast semi
     join; HAVING count >= 10."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -4476,7 +4423,6 @@ def tpcds_q16_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: both build sides are order-key lists (aggregates of the
     fact); the probe survives one scan; no row-level correlated
     subquery remains."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -4533,7 +4479,6 @@ def tpcds_q96_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer is a single COUNT(*). The reference uses it to measure
     pure scan+broadcast-join throughput; all three dim filters
     reach the scans as pushed predicates."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -4606,7 +4551,6 @@ def tpcds_q21_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL (inv_before = 0) rows BETWEEN discards.
     Plan: dims broadcast; one aggregate shuffle; the CASE split is
     a Column expression inside the partial aggregate."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     supp = load_table(spark, sf_dir, "supplier")
@@ -4680,7 +4624,6 @@ def tpcds_q37_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: part is the probe; the inventory join filters it; the
     channel membership is a semi join on partkey (aggregate-free
     build side); GROUP BY dedupes the inventory fanout."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     inv = li.filter(F.col("l_returnflag") == "R")
@@ -4750,7 +4693,6 @@ def tpcds_q40_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE split ride bigint cents. Plan: returns pre-aggregate to
     the join key before the outer join; dims broadcast; one
     aggregate shuffle."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -4853,7 +4795,6 @@ def tpcds_q61_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     share is a single division of exact cent sums. Plan: the slice
     aggregate feeds BOTH single-row branches (persisted — same
     multi-consumer rule as q65); the cross join is 1 x 1."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -4933,7 +4874,6 @@ def tpcds_q76_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserving the IS NULL predicate shape and the per-channel
     col_name label. Plan: three fact passes (the reference scans
     three distinct facts) unioned before one aggregate shuffle."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -5017,7 +4957,6 @@ def tpcds_q84_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     NLJ over 4 rows (bounded — the reference's income_band is 20
     rows); returners is a distinct-key semi-join build; everything
     else broadcasts."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -5110,7 +5049,6 @@ def tpcds_q9_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer sums over one division.
     Plan: one shuffle on the 5-value bucket key; the final fold is a
     1-row aggregate."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     b = (
         li.filter(F.col("l_quantity").between(1, 50))
@@ -5206,7 +5144,6 @@ def tpcds_q44_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the position join and both dim joins broadcast."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     part = load_table(spark, sf_dir, "part")
@@ -5315,7 +5252,6 @@ def tpcds_q67_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     rk <= 10 filter plans a WindowGroupLimit."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -5406,7 +5342,6 @@ def tpcds_q8_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: both zip sets are tiny (<=100 two-char strings); the
     INTERSECT lowers to a semi join of two small sets, broadcast
     back onto the probe's derived key."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -5499,7 +5434,6 @@ def tpcds_q24_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold is one division. Plan: ssales is persisted (two
     consumers — the reference names this CTE twice); the threshold
     is a 1-row broadcast."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -5607,7 +5541,6 @@ def tpcds_q62_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: single aggregate shuffle on the three-part computed key;
     the five bands are Column CASEs inside the partial aggregate —
     no extra passes."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -5700,7 +5633,6 @@ def tpcds_q4_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents; ratios are single divisions of exact integers.
     Plan: year_total persisted (SIX consumers); all instances join
     off the cached customer x year x channel aggregate."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     yt = (
@@ -5808,7 +5740,6 @@ def tpcds_q13_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the OR-groups are pure row-level residuals over the
     joined row — no union fan-out; dims broadcast; single global
     aggregate."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -5905,7 +5836,6 @@ def tpcds_q15_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation states + extendedprice.
     Plan: one residual OR filter over the joined row; single
     aggregate shuffle on the derived zip."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -5974,7 +5904,6 @@ def tpcds_q18_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     discount, tax, acctbal).
     Plan: dims broadcast; the 4-level rollup is one Expand +
     shuffle; averages exact at every grouping level."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -6073,7 +6002,6 @@ def tpcds_q25_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the three slices co-partition on the composite key — three
     slice shuffles, zero-exchange joins between them, dims
     broadcast."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -6174,7 +6102,6 @@ def tpcds_q28_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-expand instead of six scans.
     Plan: groupBy(bucket).agg(count_distinct) plans Spark's Expand;
     the fold is a 1-row aggregate. Averages exact."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     price_s = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     panels = (
@@ -6233,7 +6160,6 @@ def tpcds_q55_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_size band; d_moy/d_year -> order month/year.
     Plan: part broadcast, one aggregate shuffle,
     TakeOrderedAndProject."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -6292,7 +6218,6 @@ def tpcds_q71_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     band.
     Plan: the union is channel slices of one fact (the reference
     unions three facts); one aggregate shuffle; part broadcast."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -6354,7 +6279,6 @@ def tpcds_q91_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     'R'-flagged lineitems.
     Plan: pure star over the returns slice; dims broadcast; one
     aggregate shuffle; ordered LIMIT with tiebreaks."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -6442,7 +6366,6 @@ def tpcds_q83_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the date set is tiny (broadcast semi); three channel
     aggregates co-partition on item; the three-way join runs on
     aggregates."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     dates = (
@@ -6549,7 +6472,6 @@ def tpcds_q2_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one union + one weekly aggregate (persisted for the two
     self-join instances); the year-over-year join runs on the
     aggregate."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     days = F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01"))
@@ -6633,7 +6555,6 @@ def tpcds_q10_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join lowering.
     Plan: the nation list prunes customers BEFORE the semi joins;
     three small year+quarter-filtered build sides."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     orders = load_table(spark, sf_dir, "orders")
@@ -6692,7 +6613,6 @@ LIMIT 100
 def _q12_like(spark, sf_dir, types, d0, d1, prios):
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -6792,7 +6712,6 @@ def tpcds_q26_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain demographic star of four exact averages per item (catalog
     channel, promo filter in the reference -> priority bands). Kept
     as the family's flat-grouping representative."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -6871,7 +6790,6 @@ def tpcds_q29_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     repurchased-any-of-3-years), the repurchase window spanning
     three years (the family's widest date-role spread). Same
     co-partitioned chain plan as q17/q25."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -6971,7 +6889,6 @@ def tpcds_q53_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarterly aggregate."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -7066,7 +6983,6 @@ LIMIT 100
 
 
 def _q56_like(spark, sf_dir, item_pred_col, moy):
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -7179,7 +7095,6 @@ def tpcds_q57_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition. Exact cents throughout."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -7279,7 +7194,6 @@ def tpcds_q63_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pass over the monthly aggregate, exact cents."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -7365,7 +7279,6 @@ def tpcds_q68_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     THREE money measures (price / discount / tax) and month-based
     dim filters instead of the weekend filter. Same
     aggregate-then-decorate plan."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -7441,7 +7354,6 @@ def tpcds_q69_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     STORE activity but NO web and NO catalog activity in the window
     (EXISTS + two NOT EXISTS -> one semi and two ANTI joins). The
     anti-join pair is the family's distinguishing lowering."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     orders = load_table(spark, sf_dir, "orders")
@@ -7494,7 +7406,6 @@ def tpcds_q73_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     buyers' count-band per ticket, with the LOW band (1-5 items vs
     q34's 15-20) and different dim filters; aggregate -> HAVING band
     -> decorate from the customer dim."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -7581,7 +7492,6 @@ def tpcds_q77_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer join is the distinguishing plan feature.
     Plan: two channel aggregates (sales / returns) shuffle once
     each; the outer join and rollup run on aggregates."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     lo = li.join(orders, li.l_orderkey == orders.o_orderkey).filter(
@@ -7683,7 +7593,6 @@ def tpcds_q79_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-neutral Monday-epoch mod-7), store-count band -> nation
     band, decorated from the customer dim WITHOUT the mismatch
     filter (the family's simplest decoration)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")
@@ -7753,7 +7662,6 @@ def tpcds_q81_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-state aggregate joined back), final slice on one state.
     The return aggregate feeds both the threshold and the probe ->
     persisted. Exact cents; one division per state."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -7829,7 +7737,6 @@ def tpcds_q82_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     store-sales membership (vs q37's catalog membership; the
     fixture distinguishes the channels by linestatus here). Same
     dim-probe/fact-filter plan."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     inv = li.filter(F.col("l_returnflag") == "R")
@@ -7894,7 +7801,6 @@ def tpcds_q85_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     q13-style double OR-band residual applied to the RETURNS fact,
     averaged per return reason (-> order priority). The family's
     returns-side member; averages exact."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -7998,7 +7904,6 @@ def tpcds_q86_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window pass; exact cents."""
     from pyspark.sql import Window
 
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
@@ -8072,7 +7977,6 @@ def tpcds_q94_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-warehouse EXISTS + never-returned NOT EXISTS shipping
     report over the web bands and a different window/state. Same
     aggregate-driven semi/anti lowering."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -8143,7 +8047,6 @@ def tpcds_q99_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     CALL CENTER) over the non-returned slice of a different year
     (three coarser bands). Same computed-key single-aggregate
     plan."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supp = load_table(spark, sf_dir, "supplier")

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from presto_0_235_spark.catalog import load_table
 from presto_0_235_spark.functions.compat import dec_sum, oracle_dec_sum
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults
 
 _REV = "l_extendedprice * (1 - l_discount)"
 
@@ -65,7 +64,6 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference: DetermineJoinDistributionType.java chooses by cost,
     never by fiat). Disjunctive nation-pair filter evaluated after
     both joins (reference: JoinFilterFunction residual predicates)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").between("1995-01-01", "1996-12-31 00:00:00")
     )
@@ -134,7 +132,6 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     part/customer/supplier grow with SF — no broadcast hints on them;
     only nation/region (bounded 25/5 rows) are pinned. At sf0.01 AQE
     still broadcasts the small sides on its own (plan test)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     orders = load_table(spark, sf_dir, "orders").filter(
@@ -198,7 +195,6 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TopNOperator over aggregated output; grouping keys carry
     customer attributes). customer grows with SF — no broadcast hint
     (the r2 tpch_q.py rule); nation (25 rows) keeps its hint."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
@@ -238,7 +234,6 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13 customer distribution: LEFT join with a residual predicate
     + two-level aggregation (count per customer, then histogram of
     counts)."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     per_cust = (
@@ -276,7 +271,6 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q14 promotion effect: conditional-aggregation ratio over a
     part join (CASE inside SUM — filtered aggregation). part grows
     with SF — no broadcast hint, AQE decides."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-06-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-07-01").cast("timestamp"))
@@ -317,7 +311,6 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery (EnforceSingleRow over the scalar; equality on the
     decimal-hopped revenue is exact, so the tie set is
     deterministic)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -365,7 +358,6 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-part aggregate grow with SF; AQE broadcasts them at small SF
     (plan test). avg is over integer-valued quantities per part; the
     0.2*avg threshold compare is exact on both engines."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part_keys = (
         load_table(spark, sf_dir, "part")
@@ -405,7 +397,6 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference: nested-loop fallback avoided because the equi-key
     p_partkey=l_partkey still drives a hash join; the OR bands stay a
     post-join filter). part grows with SF — no broadcast hint."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     q = F.col("l_quantity")
@@ -453,7 +444,6 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     Adapted: cntrycode = nationkey%10 (fixtures drop c_phone) and the
     anti-join condition is 'no urgent large order' (every fixture
     customer has *some* order, so the literal q22 form is empty)."""
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
@@ -507,7 +497,6 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate on part, grouped by supplier nation x order year.
     part/supplier grow with SF — no broadcast hints; nation (25 rows)
     keeps its hint. AQE broadcasts the small sides at small SF."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
     supp = load_table(spark, sf_dir, "supplier")
@@ -549,7 +538,6 @@ def tpch_q4_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the fixtures) maps to l_returnflag = 'R'; the plan shape —
     SemiJoinNode over the fact table, then count per priority — is
     exactly the reference's."""
-    ensure_session_defaults(spark)
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
@@ -589,7 +577,6 @@ def tpch_q12_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Adapted: grouped by l_linestatus (fixtures drop l_shipmode) and
     windowed on l_shipdate (commit/receipt dates dropped); the
     high/low priority CASE aggregation is verbatim."""
-    ensure_session_defaults(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -641,7 +628,6 @@ def tpch_q21_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated-with-inequality EXISTS lowers to semi/anti joins on
     compound conditions — Presto plans the same via SemiJoinNode +
     correlated-scalar decorrelation."""
-    ensure_session_defaults(spark)
     supp = load_table(spark, sf_dir, "supplier")
     orders_f = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
@@ -736,7 +722,6 @@ def tpch_q2_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform key; region/nation broadcast (bounded); no correlated
     per-row re-execution anywhere (the subquery runs ONCE as an agg).
     """
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") <= 10) & (F.col("p_type") == "LARGE")
@@ -813,7 +798,6 @@ def tpch_q11_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single-row broadcast (Presto plans the same via an
     EnforceSingleRow + replicated join); no per-row re-aggregation.
     """
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation").filter(
@@ -874,7 +858,6 @@ def tpch_q16_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping keys with partial distinct (MarkDistinct in the
     reference, partial agg in Spark).
     """
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#4")
@@ -927,7 +910,6 @@ def tpch_q20_adapted(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), produces a supplier-bounded set that semi-joins the dim
     table — Presto plans the same SemiJoinNode; nation broadcasts.
     """
-    ensure_session_defaults(spark)
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name") == "NATION_3"

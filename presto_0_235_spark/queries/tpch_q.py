@@ -30,7 +30,6 @@ from presto_0_235_spark.functions.compat import (
     oracle_dec_sum,
 )
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults
 
 _Q1_ORACLE = f"""
 SELECT
@@ -60,7 +59,6 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     PARTIAL/FINAL split (SPI/plan/AggregationNode.java:280). Spark
     plans the identical two-phase HashAggregate automatically.
     """
-    ensure_session_defaults(spark)
     # No spread_scan here: with the scaled-long money sums
     # (functions/compat.py) the aggregation is cheap enough that a
     # repartition of the single-row-group fixture costs more than the
@@ -142,7 +140,6 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     for customer (small side), shuffle join lineitem-orders, then
     TakeOrderedAndProject for the ORDER BY+LIMIT.
     """
-    ensure_session_defaults(spark)
     cutoff = F.lit("1998-03-15").cast("timestamp")
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -204,7 +201,6 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     DetermineJoinDistributionType.java). Spark: region/nation/supplier/
     customer broadcast; the orders-lineitem join is the only shuffle.
     """
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -257,7 +253,6 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark fuses the same pipeline in one WholeStageCodegen stage; the
     range/between filters push to the parquet scan (PushedFilters).
     """
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -296,7 +291,6 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: HashSemiJoinOperator (MAIN/operator/
     HashSemiJoinOperator.java:32) over an aggregated build side.
     """
-    ensure_session_defaults(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

@@ -15,7 +15,6 @@ from presto_0_235_spark.catalog import load_table
 from presto_0_235_spark.functions.compat import MONEY
 from presto_0_235_spark.operators.window import spec, top_n_per_group
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import ensure_session_defaults
 
 
 @register(
@@ -35,7 +34,6 @@ def win_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer: the TopNRowNumberOperator pattern
     (TopNRowNumberOperator.java:38 / WindowFilterPushDown.java;
     Spark: InferWindowGroupLimit window-group-limit pushdown)."""
-    ensure_session_defaults(spark)
     return top_n_per_group(
         load_table(spark, sf_dir, "orders").select(
             "o_custkey", "o_orderkey", "o_totalprice"
@@ -64,7 +62,6 @@ WINDOW w AS (PARTITION BY l_returnflag ORDER BY l_quantity DESC)
 def win_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / row_number (RankFunction.java,
     DenseRankFunction.java, RowNumberFunction.java)."""
-    ensure_session_defaults(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") < 1000
     )
@@ -99,7 +96,6 @@ def win_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist / ntile
     (PercentRankFunction.java, CumulativeDistributionFunction.java,
     NTileFunction.java)."""
-    ensure_session_defaults(spark)
     w = Window.orderBy(
         F.col("o_totalprice").asc_nulls_last(),
         F.col("o_orderkey").asc_nulls_last(),
@@ -132,7 +128,6 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag / lead with offsets and defaults (LagFunction.java,
     LeadFunction.java)."""
-    ensure_session_defaults(spark)
     w = spec(["o_custkey"], [("o_orderdate", "asc"), ("o_orderkey", "asc")])
     return (
         load_table(spark, sf_dir, "orders")
@@ -169,7 +164,6 @@ def win_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first_value / last_value / nth_value incl. IGNORE NULLS
     (FirstValueFunction.java, LastValueFunction.java,
     NthValueFunction.java) over a full-partition ROWS frame."""
-    ensure_session_defaults(spark)
     w = (
         spec(["o_custkey"], [("o_orderkey", "asc")])
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -209,7 +203,6 @@ def win_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregates as window functions over ROWS frames
     (AggregateWindowFunction.java; FrameInfo.java:25). The running
     money sum goes through DECIMAL so every prefix is exact."""
-    ensure_session_defaults(spark)
     w_run = spec(["o_custkey"], [("o_orderkey", "asc")]).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -247,7 +240,6 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE k PRECEDING frame — beyond-reference: Presto 0.235
     rejects bounded RANGE frames (StatementAnalyzer.java:1513-1515);
     Spark's rangeBetween supports them natively."""
-    ensure_session_defaults(spark)
     w = (
         Window.partitionBy("o_orderstatus")
         .orderBy(F.col("o_custkey").asc_nulls_last())
@@ -290,7 +282,6 @@ def win_range_time_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     seconds — interval frames on full-precision timestamps would
     disagree on sub-second boundary rows). Decimal hop: frame sums
     are order-dependent doubles otherwise."""
-    ensure_session_defaults(spark)
     from pyspark.sql import Window
 
     events = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 30)

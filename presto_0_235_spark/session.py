@@ -82,11 +82,16 @@ SESSION_DEFAULTS: dict[str, str] = {
 def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     """Apply SESSION_DEFAULTS to an existing session (idempotent).
 
-    Called at the top of every public query builder so the engine
-    behaves identically on a session it did not create (the driver's
-    verify harness builds its own). Cheap and job-free: it sets confs
-    and ships the package zip once per SparkContext, and never starts
-    Python workers (see warmup_python_workers).
+    It has two callers: build_session, and the query registry, whose
+    wrapper runs it once before every registered builder so a query
+    behaves identically on a session the engine did not create (the
+    driver's verify harness builds its own). Library calls (load_table,
+    run_sql, the codec sinks) do not repair the session: on one that
+    build_session made, or a newSession() of it, the confs already
+    hold, since build_session also puts them into the SparkConf.
+    Cheap and job-free: it sets confs and ships the package zip once
+    per SparkContext, and never starts Python workers (see
+    warmup_python_workers).
     """
     for key, value in SESSION_DEFAULTS.items():
         # every key is runtime-modifiable: a static one raises here

@@ -24,10 +24,10 @@ shape every fixture table has. The codec is deliberately the NULL
 (uncompressed) avro.codec; files it writes are readable by any Avro
 implementation and vice versa.
 
-Scale note: the codec itself is per-partition worker code driven via
-``mapInPandas`` (sources/sinks in queries/io_q.py) — one container
-file per task on write, one task per file on read, the same
-file-per-partition layout every Spark file source uses. Python-side
+Scale note: the codec itself is per-partition worker code, driven via
+``mapInArrow`` on write (sources/sink.py) and ``mapInPandas`` on read:
+one container file per task on write, one task per file on read, the
+same file-per-partition layout every Spark file source uses. Python-side
 byte twiddling is the slow path vs a JVM connector; acceptable for a
 FORMAT-COMPLETENESS path (deployments that can ship jars should use
 spark-avro — the guarded probe in tests/test_scale_smoke.py covers
@@ -53,6 +53,7 @@ except Exception:  # pragma: no cover - older vendored cloudpickle
 MAGIC = b"Obj\x01"
 _EPOCH = datetime.date(1970, 1, 1)
 _EPOCH_DT = datetime.datetime(1970, 1, 1)
+_MICROSECOND = datetime.timedelta(microseconds=1)
 
 # Supported field types: avro (base, logical) pairs.
 LONG = ("long", None)
@@ -106,7 +107,9 @@ def _encode_value(out: io.BytesIO, base: str, logical, v) -> None:
             v = (v - _EPOCH).days
         elif logical == "timestamp-micros":
             if isinstance(v, datetime.datetime):
-                v = int((v - _EPOCH_DT).total_seconds() * 1_000_000)
+                # Arrow hands the sink zone-aware values in the session
+                # zone; the wall clock is what the reader restores
+                v = (v.replace(tzinfo=None) - _EPOCH_DT) // _MICROSECOND
         _write_long(out, int(v))
     elif base == "double":
         out.write(struct.pack("<d", float(v)))
@@ -279,7 +282,7 @@ def read_container(data: bytes):
     return fields, rows
 
 
-# ---- Spark sink/source (mapInPandas plumbing) ------------------------------
+# ---- Spark sink/source ----------------------------------------------------
 
 
 def _avro_fields(spark_schema):
@@ -299,43 +302,23 @@ def _avro_fields(spark_schema):
 
 
 def write_avro_dataframe(df, path: str) -> int:
-    """Distributed Avro sink: every partition encodes its rows into
-    ONE object container file under ``path`` (the file-per-task
-    layout of any Spark file sink; TaskContext supplies the part
-    number). Returns the number of files written. The action is the
-    mapInPandas collect of one (file, n_rows) manifest row per task
-    — the TableWriter -> TableFinish commit-summary shape
-    (TableWriterOperator.java:64 fragments)."""
+    """Distributed Avro sink: every task encodes its rows into ONE
+    object container file under ``path``, through
+    sources/sink.write_per_task, which keeps nullable longs exact.
+    Returns the number of files written."""
     import hashlib
-    import os
-    import shutil
 
-    import pandas as pd
+    from presto_0_235_spark.sources.sink import write_per_task
 
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
     fields = _avro_fields(df.schema)
 
-    def encode_partition(batches):
-        from pyspark import TaskContext
-
-        rows: list[tuple] = []
-        for pdf in batches:
-            for t in pdf.itertuples(index=False, name=None):
-                rows.append(
-                    tuple(None if pd.isna(v) else v for v in t)
-                )
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}.avro")
+    def write(fname, pdf):
         sync = hashlib.md5(fname.encode()).digest()
+        rows = pdf.itertuples(index=False, name=None)
         with open(fname, "wb") as fh:
             fh.write(write_container(rows, fields, sync))
-        yield pd.DataFrame({"file": [fname], "n_rows": [len(rows)]})
 
-    manifest = df.mapInPandas(
-        encode_partition, "file string, n_rows long"
-    ).collect()
-    return len(manifest)
+    return write_per_task(df, path, ".avro", write)
 
 
 def read_avro_dataframe(spark, path: str, spark_schema):

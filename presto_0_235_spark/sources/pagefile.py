@@ -42,8 +42,8 @@ date (int32 days), timestamp (int64 MILLIS — Presto 0.235 timestamp
 precision; micros are truncated on write, documented divergence from
 Spark's micro precision).
 
-Scale note: like sources/avro.py this is worker-side code behind
-``mapInPandas`` — one PAGEFILE per task on write. On read the driver
+Scale note: like sources/avro.py this is worker-side code — one
+PAGEFILE per task on write (sources/sink.py). On read the driver
 parses each footer (a bounded tail read, the same footer-first split
 planning PageFilePageSourceFactory does) and schedules ONE TASK PER
 STRIPE, so a single large file still fans out across executors —
@@ -464,53 +464,15 @@ def read_stripe(path: str, start: int, end: int, kinds: list[str]):
 
 def write_pagefile_dataframe(df, path: str, compression: str = "none") -> int:
     """Distributed PAGEFILE sink: one file per task (the layout every
-    Spark file sink and the reference's PageFileWriterFactory use).
-    Returns the number of files written.
+    Spark file sink and the reference's PageFileWriterFactory use),
+    through sources/sink.write_per_task, which keeps nullable longs
+    exact. Returns the number of files written."""
+    from presto_0_235_spark.sources.sink import write_per_task
 
-    Rows cross the JVM->Python boundary as Arrow record batches
-    (``mapInArrow``), NOT pandas: Arrow's int64-with-nulls becomes
-    float64 under pandas conversion, silently rounding |v| > 2^53
-    before the codec sees it. ``to_pylist()`` on the Arrow columns
-    keeps longs exact (Python ints) at any magnitude."""
-    import os
-    import shutil
-
-    import pandas as pd
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
     kinds = spark_kinds(df.schema)
-    cols = list(df.columns)
-
-    def encode_partition(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        parts = list(batches)
-        if parts:
-            tbl = pa.Table.from_batches(parts)
-            pdf = pd.DataFrame(
-                {c: pd.Series(tbl.column(c).to_pylist(), dtype=object)
-                 for c in cols}
-            )
-        else:
-            pdf = pd.DataFrame(columns=cols, dtype=object)
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}.pagefile")
-        stripes = write_file(fname, pdf, kinds, compression)
-        out = pa.RecordBatch.from_pydict(
-            {"file": [fname], "n_rows": [len(pdf)], "stripes": [stripes]},
-            schema=pa.schema(
-                [("file", pa.string()), ("n_rows", pa.int64()),
-                 ("stripes", pa.int32())]
-            ),
-        )
-        yield out
-
-    manifest = df.mapInArrow(
-        encode_partition, "file string, n_rows long, stripes int"
-    ).collect()
-    return len(manifest)
+    return write_per_task(
+        df, path, ".pagefile",
+        lambda fname, pdf: write_file(fname, pdf, kinds, compression))
 
 
 def read_pagefile_dataframe(spark, path: str, spark_schema):

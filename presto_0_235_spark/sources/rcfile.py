@@ -427,47 +427,15 @@ def read_file(path: str, kinds: list[str], serde: str = "binary"):
 
 
 def write_rcfile_dataframe(df, path: str, serde: str = "binary") -> int:
-    """Distributed RCFILE sink: one file per task. Arrow batches feed
-    the codec directly (mapInArrow) so nullable bigints stay exact.
+    """Distributed RCFILE sink: one file per task, through
+    sources/sink.write_per_task, which keeps nullable longs exact.
     Returns the number of files written."""
-    import os
-    import shutil
+    from presto_0_235_spark.sources.sink import write_per_task
 
-    import pandas as pd
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
     kinds = spark_kinds(df.schema)
-    cols = list(df.columns)
-
-    def encode_partition(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        parts = list(batches)
-        if parts:
-            tbl = pa.Table.from_batches(parts)
-            pdf = pd.DataFrame(
-                {c: pd.Series(tbl.column(c).to_pylist(), dtype=object)
-                 for c in cols}
-            )
-        else:
-            pdf = pd.DataFrame(columns=cols, dtype=object)
-        pid = TaskContext.get().partitionId()
-        fname = os.path.join(path, f"part-{pid:05d}.rc")
-        groups = write_file(fname, pdf, kinds, serde)
-        yield pa.RecordBatch.from_pydict(
-            {"file": [fname], "n_rows": [len(pdf)], "groups": [groups]},
-            schema=pa.schema(
-                [("file", pa.string()), ("n_rows", pa.int64()),
-                 ("groups", pa.int32())]
-            ),
-        )
-
-    manifest = df.mapInArrow(
-        encode_partition, "file string, n_rows long, groups int"
-    ).collect()
-    return len(manifest)
+    return write_per_task(
+        df, path, ".rc",
+        lambda fname, pdf: write_file(fname, pdf, kinds, serde))
 
 
 def read_rcfile_dataframe(spark, path: str, spark_schema,

@@ -78,7 +78,6 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-from presto_0_235_spark.session import ensure_session_defaults
 from presto_0_235_spark.sql.json_cast import (
     _operand_back, _operand_fwd, rewrite_array_element_concat,
     rewrite_container_json_casts, rewrite_decimal_array_ops,
@@ -6361,7 +6360,6 @@ def run_sql(spark: SparkSession, sql: str) -> DataFrame:
     views of the shared CTEs are dropped once the statement is analyzed,
     via the session catalog, which (unlike spark.catalog) keeps the
     cache."""
-    ensure_session_defaults(spark)
     _ensure_sql_udfs(spark)
     routed = _route_geo_aggregate(spark, sql)
     if routed is not None:

@@ -30,7 +30,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from presto_0_235_spark.session import ensure_session_defaults
 
 _EVENTS_SCHEMA_CACHE: dict[str, object] = {}
 
@@ -42,7 +41,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejects TIMESTAMP_NTZ event-time columns)."""
     from presto_0_235_spark.catalog import normalize_events_ts
 
-    ensure_session_defaults(spark)
     # Footer-derived schema cached per path: streaming sources must be
     # given an explicit schema, and re-reading the parquet footer on
     # every builder call is measurable (~0.1 s) against a replayed

@@ -593,6 +593,27 @@ def test_codec_source_runs_one_task_per_split(spark, tmp_path, fmt):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, src.collect()))
 
 
+@pytest.mark.parametrize("fmt", ["avro", "rcfile", "pagefile"])
+def test_codec_sink_keeps_nullable_longs_exact(spark, tmp_path, fmt):
+    """BIGINTs beyond 2^53 roundtrip exactly through every codec sink,
+    in a nullable column and in one without nulls: no sink sees them as
+    float64. One partition holds every row, so the null shares a batch
+    with the big longs."""
+    import importlib
+
+    from presto_0_235_spark.session import local_rows
+
+    codec = importlib.import_module(f"presto_0_235_spark.sources.{fmt}")
+    rows = [(2**62 + 1, "a", 2**62 + 1), (None, None, 2**53 + 1),
+            (-(2**63), "b", -(2**63)), (2**53 + 1, "c", 7)]
+    src = local_rows(spark, rows, "k bigint, s string, n bigint").coalesce(1)
+    path = str(tmp_path / fmt)
+    getattr(codec, f"write_{fmt}_dataframe")(src, path)
+    back = getattr(codec, f"read_{fmt}_dataframe")(spark, path, src.schema)
+    key = lambda r: (r[0] is None, r[0] or 0)  # noqa: E731
+    assert sorted(map(tuple, back.collect()), key=key) == sorted(rows, key=key)
+
+
 class TestRcFileCodec:
     """sources/rcfile.py — the public RCFile layout (header, sync'd
     row groups, RLE cell-length key sections, Hadoop vlongs) with

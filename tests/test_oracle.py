@@ -76,3 +76,32 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() >= 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+def test_tpcds_q68_limit_cut_is_not_a_tie():
+    """sql_tpcds_q68's ORDER BY is a unique key over its un-LIMITed
+    result at sf0.01, so the LIMIT keeps the same rows on any engine.
+    Its inner query groups by (order, customer, ship nation): without
+    ship_nation in the ORDER BY, orders shipped from several nations
+    tie."""
+    import os
+
+    import duckdb
+
+    from presto_0_235_spark.catalog import TABLES
+
+    sf = "/root/testdata/sf0.01"
+    if not os.path.isdir(sf):
+        pytest.skip(f"{sf} not present")
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"read_parquet('{sf}/{t}.parquet')")
+    body, cut = _QUERIES["sql_tpcds_q68"].oracle.split("\nORDER BY ")
+    keys = cut.split("\nLIMIT")[0]
+    unlimited = "SELECT " + keys + "\nFROM" + body.split("\nFROM", 1)[1]
+    n, distinct = con.execute(
+        f"SELECT count(*), count(DISTINCT ({keys})) FROM ({unlimited})"
+    ).fetchone()
+    assert n > 100
+    assert distinct == n

@@ -72,23 +72,29 @@ def test_timestamp_semantics_utc(spark):
     assert _eval(spark, "year(TIMESTAMP '1997-06-15 00:00:00')") == 1997
 
 
-def test_hostile_session_repaired(spark, sf_dir, duck):
-    """A caller's session may arrive with a wrong timezone (the
-    grading driver builds its own vanilla session). Every public
-    builder must repair it via ensure_session_defaults — queries are
-    date-sensitive, so a Pacific-time session would shift timestamps.
+@pytest.mark.parametrize("name", ["tpch_q6", "sql_tpch_q6"])
+def test_hostile_session_repaired(spark, sf_dir, duck, name):
+    """A caller's session may arrive with a wrong timezone or with ANSI
+    mode off (the grading driver builds its own vanilla session). The
+    registry applies the session defaults before every builder, a
+    DataFrame builder and a declared SQL-text query alike — queries
+    are date-sensitive, so a Pacific-time session would shift
+    timestamps.
     """
     from presto_0_235_spark.queries.registry import all_queries
     from tests.conftest import assert_df_matches_oracle
 
-    q = all_queries()["tpch_q6"]
+    q = all_queries()[name]
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
         df = q.builder(spark, sf_dir)
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
         assert_df_matches_oracle(df, duck, q.oracle)
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.ansi.enabled", "true")
 
 
 def test_empty_input_aggregates(spark, duck, sf_dir):

@@ -160,26 +160,101 @@ def test_worker_trims_per_package_zip_importers(spark):
     assert row.loaded
 
 
-def test_driver_rows_go_through_local_rows():
-    """Only the local_rows helper and the RDD-fed sequencefile reader
-    call createDataFrame: a list handed to it plans a LogicalRDD that
-    runs Python tasks on every execution."""
+def _package_defs():
+    """(path relative to the package, top-level statement) for every
+    module of the engine package."""
     import ast
 
     pkg = os.path.join(ROOT, "presto_0_235_spark")
-    calls = set()
     for dirpath, _dirs, files in os.walk(pkg):
         for name in (f for f in files if f.endswith(".py")):
             path = os.path.join(dirpath, name)
             with open(path) as f:
                 tree = ast.parse(f.read(), path)
-            for top in tree.body:  # a call counts against its top-level def
-                if any(isinstance(node, ast.Call)
-                       and isinstance(node.func, ast.Attribute)
-                       and node.func.attr == "createDataFrame"
-                       for node in ast.walk(top)):
-                    calls.add((os.path.relpath(path, pkg),
-                               getattr(top, "name", "<module>")))
-    assert calls == {("session.py", "local_rows"),
-                     (os.path.join("queries", "io_q.py"),
-                      "io_roundtrip_sequencefile")}
+            for top in tree.body:
+                yield os.path.relpath(path, pkg), top
+
+
+def _callers(callee: str) -> set[tuple[str, str]]:
+    """(module, top-level def) pairs whose body calls ``callee``, by
+    name or as an attribute."""
+    import ast
+
+    return {(rel, getattr(top, "name", "<module>"))
+            for rel, top in _package_defs()
+            if any(isinstance(node, ast.Call)
+                   and callee in (getattr(node.func, "id", None),
+                                  getattr(node.func, "attr", None))
+                   for node in ast.walk(top))}
+
+
+def test_driver_rows_go_through_local_rows():
+    """Only the local_rows helper and the RDD-fed sequencefile reader
+    call createDataFrame: a list handed to it plans a LogicalRDD that
+    runs Python tasks on every execution."""
+    assert _callers("createDataFrame") == {
+        ("session.py", "local_rows"),
+        (os.path.join("queries", "io_q.py"), "io_roundtrip_sequencefile")}
+
+
+def test_session_defaults_have_one_door():
+    """Session defaults are applied where a session is built and by the
+    registry's builder wrapper, nowhere else; and no registered
+    builder is a hand-written copy of a register_sql declaration."""
+    import ast
+
+    assert _callers("ensure_session_defaults") == {
+        ("session.py", "build_session"),
+        (os.path.join("queries", "registry.py"), "register")}
+    copies = []
+    for rel, top in _package_defs():
+        if not (isinstance(top, ast.FunctionDef) and any(
+                isinstance(d, ast.Call)
+                and getattr(d.func, "id", None) == "register"
+                for d in top.decorator_list)):
+            continue
+        body = top.body[1:] if ast.get_docstring(top) else top.body
+        called = [getattr(getattr(getattr(st, "value", None), "func", None),
+                          "id", None) for st in body]
+        if called == ["register_views", "run_sql"]:
+            copies.append((rel, top.name))
+    assert copies == []
+
+
+def test_registered_builder_applies_defaults_first(monkeypatch):
+    """A registered builder is a wrapper that applies the session
+    defaults before the body runs and keeps the body's name; a
+    register_sql declaration runs its text through the front door
+    over the fixture views, and its oracle defaults to that text."""
+    from presto_0_235_spark.queries import registry
+
+    calls = []
+    monkeypatch.setattr(registry, "_REGISTRY", {})
+    monkeypatch.setattr(registry, "ensure_session_defaults",
+                        lambda spark: calls.append(("defaults", spark)))
+    monkeypatch.setattr(registry, "register_views",
+                        lambda spark, sf_dir: calls.append(("views", sf_dir)))
+    monkeypatch.setattr(
+        registry, "run_sql",
+        lambda spark, text: calls.append(("sql", text)) or text)
+
+    def stub_query(spark, sf_dir):
+        calls.append(("body", sf_dir))
+        return "df"
+
+    builder = registry.register("stub_query", oracle="SELECT 1")(stub_query)
+    assert builder.__name__ == "stub_query"
+    assert registry._REGISTRY["stub_query"].builder is builder
+    assert builder("spark", "sf") == "df"
+    assert calls == [("defaults", "spark"), ("body", "sf")]
+
+    calls.clear()
+    registry.register_sql("stub_sql", "SELECT 2")
+    registry.register_sql("stub_rows_only", "SELECT 3", oracle=None)
+    q = registry._REGISTRY["stub_sql"]
+    assert q.builder.__name__ == "stub_sql"
+    assert q.oracle == "SELECT 2"
+    assert registry._REGISTRY["stub_rows_only"].oracle is None
+    assert q.builder("spark", "sf") == "SELECT 2"
+    assert calls == [("defaults", "spark"), ("views", "sf"),
+                     ("sql", "SELECT 2")]
