@@ -36,18 +36,13 @@ stack logic and runs as an Arrow pandas UDF (never row-at-a-time).
 from __future__ import annotations
 
 import math
-import sys
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-try:  # st_convex_hull/convex_hull_agg run worker-side — by-value
-    # fallback until the package zip ships (session.py r14)
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover - older vendored cloudpickle
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 
 def _c(col: Column | str) -> Column:

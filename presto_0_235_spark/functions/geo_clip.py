@@ -43,14 +43,10 @@ driver involvement, same shape as the multimodal decode operators.
 from __future__ import annotations
 
 import math
-import sys
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 Point = tuple[float, float]
 

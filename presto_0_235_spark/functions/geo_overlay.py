@@ -40,17 +40,12 @@ and the clip kernel in functions/geo_clip.py remain the bulk routes).
 
 from __future__ import annotations
 
-import sys
 from fractions import Fraction
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
-
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
-
 from presto_0_235_spark.functions import geo_wkt as _W
+from presto_0_235_spark.session import trim_worker_importers
+
+trim_worker_importers()  # in a worker: see session.py
 
 Pt = tuple  # (Fraction, Fraction)
 

@@ -32,16 +32,10 @@ from __future__ import annotations
 
 import math
 import re
-import sys
 
-# Executor Python workers don't share the driver's sys.path edits —
-# same pickle-by-value convention as every worker-side module here.
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 EARTH_RADIUS_KM = 6371.01  # SphericalGeographyUtils.java:36
 MIN_LATITUDE = -85.05112878  # BingTileUtils.java (Bing tile system)

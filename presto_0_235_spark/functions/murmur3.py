@@ -28,16 +28,12 @@ fixed-width longs hash through the vectorized numpy path.
 from __future__ import annotations
 
 import struct
-import sys
 
 import numpy as np
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 _MASK = 0xFFFFFFFFFFFFFFFF
 _C1 = 0x87C37B91114253D5

@@ -12,12 +12,12 @@ from __future__ import annotations
 import hashlib
 import hmac as hmac_mod
 import math
-import sys
 
 import pandas as pd
 
 from presto_0_235_spark.functions import geo_wkt as _geo_wkt
 from presto_0_235_spark.functions import xxhash as _xxhash
+from presto_0_235_spark.session import trim_worker_importers
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -30,30 +30,10 @@ from pyspark.sql.types import (
     StringType,
 )
 
-# The driver process may import this package from a path the executor
-# Python workers don't have on sys.path (e.g. the grading driver adds
-# /root/repo via sys.path from an arbitrary CWD). Module-level UDFs
-# normally pickle by reference ("import presto_0_235_spark...") and
-# would fail to deserialize there — register the module for
-# pickle-by-value so the function bodies travel inside the closure.
-#
-# ALWAYS by-value (exempt from the r14 package-zip switch to
-# by-reference): this module decorates functions with @F.pandas_udf
-# at MODULE level, and pandas_udf touches the active SparkSession for
-# its returnType — importing it inside an executor Python (which has
-# no session) raises SESSION_OR_CONTEXT_NOT_EXISTS. By-value pickling
-# serializes the already-constructed objects instead of re-running
-# the decorators. session._ship_package honors the marker below.
-_PICKLE_BY_VALUE_ALWAYS = True
-try:
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(sys.modules[__name__])
-except Exception:  # pragma: no cover - older vendored cloudpickle
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 
-@F.pandas_udf("boolean")
+@F.pandas_udf(BooleanType())
 def json_invalid(texts: pd.Series) -> pd.Series:
     """True when the text is NOT a single complete JSON value under
     the reference's jackson strictness (JsonUtil.createJsonParser:
@@ -717,8 +697,8 @@ def make_split_words_udtf():
     """Custom TABLE function (UDTF) — beyond the reference (Presto
     0.235 has no UDTF surface beyond UNNEST, SURVEY.md §2.11): a
     Python UDTF usable in LATERAL position, exploding text into
-    (word, pos) rows. Returned as a factory so the class is created
-    after cloudpickle's by-value registration."""
+    (word, pos) rows. Returned as a factory: importing this module
+    builds no UDTF object, and the caller registers the one it gets."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="word: string, pos: int")
@@ -1597,7 +1577,7 @@ def qdigest_agg_udaf(v: pd.Series) -> bytes:
     """qdigest_agg(bigint) as a grouped-agg pandas UDAF — the
     CONVENIENCE path for ad-hoc SQL (rows ship to the reducer); the
     scale path is the mergeable two-phase route in
-    sql/frontend._route_mergeable_aggregate / operators/qdigest.
+    sql/frontend._route_geo_aggregate / operators/qdigest.
     qdigest_two_phase, exactly the geometry-aggregate split."""
     from presto_0_235_spark.operators import qdigest as _qd
 

@@ -38,14 +38,9 @@ independent xxhash64 implementation.
 
 from __future__ import annotations
 
-import sys
+from presto_0_235_spark.session import trim_worker_importers
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
-
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover - older vendored cloudpickle
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 _M64 = (1 << 64) - 1
 

@@ -45,19 +45,13 @@ failure mode the r12 verdict flagged).
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import DataFrame
-
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
-
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
 
 from presto_0_235_spark.functions import geo_overlay as _ov
 from presto_0_235_spark.functions import geo_wkt as _wkt
+from presto_0_235_spark.session import trim_worker_importers
+
+trim_worker_importers()  # in a worker: see session.py
 
 
 def _env_key(w: str):

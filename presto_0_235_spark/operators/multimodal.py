@@ -29,7 +29,6 @@ Scale notes:
 from __future__ import annotations
 
 import hashlib
-import sys
 from collections.abc import Iterator
 
 import pandas as pd
@@ -37,17 +36,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Executor Python workers may not have this package on sys.path (the
-# grading driver imports it via a driver-side sys.path edit from an
-# arbitrary CWD). Pickle this module's functions by value so the
-# mapInPandas closure travels self-contained (same fix as
-# functions/udfs.py).
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover - older vendored cloudpickle
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 # Typed metadata contract for media rows.
 MEDIA_META = T.StructType(

@@ -34,14 +34,10 @@ same exchange-partials-not-rows design as operators/tdigest.py.
 from __future__ import annotations
 
 import struct
-import sys
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 LEVELS = 64  # universe 2^64 (signed bigint, offset-mapped)
 _OFFSET = 1 << 63

@@ -38,22 +38,16 @@ where the reference needs a custom varbinary codec).
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Module-level import (not inside worker-executed closures): murmur3
-# registers itself pickle-by-value, so executors receive it inside
-# the closure instead of re-importing from a sys.path they don't have.
+# Module-level import: the worker-side closures below reference
+# murmur3 by name, and workers import it from the package zip that
+# session.ensure_session_defaults ships.
 from presto_0_235_spark.functions import murmur3 as _mm
+from presto_0_235_spark.session import trim_worker_importers
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
-
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover - older vendored cloudpickle
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 HLL_P = 11  # 2^11 = 2048 registers; rel. error ~1.04/sqrt(m) ~ 2.3%
 HLL_M = 1 << HLL_P

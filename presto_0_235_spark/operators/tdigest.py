@@ -51,17 +51,13 @@ from __future__ import annotations
 
 import math
 import struct
-import sys
 from typing import NamedTuple
 
 import numpy as np
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 DEFAULT_COMPRESSION = 100.0
 MICRO_BINS = 2048  # pre-binning resolution for the vectorized build

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from presto_0_235_spark.catalog import load_table
 from presto_0_235_spark.queries.registry import register
-from presto_0_235_spark.session import local_rows
+from presto_0_235_spark.session import drop_temp_view, local_rows
 
 # Scratch roots keyed by (format, sf) so concurrent scales never
 # collide; mode("overwrite") keeps reruns idempotent.
@@ -300,12 +300,13 @@ def io_memory_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memory connector analog (reference presto-memory: tables held
     in RAM across queries): CACHE TABLE pins the relation in the
     in-memory columnar store (eager), and subsequent queries scan
-    InMemoryRelation instead of the source files."""
+    InMemoryRelation instead of the source files. The view is dropped
+    once the result is analyzed; the cached relation stays."""
     load_table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") > 200000
     ).createOrReplaceTempView("mem_big_orders")
     spark.sql("CACHE TABLE mem_big_orders")
-    return (
+    result = (
         spark.table("mem_big_orders")
         .groupBy("o_orderstatus")
         .agg(
@@ -313,6 +314,8 @@ def io_memory_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_totalprice").cast("double").alias("top"),
         )
     )
+    drop_temp_view(spark, "mem_big_orders")
+    return result
 
 
 @register("io_system_tables", oracle=None)
@@ -366,8 +369,9 @@ def io_roundtrip_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
     No spark-avro connector jar is deployable in this container and
     no Python avro package is installed, so the engine carries its
     own object-container codec written from the public Avro 1.11
-    spec (sources/avro.py): distributed file-per-task sink and
-    one-task-per-file source over mapInPandas, null codec,
+    spec (sources/avro.py): distributed file-per-task sink over
+    mapInArrow and one-task-per-file source over mapInPandas (both in
+    sources/sink.py), null codec,
     nullable-union fields, date/timestamp logical types.
     Files interoperate with the real Apache Avro Java library
     (pinned by tests/test_operators.py::test_avro_java_interop, which

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from presto_0_235_spark.catalog import register_views
 from presto_0_235_spark.queries.registry import register, register_sql
+from presto_0_235_spark.session import drop_temp_view
 from presto_0_235_spark.sql.frontend import run_sql
 
 # Most queries here are register_sql declarations: one text that the
@@ -1977,7 +1978,7 @@ def sql_decimal_agg_column_scale(
         FROM lineitem
         """
     ).createOrReplaceTempView("lineitem_decimal_priced")
-    return run_sql(
+    result = run_sql(
         spark,
         """
         SELECT l_returnflag,
@@ -1990,6 +1991,8 @@ def sql_decimal_agg_column_scale(
         GROUP BY l_returnflag
         """,
     )
+    drop_temp_view(spark, "lineitem_decimal_priced")
+    return result
 
 
 # Decimal round/truncate over statically-typed COLUMN casts at

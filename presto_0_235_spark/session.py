@@ -91,7 +91,8 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     hold, since build_session also puts them into the SparkConf.
     Cheap and job-free: it sets confs and ships the package zip once
     per SparkContext, and never starts Python workers (see
-    warmup_python_workers).
+    warmup_python_workers). It raises when the zip cannot be built or
+    added: workers reach engine code only through it.
     """
     for key, value in SESSION_DEFAULTS.items():
         # every key is runtime-modifiable: a static one raises here
@@ -127,6 +128,13 @@ def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def drop_temp_view(spark: SparkSession, name: str) -> None:
+    """Drop a temp view through the session catalog. Unlike
+    spark.catalog.dropTempView this keeps the cache of the view's plan,
+    so a DataFrame already analyzed over the view still reads it."""
+    spark._jsparkSession.sessionState().catalog().dropTempView(name)
 
 
 _WARMED_SESSIONS: "weakref.WeakSet" = weakref.WeakSet()
@@ -190,26 +198,22 @@ def warmup_python_workers(spark: SparkSession) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Worker-side code distribution (r14)
+# Worker-side code distribution
 # ---------------------------------------------------------------------------
-# Executor Python workers do not share the driver's sys.path, so every
-# module whose functions run inside Arrow UDFs / mapInPandas /
-# applyInPandas historically registered itself pickle-BY-VALUE
-# (cloudpickle serializes the whole module into every closure). That
-# is correct but pays the module's bytecode + constants on every task
-# ship — the dominant cost of the geometry-aggregate COLD path (~16 s
-# cold vs ~6.5 s warm at sf0.1: 32 fresh Python workers x
-# multi-hundred-KB closures). The scalable design (and what a real
-# cluster deployment does with --py-files) ships the PACKAGE once per
-# SparkContext instead: ensure_session_defaults zips presto_0_235_spark
-# and addPyFile()s it, workers import by NAME, and closures shrink to
-# references. Sessions from newSession() share their parent's context
-# and so its shipped zip; re-adding it would only log a warning and
-# grow the task's Python includes. The zip is deleted at interpreter
-# exit. The per-module register_pickle_by_value try-blocks
-# remain as the fallback for sessions the ship could not reach
-# (register_worker_module keeps by-value until the first successful
-# ship, then unregisters).
+# Executor Python workers do not share the driver's sys.path (the
+# external driver adds the repo to its own sys.path from an arbitrary
+# working directory). ensure_session_defaults therefore ships the
+# package once per SparkContext, as a cluster deployment does with
+# --py-files: it zips presto_0_235_spark and addPyFile()s it, and
+# workers import engine modules by NAME. cloudpickle pickles engine
+# functions by reference, so a closure carries a module name and a
+# qualified name instead of the module's bytecode and constants
+# (geo_agg.union_fold: ~234 KB by value, 66 B by reference; SCALE.md
+# §9). No engine module is pickled by value: a session the package
+# cannot reach fails at ensure_session_defaults, not in a worker.
+# Sessions from newSession() share their parent's context and so its
+# shipped zip; re-adding it would only log a warning and grow the
+# task's Python includes. The zip is deleted at interpreter exit.
 #
 # Per-task import cost in the worker. pyspark (4.1) calls
 # importlib.invalidate_caches() before EVERY task a Python worker runs
@@ -222,8 +226,10 @@ def warmup_python_workers(spark: SparkSession) -> None:
 # zip's. That is ~26.7k directory entries re-read per task,
 # 0.18-0.27 s on 4 vCPUs: most of a small task's wall time.
 # trim_worker_importers drops the per-package importers (those keyed
-# on a path INSIDE an archive) when an engine module is imported in a
-# worker; the call then costs 0.04-0.07 s. This is safe: each sys.path
+# on a path INSIDE an archive). The package and each module with
+# worker-side code call it at import, because every subpackage a
+# worker imports from the shipped zip adds an importer of its own;
+# pyspark's per-task call then costs 0.04-0.07 s. This is safe: each sys.path
 # archive keeps its root importer, which still refreshes zipimport's
 # directory cache every task, and a later import from a dropped
 # package rebuilds its importer from that cache without reading the
@@ -233,10 +239,8 @@ def warmup_python_workers(spark: SparkSession) -> None:
 # Python 3.13's zipimport re-reads lazily, so there the trim only
 # saves dict entries.
 
-_WORKER_MODULES: list = []
 _SHIPPED_CONTEXTS: "weakref.WeakSet" = weakref.WeakSet()
 _PKG_ZIP: str | None = None
-_SHIPPED_ANY = False
 
 
 def trim_worker_importers() -> None:
@@ -253,57 +257,31 @@ def trim_worker_importers() -> None:
             del sys.path_importer_cache[key]
 
 
-def register_worker_module(mod) -> None:
-    """Modules with executor-side code call this at import time.
-
-    Registers the module pickle-by-value (the fallback that always
-    works) unless the package has already been shipped to the
-    session's workers, in which case by-reference pickling is both
-    smaller and faster.
-    """
-    _WORKER_MODULES.append(mod)
-    trim_worker_importers()
-    if _SHIPPED_ANY:
-        return
-    try:  # pragma: no cover - environment-dependent
-        from pyspark import cloudpickle as _cp
-
-        _cp.register_pickle_by_value(mod)
-    except Exception:
-        pass
-
-
-def _package_zip() -> str | None:
+def _package_zip() -> str:
     """Build (once per process) a zip of this package for addPyFile;
     the zip is removed when the interpreter exits."""
     global _PKG_ZIP
     if _PKG_ZIP is not None:
-        return _PKG_ZIP or None
+        return _PKG_ZIP
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    try:
-        fd, path = tempfile.mkstemp(
-            prefix="presto_0_235_spark_", suffix=".zip")
-        os.close(fd)
-        atexit.register(_remove_package_zip, path, os.getpid())
-        with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, dirs, files in os.walk(pkg_dir):
-                dirs[:] = [d for d in dirs if d != "__pycache__"]
-                for f in sorted(files):
-                    if not f.endswith(".py"):
-                        continue
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "presto_0_235_spark",
-                        os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-        _PKG_ZIP = path
-        return path
-    except Exception:  # pragma: no cover - disk-full etc.
-        _PKG_ZIP = ""
-        return None
+    fd, path = tempfile.mkstemp(prefix="presto_0_235_spark_", suffix=".zip")
+    os.close(fd)
+    atexit.register(_remove_package_zip, path, os.getpid())
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for root, dirs, files in os.walk(pkg_dir):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for f in sorted(files):
+                if not f.endswith(".py"):
+                    continue
+                full = os.path.join(root, f)
+                rel = os.path.join(
+                    "presto_0_235_spark", os.path.relpath(full, pkg_dir))
+                zf.write(full, rel)
+    _PKG_ZIP = path
+    return path
 
 
 def _remove_package_zip(path: str, owner_pid: int) -> None:
@@ -317,48 +295,14 @@ def _remove_package_zip(path: str, owner_pid: int) -> None:
 
 
 def _ship_package(spark: SparkSession) -> None:
-    global _SHIPPED_ANY
-    try:
-        sc = spark.sparkContext
-    except Exception:  # pragma: no cover - e.g. connect-only session
-        return
+    """Add the package zip to the session's SparkContext, once per
+    context. Raises when the zip cannot be built or added: engine
+    code that runs in a worker has no other way to get there."""
+    sc = spark.sparkContext
     if sc in _SHIPPED_CONTEXTS:
         return
-    path = _package_zip()
-    if path is None:
-        return
-    try:
-        sc.addPyFile(path)
-    except Exception:  # pragma: no cover
-        return
+    sc.addPyFile(_package_zip())
     _SHIPPED_CONTEXTS.add(sc)
-    if not _SHIPPED_ANY:
-        _SHIPPED_ANY = True
-        try:
-            from pyspark import cloudpickle as _cp
-
-            for mod in _WORKER_MODULES:
-                if getattr(mod, "_PICKLE_BY_VALUE_ALWAYS", False):
-                    continue
-                try:
-                    _cp.unregister_pickle_by_value(mod)
-                except Exception:
-                    pass
-            # modules that registered directly (legacy form) are also
-            # engine modules — sweep the package namespace; modules
-            # whose import is not executor-safe (module-level
-            # pandas_udf construction needs a live session) opt out
-            # via _PICKLE_BY_VALUE_ALWAYS
-            for name, mod in list(sys.modules.items()):
-                if (name.startswith("presto_0_235_spark") and mod
-                        and not getattr(mod, "_PICKLE_BY_VALUE_ALWAYS",
-                                        False)):
-                    try:
-                        _cp.unregister_pickle_by_value(mod)
-                    except Exception:
-                        pass
-        except Exception:  # pragma: no cover
-            pass
 
 
 def build_session(

@@ -41,14 +41,10 @@ import datetime
 import io
 import json
 import struct
-import sys
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover - older vendored cloudpickle
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 MAGIC = b"Obj\x01"
 _EPOCH = datetime.date(1970, 1, 1)
@@ -322,13 +318,10 @@ def write_avro_dataframe(df, path: str) -> int:
 
 
 def read_avro_dataframe(spark, path: str, spark_schema):
-    """Distributed Avro source: one decode task per container file.
-    The file listing is driver-side metadata, exactly like any file
-    source's split planning; at 100 TB the listing is the cheap part
-    and every file decodes independently. The listing rides in the
-    decode closure and ``spark.range(0, n, 1, n)`` schedules the n
-    splits, one id per task, so the read is one job of n tasks with
-    no shuffle. An empty sink reads as an empty LocalRelation.
+    """Distributed Avro source: one decode task per container file
+    (sources/sink.read_splits). The file listing is driver-side
+    metadata, exactly like any file source's split planning; at 100 TB
+    the listing is the cheap part and every file decodes independently.
     ``spark_schema`` is the declared read schema — no inference at
     query time, matching the engine's fixed-schema connector model."""
     import glob
@@ -336,25 +329,17 @@ def read_avro_dataframe(spark, path: str, spark_schema):
 
     import pandas as pd
 
-    from presto_0_235_spark.session import local_rows
-
-    files = sorted(glob.glob(os.path.join(path, "*.avro")))
-    if not files:
-        return local_rows(spark, [], spark_schema)
+    from presto_0_235_spark.sources.sink import read_splits
 
     col_names = [f.name for f in spark_schema.fields]
 
-    def decode_files(batches):
-        for pdf in batches:
-            for i in pdf["id"]:
-                with open(files[i], "rb") as fh:
-                    fields, rows = read_container(fh.read())
-                names = [n for n, _ in fields]
-                if names != col_names:
-                    raise ValueError(
-                        f"avro schema {names} != declared {col_names}"
-                    )
-                yield pd.DataFrame(rows, columns=names, dtype=object)
+    def decode(fname):
+        with open(fname, "rb") as fh:
+            fields, rows = read_container(fh.read())
+        names = [n for n, _ in fields]
+        if names != col_names:
+            raise ValueError(f"avro schema {names} != declared {col_names}")
+        yield pd.DataFrame(rows, columns=names, dtype=object)
 
-    n = len(files)
-    return spark.range(0, n, 1, n).mapInPandas(decode_files, spark_schema)
+    files = sorted(glob.glob(os.path.join(path, "*.avro")))
+    return read_splits(spark, files, spark_schema, decode)

@@ -56,16 +56,12 @@ from __future__ import annotations
 import datetime
 import io
 import struct
-import sys
 
 import numpy as np
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover - older vendored cloudpickle
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 COMPRESSED_MARKER = 0x01  # PageCodecMarker.java COMPRESSED(1)
 MIN_COMPRESSION_RATIO = 0.8  # PagesSerde.java MINIMUM_COMPRESSION_RATIO
@@ -478,18 +474,15 @@ def write_pagefile_dataframe(df, path: str, compression: str = "none") -> int:
 def read_pagefile_dataframe(spark, path: str, spark_schema):
     """Distributed PAGEFILE source with STRIPE-granular splits: the
     driver reads each footer (bounded tail read) and schedules one
-    task per stripe, so one big file still parallelizes — the same
-    splittability contract PageFilePageSourceFactory provides. The
-    (file, start, end) split list rides in the decode closure and
-    ``spark.range(0, n, 1, n)`` schedules the n splits, one id per
-    task: one job of n tasks, no shuffle. An empty sink reads as an
-    empty LocalRelation."""
+    task per (file, start, end) stripe (sources/sink.read_splits), so
+    one big file still parallelizes — the same splittability contract
+    PageFilePageSourceFactory provides."""
     import glob
     import os
 
     import pandas as pd
 
-    from presto_0_235_spark.session import local_rows
+    from presto_0_235_spark.sources.sink import read_splits
 
     kinds = spark_kinds(spark_schema)
     col_names = [f.name for f in spark_schema.fields]
@@ -500,17 +493,9 @@ def read_pagefile_dataframe(spark, path: str, spark_schema):
         for i, start in enumerate(offsets):
             end = offsets[i + 1] if i + 1 < len(offsets) else footer_offset
             splits.append((f, start, end))
-    if not splits:
-        return local_rows(spark, [], spark_schema)
 
-    def decode_splits(batches):
-        for pdf in batches:
-            for i in pdf["id"]:
-                p, start, end = splits[i]
-                for cols in read_stripe(p, start, end, kinds):
-                    yield pd.DataFrame(
-                        dict(zip(col_names, cols)), dtype=object
-                    )
+    def decode(split):
+        for cols in read_stripe(*split, kinds):
+            yield pd.DataFrame(dict(zip(col_names, cols)), dtype=object)
 
-    n = len(splits)
-    return spark.range(0, n, 1, n).mapInPandas(decode_splits, spark_schema)
+    return read_splits(spark, splits, spark_schema, decode)

@@ -55,14 +55,10 @@ from __future__ import annotations
 
 import datetime
 import struct
-import sys
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover - older vendored cloudpickle
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 MAGIC = b"RCF"
 VERSION = 1
@@ -440,33 +436,22 @@ def write_rcfile_dataframe(df, path: str, serde: str = "binary") -> int:
 
 def read_rcfile_dataframe(spark, path: str, spark_schema,
                           serde: str = "binary"):
-    """Distributed RCFILE source: one task per file (files are
-    written one per task, so read parallelism tracks the layout).
-    The file listing rides in the decode closure and
-    ``spark.range(0, n, 1, n)`` schedules the n splits, one id per
-    task: one job of n tasks, no shuffle. An empty sink reads as an
-    empty LocalRelation."""
+    """Distributed RCFILE source: one task per file
+    (sources/sink.read_splits; files are written one per task, so read
+    parallelism tracks the layout)."""
     import glob
     import os
 
     import pandas as pd
 
-    from presto_0_235_spark.session import local_rows
+    from presto_0_235_spark.sources.sink import read_splits
 
     kinds = spark_kinds(spark_schema)
     col_names = [f.name for f in spark_schema.fields]
 
+    def decode(fname):
+        cols = read_file(fname, kinds, serde)
+        yield pd.DataFrame(dict(zip(col_names, cols)), dtype=object)
+
     files = sorted(glob.glob(os.path.join(path, "*.rc")))
-    if not files:
-        return local_rows(spark, [], spark_schema)
-
-    def decode_files(batches):
-        for pdf in batches:
-            for i in pdf["id"]:
-                cols = read_file(files[i], kinds, serde)
-                yield pd.DataFrame(
-                    dict(zip(col_names, cols)), dtype=object
-                )
-
-    n = len(files)
-    return spark.range(0, n, 1, n).mapInPandas(decode_files, spark_schema)
+    return read_splits(spark, files, spark_schema, decode)

@@ -1,4 +1,5 @@
-"""The distributed file sink the codecs share (avro, rcfile, pagefile).
+"""The distributed file sink and split reader the codecs share (avro,
+rcfile, pagefile).
 
 Every task encodes its rows into ONE file under the sink directory (the
 file-per-task layout of any Spark file sink and of the reference's
@@ -11,18 +12,16 @@ Rows cross the JVM->Python boundary as Arrow record batches
 float64, silently rounding |v| > 2^53 before a codec sees it.
 ``to_pylist()`` on the Arrow columns keeps longs exact (Python ints) at
 any magnitude, nulls as None and a double NaN as a NaN value.
+
+On read, the driver lists the splits (files, or a file's stripes) as
+any file source plans its input; each split decodes in one task.
 """
 
 from __future__ import annotations
 
-import sys
+from presto_0_235_spark.session import local_rows, trim_worker_importers
 
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
-
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover - older vendored cloudpickle
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 
 def _exact_values(col) -> list:
@@ -74,3 +73,22 @@ def write_per_task(df, path: str, suffix: str, write) -> int:
 
     manifest = df.mapInArrow(encode_partition, "file string, n_rows long")
     return len(manifest.collect())
+
+
+def read_splits(spark, splits: list, spark_schema, decode):
+    """Read ``splits`` one task each: ``decode(split)`` yields the
+    split's rows as object-dtype pandas DataFrames in ``spark_schema``
+    column order. The split list rides in the task closure and
+    ``spark.range(0, n, 1, n)`` schedules one id per task, so the read
+    is one job of n tasks with no shuffle. No splits read as an empty
+    LocalRelation."""
+    if not splits:
+        return local_rows(spark, [], spark_schema)
+
+    def decode_splits(batches):
+        for pdf in batches:
+            for i in pdf["id"]:
+                yield from decode(splits[i])
+
+    n = len(splits)
+    return spark.range(0, n, 1, n).mapInPandas(decode_splits, spark_schema)

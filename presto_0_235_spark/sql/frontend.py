@@ -78,6 +78,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
+from presto_0_235_spark.session import drop_temp_view
 from presto_0_235_spark.sql.json_cast import (
     _operand_back, _operand_fwd, rewrite_array_element_concat,
     rewrite_container_json_casts, rewrite_decimal_array_ops,
@@ -5538,7 +5539,7 @@ def _ensure_sql_udfs(spark: SparkSession) -> None:
     # qdigest surface (QuantileDigestFunctions.java; r14): the
     # scalar accessors plus qdigest_agg as a grouped-agg UDAF — the
     # ad-hoc convenience path; the GROUP BY shape routes through the
-    # mergeable two-phase operator in _route_mergeable_aggregate
+    # mergeable two-phase operator in _route_geo_aggregate
     spark.udf.register("value_at_quantile", U.value_at_quantile_qd)
     spark.udf.register("values_at_quantiles", U.values_at_quantiles_qd)
     spark.udf.register("quantile_at_value", U.quantile_at_value_qd)
@@ -6358,8 +6359,7 @@ def split_shared_ctes(sql: str) -> tuple[str, ...]:
 def run_sql(spark: SparkSession, sql: str) -> DataFrame:
     """Execute Presto-dialect SQL against the registered catalog. The
     views of the shared CTEs are dropped once the statement is analyzed,
-    via the session catalog, which (unlike spark.catalog) keeps the
-    cache."""
+    keeping their cache (session.drop_temp_view)."""
     _ensure_sql_udfs(spark)
     routed = _route_geo_aggregate(spark, sql)
     if routed is not None:
@@ -6374,4 +6374,4 @@ def run_sql(spark: SparkSession, sql: str) -> DataFrame:
         return spark.sql("".join(pieces))
     finally:
         for view in views:
-            spark._jsparkSession.sessionState().catalog().dropTempView(view)
+            drop_temp_view(spark, view)

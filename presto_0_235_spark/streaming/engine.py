@@ -30,8 +30,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-_EVENTS_SCHEMA_CACHE: dict[str, object] = {}
+from presto_0_235_spark.session import drop_temp_view
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,18 +38,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (explicit — streaming sources never infer), ts restored to LTZ
     TimestampType exactly as catalog.load_table does (withWatermark
     rejects TIMESTAMP_NTZ event-time columns)."""
-    from presto_0_235_spark.catalog import normalize_events_ts
+    from presto_0_235_spark.catalog import _read_parquet, normalize_events_ts
 
-    # Footer-derived schema cached per path: streaming sources must be
-    # given an explicit schema, and re-reading the parquet footer on
-    # every builder call is measurable (~0.1 s) against a replayed
-    # micro-benchmark. Fixture schemas are immutable within a run
-    # (tests/test_fixture_schema.py pins them).
-    key = f"{sf_dir}/events.parquet"
-    schema = _EVENTS_SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(key).schema
-        _EVENTS_SCHEMA_CACHE[key] = schema
+    # Streaming sources must be given an explicit schema: the batch
+    # footer schema, through the catalog's memo (one inference per
+    # process and schema-relevant conf set).
+    schema = _read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # The file stream source wants a directory or glob, not a bare
     # file path (basePath must be a directory).
     raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/events*.parquet")
@@ -113,8 +106,7 @@ def run_to_batch(
         spark.conf.set(nodata_key, before_nodata)
     # The sink's temp view is only a name for its plan, and the
     # analyzed result holds that plan: drop the view so replays leave
-    # none behind (via the session catalog, as run_sql does for its
-    # CTE views).
+    # none behind.
     result = spark.table(name)
-    spark._jsparkSession.sessionState().catalog().dropTempView(name)
+    drop_temp_view(spark, name)
     return result

@@ -20,7 +20,6 @@ mapInPandas.
 
 from __future__ import annotations
 
-import sys
 from collections.abc import Iterator
 
 import pandas as pd
@@ -28,13 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# State/worker pickling: same sys.path hazard as functions/udfs.py.
-try:  # worker-side code: by-value fallback until the package ships
-    from presto_0_235_spark.session import register_worker_module
+from presto_0_235_spark.session import trim_worker_importers
 
-    register_worker_module(sys.modules[__name__])
-except Exception:  # pragma: no cover
-    pass
+trim_worker_importers()  # in a worker: see session.py
 
 PROFILE_SCHEMA = T.StructType(
     [

@@ -191,6 +191,31 @@ def test_later_session_loads_fixtures_without_jobs(spark):
     assert second == first
 
 
+def test_stream_schema_keyed_on_inference_confs(spark, tmp_path):
+    """The events stream takes its schema from the catalog's memo, whose
+    key holds the inference confs: a session that reads binary as
+    string streams a string column, not the schema a plain session
+    inferred first."""
+    import pyarrow as pa
+
+    from presto_0_235_spark.streaming.engine import read_events_stream
+
+    pq.write_table(pa.table({
+        "user_id": pa.array([1], pa.int64()),
+        "ts": pa.array([0], pa.timestamp("us")),
+        "payload": pa.array([b"x"], pa.binary()),
+    }), tmp_path / "events.parquet")
+    sf_dir = str(tmp_path)
+
+    plain = read_events_stream(spark.newSession(), sf_dir)
+    assert dict(plain.dtypes)["payload"] == "binary"
+    as_string_session = spark.newSession()
+    as_string_session.conf.set("spark.sql.parquet.binaryAsString", "true")
+    as_string = read_events_stream(as_string_session, sf_dir)
+    assert dict(as_string.dtypes) == {
+        "user_id": "bigint", "ts": "timestamp", "payload": "string"}
+
+
 def test_schema_memo_keyed_on_inference_confs(spark, tmp_path):
     """A session whose confs change what parquet inference returns
     infers its own schema; a later session with the same confs reuses

@@ -70,6 +70,30 @@ def test_oracle_no_hugeint_columns(name, duck):
                 f"DecimalType — align the oracle's result type")
 
 
+@pytest.mark.parametrize(
+    "name", ["io_memory_table", "sql_decimal_agg_column_scale"])
+def test_builder_leaves_no_temp_view(name, spark, duck, sf_dir):
+    """A builder that names an intermediate relation drops the view once
+    its result is analyzed: the session's temp views are the same
+    before and after the call, and the result still matches its oracle
+    (io_system_tables, which lists the temp views, would otherwise
+    depend on which queries ran before it)."""
+    from presto_0_235_spark.catalog import register_views
+
+    session = spark.newSession()
+    register_views(session, sf_dir)
+
+    def temp_views():
+        return {t.name for t in session.catalog.listTables()
+                if t.tableType == "TEMPORARY"}
+
+    before = temp_views()
+    q = _QUERIES[name]
+    df = q.builder(session, sf_dir)
+    assert temp_views() == before
+    assert_df_matches_oracle(df, duck, q.oracle)
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

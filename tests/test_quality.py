@@ -147,46 +147,41 @@ def test_split_assign_proportions_and_stability(spark, sf_dir):
 
 
 def test_worker_package_ships_and_closures_shrink(spark):
-    """r14 (r13 verdict item #3): ensure_session_defaults ships the
-    package zip to executor Pythons once per SparkContext (addPyFile) and
-    switches engine modules from pickle-BY-VALUE to by-reference —
-    the geometry-aggregate cold path's dominant cost was shipping
-    multi-hundred-KB module closures to 32 fresh workers. Pins all
-    three legs: the ship happened, closures are now tiny, and a
-    worker can import an engine module by name (from the zip)."""
+    """ensure_session_defaults ships the package zip to executor Pythons
+    once per SparkContext (addPyFile), and engine functions pickle BY
+    REFERENCE: a closure names its function instead of carrying its
+    module (the geometry-aggregate cold path used to ship
+    multi-hundred-KB module closures to every fresh worker). Pins the
+    three legs: the ship happened, closures are tiny, and a worker
+    imports engine modules by name, functions/udfs.py included."""
     import presto_0_235_spark.session as S
+    from presto_0_235_spark.functions import udfs
     from presto_0_235_spark.operators import geo_agg
     from presto_0_235_spark.session import ensure_session_defaults
 
     ensure_session_defaults(spark)
-    assert S._SHIPPED_ANY and spark.sparkContext in S._SHIPPED_CONTEXTS
+    assert spark.sparkContext in S._SHIPPED_CONTEXTS
     from pyspark import cloudpickle as cp
 
     assert len(cp.dumps(geo_agg.union_fold)) < 2000  # was ~234 KB
-    # functions/udfs.py stays by-value: its module-level pandas_udf
-    # decorators cannot run at import inside a session-less worker.
-    # Probe the cloudpickle registry itself — dumps() of a pandas_udf
-    # WRAPPER is not a valid probe (once the UDF has been used, the
-    # wrapper holds a py4j handle whose RLock cannot pickle; Spark
-    # serializes the inner function, not the wrapper).
-    from presto_0_235_spark.functions import udfs
-
-    assert udfs._PICKLE_BY_VALUE_ALWAYS
-    registry = cp.list_registry_pickle_by_value()  # module NAMES
-    assert udfs.__name__ in registry
-    assert "presto_0_235_spark.operators.qdigest" not in registry
+    assert len(cp.dumps(udfs._beta_i)) < 200  # ~2.8 KB by value
+    # the registry holds module NAMES; dumps() of a pandas_udf WRAPPER
+    # is no probe (once used it holds a py4j handle whose RLock cannot
+    # pickle; Spark serializes the inner function, not the wrapper)
+    assert not [n for n in cp.list_registry_pickle_by_value()
+                if n.startswith("presto_0_235_spark")]
 
     import pandas as pd
 
     def probe(batches):
+        import presto_0_235_spark.functions.udfs as u  # noqa
         import presto_0_235_spark.operators.qdigest as q  # noqa
         for pdf in batches:
-            yield pd.DataFrame({"f": [q.__file__]})
+            yield pd.DataFrame({"q": [q.__file__], "u": [u.__file__]})
 
-    worker_file = (spark.range(1).mapInPandas(probe, "f string")
-                   .collect()[0][0])
+    worker = spark.range(1).mapInPandas(probe, "q string, u string").collect()[0]
     # import-by-name resolved on the worker — from the shipped zip
     # when the repo is off the worker path (the /tmp driver
     # contract), from the repo when the test itself runs there
-    assert worker_file.endswith(
-        "presto_0_235_spark/operators/qdigest.py")
+    assert worker.q.endswith("presto_0_235_spark/operators/qdigest.py")
+    assert worker.u.endswith("presto_0_235_spark/functions/udfs.py")

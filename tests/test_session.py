@@ -7,6 +7,8 @@ import functools
 import os
 import subprocess
 import sys
+import tempfile
+import weakref
 
 import pytest
 from pyspark.sql import DataFrame
@@ -219,6 +221,57 @@ def test_session_defaults_have_one_door():
         if called == ["register_views", "run_sql"]:
             copies.append((rel, top.name))
     assert copies == []
+
+
+def test_engine_imports_without_a_session():
+    """Every engine module imports in an interpreter that has started no
+    JVM, as a Python worker imports it from the shipped package zip, and
+    importing them registers no engine module for cloudpickle's
+    by-value pickling."""
+    code = (
+        "import importlib, pkgutil\n"
+        "import presto_0_235_spark as pkg\n"
+        "from pyspark import SparkContext, cloudpickle\n"
+        "names = [m.name for m in pkgutil.walk_packages(\n"
+        "    pkg.__path__, pkg.__name__ + '.')]\n"
+        "for name in names:\n"
+        "    importlib.import_module(name)\n"
+        "assert SparkContext._gateway is None\n"
+        "by_value = [n for n in cloudpickle.list_registry_pickle_by_value()\n"
+        "            if n.split('.')[0] == pkg.__name__]\n"
+        "print(len(names), by_value)\n")
+    out = subprocess.run([sys.executable, "-c", code], cwd=ROOT,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    count, by_value = out.stdout.split(" ", 1)
+    assert int(count) > 50
+    assert by_value.strip() == "[]"
+
+
+def test_nothing_registers_pickle_by_value():
+    """Engine code reaches workers only as the shipped package: no
+    module asks cloudpickle to pickle itself by value."""
+    assert _callers("register_pickle_by_value") == set()
+
+
+def _fail(*_args, **_kwargs):
+    raise OSError("no space left on device")
+
+
+@pytest.mark.parametrize("broken", ["build_zip", "add_zip"])
+def test_failed_ship_raises(spark, monkeypatch, broken):
+    """When the package zip cannot be built or cannot be added to the
+    context, preparing a session raises: engine code has no other way
+    to reach the workers."""
+    monkeypatch.setattr(S, "_SHIPPED_CONTEXTS", weakref.WeakSet())
+    if broken == "build_zip":
+        monkeypatch.setattr(S, "_PKG_ZIP", None)
+        monkeypatch.setattr(tempfile, "mkstemp", _fail)
+    else:
+        monkeypatch.setattr(spark.sparkContext, "addPyFile", _fail)
+    with pytest.raises(OSError, match="no space left"):
+        ensure_session_defaults(spark.newSession())
+    assert spark.sparkContext not in S._SHIPPED_CONTEXTS
 
 
 def test_registered_builder_applies_defaults_first(monkeypatch):
