@@ -7,7 +7,8 @@ large-corpus dedup algorithms re-expressed Spark-first:
 
   - exact dedup        : normalize -> hash -> groupBy (one shuffle)
   - n-gram Jaccard     : shingle arrays + blocked self-join
-  - MinHash + LSH      : shingle -> K minhashes -> B bands -> bucket
+  - MinHash + LSH      : shingle -> one md5 -> K integer permutation
+                         mins -> B bands -> bucket
                          join (the scale path: candidate pairs only,
                          never all-pairs)
   - SimHash            : per-bit token-hash voting -> fingerprint ->
@@ -16,8 +17,9 @@ large-corpus dedup algorithms re-expressed Spark-first:
 Every primitive is a pure Column expression (JVM-side, inside
 WholeStageCodegen — no Python UDFs) so the only shuffles are the final
 groupBy/join, and each has a DuckDB SQL twin generator used by the
-oracle strings (same constants, same hash = md5, same separators), so
-the differential gate checks real values, not just row counts.
+oracle strings (same constants, same base hash — the first 32 bits of
+md5 — same integer arithmetic), so the differential gate checks real
+values, not just row counts.
 
 Scale notes (100 TB corpus, 1000 executors):
   - Exact dedup shuffles once on the 128-bit content key: perfectly
@@ -30,6 +32,8 @@ Scale notes (100 TB corpus, 1000 executors):
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -112,101 +116,137 @@ def sql_jaccard(a: str, b: str) -> str:
 # MinHash + LSH
 
 
+def _token_hash32(tok: Column) -> Column:
+    """Deterministic 32-bit token hash both engines can compute:
+    first 8 hex digits of md5, as a bigint."""
+    return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("bigint")
+
+
+def sql_token_hash32(tok: str) -> str:
+    return f"('0x' || substr(md5({tok}), 1, 8))::BIGINT"
+
+
+def _label_int(label: str) -> int:
+    return int(hashlib.md5(label.encode()).hexdigest(), 16)
+
+
+# The permutation family: sig[i] = min over shingles of
+# (MINHASH_A[i] * h + MINHASH_B[i]) mod MINHASH_P, h = the 32-bit md5
+# token hash. a < 2^31 and h < 2^32 keep every product below 2^63, so
+# the BIGINT arithmetic is exact (no ANSI overflow) on both engines.
+# The constants come from fixed labels, not from any data.
+MINHASH_P = 2**31 - 1
+MINHASH_A = tuple(
+    1 + _label_int(f"minhash-a-{i}") % (MINHASH_P - 1) for i in range(MINHASH_K)
+)
+MINHASH_B = tuple(_label_int(f"minhash-b-{i}") % MINHASH_P for i in range(MINHASH_K))
+
+
+def _bind(value: Column, body) -> Column:
+    """body(v) with v evaluated once: Catalyst does not share
+    subexpressions inside higher-order lambdas, so a value read K
+    times by lambdas is bound as the element of a one-element array."""
+    return F.transform(F.array(value), body)[0]
+
+
 def minhash_signature(shingles: Column, k: int = MINHASH_K) -> Column:
     """Array of K min-wise hashes: sig[i] = min over shingles of
-    md5(i || '|' || shingle).
+    (MINHASH_A[i] * h + MINHASH_B[i]) mod MINHASH_P, where h is the
+    shingle's 32-bit md5 hash (`_token_hash32`).
 
-    md5-hex string min is a valid min-wise hash family (seeded by the
-    prefix), computable identically on any engine with md5 — which is
-    what makes the DuckDB differential check possible. JVM-side only.
+    One md5 per shingle: the hash array is bound once and each of the
+    K entries is an exact BIGINT permutation of it, computable
+    identically on any engine — which is what makes the DuckDB
+    differential check possible. JVM-side only. The 2-universal
+    (a_i*h + b_i) mod p permutes the hash values independently for
+    each i, so each entry agrees with probability ~jaccard and a
+    jaccard-0.6 pair keeps ~93% band recall (1 - (1 - 0.6^2)^6).
 
-    Cheaper families were measured at sf0.1 and REJECTED (round 6):
-      - Kirsch-Mitzenmacher double hashing (2 md5 bases, h0 + i*h1):
-        the min for large i is dominated by min-h1, collapsing K
-        permutations to ~2 effective ones — band recall on a
-        jaccard-0.6 pair drops from ~93% to ~40%. Wrong, not slow.
-      - 32-bit md5 windows (3 md5s sliced into 12 independent keys):
-        statistically correct (agreement variance matches binomial),
-        but higher-order lambdas are interpreted, not codegen'd, so
-        the shared md5 is NOT common-subexpression-eliminated across
-        windows; with the extra conv/substring it measured 2.57 s vs
-        1.42 s for this form, and a fold-based variant that does bind
-        the digest once measured 1.89 s. K plain md5 string-mins win.
+    REJECTED: Kirsch-Mitzenmacher double hashing (2 md5 bases,
+    h0 + i*h1): the min for large i is dominated by min-h1, collapsing
+    K permutations to ~2 effective ones — band recall on a jaccard-0.6
+    pair drops from ~93% to ~40%. Wrong, not slow.
+    REPLACED: K md5 hex-string mins (md5(i || '|' || shingle)):
+    correct, but K md5s per shingle were half of dedup_minhash_lsh's
+    time.
     """
-    # NB: helper factory, not `lambda s, i=i: ...` — pyspark reads the
+    # NB: helper factory, not `lambda h, i=i: ...` — pyspark reads the
     # lambda's arity from its signature, so a defaulted second param
     # turns it into an (element, index) lambda and binds the index
     # Column over the seed.
-    def seed_min(i: int) -> Column:
-        prefix = F.lit(f"{i}|")
-        return F.array_min(
-            F.transform(shingles, lambda s: F.md5(F.concat(prefix, s)))
-        )
+    def permuted_min(hs: Column, i: int) -> Column:
+        a, b = MINHASH_A[i], MINHASH_B[i]
+        return F.array_min(F.transform(hs, lambda h: (h * a + b) % MINHASH_P))
 
-    return F.array(*[seed_min(i) for i in range(k)])
+    return _bind(
+        F.transform(shingles, _token_hash32),
+        lambda hs: F.array(*[permuted_min(hs, i) for i in range(k)]),
+    )
+
+
+def _permutation_sql(i: int) -> str:
+    """Permutation i of lambda variable h; Spark SQL and DuckDB spell
+    it alike."""
+    return f"(h * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MINHASH_P}"
 
 
 def sql_minhash_signature(shingles: str, k: int = MINHASH_K) -> str:
     mins = ", ".join(
-        f"list_min(list_transform({shingles}, s -> md5('{i}|' || s)))"
+        f"list_min(list_transform(hs, h -> {_permutation_sql(i)}))"
         for i in range(k)
     )
-    return f"[{mins}]"
+    hashes = f"list_transform({shingles}, s -> {sql_token_hash32('s')})"
+    return f"list_transform([{hashes}], hs -> [{mins}])[1]"
+
+
+def _check_band_shape(bands: int, rows: int) -> None:
+    # A band key packs its R signature entries (each < p) into one
+    # BIGINT, exact only while p^R < 2^63; and the bands read a fixed
+    # MINHASH_K-entry signature.
+    assert rows == LSH_ROWS, f"band keys pack exactly {LSH_ROWS} rows"
+    assert bands * rows <= MINHASH_K, (
+        f"bands*rows ({bands}*{rows}) exceeds MINHASH_K ({MINHASH_K})")
 
 
 def lsh_band_keys(
     sig: Column, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> Column:
-    """Array of B band keys: band b hashes rows [b*R, b*R+R) of the
-    signature. Two docs collide on band b iff those R minhashes all
-    match — the classic (jac^R per band) LSH amplification."""
-    return F.array(
-        *[
-            F.md5(F.concat_ws("|", *[sig[b * rows + j] for j in range(rows)]))
-            for b in range(bands)
-        ]
-    )
+    """Array of B band keys: band b packs rows [b*R, b*R+R) of the
+    signature into sig[b*R] * p + sig[b*R+1], a BIGINT below 2^62 that
+    is never NULL (every shingle array holds >= 1 element). Two docs
+    collide on band b iff those R minhashes all match — the classic
+    (jac^R per band) LSH amplification."""
+    _check_band_shape(bands, rows)
+    return _bind(sig, lambda g: F.array(*[
+        g[b * rows] * MINHASH_P + g[b * rows + 1] for b in range(bands)
+    ]))
 
 
 def sql_lsh_band_key(sig: str, band: int, rows: int = LSH_ROWS) -> str:
     # 1-based list indexing in DuckDB.
-    parts = " || '|' || ".join(f"{sig}[{band * rows + j + 1}]" for j in range(rows))
-    return f"md5({parts})"
-
-
-def spark_minhash_min_sql(shingles: str, i: int) -> str:
-    """Spark-SQL spelling of one minhash min (seed ``i``) — the same
-    expression `minhash_signature` builds via the Column API."""
-    return f"array_min(transform({shingles}, s -> md5(concat('{i}|', s))))"
+    return f"({sig}[{band * rows + 1}] * {MINHASH_P} + {sig}[{band * rows + 2}])"
 
 
 def spark_lsh_band_keys_sql(
     shingles: str, bands: int = LSH_BANDS, rows: int = LSH_ROWS
 ) -> str:
-    """Spark-SQL spelling of the band-key array, as ONE parseable
-    expression (single Py4J round trip; the Column spelling costs
-    ~400 driver round trips per build — guide §5).
-
-    Emits the post-optimizer form directly: the Column path builds
-    `array(min_0..min_K)[idx]` per band row and Catalyst's
-    SimplifyExtractValueOps folds each subscript to its element, so
-    both spellings reach the IDENTICAL optimized plan (pinned in
+    """Spark-SQL spelling of lsh_band_keys(minhash_signature(shingles)),
+    as ONE parseable expression (single Py4J round trip; the Column
+    spelling costs ~400 driver round trips per build — guide §5).
+    Both spellings reach the IDENTICAL optimized plan (pinned in
     tests/test_operators.py)."""
-    # The Column path indexes a fixed MINHASH_K-element signature —
-    # out-of-range subscripts there became NULL band keys, while this
-    # spelling would happily derive seeds past K. Pin the implicit
-    # bound so the two spellings cannot silently diverge.
-    assert bands * rows <= MINHASH_K, (
-        f"bands*rows ({bands}*{rows}) exceeds MINHASH_K ({MINHASH_K})")
-    keys = ", ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(
-            spark_minhash_min_sql(shingles, b * rows + j) for j in range(rows)
-        )
-        + "))"
-        for b in range(bands)
+    _check_band_shape(bands, rows)
+    mins = ", ".join(
+        f"array_min(transform(hs, h -> {_permutation_sql(i)}))"
+        for i in range(MINHASH_K)
     )
-    return f"array({keys})"
+    hashes = (f"transform({shingles}, "
+              f"s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT))")
+    sig = f"transform(array({hashes}), hs -> array({mins}))[0]"
+    keys = ", ".join(
+        f"g[{b * rows}] * {MINHASH_P} + g[{b * rows + 1}]" for b in range(bands)
+    )
+    return f"transform(array({sig}), g -> array({keys}))[0]"
 
 
 def lsh_candidate_pairs(
@@ -250,10 +290,10 @@ def lsh_candidate_pairs(
     transform, <= C(max_bucket, 2) pairs per bucket). Versus the
     previous window-cap + self-join this removes the window SORT,
     the second scan of the banded table (and the persist that fed
-    it), and the join exchange — the minhash signatures (K md5
-    passes over every shingle, the dominant compute) are evaluated
-    exactly once, and the only shuffles left are the banded groupBy
-    and the final distinct. Pair sets are identical: ids are unique
+    it), and the join exchange — the minhash signatures (one md5 and
+    K permutation mins per shingle, the dominant compute) are
+    evaluated exactly once, and the only shuffles left are the banded
+    groupBy and the final distinct. Pair sets are identical: ids are unique
     within a bucket (one row per doc per band), so value-ordered
     pairs == the join's id1 < id2 pairs, and the size filter sees
     the same bucket cardinality the window count did.
@@ -370,16 +410,6 @@ def lsh_incremental_pairs(
 
 # ---------------------------------------------------------------------------
 # SimHash
-
-
-def _token_hash32(tok: Column) -> Column:
-    """Deterministic 32-bit token hash both engines can compute:
-    first 8 hex digits of md5, as a bigint."""
-    return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("bigint")
-
-
-def sql_token_hash32(tok: str) -> str:
-    return f"('0x' || substr(md5({tok}), 1, 8))::BIGINT"
 
 
 def simhash(tokens_hashes: Column, bits: int = SIMHASH_BITS) -> Column:

@@ -139,10 +139,10 @@ JOIN d d2 ON d2.doc_id = c.doc2
 """,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup — the scale path. shingle -> K=12 md5
-    minhashes -> 6 bands of 2 -> bucket self-join (buckets capped at
-    LSH_MAX_BUCKET rows — degenerate boilerplate buckets would be
-    quadratic; the oracle replays the cap) -> exact-Jaccard
+    """MinHash+LSH near-dup — the scale path. shingle -> one md5 ->
+    K=12 permutation minhashes -> 6 bands of 2 -> bucket self-join
+    (buckets capped at LSH_MAX_BUCKET rows — degenerate boilerplate
+    buckets would be quadratic; the oracle replays the cap) -> exact-Jaccard
     verification of candidates only. The only shuffles are the band
     join (uniform composite key, O(n*B) rows) and the two candidate
     lookups; never O(n^2). At 1000 executors this is the textbook

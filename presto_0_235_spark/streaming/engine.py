@@ -28,9 +28,6 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from presto_0_235_spark.session import drop_temp_view
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,13 +47,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def run_to_batch(
-    stream_df: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int | None = 8,
-) -> DataFrame:
+def _rebind(spark: SparkSession, jdf, jsession) -> DataFrame:
+    """The logical plan of JVM Dataset ``jdf`` as a Dataset of JVM
+    session ``jsession``, wrapped for ``spark``'s Python side."""
+    dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(dataset.ofRows(jsession, jdf.logicalPlan()), spark)
+
+
+def run_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a streaming DataFrame to completion (AvailableNow) into
-    a memory sink; return the settled result as a batch DataFrame.
+    a memory sink; return the settled result as a batch DataFrame of
+    the caller's session.
 
     complete mode for aggregations: with a bounded replay the
     watermark stops short of the last windows, and append mode would
@@ -64,26 +65,28 @@ def run_to_batch(
     final state at termination, which is what the batch oracle
     computes. append mode is for row-level ops (dedup).
 
-    state_partitions: stateful-operator parallelism. Structured
-    Streaming fixes the state partitioning at the query's FIRST
-    micro-batch from spark.sql.shuffle.partitions — choosing it at
-    query-start time is the standard Spark knob, and it is a
-    STATE-SIZE decision, not a data-size decision: every state store
-    instance pays per-commit overhead (delta file + fsync) every
-    batch, so running watermark-bounded state (here: open windows x
-    keys, hundreds of rows) across 32 stores is pure overhead —
-    measured 1.5s -> 0.9s on the sf0.1 tumbling agg by dropping
-    32 -> 8. A deployment with genuinely large state raises it at
-    query start (or passes None to inherit the session setting);
-    the batch shuffles around the stateful operator are unaffected
-    (AQE coalesces those independently)."""
+    The replay runs on a clone of the caller's session (cloneSession,
+    what StreamExecution itself does at start()), and its confs are
+    set on the clone only, so a query running concurrently on the
+    caller's session never sees them, and the memory sink's temp view
+    never enters the caller's catalog. The caller's streaming
+    listeners are attached to the clone, so they still see the
+    replay's progress.
+
+    One state store: Structured Streaming fixes the state partitioning
+    at the query's FIRST micro-batch from spark.sql.shuffle.partitions,
+    and every state store instance pays a per-commit overhead (delta
+    file + fsync) every batch. Watermark-bounded replay state (open
+    windows x keys, hundreds of rows) fits one store: on the sf0.1
+    tumbling and sliding replays (4 vCPU), 8 -> 1 stores cut the
+    summed commitTimeMs per replay from ~490 ms to ~35 ms. A
+    deployment with genuinely large state raises the partition count
+    at query start."""
     spark = stream_df.sparkSession
-    name = f"stream_result_{uuid.uuid4().hex[:12]}"
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    before_nodata = spark.conf.get(nodata_key, "true")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    # JVM-side only: a Python SparkSession over the clone would
+    # re-point pyspark's process-wide RDD.toDF at it.
+    clone = spark._jsparkSession.cloneSession()
+    clone.conf().set("spark.sql.shuffle.partitions", "1")
     if output_mode == "complete":
         # complete mode re-emits the FULL state at every trigger, so
         # the trailing no-data micro-batch (whose job is to advance
@@ -91,22 +94,18 @@ def run_to_batch(
         # full state-store commit cycle and emits nothing new —
         # skip it. append/update keep it: their row emission depends
         # on the watermark advancing past the last data batch.
-        spark.conf.set(nodata_key, "false")
-    try:
-        query = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-        spark.conf.set(nodata_key, before_nodata)
-    # The sink's temp view is only a name for its plan, and the
-    # analyzed result holds that plan: drop the view so replays leave
-    # none behind.
-    result = spark.table(name)
-    drop_temp_view(spark, name)
-    return result
+        clone.conf().set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    for listener in spark._jsparkSession.streams().listListeners():
+        clone.streams().addListener(listener)
+    name = f"stream_result_{uuid.uuid4().hex[:12]}"
+    query = (
+        _rebind(spark, stream_df._jdf, clone).writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    # The sink's temp view is only a name for its plan (the sink's
+    # rows): the result carries that plan into the caller's session.
+    return _rebind(spark, clone.table(name), spark._jsparkSession)

@@ -129,3 +129,47 @@ def test_tpcds_q68_limit_cut_is_not_a_tie():
     ).fetchone()
     assert n > 100
     assert distinct == n
+
+
+def test_dedup_canonical_smoke_on_planted_clusters(spark, tmp_path):
+    """dedup_canonical's builder and its oracle (LSH bands, the
+    recursive-CTE components, the quality arg-max) agree on a small
+    documents table with planted near-duplicate clusters, and every
+    planted cluster comes out as one component."""
+    import random
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(15)
+    vocab = [f"w{i}" for i in range(400)] + ["the", "and", "of", "to"]
+    rows, planted = [], []
+    for c in range(4):
+        base = [rng.choice(vocab) for _ in range(40)]
+        members = []
+        for v in range(3):
+            words = list(base)
+            if v:  # one word changed: Jaccard ~0.86 with the base
+                words[rng.randrange(len(words))] = f"edit{c}{v}"
+            members.append(len(rows))
+            rows.append(" ".join(words))
+        planted.append(members)
+    for _ in range(6):
+        rows.append(" ".join(rng.choice(vocab) for _ in range(40)))
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(len(rows)), pa.int64()),
+        "text": rows,
+        "lang": ["en"] * len(rows),
+        "source": ["web"] * len(rows),
+        "n_chars": pa.array([len(t) for t in rows], pa.int64()),
+    }), str(tmp_path / "documents.parquet"))
+
+    q = _QUERIES["dedup_canonical"]
+    df = q.builder(spark, str(tmp_path))
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path}/documents.parquet')")
+    assert_df_matches_oracle(df, con, q.oracle)
+    got = {(r.cluster, r.cluster_size) for r in df.collect()}
+    assert {(m[0], len(m)) for m in planted} <= got

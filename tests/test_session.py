@@ -311,3 +311,14 @@ def test_registered_builder_applies_defaults_first(monkeypatch):
     assert q.builder("spark", "sf") == "SELECT 2"
     assert calls == [("defaults", "spark"), ("views", "sf"),
                      ("sql", "SELECT 2")]
+
+
+def test_default_driver_memory_is_half_of_small_machines(monkeypatch):
+    """With SPARK_GRAFT_DRIVER_MEM unset, the driver heap is 16g or
+    half of physical memory, whichever is smaller."""
+    gib = 1 << 30
+    for phys, want in ((15 * gib, "7680m"), (8 * gib, "4096m"),
+                       (64 * gib, "16384m")):
+        sizes = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys // 4096}
+        monkeypatch.setattr(S.os, "sysconf", sizes.__getitem__)
+        assert S._default_driver_memory() == want

@@ -20,3 +20,41 @@ def test_replay_releases_memory_sink_view(spark, sf_dir, duck):
     assert _temp_views(spark) - before == set()
     assert_df_matches_oracle(df, duck, q.oracle)
     assert df.select(df.columns[0]).count() == df.count() > 0
+
+
+def test_replay_keeps_caller_conf_while_it_runs(spark, sf_dir):
+    """A replay's confs (one state partition, no trailing no-data
+    batch) live on a clone of the caller's session: while a replay
+    runs in one thread, the caller's session, read from another,
+    keeps its own spark.sql.shuffle.partitions and noDataMicroBatches
+    values, and the replay's memory-sink view never enters its
+    catalog."""
+    import threading
+
+    q = all_queries()["stream_tumbling_agg"]
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.streaming.noDataMicroBatches.enabled")
+    # A caller value that no replay uses, so any flip shows.
+    restore = spark.conf.get(keys[0])
+    spark.conf.set(keys[0], "3")
+    want = tuple(spark.conf.get(k, "true") for k in keys)
+    before = _temp_views(spark)
+    seen, views, done = set(), set(), threading.Event()
+
+    def replay():
+        try:
+            q.builder(spark, sf_dir).count()
+        finally:
+            done.set()
+
+    try:
+        worker = threading.Thread(target=replay)
+        worker.start()
+        while not done.is_set():
+            seen.add(tuple(spark.conf.get(k, "true") for k in keys))
+            views |= _temp_views(spark) - before
+        worker.join()
+    finally:
+        spark.conf.set(keys[0], restore)
+    assert seen == {want}
+    assert views == set()
