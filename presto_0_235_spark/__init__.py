@@ -24,11 +24,11 @@ Layout:
 from presto_0_235_spark.session import (
     build_session,
     ensure_session_defaults,
-    trim_worker_importers,
+    freeze_worker_archives,
 )
 
 # a worker importing the engine stops re-reading archives every task
-trim_worker_importers()
+freeze_worker_archives()
 
 __all__ = ["build_session", "ensure_session_defaults"]
 

@@ -20,7 +20,7 @@ import re
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 
 # The ten driver fixtures (FIXTURES.md). TPC-H-subset star schema +
@@ -63,34 +63,23 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Per-session memo of base table DataFrames, keyed (sf_dir, name).
-# A DataFrame is a LAZY plan — memoizing it caches catalog METADATA
-# (the parquet footer schema + file listing), never data or results:
-# every action against it still scans parquet. This is the Spark
-# analog of the reference's ConnectorMetadata caching
-# (MetadataManager holds table handles for the session), and it
-# matters because each spark.read.parquet() call pays a fixed
-# ~0.15 s of DataSource resolution + footer read on the driver —
-# 6 calls per tpch_q5 build (measured: half that query's bench
-# time). Keyed weakly on the session so a stopped session's plans
-# are collectable; fixtures are immutable within a run
-# (tests/test_fixture_schema.py pins them), so the frozen file
-# listing is exact.
+# Per-session memo of base table DataFrames, keyed (sf_dir, name):
+# lazy plans, so it caches catalog metadata (schema and file listing),
+# never data. The analog of MetadataManager's per-session table
+# handles: each spark.read.parquet() pays a fixed DataSource
+# resolution on the driver (~0.15 s measured, half of tpch_q5's build
+# before the memo). Weak on the session; the fixtures are immutable
+# within a run (tests/test_fixture_schema.py), so the listing is exact.
 _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
 
-# Process-wide memo of each table's footer schema, under the same
-# immutability contract. Without a schema, spark.read.parquet runs a
-# Spark job to infer it from the footer; with one it runs none. So
-# only a process's first session pays inference per table, and each
-# later session (newSession() per client) registers its views without
-# a job: register_views over the ten sf0.01 fixtures took 0.8-1.5 s
-# in a second session, and takes 0.23-0.30 s with the memo (4 vCPUs).
-# The key holds the session confs that change what inference returns,
-# so a session that reads binary as string, say, infers its own
-# schema. Two sessions racing on a miss both infer and store equal
-# schemas, so the memo needs no lock.
+# Process-wide memo of each table's schema, same contract. It is read
+# from a footer on the driver, as Presto's ConnectorMetadata reads a
+# table's columns without running a query; Spark's inference would run
+# a job per table (~1 s for the ten fixtures, 4 vCPUs). The key holds
+# the confs that change what a footer converts to (binary as string,
+# say). Racing misses store equal schemas: no lock needed.
 _SCHEMA_MEMO: dict[tuple, StructType] = {}
 _SCHEMA_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",
@@ -121,16 +110,13 @@ def _byte_string_as_bytes(value: str) -> int:
 
 def invalidate_table_memo(spark: SparkSession | None = None) -> None:
     """Drop memoized table plans (one session's, or every session's)
-    and every memoized footer schema.
+    and every memoized schema (the schema memo is process-wide).
 
-    The memo freezes each table's FILE LISTING at first load for the
-    lifetime of the session, and its schema for the process — exact
-    for the immutable fixtures, but a long-lived session reading a
-    table that gains files (streaming append, compaction) would
-    silently miss them. Deployments with mutable tables call this
-    after appends, or skip the memo by reading through
-    spark.read.parquet directly. The schema memo is process-wide, so
-    both forms clear all of it; the next load re-infers."""
+    The memos freeze a table's file listing per session and its schema
+    per process: exact for the immutable fixtures, stale for a table
+    that gains files (streaming append, compaction). Deployments with
+    mutable tables call this after appends, or read through
+    spark.read.parquet directly."""
     _SCHEMA_MEMO.clear()
     if spark is None:
         _TABLE_MEMO.clear()
@@ -139,15 +125,65 @@ def invalidate_table_memo(spark: SparkSession | None = None) -> None:
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet(path), with the footer schema inferred once
-    per process and conf set (see _SCHEMA_MEMO)."""
-    key = (path,) + tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
+    """spark.read.parquet(path) with the schema read from the footer
+    once per process and conf set (see _SCHEMA_MEMO): no Spark job."""
+    key = (path,) + tuple(spark.conf.get(c) for c in _SCHEMA_CONFS)
     schema = _SCHEMA_MEMO.get(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMA_MEMO[key] = df.schema
-    return df
+    if schema is None:
+        schema = _SCHEMA_MEMO[key] = _footer_schema(spark, path)
+    return spark.read.schema(schema).parquet(path)
+
+
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark's parquet inference gives ``path``, from one
+    footer read on the driver: the footer that inference without schema
+    merging reads (the first _common_metadata, else _metadata, else
+    data file, in path order), converted by Spark's own
+    readSchemaFromFooter with the session's SQLConf. Partition columns
+    are not in a footer; spark.read adds them with or without a schema.
+    """
+    jvm, jsession = spark._jvm, spark._jsparkSession
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    conf = jsession.sessionState().newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    files = sorted(_leaf_files(fs, fs.getFileStatus(root)),
+                   key=lambda st: st.getPath().toString())
+    rank = {name: i for i, name in enumerate(_SUMMARY_FILES)}
+    chosen = min(files, default=None, key=lambda st: rank.get(
+        st.getPath().getName(), len(rank)))
+    if chosen is None:
+        raise FileNotFoundError(f"no parquet file under {path}")
+    footer = jvm.org.apache.parquet.hadoop.Footer(
+        chosen.getPath(), parquet.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+                chosen, conf),
+            jvm.org.apache.parquet.format.converter
+            .ParquetMetadataConverter.NO_FILTER))
+    converter = parquet.ParquetToSparkSchemaConverter(
+        jsession.sessionState().conf())
+    return _parse_datatype_json_string(
+        parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+        .json())
+
+
+def _leaf_files(fs, status) -> list:
+    """The files Spark's file index lists under ``status``, hidden
+    names skipped as its HadoopFSUtils.shouldFilterOutPathName does."""
+    if not status.isDirectory():
+        return [status]
+    out = []
+    for child in fs.listStatus(status.getPath()):
+        name = child.getPath().getName()
+        hidden = ((name.startswith("_") and "=" not in name)
+                  or name.startswith(".") or name.endswith("._COPYING_"))
+        if hidden and not name.startswith(_SUMMARY_FILES):
+            continue
+        out.extend(_leaf_files(fs, child))
+    return out
 
 
 def load_table(
@@ -160,10 +196,7 @@ def load_table(
     estimate of the scan's split count (size / maxPartitionBytes),
     so the common no-op case costs nothing.
 
-    Contract: the returned plan memoizes the table's file listing per
-    (session, sf_dir, name) and its schema per process — correct for
-    immutable fixtures; call invalidate_table_memo() if the underlying
-    files can change within a process's lifetime.
+    The plan is memoized; see invalidate_table_memo for the contract.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
@@ -245,8 +278,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     Mirrors Presto's catalog.schema.table resolution: after this,
     ``spark.sql("SELECT ... FROM lineitem")`` resolves like a Presto
     query against the tpch catalog. Memoized per (session, sf_dir):
-    re-registering re-reads ten parquet footers, which dominates
-    sub-second SQL queries' build time.
+    re-registering would resolve ten parquet relations again.
     """
     marker = "spark.graft.registeredViewsDir"
     try:

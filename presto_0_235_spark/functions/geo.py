@@ -40,10 +40,6 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col

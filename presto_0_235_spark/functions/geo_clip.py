@@ -44,10 +44,6 @@ from __future__ import annotations
 
 import math
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 Point = tuple[float, float]
 
 

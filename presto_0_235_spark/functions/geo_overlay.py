@@ -43,9 +43,6 @@ from __future__ import annotations
 from fractions import Fraction
 
 from presto_0_235_spark.functions import geo_wkt as _W
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
 
 Pt = tuple  # (Fraction, Fraction)
 

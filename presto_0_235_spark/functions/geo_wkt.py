@@ -33,10 +33,6 @@ from __future__ import annotations
 import math
 import re
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 EARTH_RADIUS_KM = 6371.01  # SphericalGeographyUtils.java:36
 MIN_LATITUDE = -85.05112878  # BingTileUtils.java (Bing tile system)
 MAX_LATITUDE = 85.05112878

@@ -31,10 +31,6 @@ import struct
 
 import numpy as np
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 _MASK = 0xFFFFFFFFFFFFFFFF
 _C1 = 0x87C37B91114253D5
 _C2 = 0x4CF5AD432745937F

@@ -17,7 +17,6 @@ import pandas as pd
 
 from presto_0_235_spark.functions import geo_wkt as _geo_wkt
 from presto_0_235_spark.functions import xxhash as _xxhash
-from presto_0_235_spark.session import trim_worker_importers
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -29,8 +28,6 @@ from pyspark.sql.types import (
     LongType,
     StringType,
 )
-
-trim_worker_importers()  # in a worker: see session.py
 
 
 @F.pandas_udf(BooleanType())

@@ -38,10 +38,6 @@ independent xxhash64 implementation.
 
 from __future__ import annotations
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 _M64 = (1 << 64) - 1
 
 # XXH64 primes (public spec). PRIME64_1 doubles as the reference's

@@ -49,9 +49,6 @@ from pyspark.sql import DataFrame
 
 from presto_0_235_spark.functions import geo_overlay as _ov
 from presto_0_235_spark.functions import geo_wkt as _wkt
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
 
 
 def _env_key(w: str):

@@ -36,10 +36,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 # Typed metadata contract for media rows.
 MEDIA_META = T.StructType(
     [

@@ -35,10 +35,6 @@ from __future__ import annotations
 
 import struct
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 LEVELS = 64  # universe 2^64 (signed bigint, offset-mapped)
 _OFFSET = 1 << 63
 _MASK = (1 << 64) - 1

@@ -45,9 +45,6 @@ from pyspark.sql import functions as F
 # murmur3 by name, and workers import it from the package zip that
 # session.ensure_session_defaults ships.
 from presto_0_235_spark.functions import murmur3 as _mm
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
 
 HLL_P = 11  # 2^11 = 2048 registers; rel. error ~1.04/sqrt(m) ~ 2.3%
 HLL_M = 1 << HLL_P

@@ -55,10 +55,6 @@ from typing import NamedTuple
 
 import numpy as np
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 DEFAULT_COMPRESSION = 100.0
 MICRO_BINS = 2048  # pre-binning resolution for the vectorized build
 

@@ -22,7 +22,9 @@ Scale notes:
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,14 +34,22 @@ from presto_0_235_spark.catalog import load_table
 from presto_0_235_spark.queries.registry import register
 from presto_0_235_spark.session import drop_temp_view, local_rows
 
-# Scratch roots keyed by (format, sf) so concurrent scales never
-# collide; mode("overwrite") keeps reruns idempotent.
+# Scratch roots keyed by (format, fixture dir); mode("overwrite")
+# keeps reruns idempotent.
 _SCRATCH = os.path.join(tempfile.gettempdir(), "presto_0_235_spark_io")
 
 
+def _fixture_tag(sf_dir: str) -> str:
+    """A fixture directory's name part for saved tables and sinks: the
+    basename as an identifier ("sf0.01-seed42" must parse) plus a
+    digest of the full path, so same-named directories never share."""
+    path = os.path.abspath(sf_dir)
+    base = re.sub(r"[^0-9A-Za-z_]", "_", os.path.basename(path))
+    return f"{base}_{hashlib.sha1(path.encode()).hexdigest()[:10]}"
+
+
 def _sink_path(fmt: str, sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(_SCRATCH, f"{fmt}_{tag}")
+    return os.path.join(_SCRATCH, f"{fmt}_{_fixture_tag(sf_dir)}")
 
 
 _ORDERS_SLICE_ORACLE = """
@@ -177,7 +187,7 @@ def io_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision that deletes the biggest shuffle in the workload
     (reference analog: grouped execution over bucketed Hive tables,
     MAIN/operator/StageExecutionDescriptor.java)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    tag = _fixture_tag(sf_dir)
     li_tbl, o_tbl = f"li_bucketed_{tag}", f"o_bucketed_{tag}"
     if not spark.catalog.tableExists(li_tbl):
         (
@@ -265,8 +275,7 @@ def io_partition_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog: ALTER TABLE ... DROP PARTITION on a partitioned catalog
     table — an O(1) metadata operation at any scale; the read-back
     proves the partition's rows are gone."""
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    tbl = f"orders_part_{tag}"
+    tbl = f"orders_part_{_fixture_tag(sf_dir)}"
     path = _sink_path("part_delete", sf_dir)
     src = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").cast("int").alias("o_year")

@@ -265,7 +265,8 @@ def sql_ddl_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DDL surface (reference MAIN/execution/CreateTableTask etc.,
     grammar SqlBase.g4:33-190): CREATE OR REPLACE TEMPORARY VIEW over
     a query, then query the view — the session-catalog lifecycle a
-    Presto user drives with CREATE VIEW/TABLE AS."""
+    Presto user drives with CREATE VIEW/TABLE AS. The view is dropped
+    once the result is analyzed."""
     register_views(spark, sf_dir)
     run_sql(
         spark,
@@ -274,7 +275,7 @@ def sql_ddl_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT * FROM orders WHERE o_totalprice > 100000
         """,
     )
-    return run_sql(
+    result = run_sql(
         spark,
         """
         SELECT o_orderpriority, count(*) AS n, max(o_totalprice) AS top
@@ -282,6 +283,8 @@ def sql_ddl_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY o_orderpriority
         """,
     )
+    drop_temp_view(spark, "big_orders")
+    return result
 
 
 # Presto TRY(...) (MAIN/operator/scalar/TryFunction.java —

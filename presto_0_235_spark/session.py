@@ -215,46 +215,44 @@ def warmup_python_workers(spark: SparkSession) -> None:
 # shipped zip; re-adding it would only log a warning and grow the
 # task's Python includes. The zip is deleted at interpreter exit.
 #
-# Per-task import cost in the worker. pyspark (4.1) calls
-# importlib.invalidate_caches() before EVERY task a Python worker runs
-# (worker_util.setup_spark_files). On Python < 3.13 that calls
-# invalidate_caches() on every zipimporter in sys.path_importer_cache,
-# and each one re-reads its archive's whole central directory. After
-# one engine task a worker caches a zipimporter per package it
-# imported from an archive: 12 on pyspark.zip (1,328 entries each),
-# 2 on the spark-core jar (5,359 each), plus py4j's and the engine
-# zip's. That is ~26.7k directory entries re-read per task,
-# 0.18-0.27 s on 4 vCPUs: most of a small task's wall time.
-# trim_worker_importers drops the per-package importers (those keyed
-# on a path INSIDE an archive). The package and each module with
-# worker-side code call it at import, because every subpackage a
-# worker imports from the shipped zip adds an importer of its own;
-# pyspark's per-task call then costs 0.04-0.07 s. This is safe: each sys.path
-# archive keeps its root importer, which still refreshes zipimport's
-# directory cache every task, and a later import from a dropped
-# package rebuilds its importer from that cache without reading the
-# file. Dropping the root importers as well gains nothing: the
-# worker's own first-time imports after the trim (pyarrow's pandas
-# shim, concurrent.futures) recreate them before the next task.
-# Python 3.13's zipimport re-reads lazily, so there the trim only
-# saves dict entries.
+# Per-task cost in the worker (SCALE.md §9). Two fixed waits sat in
+# front of every task a warm Python worker ran:
+#  - pyspark (4.1) calls importlib.invalidate_caches() before every
+#    task; on Python < 3.13 each cached zipimporter then re-reads its
+#    archive's central directory (pyspark.zip: 1,328 entries; the
+#    spark-core jar on the worker's path: 5,359).
+#    freeze_worker_archives, run when a worker first imports the
+#    package, makes every archive importer, cached or later, one
+#    whose invalidate_caches does nothing: no archive on a worker's
+#    path changes while it runs.
+#  - Over loopback TCP a task's input reached the worker ~40 ms after
+#    its header (Nagle's algorithm against delayed ACKs); build_session
+#    puts the JVM-worker link on a Unix domain socket instead.
+# Only both together help: a warm one-task mapInPandas that imports
+# the engine took ~68 ms with neither and with frozen importers
+# alone, ~30 ms with both (4 vCPUs; a JVM-only job takes ~16 ms).
 
 _SHIPPED_CONTEXTS: "weakref.WeakSet" = weakref.WeakSet()
 _PKG_ZIP: str | None = None
 
 
-def trim_worker_importers() -> None:
-    """Inside a Python worker, drop the per-package zipimporters from
-    sys.path_importer_cache (see the comment above). A no-op on the
+def freeze_worker_archives() -> None:
+    """Inside a Python worker, stop importlib.invalidate_caches() from
+    re-reading zip archives (see the comment above). A no-op on the
     driver."""
     files = sys.modules.get("pyspark.core.files")
     if files is None or not files.SparkFiles._is_running_on_worker:
         return
     import zipimport
 
-    for key, finder in list(sys.path_importer_cache.items()):
-        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
-            del sys.path_importer_cache[key]
+    class FrozenZipImporter(zipimport.zipimporter):
+        def invalidate_caches(self):
+            pass
+
+    sys.path_hooks.insert(0, FrozenZipImporter)
+    for finder in sys.path_importer_cache.values():
+        if type(finder) is zipimport.zipimporter:
+            finder.__class__ = FrozenZipImporter
 
 
 def _package_zip() -> str:
@@ -348,6 +346,11 @@ def build_session(
     )
     # Local runs: keep the UI off and the driver quiet.
     builder = builder.config("spark.ui.enabled", "false")
+    # Python workers talk to the JVM over a Unix domain socket, not
+    # loopback TCP (see freeze_worker_archives). Static conf: it holds
+    # only when this call starts the JVM.
+    builder = builder.config(
+        "spark.python.unix.domain.socket.enabled", "true")
     # local[N] runs the driver AND all executor threads in one JVM —
     # Spark's 1g default heap is the sf1-tier OOM, not the plans.
     # Static conf: only effective when this call actually starts the

@@ -42,10 +42,6 @@ import io
 import json
 import struct
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 MAGIC = b"Obj\x01"
 _EPOCH = datetime.date(1970, 1, 1)
 _EPOCH_DT = datetime.datetime(1970, 1, 1)

@@ -59,10 +59,6 @@ import struct
 
 import numpy as np
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 COMPRESSED_MARKER = 0x01  # PageCodecMarker.java COMPRESSED(1)
 MIN_COMPRESSION_RATIO = 0.8  # PagesSerde.java MINIMUM_COMPRESSION_RATIO
 STRIPE_MAX_BYTES = 24 * 1024 * 1024  # HiveClientConfig.java:169

@@ -56,10 +56,6 @@ from __future__ import annotations
 import datetime
 import struct
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 MAGIC = b"RCF"
 VERSION = 1
 COLUMN_COUNT_KEY = "hive.io.rcfile.column.number"

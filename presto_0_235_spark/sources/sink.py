@@ -19,9 +19,7 @@ any file source plans its input; each split decodes in one task.
 
 from __future__ import annotations
 
-from presto_0_235_spark.session import local_rows, trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
+from presto_0_235_spark.session import local_rows
 
 
 def _exact_values(col) -> list:

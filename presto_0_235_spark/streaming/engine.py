@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -71,7 +72,9 @@ def run_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFra
     caller's session never sees them, and the memory sink's temp view
     never enters the caller's catalog. The caller's streaming
     listeners are attached to the clone, so they still see the
-    replay's progress.
+    replay's progress. Once its events are delivered, both clones'
+    listener buses (this one's and StreamExecution's) leave the
+    SparkContext's bus instead of seeing every later streaming event.
 
     One state store: Structured Streaming fixes the state partitioning
     at the query's FIRST micro-batch from spark.sql.shuffle.partitions,
@@ -106,6 +109,17 @@ def run_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFra
         .start()
     )
     query.awaitTermination()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    managers = (clone.streams(),
+                query._jsq.streamingQuery().sparkSessionForStream().streams())
+    try:
+        bus.waitUntilEmpty()  # raises after 10 s with events in flight
+    except Py4JJavaError:  # keep the buses rather than drop events
+        managers = ()
+    for manager in managers:
+        field = manager.getClass().getDeclaredField("listenerBus")
+        field.setAccessible(True)  # a private field
+        bus.removeListener(field.get(manager))
     # The sink's temp view is only a name for its plan (the sink's
     # rows): the result carries that plan into the caller's session.
     return _rebind(spark, clone.table(name), spark._jsparkSession)

@@ -27,10 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from presto_0_235_spark.session import trim_worker_importers
-
-trim_worker_importers()  # in a worker: see session.py
-
 PROFILE_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),

@@ -10,6 +10,8 @@ normalization is known to handle.
 
 from __future__ import annotations
 
+import os
+
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
@@ -144,7 +146,23 @@ def test_byte_string_rejects_malformed(bad):
         _byte_string_as_bytes(bad)
 
 
-def test_table_memo_per_session_and_invalidation(spark):
+@pytest.fixture
+def footer_reads(monkeypatch):
+    """The paths whose footer schema the catalog reads, in order."""
+    from presto_0_235_spark import catalog as cat
+
+    paths: list[str] = []
+    read = cat._footer_schema
+
+    def counting(spark, path):
+        paths.append(path)
+        return read(spark, path)
+
+    monkeypatch.setattr(cat, "_footer_schema", counting)
+    return paths
+
+
+def test_table_memo_per_session_and_invalidation(spark, footer_reads):
     """The load_table memo freezes a table's plan per (session,
     sf_dir, name) and its footer schema per process;
     invalidate_table_memo must drop both (the contract for mutable
@@ -161,18 +179,17 @@ def test_table_memo_per_session_and_invalidation(spark):
     df1 = cat.load_table(spark, SF_DIR, "nation")
     assert schema_memoized()
     assert cat.load_table(spark, SF_DIR, "nation") is df1
+    assert footer_reads == [path]
     cat.invalidate_table_memo(spark)
     assert not schema_memoized()
-    with jobs_submitted(spark) as jobs:
-        df2 = cat.load_table(spark, SF_DIR, "nation")
+    df2 = cat.load_table(spark, SF_DIR, "nation")
     assert df2 is not df1  # fresh plan => fresh footer read + listing
-    assert jobs  # the schema was inferred again
+    assert footer_reads == [path] * 2  # the schema was read again
     assert df2.schema == df1.schema
     cat.invalidate_table_memo()  # global form clears every session
     assert not schema_memoized()
-    with jobs_submitted(spark) as jobs:
-        assert cat.load_table(spark, SF_DIR, "nation") is not df2
-    assert jobs
+    assert cat.load_table(spark, SF_DIR, "nation") is not df2
+    assert footer_reads == [path] * 3
 
 
 def test_later_session_loads_fixtures_without_jobs(spark):
@@ -216,10 +233,10 @@ def test_stream_schema_keyed_on_inference_confs(spark, tmp_path):
         "user_id": "bigint", "ts": "timestamp", "payload": "string"}
 
 
-def test_schema_memo_keyed_on_inference_confs(spark, tmp_path):
+def test_schema_memo_keyed_on_inference_confs(spark, tmp_path, footer_reads):
     """A session whose confs change what parquet inference returns
-    infers its own schema; a later session with the same confs reuses
-    it without a job."""
+    reads its own schema; a later session with the same confs reuses
+    it without reading the footer again."""
     import pyarrow as pa
 
     from presto_0_235_spark import catalog as cat
@@ -237,13 +254,123 @@ def test_schema_memo_keyed_on_inference_confs(spark, tmp_path):
 
     plain = cat.load_table(spark.newSession(), sf_dir, "region")
     assert dict(plain.dtypes)["r_name"] == "binary"
-    with jobs_submitted(spark) as jobs:
-        as_string = cat.load_table(binary_as_string_session(), sf_dir,
-                                   "region")
-    assert jobs  # inferred, not served from the plain session's entry
+    assert len(footer_reads) == 1
+    as_string = cat.load_table(binary_as_string_session(), sf_dir, "region")
+    # read again, not served from the plain session's entry
+    assert len(footer_reads) == 2
     assert dict(as_string.dtypes)["r_name"] == "string"
     assert as_string.collect()[0].r_name == "AFRICA"
-    with jobs_submitted(spark) as jobs:
-        again = cat.load_table(binary_as_string_session(), sf_dir, "region")
-    assert jobs == []
+    again = cat.load_table(binary_as_string_session(), sf_dir, "region")
+    assert len(footer_reads) == 2
     assert again.schema == as_string.schema
+
+
+def _toggled_sessions(spark):
+    """A plain session, then one per schema conf with that conf flipped."""
+    from presto_0_235_spark.catalog import _SCHEMA_CONFS
+
+    yield "default", spark.newSession()
+    for conf in _SCHEMA_CONFS:
+        session = spark.newSession()
+        flipped = "false" if session.conf.get(conf) == "true" else "true"
+        session.conf.set(conf, flipped)
+        yield f"{conf}={flipped}", session
+
+
+@pytest.fixture(scope="module")
+def seed42_dir(tmp_path_factory):
+    """perfbench's generated sf0.01 dataset (seed 42), the second
+    fixture family the benchmark reads."""
+    from perfbench.datagen import ensure_dataset
+
+    return ensure_dataset(str(tmp_path_factory.mktemp("datagen")), 0.01, 42)
+
+
+@pytest.mark.parametrize("family", ["sf0.01", "sf0.01-seed42"])
+def test_footer_schema_matches_inference(spark, family, seed42_dir):
+    """The schema read from each table's footer is the one Spark's own
+    inference gives the same path, under each schema conf toggled."""
+    from presto_0_235_spark.catalog import _footer_schema
+
+    sf_dir = {"sf0.01": "/root/testdata/sf0.01",
+              "sf0.01-seed42": seed42_dir}[family]
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} is absent")
+    for label, session in _toggled_sessions(spark):
+        for name in TABLES:
+            path = f"{sf_dir}/{name}.parquet"
+            given = session.read.schema(_footer_schema(session, path))
+            assert given.parquet(path).schema == \
+                session.read.parquet(path).schema, (label, name)
+
+
+def test_footer_schema_of_a_spark_written_directory(spark, tmp_path):
+    """A directory table with several part files, partition
+    directories, a _SUCCESS marker and the Spark schema in its footers
+    gets the schema inference gives it, partition column included."""
+    from presto_0_235_spark.catalog import _footer_schema
+
+    path = str(tmp_path / "t")
+    spark.range(40, numPartitions=4).selectExpr(
+        "id", "CAST(id AS DECIMAL(10, 2)) AS d", "CAST(id AS STRING) AS s",
+        "array(id) AS a", "CAST(CAST(id AS STRING) AS BINARY) AS b",
+        "timestamp_seconds(id) AS ts", "id % 3 AS k",
+    ).write.partitionBy("k").parquet(path)
+    for label, session in _toggled_sessions(spark):
+        given = session.read.schema(_footer_schema(session, path))
+        inferred = session.read.parquet(path).schema
+        assert given.parquet(path).schema == inferred, label
+        assert "k" in inferred.fieldNames()
+
+
+def test_footer_schema_follows_each_inference_conf(spark, tmp_path):
+    """On a file whose columns each conf changes (nanosecond, INT96,
+    UTC-less and UTC timestamps, binary), every toggle gives another
+    inferred schema, and the footer schema follows it each time."""
+    import datetime
+
+    import pyarrow as pa
+
+    from presto_0_235_spark.catalog import _footer_schema
+
+    ts = datetime.datetime(2024, 1, 1, 12)
+    path = str(tmp_path / "typed.parquet")
+    pq.write_table(pa.table({
+        "ns": pa.array([ts], pa.timestamp("ns")),
+        "naive": pa.array([ts], pa.timestamp("us")),
+        "utc": pa.array([ts], pa.timestamp("us", tz="UTC")),
+        "raw": pa.array([b"x"], pa.binary()),
+    }), path)
+    pq.write_table(pa.table({"int96": pa.array([ts], pa.timestamp("ns"))}),
+                   str(tmp_path / "int96.parquet"),
+                   use_deprecated_int96_timestamps=True)
+    outcomes = {}
+    for label, session in _toggled_sessions(spark):
+        outcome = []
+        for p in (path, str(tmp_path / "int96.parquet")):
+            try:
+                inferred = session.read.parquet(p).schema
+            except Exception:  # a type the conf leaves unreadable
+                with pytest.raises(Exception):
+                    _footer_schema(session, p)
+                outcome.append("unreadable")
+                continue
+            given = session.read.schema(_footer_schema(session, p))
+            assert given.parquet(p).schema == inferred, (label, p)
+            outcome.append(inferred.simpleString())
+        outcomes[label] = tuple(outcome)
+    # each toggle changes what inference returns
+    assert len(set(outcomes.values())) == len(outcomes), outcomes
+
+
+def test_register_views_submits_no_job(spark, sf_dir):
+    """With an empty schema memo, registering the fixture views runs no
+    Spark job: the schemas come from the footers, on the driver."""
+    from presto_0_235_spark import catalog as cat
+
+    cat.invalidate_table_memo()
+    session = spark.newSession()
+    with jobs_submitted(spark) as jobs:
+        cat.register_views(session, sf_dir)
+    assert jobs == []
+    assert {t.name for t in session.catalog.listTables()} >= set(TABLES)

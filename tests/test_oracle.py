@@ -71,7 +71,8 @@ def test_oracle_no_hugeint_columns(name, duck):
 
 
 @pytest.mark.parametrize(
-    "name", ["io_memory_table", "sql_decimal_agg_column_scale"])
+    "name",
+    ["io_memory_table", "sql_decimal_agg_column_scale", "sql_ddl_lifecycle"])
 def test_builder_leaves_no_temp_view(name, spark, duck, sf_dir):
     """A builder that names an intermediate relation drops the view once
     its result is analyzed: the session's temp views are the same
@@ -92,6 +93,37 @@ def test_builder_leaves_no_temp_view(name, spark, duck, sf_dir):
     df = q.builder(session, sf_dir)
     assert temp_views() == before
     assert_df_matches_oracle(df, duck, q.oracle)
+
+
+@pytest.mark.parametrize("name", ["io_bucketed_join", "io_partition_delete"])
+def test_saved_tables_follow_the_full_fixture_path(name, spark, sf_dir,
+                                                   tmp_path):
+    """Builders that save catalog tables name them from the full fixture
+    path: a hyphenated directory name still yields a valid table name,
+    and a same-named directory elsewhere with other rows gets its own
+    table, not the first one's."""
+    import shutil
+
+    import duckdb
+
+    from presto_0_235_spark.catalog import TABLES
+
+    q = _QUERIES[name]
+    # the second copy keeps only the even orders
+    for sub, orders in (("a", "TRUE"), ("b", "o_orderkey % 2 = 0")):
+        copy = tmp_path / sub / "sf0.001-copy"
+        shutil.copytree(sf_dir, copy)
+        con = duckdb.connect()
+        con.execute("SET TimeZone='UTC'")
+        con.execute(
+            f"COPY (SELECT * FROM read_parquet('{copy}/orders.parquet') "
+            f"WHERE {orders}) TO '{copy}/orders.tmp' (FORMAT PARQUET)")
+        shutil.move(f"{copy}/orders.tmp", f"{copy}/orders.parquet")
+        for table in TABLES:
+            con.execute(f"CREATE VIEW {table} AS SELECT * FROM "
+                        f"read_parquet('{copy}/{table}.parquet')")
+        assert_df_matches_oracle(q.builder(spark, str(copy)), con, q.oracle)
+        con.close()
 
 
 def test_entry_smoke(spark):

@@ -119,14 +119,12 @@ def test_local_rows_plans_as_local_relation(spark):
     assert empty.collect() == []
 
 
-def test_worker_trims_per_package_zip_importers(spark):
-    """Once a Python worker imports an engine worker module, no
-    zipimporter keyed on a package inside an archive is left in
-    sys.path_importer_cache, so pyspark's per-task
-    importlib.invalidate_caches() re-reads each archive once, not once
-    per imported package. A first import of a pyspark submodule in that
-    worker still succeeds: its importer is rebuilt from zipimport's
-    directory cache."""
+def test_worker_invalidate_caches_rereads_no_archive(spark):
+    """Once a Python worker imports the engine, pyspark's per-task
+    importlib.invalidate_caches() re-reads no zip archive's directory
+    (zipimport._read_directory is not called), though the worker has
+    archive importers in play. A first import of a pyspark submodule in
+    that worker still succeeds."""
     import pandas as pd
 
     ensure_session_defaults(spark)
@@ -139,27 +137,52 @@ def test_worker_trims_per_package_zip_importers(spark):
         import sys
         import zipimport
 
+        import presto_0_235_spark.functions.murmur3  # noqa: F401
+
         for _ in batches:
             pass
-        # a fresh import of a worker module, whatever this worker ran
-        sys.modules.pop("presto_0_235_spark.functions.murmur3", None)
-        importlib.import_module("presto_0_235_spark.functions.murmur3")
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return read_directory(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
         zips = [f for f in sys.path_importer_cache.values()
                 if isinstance(f, zipimport.zipimporter)]
-        nested = [f.archive + "/" + f.prefix for f in zips if f.prefix]
         fresh = next((m for m in fresh_candidates
                       if m not in sys.modules), None)
         loaded = importlib.import_module(fresh).__file__ if fresh else ""
         yield pd.DataFrame({"archives": [len(zips)],
-                            "nested": [repr(nested)],
+                            "reads": [repr(reads)],
                             "loaded": [loaded]})
 
     row = spark.range(1, numPartitions=1).mapInPandas(
-        probe, "archives int, nested string, loaded string").collect()[0]
+        probe, "archives int, reads string, loaded string").collect()[0]
     # Spark puts pyspark.zip on the worker's path: archives are in play
     assert row.archives >= 1
-    assert row.nested == "[]"
+    assert row.reads == "[]"
     assert row.loaded
+
+
+def test_workers_talk_over_a_unix_domain_socket(spark):
+    """build_session starts the JVM with Python workers on a Unix domain
+    socket, and an Arrow round trip through a worker works on it."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+
+    def double(batches):
+        for pdf in batches:
+            yield pdf.assign(id=pdf.id * 2)
+
+    df = spark.range(10, numPartitions=2)
+    assert sorted(r.id for r in df.mapInPandas(double, df.schema).collect()
+                  ) == list(range(0, 20, 2))
 
 
 def _package_defs():

@@ -58,3 +58,18 @@ def test_replay_keeps_caller_conf_while_it_runs(spark, sf_dir):
         spark.conf.set(keys[0], restore)
     assert seen == {want}
     assert views == set()
+
+
+def test_replays_leave_no_listener_bus_behind(spark, sf_dir):
+    """A replay takes the listener buses of its two session clones (its
+    own and the one StreamExecution makes at start) off the
+    SparkContext's listener bus once its events are delivered: three
+    replays leave the bus's listener count where it was."""
+    q = all_queries()["stream_tumbling_agg"]
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    # the caller's own streaming manager adds its bus once per session
+    spark.streams.active  # noqa: B018
+    before = bus.listeners().size()
+    for _ in range(3):
+        assert q.builder(spark, sf_dir).count() > 0
+    assert bus.listeners().size() == before
