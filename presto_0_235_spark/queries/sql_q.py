@@ -3664,7 +3664,7 @@ WHERE p_retailprice BETWEEN 900 AND 930
   AND CAST(l_shipdate AS DATE) BETWEEN DATE '1999-01-01'
                                    AND DATE '1999-03-02'
 GROUP BY p_name, p_brand, p_retailprice
-ORDER BY p_name, p_brand
+ORDER BY p_name, p_brand, p_retailprice
 LIMIT 100
 """
 
@@ -5269,7 +5269,7 @@ WHERE p_retailprice BETWEEN 960 AND 990
   AND CAST(l_shipdate AS DATE) BETWEEN DATE '1998-06-01'
                                    AND DATE '1998-08-01'
 GROUP BY p_name, p_brand, p_retailprice
-ORDER BY p_name, p_brand
+ORDER BY p_name, p_brand, p_retailprice
 LIMIT 100
 """
 

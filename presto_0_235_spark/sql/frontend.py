@@ -49,14 +49,18 @@ templates' argument typing) all read an operand's Presto static type
 from one scanner, masked.operand_fwd / operand_back / operand_span.
 It parses one grammar in both directions (literals, typed CASTs,
 count/sum/min/max/avg calls, nan()/infinity(), string literals and
-parenthesized arithmetic chains typed by Presto's promotion rules),
-and each pass applies its own domain rules as filters on the facts
-it returns. Literals are read in one place too: every constant fold
-(decimal literal arithmetic, integer literal division, literal casts
-to integral types, float literal comparisons, the complex-literal
-value model, the DECIMAL typed-literal lowering and the VALUES column
-annotation) takes a literal's exact value and Presto type from
-masked.literal, which follows Presto's Decimals.parse.
+parenthesized arithmetic chains typed by Presto's promotion rules;
+names, calls, constructors, subscripts and other typed literals scan
+untyped, for the container passes), and each pass applies its own
+domain rules as filters on the facts it returns. Constructors, CAST
+targets and type spellings are read there too (masked.ctor_at,
+split_cast, angle_close). Literals are read in one place: every
+constant fold (decimal literal arithmetic, integer literal division,
+literal casts to integral types, float literal comparisons, the
+complex-literal value model, the DECIMAL typed-literal lowering and
+the VALUES column annotation) takes a literal's exact value and
+Presto type from masked.literal, which follows Presto's
+Decimals.parse.
 
 Already identical in both grammars (verified, no rewrite): lambda
 syntax `x -> e`, aggregate FILTER (WHERE ...), INTERVAL literals,
@@ -80,14 +84,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from presto_0_235_spark.session import drop_temp_view
 from presto_0_235_spark.sql.json_cast import (
-    _operand_back, _operand_fwd, rewrite_array_element_concat,
-    rewrite_container_json_casts, rewrite_decimal_array_ops,
-    rewrite_map_comparisons)
+    rewrite_array_element_concat, rewrite_container_json_casts,
+    rewrite_decimal_array_ops, rewrite_map_comparisons)
 from presto_0_235_spark.sql.masked import (
-    FLOATING, INTEGRAL, INTEGRAL_RANGE, OVER_FWD, balanced, balanced_back,
-    cast_type, decimal_cast_type, decimal_of, decimal_result, is_decimal,
-    lit_of, literal, literal_span, operand_back, operand_fwd, operand_span,
-    split_top, stash_lit)
+    FLOATING, INTEGRAL, INTEGRAL_RANGE, OVER_FWD, angle_close, balanced,
+    balanced_back, cast_type, ctor_at, decimal_cast_type, decimal_of,
+    decimal_result, is_decimal, lit_of, literal, literal_span,
+    operand_back, operand_fwd, operand_span, split_cast, split_top,
+    stash_lit, unary_start)
 from presto_0_235_spark.sql.scalar_templates import (
     rewrite_scalar_templates)
 
@@ -213,20 +217,6 @@ _IP_CAST_HEAD = re.compile(r"\b(TRY_)?CAST\s*\(", re.IGNORECASE)
 _IP_CMP_OP = re.compile(r"<=(?!>)|>=|<(?![=>])|>")
 
 
-def _last_top_level_as(body: str):
-    target_at = None
-    for am in re.finditer(r"\bAS\s+", body, re.IGNORECASE):
-        d = 0
-        for c in body[:am.start()]:
-            if c in "([":
-                d += 1
-            elif c in ")]":
-                d -= 1
-        if d == 0:
-            target_at = am
-    return target_at
-
-
 _TZ_TS_LIT = re.compile(
     r"\b(TIMESTAMP|TIME)\s*(\x00s(\d+)\x00)", re.IGNORECASE)
 
@@ -310,15 +300,12 @@ def _rewrite_ip_operators(masked: str) -> str:
             past = balanced(masked, open_i)
         except ValueError:
             break
-        body = masked[open_i + 1:past - 1]
-        am = _last_top_level_as(body)
-        if am is None or \
-                body[am.end():].strip().upper() != "IPADDRESS":
+        cast = split_cast(masked[open_i + 1:past - 1])
+        if cast is None or cast[1].upper() != "IPADDRESS":
             pos = m.end()
             continue
         fn = "try_ip_canon" if m.group(1) else "ip_canon"
-        repl = (f"{fn}(CAST({body[:am.start()].strip()} "
-                f"AS STRING))")
+        repl = f"{fn}(CAST({cast[0]} AS STRING))"
         masked = masked[:m.start()] + repl + masked[past:]
         pos = m.start() + len(repl)
     # ordering comparisons where BOTH sides are ip-typed
@@ -335,15 +322,17 @@ def _rewrite_ip_operators(masked: str) -> str:
         if m is None:
             return masked
         pos = m.end()
-        left = _operand_back(masked, m.start())
-        right = _operand_fwd(masked, m.end())
-        if left is None or right is None \
-                or not (ip_typed(left[1]) and ip_typed(right[1])):
+        left = operand_back(masked, m.start())
+        right = operand_fwd(masked, m.end())
+        if left is None or right is None:
             continue
-        repl = (f"ip_sort_key({left[1]}) {m.group(0)} "
-                f"ip_sort_key({right[1]})")
-        masked = masked[:left[0]] + repl + masked[right[0]:]
-        pos = left[0] + len(repl)
+        a = masked[left.start:left.end]
+        b = masked[right.start:right.end]
+        if not (ip_typed(a) and ip_typed(b)):
+            continue
+        repl = f"ip_sort_key({a}) {m.group(0)} ip_sort_key({b})"
+        masked = masked[:left.start] + repl + masked[right.end:]
+        pos = left.start + len(repl)
 
 
 def _rewrite_typed_literals(masked: str, stash) -> str:
@@ -562,11 +551,10 @@ def _fold_decimal_literal_casts(masked: str, stash) -> str:
         op = operand_fwd(masked, head, stash)
         if op is None or op.type not in INTEGRAL:
             return None
-        body = masked[masked.index("(", head) + 1:op.end - 1]
-        am = _last_top_level_as(body)
-        if am is None:
+        cast = split_cast(masked[masked.index("(", head) + 1:op.end - 1])
+        if cast is None:
             return None
-        src = body[:am.start()]
+        src = cast[0]
         lit = literal_span(src, stash)
         if lit is None or not (
                 lit.form == "bare" and "(" not in src
@@ -933,39 +921,24 @@ def _raise_ambiguous_array_concat(masked: str, stash) -> None:
     element-append (NULL as an element); Spark silently picks
     concat. Only fully-literal operands are decidable, matching the
     reference's own (literal) pins."""
-    for m in re.finditer(r"\|\|", masked):
-        rm = re.match(r"\s*ARRAY\s*\[", masked[m.end():],
-                      re.IGNORECASE)
-        if rm is None:
-            continue
-        ropen = m.end() + rm.end() - 1
-        # left operand: a ']' immediately before the '||'
-        j = m.start()
-        while j > 0 and masked[j - 1].isspace():
-            j -= 1
-        if j == 0 or masked[j - 1] != "]":
-            continue
+    def array_literal(op):
+        c = None if op is None else ctor_at(masked, op.start)
+        if c is None or c.head != "ARRAY" or c.end != op.end:
+            return None
         try:
-            lopen = balanced_back(masked, j)
-        except ValueError:
-            continue
-        lkw = re.search(r"(?i)\bARRAY\s*$", masked[:lopen])
-        if lkw is None:
-            continue
-        try:
-            rclose = _cnc_bracket(masked, ropen)
-            lv = _cnc_parse(masked[lkw.start():j], stash)
-            rv = _cnc_parse(
-                masked[m.end() + rm.start():rclose], stash)
+            return _cnc_parse(masked[op.start:op.end], stash)
         except (_NotLiteralExpr, ValueError):
-            continue
+            return None
 
-        def ambig(a, b):
-            return (isinstance(a, list) and a
-                    and all(isinstance(e, list) for e in a)
-                    and isinstance(b, list) and b
-                    and all(e is None for e in b))
+    def ambig(a, b):
+        return (isinstance(a, list) and a
+                and all(isinstance(e, list) for e in a)
+                and isinstance(b, list) and b
+                and all(e is None for e in b))
 
+    for m in re.finditer(r"\|\|", masked):
+        lv = array_literal(operand_back(masked, m.start()))
+        rv = array_literal(operand_fwd(masked, m.end()))
         if ambig(lv, rv) or ambig(rv, lv):
             raise ValueError(
                 "Ambiguous function call: concat of an "
@@ -1225,8 +1198,7 @@ def _dec_bound(masked: str, op) -> int:
     """Digits of an operand's unscaled value: a literal's own count,
     else its precision."""
     if op.lit:
-        digits = re.search(r"\d+(?:\.\d+)?", masked[op.start:op.end])
-        return max(1, len(digits.group(0).replace(".", "").lstrip("0")))
+        return len(literal(masked, op).value.as_tuple().digits)
     return decimal_of(op.type)[0]
 
 
@@ -2111,25 +2083,6 @@ def _cnc_cast_replay(v, tgt: str, was_str: bool):
     return v
 
 
-def _cnc_bracket(s: str, open_i: int) -> int:
-    """Index one past the ']' matching s[open_i] == '['."""
-    sq = 0
-    par = 0
-    for k in range(open_i, len(s)):
-        c = s[k]
-        if c == "[":
-            sq += 1
-        elif c == "]":
-            sq -= 1
-            if sq == 0 and par == 0:
-                return k + 1
-        elif c == "(":
-            par += 1
-        elif c == ")":
-            par -= 1
-    raise _NotLiteralExpr
-
-
 def _cnc_parse(text: str, stash) -> object:
     val, i = _cnc_value(text, 0, stash)
     if text[i:].strip():
@@ -2143,8 +2096,6 @@ def _cnc_stash_text(sm: re.Match, stash) -> str:
 
 
 def _cnc_value(s: str, i: int, stash):
-    from decimal import Decimal, InvalidOperation
-
     n = len(s)
     while i < n and s[i].isspace():
         i += 1
@@ -2153,13 +2104,9 @@ def _cnc_value(s: str, i: int, stash):
     sm = _CNC_STASH.match(s, i)
     if sm:
         return _cnc_stash_text(sm, stash), sm.end()
-    if s[i] == "(":
-        close = balanced(s, i)
-        items = split_top(s[i + 1:close - 1])
-        if len(items) >= 2:
-            return (tuple(_cnc_parse(it, stash) for it in items),
-                    close)
-        return _cnc_parse(items[0], stash), close
+    c = ctor_at(s, i)
+    if c is not None:
+        return _cnc_ctor(c, stash), c.end
     wm = _CNC_WORD.match(s, i)
     if wm:
         w = wm.group(0).upper()
@@ -2172,50 +2119,6 @@ def _cnc_value(s: str, i: int, stash):
             return True, wm.end()
         if w == "FALSE":
             return False, wm.end()
-        if w == "ARRAY" and j < n and s[j] == "[":
-            close = _cnc_bracket(s, j)
-            inner = s[j + 1:close - 1]
-            if not inner.strip():
-                return [], close
-            return ([_cnc_parse(it, stash)
-                     for it in split_top(inner)], close)
-        if w == "ROW" and j < n and s[j] == "(":
-            close = balanced(s, j)
-            items = split_top(s[j + 1:close - 1])
-            return tuple(_cnc_parse(it, stash) for it in items), close
-        if w == "MAP" and j < n and s[j] == "(":
-            close = balanced(s, j)
-            body = s[j + 1:close - 1]
-            if not body.strip():
-                return {}, close
-            items = split_top(body)
-            if len(items) != 2:
-                raise _NotLiteralExpr
-            ks = _cnc_parse(items[0], stash)
-            vs = _cnc_parse(items[1], stash)
-            if not (isinstance(ks, list) and isinstance(vs, list)
-                    and len(ks) == len(vs)
-                    and all(k is not None for k in ks)):
-                raise _NotLiteralExpr
-            return {_cnc_key(k): (k, v)
-                    for k, v in zip(ks, vs)}, close
-        if w in ("CAST", "TRY_CAST") and j < n and s[j] == "(":
-            close = balanced(s, j)
-            body = s[j + 1:close - 1]
-            am = re.search(r"\bAS\s+([A-Za-z_]\w*)[^()]*$", body,
-                           re.IGNORECASE)
-            if am is None:
-                raise _NotLiteralExpr
-            v = _cnc_parse(body[:am.start()], stash)
-            tgt = am.group(1).upper()
-            was_str = isinstance(v, str)
-            numeric = cast_type(f"AS {tgt}")
-            if was_str and (decimal_of(numeric) or numeric in FLOATING):
-                try:
-                    v = Decimal(v.strip())
-                except InvalidOperation:
-                    raise _NotLiteralExpr from None
-            return _cnc_cast_replay(v, tgt, was_str), close
         # typed literal: TYPE 'text'
         op = operand_fwd(s, i, stash)
         lit = literal(s, op, stash)
@@ -2235,6 +2138,50 @@ def _cnc_value(s: str, i: int, stash):
     if lit is not None and lit.form == "bare":
         return -lit.value if sign == "-" else lit.value, op.end
     raise _NotLiteralExpr
+
+
+def _cnc_ctor(c, stash):
+    """The value of a literal ARRAY[...], ROW(...), MAP(...), bare
+    tuple or (TRY_)CAST(literal AS T) the Ctor c is."""
+    from decimal import Decimal, InvalidOperation
+
+    if c.head == "ARRAY":
+        return [_cnc_parse(it, stash) for it in c.parts]
+    if c.head in ("", "ROW"):
+        items = split_top(c.inner)
+        if c.head or len(items) >= 2:
+            return tuple(_cnc_parse(it, stash) for it in items)
+        return _cnc_parse(items[0], stash)
+    if c.head == "MAP":
+        parts = c.parts
+        if not parts:
+            return {}
+        if len(parts) != 2:
+            raise _NotLiteralExpr
+        ks, vs = (_cnc_parse(it, stash) for it in parts)
+        if not (isinstance(ks, list) and isinstance(vs, list)
+                and len(ks) == len(vs)
+                and all(k is not None for k in ks)):
+            raise _NotLiteralExpr
+        return {_cnc_key(k): (k, v) for k, v in zip(ks, vs)}
+    if c.head not in ("CAST", "TRY_CAST"):
+        raise _NotLiteralExpr
+    # a parenthesized target (DECIMAL(p, s), ROW(...)) declines
+    cast = split_cast(c.inner)
+    tm = None if cast is None or "(" in cast[1] or ")" in cast[1] \
+        else _CNC_WORD.match(cast[1])
+    if tm is None:
+        raise _NotLiteralExpr
+    v = _cnc_parse(cast[0], stash)
+    tgt = tm.group(0).upper()
+    was_str = isinstance(v, str)
+    numeric = cast_type(f"AS {tgt}")
+    if was_str and (decimal_of(numeric) or numeric in FLOATING):
+        try:
+            v = Decimal(v.strip())
+        except InvalidOperation:
+            raise _NotLiteralExpr from None
+    return _cnc_cast_replay(v, tgt, was_str)
 
 
 def _cnc_same_kind(a, b) -> bool:
@@ -2476,38 +2423,22 @@ def _cnc_parse_back(out: str, j: int, stash):
     """Parse a literal COMPLEX value ending at j (ws-exclusive);
     returns (start, value) or None. Only ROW(...)/MAP(...) calls,
     bare tuples, and ARRAY[...] literals qualify — any other call
-    head or unparseable content declines."""
-    k = j
-    while k > 0 and out[k - 1].isspace():
-        k -= 1
-    if k == 0:
-        return None
-    c = out[k - 1]
-    if c not in ")]":
+    head or unparseable content declines, and so does a bare tuple
+    right after a word (`SELECT (1, NULL) = ...` is left to Spark)."""
+    op = operand_back(out, j)
+    c = None if op is None else ctor_at(out, op.start)
+    if c is None or c.end != op.end \
+            or c.head not in ("", "ROW", "MAP", "ARRAY") \
+            or not c.head and re.search(r"[A-Za-z_]\w*\s*$",
+                                        out[:op.start]):
         return None
     try:
-        open_i = balanced_back(out, k)
-    except ValueError:
-        return None
-    if c == ")":
-        start = open_i
-        hm = re.search(r"([A-Za-z_]\w*)\s*$", out[:open_i])
-        if hm is not None:
-            if hm.group(1).upper() not in ("ROW", "MAP"):
-                return None
-            start = hm.start()
-    else:
-        hm = re.search(r"(ARRAY)\s*$", out[:open_i], re.IGNORECASE)
-        if hm is None:
-            return None
-        start = hm.start()
-    try:
-        v = _cnc_parse(out[start:k], stash)
+        v = _cnc_parse(out[op.start:op.end], stash)
     except (_NotLiteralExpr, ValueError):
         return None
     if not isinstance(v, (list, tuple, dict)):
         return None
-    return start, v
+    return op.start, v
 
 
 _CNC_EQ_OP = re.compile(r"(<>|!=|=)")
@@ -2921,16 +2852,6 @@ def _rewrite_sized_char_casts(masked: str, stash) -> str:
 # left alone (Subtract is exact); precisions <= 34 are unaffected by
 # the engine bug and keep the terser form.
 _NEG_DEC_CAST = re.compile(r"-\s*(CAST\s*(\())", re.IGNORECASE)
-_DEC_CAST_TYPE = re.compile(
-    r"AS\s+(DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\))\s*$", re.IGNORECASE
-)
-_DEC_CAST_LIT_OPERAND = re.compile(r"^\s*(\x00s(\d+)\x00)\s+AS\b",
-                                   re.IGNORECASE)
-_UNARY_PREV_KEYWORDS = frozenset(
-    "SELECT WHERE WHEN THEN ELSE AND OR NOT BY ON IN VALUES RETURN "
-    "RETURNS AS HAVING SET BETWEEN CASE COALESCE NULLIF LEAST "
-    "GREATEST".split()
-)
 
 
 def _rewrite_negated_decimal_cast(masked: str, stash) -> str:
@@ -2945,51 +2866,41 @@ def _rewrite_negated_decimal_cast(masked: str, stash) -> str:
             past = balanced(out, open_i)
         except ValueError:
             return out
-        inner = out[open_i + 1 : past - 1]
-        tm = _DEC_CAST_TYPE.search(inner)
-        if tm is None or int(tm.group(2)) <= 34:
+        cast = out[m.start(1):past]
+        ps = decimal_cast_type(cast)
+        if ps is None or ps[0] <= 34:
             pos = past
             continue
-        j = m.start() - 1
-        while j >= 0 and out[j].isspace():
-            j -= 1
-        unary = j < 0 or out[j] in "(,=<>+-*/%"
-        if not unary and (out[j].isalpha() or out[j] == "_"):
-            k = j
-            while k >= 0 and (out[k].isalnum() or out[k] == "_"):
-                k -= 1
-            unary = out[k + 1 : j + 1].upper() in _UNARY_PREV_KEYWORDS
-        if not unary:
-            pos = past
+        if unary_start(out, m.start(1)) == m.start(1):
+            pos = past  # a binary minus
             continue
-        lm = _DEC_CAST_LIT_OPERAND.match(inner)
-        if lm is not None:
+        operand, target = split_cast(out[open_i + 1:past - 1])
+        lit = literal_span(cast, stash)
+        if lit is not None and lit.form == "cast":
             # literal operand: fold the sign into the string — exact
             # at every (p, s), no arithmetic at all
-            lit = stash[int(lm.group(2))][1]
-            body = lit[1:-1].strip()
+            body = lit_of(operand, stash).strip()
             flipped = (
                 body[1:] if body.startswith("-")
                 else "-" + body.lstrip("+")
             )
             ph = stash_lit(stash, flipped)
-            new = f"CAST({ph} AS {tm.group(1)})"
-        elif int(tm.group(3)) == 0:
+            new = f"CAST({ph} AS {target})"
+        elif ps[1] == 0:
             # scale 0: Subtract derives (38, 0), which holds every
             # 38-digit result — exact
-            new = f"(0 - {out[m.start(1):past]})"
+            new = f"(0 - {cast})"
         else:
             # p=38 with fractional digits: 0-x would derive (38, s-1)
             # and round; negate through the exact decimal<->string
             # round trip instead
-            cast = out[m.start(1) : past]
             dash = stash_lit(stash, "-")
             new = (
                 f"CAST(CASE WHEN {cast} < 0 THEN "
                 f"substr(CAST({cast} AS STRING), 2) "
                 f"WHEN {cast} = 0 THEN CAST({cast} AS STRING) ELSE "
                 f"concat({dash}, CAST({cast} AS STRING)) END "
-                f"AS {tm.group(1)})"
+                f"AS {target})"
             )
         out = out[: m.start()] + new + out[past:]
         pos = m.start() + len(new)
@@ -3016,19 +2927,10 @@ def _rewrite_array_literals(sql: str) -> str:
         m = _ARRAY_LIT.search(sql)
         if not m:
             return sql
-        depth = 0
-        close = -1
-        for j in range(m.end() - 1, len(sql)):
-            if sql[j] == "[":
-                depth += 1
-            elif sql[j] == "]":
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close < 0:
+        c = ctor_at(sql, m.start())
+        if c is None:
             return sql  # unbalanced — leave for Spark to report
-        sql = sql[: m.start()] + "array(" + sql[m.end() : close] + ")" + sql[close + 1 :]
+        sql = sql[: m.start()] + "array(" + c.inner + ")" + sql[c.end :]
 
 
 def _rewrite_map_ctor(sql: str) -> str:
@@ -3144,23 +3046,14 @@ def _rewrite_row_types(sql: str) -> str:
         if m is None:
             return sql
         open_i = m.end() - 1
-        depth = 0
-        close_i = None
-        for k in range(open_i, len(sql)):
-            if sql[k] == "<":
-                depth += 1
-            elif sql[k] == ">":
-                depth -= 1
-                if depth == 0:
-                    close_i = k
-                    break
-        if close_i is None:
+        try:
+            past = angle_close(sql, open_i)
+        except ValueError:
             return sql
-        inner = sql[open_i:close_i + 1]
-        fixed = _BARE_VARCHAR_TYPE.sub("STRING", inner)
+        fixed = _BARE_VARCHAR_TYPE.sub("STRING", sql[open_i:past])
         fixed = re.sub(r"\bUNKNOWN\b", "BOOLEAN", fixed,
                        flags=re.IGNORECASE)
-        sql = sql[:open_i] + fixed + sql[close_i + 1:]
+        sql = sql[:open_i] + fixed + sql[past:]
         pos = open_i + len(fixed)
 
 
@@ -3364,17 +3257,8 @@ _STRUCT_SPEC = re.compile(r"AS\s+STRUCT<(.*)>\s*$", re.IGNORECASE | re.DOTALL)
 def _split_struct_fields(spec: str) -> list[str]:
     """Top-level field names of a STRUCT<...> spec (commas nest in
     <> and ())."""
-    names, depth, start = [], 0, 0
-    for i, ch in enumerate(spec):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            names.append(spec[start:i])
-            start = i + 1
-    names.append(spec[start:])
-    return [f.split(":")[0].strip() for f in names]
+    return [f.split(":")[0].strip()
+            for f in split_top(spec, angles=True)]
 
 
 def _rewrite_row_subscript(sql: str) -> str:
@@ -3487,8 +3371,9 @@ class NulInLiteralError(ValueError):
 
 
 def _split_top_binary(expr: str) -> tuple[str, str, str] | None:
-    """Split at the last top-level +/- (else last top-level * or /),
-    mirroring precedence so TRY(a * b + c) -> try_add(a * b, c)."""
+    """Split at the last top-level binary +/- (else last top-level *
+    or /), mirroring precedence so TRY(a * b + c) -> try_add(a * b, c);
+    a unary sign (masked.unary_start) is no split point."""
     for ops in ("+-", "*/"):
         depth = 0
         best = -1
@@ -3497,10 +3382,9 @@ def _split_top_binary(expr: str) -> tuple[str, str, str] | None:
                 depth += 1
             elif ch == ")":
                 depth -= 1
-            elif depth == 0 and ch in ops and 0 < j < len(expr) - 1:
-                left = expr[:j].rstrip()
-                if left and left[-1] not in "+-*/%,(<>=":
-                    best = j
+            elif depth == 0 and ch in ops and 0 < j < len(expr) - 1 and (
+                    ch in "*/" or unary_start(expr, j + 1) == j + 1):
+                best = j
         if best >= 0:
             return expr[best], expr[:best].strip(), expr[best + 1 :].strip()
     return None
@@ -4909,21 +4793,15 @@ def _rewrite_json_cast_peephole(sql: str, stash=None) -> str:
             # permissive mode (the reference coerces leniently too)
             angle_open = (end_tj + (len(sql[end_tj:]) - len(tail))
                           + ctm.end(1) - 1)
-            depth = 0
-            close_i = None
-            for k in range(angle_open, len(sql)):
-                if sql[k] == "<":
-                    depth += 1
-                elif sql[k] == ">":
-                    depth -= 1
-                    if depth == 0:
-                        close_i = k
-                        break
-            if close_i is not None:
+            try:
+                angle_past = angle_close(sql, angle_open)
+            except ValueError:
+                angle_past = None
+            if angle_past is not None:
                 cast_start = m.start()
                 typ = ctm.group(1).rstrip().rstrip("<") + \
-                    sql[angle_open:close_i + 1]
-                cast_end = sql.index(")", close_i) + 1
+                    sql[angle_open:angle_past]
+                cast_end = sql.index(")", angle_past) + 1
                 repl = (f"from_json(CAST({inner} AS STRING), "
                         f"{stash_lit(stash, typ)})")
                 sql = sql[:cast_start] + repl + sql[cast_end:]

@@ -28,6 +28,12 @@ literals — before the engine's container rewrites run; scalar kinds
 all render identically through the ``to_json(array(x))``
 bracket-strip trick, so the derivation only needs to be exact about
 structure. Underivable operands decline (no rewrite).
+
+Every reader here is masked.py's: an operand's extent around `=`,
+`||` or a comparison is masked.operand_back / operand_fwd's (names,
+calls, constructors, subscripts and typed literals scan untyped), a
+constructor's head and parts are masked.ctor_at's, a CAST's target is
+masked.split_cast's, and a numeric leaf is masked.literal_span's.
 """
 
 from __future__ import annotations
@@ -35,24 +41,22 @@ from __future__ import annotations
 import re
 
 from presto_0_235_spark.sql.masked import (
-    STR_PH, balanced, decimal_of, literal_span, split_top, stash_lit)
+    STR_PH, angle_close, balanced, ctor_at, decimal_of, literal_span,
+    operand_back, operand_fwd, skip_signs, split_cast, split_top,
+    stash_lit, unary_start)
 
 # ---------------------------------------------------------------------------
 # type trees: 'json' | 'scalar' | 'unknown'
 #             | ('array', T) | ('map', K, V) | ('row', [T, ...])
 # ---------------------------------------------------------------------------
 
-_CAST_HEAD = re.compile(r"^(?:TRY_)?CAST\s*\(", re.IGNORECASE)
-_ARRAY_CTOR = re.compile(r"^ARRAY\s*\[", re.IGNORECASE)
-_MAP_CTOR = re.compile(r"^MAP\s*\(", re.IGNORECASE)
-_ROW_CTOR = re.compile(r"^ROW\s*\(", re.IGNORECASE)
 _JSON_LOWERED = re.compile(
     r"^to_json\s*\(\s*(?:try_)?parse_json\s*\(", re.IGNORECASE)
-_NUM_LIT = re.compile(r"^[+-]?(?:\d+(?:\.\d*)?|\.\d+)(?:[eE][+-]?\d+)?$")
+# a dotted numeric literal masked.literal does not read (.5, 5., .5e3):
+# DECIMAL without an exponent, DOUBLE with one
+_DOTTED_NUM = re.compile(r"[+-]?(?:\d+\.\d*|\.\d+)([eE][+-]?\d+)?")
 _TYPED_SCALAR_LIT = re.compile(
     r"^(?:DATE|TIME|TIMESTAMP)\s*\x00s\d+\x00$", re.IGNORECASE)
-_NILADIC_DOUBLE = re.compile(
-    r"^(?:nan|infinity)\s*\(\s*\)$", re.IGNORECASE)
 
 _SCALAR_TYPES = frozenset((
     "TINYINT", "SMALLINT", "INT", "INTEGER", "BIGINT", "DOUBLE",
@@ -70,10 +74,8 @@ def parse_presto_type(text: str):
     if m is not None:
         head = m.group(1).upper()
         open_i = m.end() - 1
-        if t[open_i] == "<":
-            close_i = _angle_close(t, open_i)
-        else:
-            close_i = balanced(t, open_i) - 1
+        close_i = (angle_close if t[open_i] == "<" else balanced)(
+            t, open_i) - 1
         inner = t[open_i + 1:close_i]
         if t[close_i + 1:].strip():
             return None
@@ -120,18 +122,6 @@ def parse_presto_type(text: str):
     return None
 
 
-def _angle_close(s: str, open_i: int) -> int:
-    depth = 0
-    for k in range(open_i, len(s)):
-        if s[k] == "<":
-            depth += 1
-        elif s[k] == ">":
-            depth -= 1
-            if depth == 0:
-                return k
-    raise ValueError("unbalanced <>")
-
-
 def unify(types: list):
     """Least structural upper bound of derived element types."""
     ts = [t for t in types if t is not None and t != "unknown"]
@@ -159,116 +149,78 @@ def unify(types: list):
     return "scalar"  # scalar/json/decimal mixes render as scalars
 
 
+def _unparen(expr: str) -> str:
+    """expr without the paren groups wrapping all of it."""
+    e = expr.strip()
+    while (c := ctor_at(e)) is not None and not c.head and c.end == len(e):
+        e = c.inner.strip()
+    return e
+
+
 def derive_ptype(expr: str):
     """Lexical Presto type-shape of a masked expression, else None.
     'unknown' means a typeless NULL (renderable as null)."""
-    e = expr.strip()
-    while e.startswith("(") and not _MAP_CTOR.match(e):
-        try:
-            if balanced(e, 0) != len(e):
-                break
-        except ValueError:
-            return None
-        e = e[1:-1].strip()
+    e = _unparen(expr)
     if not e:
         return None
     if e.upper() == "NULL":
         return "unknown"
-    if re.fullmatch(r"[+-]?(?:\d+\.\d*|\.\d+)", e):
+    m = _DOTTED_NUM.fullmatch(e)
+    if m is not None:
         # a plain decimal literal is DECIMAL in Presto; its Spark
         # to_json rendering uses BigDecimal.toString (scientific for
         # small magnitudes) where the reference writes the plain form
-        return "decimal"
-    if STR_PH.match(e) or _NUM_LIT.match(e) \
-            or _TYPED_SCALAR_LIT.match(e) or _NILADIC_DOUBLE.match(e) \
-            or e.upper() in ("TRUE", "FALSE"):
+        return "scalar" if m.group(1) else "decimal"
+    lit = literal_span(e)
+    if lit is not None and lit.form in ("bare", "call") or STR_PH.match(e) \
+            or _TYPED_SCALAR_LIT.match(e) or e.upper() in ("TRUE", "FALSE"):
         return "scalar"
     if _JSON_LOWERED.match(e):
         return "json"
-    m = _CAST_HEAD.match(e)
-    if m is not None:
-        try:
-            if balanced(e, e.index("(", m.start())) != len(e):
-                return None
-        except ValueError:
+    c = ctor_at(e)
+    if c is None or c.end != len(e):
+        # `ARRAY[...] || elem` and friends; a CAST or a MAP(...) must
+        # span the whole text
+        if c is not None and c.head in ("CAST", "TRY_CAST", "MAP"):
             return None
-        body = e[e.index("(") + 1:-1]
-        # the LAST top-level AS is the cast target
-        target = None
-        for am in re.finditer(r"\bAS\s+", body, re.IGNORECASE):
-            d = 0
-            for c in body[:am.start()]:
-                if c in "([":
-                    d += 1
-                elif c in ")]":
-                    d -= 1
-            if d == 0:
-                target = body[am.end():]
-        if target is None:
-            return None
-        return parse_presto_type(target)
-    if _ARRAY_CTOR.match(e):
-        open_i = e.index("[")
-        try:
-            if balanced(e, open_i) != len(e):
-                return _concat_chain_type(e)
-        except ValueError:
-            return None
-        inner = e[open_i + 1:-1].strip()
-        if not inner:
+        return _concat_chain_type(e)
+    if c.head in ("CAST", "TRY_CAST"):
+        cast = split_cast(c.inner)
+        return None if cast is None else parse_presto_type(cast[1])
+    parts = c.parts
+    if c.head == "ARRAY":
+        if not parts:
             return ("array", "unknown")
-        el = unify([derive_ptype(x) for x in split_top(inner)])
+        el = unify([derive_ptype(x) for x in parts])
         return ("array", el) if el is not None else None
-    if _MAP_CTOR.match(e):
-        open_i = e.index("(")
-        try:
-            if balanced(e, open_i) != len(e):
-                return None
-        except ValueError:
-            return None
-        inner = e[open_i + 1:-1].strip()
-        if not inner:
+    if c.head == "MAP":
+        if not parts:
             return ("map", "unknown", "unknown")
-        args = split_top(inner)
-        if len(args) != 2:
+        if len(parts) != 2:
             return None
-        karr = derive_ptype(args[0])
-        varr = derive_ptype(args[1])
+        karr, varr = derive_ptype(parts[0]), derive_ptype(parts[1])
         if (isinstance(karr, tuple) and karr[0] == "array"
                 and isinstance(varr, tuple) and varr[0] == "array"):
             return ("map", karr[1], varr[1])
         return None
-    m = re.match(r"^(?:from_unixtime|count|sum|avg)\s*\(", e,
-                 re.IGNORECASE)
-    if m is not None:
+    if c.head in ("FROM_UNIXTIME", "COUNT", "SUM", "AVG"):
         # known scalar-returning calls: from_unixtime (timestamp
         # keys/values in the reference's map comparison tests) and
         # the always-scalar aggregates (count/sum/avg — min/max can
         # carry container types and stay underivable)
-        try:
-            if balanced(e, e.index("(")) == len(e):
-                return "scalar"
-        except ValueError:
-            return None
-    if _ROW_CTOR.match(e):
-        open_i = e.index("(")
-        try:
-            if balanced(e, open_i) != len(e):
-                return _concat_chain_type(e)
-        except ValueError:
-            return None
-        fields = [derive_ptype(x)
-                  for x in split_top(e[open_i + 1:-1])]
+        return "scalar"
+    if c.head == "ROW":
+        fields = [derive_ptype(x) for x in split_top(c.inner)]
         if any(f is None for f in fields):
             return None
         return ("row", fields, None)
-    return _concat_chain_type(e)
+    return None
 
 
 def _concat_chain_type(e: str):
     """`ARRAY[...] || elem` and friends derive the array type
     (ArrayConcatFunction / element append)."""
-    parts = _split_top_concat(e)
+    parts = split_top(e, "||")
     if len(parts) < 2:
         return None
     types = [derive_ptype(p) for p in parts]
@@ -283,24 +235,6 @@ def _concat_chain_type(e: str):
          and t != "unknown"]
     el = unify([x for x in elems if x != "unknown"] or ["unknown"])
     return ("array", el) if el is not None else None
-
-
-def _split_top_concat(s: str) -> list[str]:
-    parts, depth, start, k = [], 0, 0, 0
-    while k < len(s):
-        c = s[k]
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "|" and depth == 0 and s[k:k + 2] == "||":
-            parts.append(s[start:k])
-            start = k + 2
-            k += 2
-            continue
-        k += 1
-    parts.append(s[start:])
-    return parts
 
 
 # ---------------------------------------------------------------------------
@@ -401,65 +335,33 @@ def _render_value(expr: str, t, stash, lit, depth: int) -> str | None:
     """Render an expression whose derived type may be a row — row
     CONSTRUCTORS render field-wise, everything else through
     _render."""
-    e = expr.strip()
-    while e.startswith("(") and not _MAP_CTOR.match(e):
-        try:
-            if balanced(e, 0) != len(e):
-                break
-        except ValueError:
-            break
-        e = e[1:-1].strip()
+    e = _unparen(expr)
     if isinstance(t, tuple) and t[0] == "row":
-        ctor = _row_ctor_args(e)
+        ctor = _row_args(e)
         if ctor is not None:
             return _render_row_ctor(ctor, t[1], stash, lit, depth + 1)
         if e.upper() == "NULL":
             return lit("null")
         return None
-    if isinstance(t, tuple) and t[0] in ("array", "map"):
-        # container element types may nest rows: a row INSIDE an
-        # array/map needs the object->array repair, which only the
-        # ctor path provides — but ARRAY[ROW(..), ..] elements are
-        # ctors and arrive here element-wise via the lambda var, so
-        # nested non-ctor rows decline inside _render
-        return _render(e, t, stash, lit, depth)
+    # container element types may nest rows: a row INSIDE an
+    # array/map needs the object->array repair, which only the ctor
+    # path provides — but ARRAY[ROW(..), ..] elements are ctors and
+    # arrive here element-wise via the lambda var, so nested non-ctor
+    # rows decline inside _render
     return _render(e, t, stash, lit, depth)
 
 
-def _row_ctor_args(e: str) -> list[str] | None:
+def _row_args(e: str) -> list[str] | None:
     """Arg texts when ``e`` is ROW(...) or (TRY_)CAST(ROW(...) AS
     row-type); else None."""
-    m = _ROW_CTOR.match(e)
-    if m is not None:
-        open_i = e.index("(")
-        try:
-            if balanced(e, open_i) != len(e):
-                return None
-        except ValueError:
-            return None
-        return split_top(e[open_i + 1:-1])
-    cm = _CAST_HEAD.match(e)
-    if cm is not None:
-        try:
-            if balanced(e, e.index("(", cm.start())) != len(e):
-                return None
-        except ValueError:
-            return None
-        body = e[e.index("(") + 1:-1]
-        # strip the last top-level AS target
-        target_at = None
-        for am in re.finditer(r"\bAS\s+", body, re.IGNORECASE):
-            d = 0
-            for c in body[:am.start()]:
-                if c in "([":
-                    d += 1
-                elif c in ")]":
-                    d -= 1
-            if d == 0:
-                target_at = am.start()
-        if target_at is None:
-            return None
-        return _row_ctor_args(body[:target_at].strip())
+    c = ctor_at(e)
+    if c is None or c.end != len(e):
+        return None
+    if c.head == "ROW":
+        return split_top(c.inner)
+    if c.head in ("CAST", "TRY_CAST"):
+        cast = split_cast(c.inner)
+        return None if cast is None else _row_args(cast[0])
     return None
 
 
@@ -486,32 +388,19 @@ def rewrite_container_json_casts(masked: str, stash) -> str:
         m = _CAST_JSON.search(out, pos)
         if m is None:
             return out
-        open_i = out.index("(", m.end() - 1)
-        try:
-            past = balanced(out, open_i)
-        except ValueError:
+        c = ctor_at(out, m.start())
+        if c is None:
             return out
-        body = out[open_i + 1:past - 1]
-        # last top-level AS
-        target_at = None
-        for am in re.finditer(r"\bAS\s+", body, re.IGNORECASE):
-            d = 0
-            for c in body[:am.start()]:
-                if c in "([":
-                    d += 1
-                elif c in ")]":
-                    d -= 1
-            if d == 0:
-                target_at = am
-        if target_at is None or \
-                body[target_at.end():].strip().upper() != "JSON":
+        past = c.end
+        cast = split_cast(c.inner)
+        if cast is None or cast[1].upper() != "JSON":
             pos = m.end()
             continue
-        operand = body[:target_at.start()].strip()
+        operand = cast[0]
         t = derive_ptype(operand)
         rendered = None
         if isinstance(t, tuple) and t[0] == "row":
-            ctor = _row_ctor_args(operand)
+            ctor = _row_args(operand)
             if ctor is not None:
                 rendered = _render_row_ctor(ctor, t[1], stash, lit, 0)
             else:
@@ -527,8 +416,8 @@ def rewrite_container_json_casts(masked: str, stash) -> str:
         # propagation), unlike nested nulls which render as text;
         # constructor operands are never NULL — skip the guard
         # (whose operand copy would re-embed inner casts)
-        if _ARRAY_CTOR.match(operand) or _MAP_CTOR.match(operand) \
-                or _ROW_CTOR.match(operand):
+        c = ctor_at(operand)
+        if c is not None and c.head in ("ARRAY", "MAP", "ROW"):
             repl = rendered
         else:
             repl = (f"(CASE WHEN ({operand}) IS NULL "
@@ -550,72 +439,6 @@ def rewrite_container_json_casts(masked: str, stash) -> str:
 # equal, with an indeterminate (NULL) value comparison making the
 # whole result NULL; IS DISTINCT FROM compares values null-safely.
 # ---------------------------------------------------------------------------
-
-
-def _operand_back(s: str, j: int):
-    """(start, text) of the primary expression ending just before
-    ``j`` — a call/ctor/cast chain like MAP(...)  CAST(... AS T)."""
-    k = j
-    while k > 0 and s[k - 1].isspace():
-        k -= 1
-    end = k
-    if k > 0 and s[k - 1] in ")]":
-        depth = 0
-        while k > 0:
-            c = s[k - 1]
-            if c in ")]":
-                depth += 1
-            elif c in "([":
-                depth -= 1
-                if depth == 0:
-                    k -= 1
-                    break
-            k -= 1
-        # the head identifier (function/ctor name), possibly with
-        # whitespace before the paren
-        m = re.search(r"([A-Za-z_]\w*)\s*$", s[:k])
-        if m is not None:
-            k = m.start(1)
-    else:
-        m = re.search(r"(\x00s\d+\x00|[\w.]+)\s*$", s[:end])
-        if m is None:
-            return None
-        k = m.start(1)
-        if m.group(1).startswith("\x00"):
-            tm = re.search(_TYPED_LIT_KW + r"\s*$", s[:k],
-                           re.IGNORECASE)
-            if tm is not None:
-                k = tm.start(1)
-    return (k, s[k:end]) if k < end else None
-
-
-_TYPED_LIT_KW = (r"\b(DATE|TIME|TIMESTAMP|DECIMAL|CHAR|VARCHAR|"
-                 r"JSON|BIGINT|INTEGER|INT|SMALLINT|TINYINT|DOUBLE|"
-                 r"REAL|BOOLEAN|IPADDRESS|IPPREFIX)")
-
-
-def _operand_fwd(s: str, i: int):
-    """(end, text) of the primary expression starting at/after i."""
-    n = len(s)
-    while i < n and s[i].isspace():
-        i += 1
-    start = i
-    m = re.match(r"(?:TRY_)?CAST\s*\(|[A-Za-z_]\w*\s*[\(\[]",
-                 s[i:], re.IGNORECASE)
-    if m is not None:
-        open_i = start + m.end() - 1
-        try:
-            i = balanced(s, open_i)
-        except ValueError:
-            return None
-        return (i, s[start:i])
-    m = re.match(_TYPED_LIT_KW + r"\s*\x00s\d+\x00", s[i:],
-                 re.IGNORECASE)
-    if m is None:
-        m = re.match(r"\x00s\d+\x00|[\w.]+", s[i:])
-    if m is None:
-        return None
-    return (start + m.end(), s[start:start + m.end()])
 
 
 def _map_value_eq(x: str, y: str, vt, depth: int) -> str:
@@ -688,16 +511,15 @@ def rewrite_map_comparisons(masked: str, stash) -> str:
         if "=" in op and ("<=" in out[max(0, m.start() - 1):m.end() + 1]
                           or ">=" in out[max(0, m.start() - 1):m.end() + 1]):
             continue
-        left = _operand_back(out, m.start())
-        right = _operand_fwd(out, m.end())
+        left = operand_back(out, m.start())
+        right = operand_fwd(out, m.end())
         if left is None or right is None:
             continue
-        lt = derive_ptype(left[1])
-        rt = derive_ptype(right[1])
+        a, b = out[left.start:left.end], out[right.start:right.end]
+        lt, rt = derive_ptype(a), derive_ptype(b)
         t = lt if isinstance(lt, tuple) and lt[0] == "map" else rt
         if not (isinstance(t, tuple) and t[0] == "map"):
             continue
-        a, b = left[1], right[1]
         null_side = a.strip().upper() == "NULL" or \
             b.strip().upper() == "NULL"
         if op.startswith("IS"):
@@ -713,8 +535,8 @@ def rewrite_map_comparisons(masked: str, stash) -> str:
                 else _map_eq_expr(a, b, t)
             if op in ("!=", "<>") and not null_side:
                 repl = f"(NOT {repl})"
-        out = out[:left[0]] + repl + out[right[0]:]
-        pos = left[0] + len(repl)
+        out = out[:left.start] + repl + out[right.end:]
+        pos = left.start + len(repl)
 
 
 # ---------------------------------------------------------------------------
@@ -724,6 +546,8 @@ def rewrite_map_comparisons(masked: str, stash) -> str:
 
 
 def rewrite_array_element_concat(masked: str) -> str:
+    """Each side of `||` is one operand with its unary signs: SqlBase.g4
+    binds a sign tighter than CONCAT, so `-1 || ARRAY[2]` is [-1, 2]."""
     out = masked
     pos = 0
     while True:
@@ -731,22 +555,24 @@ def rewrite_array_element_concat(masked: str) -> str:
         if i < 0:
             return out
         pos = i + 2
-        left = _operand_back(out, i)
-        right = _operand_fwd(out, i + 2)
+        left = operand_back(out, i)
+        right = operand_fwd(out, skip_signs(out, i + 2))
         if left is None or right is None:
             continue
-        lt = derive_ptype(left[1])
-        rt = derive_ptype(right[1])
+        lo = unary_start(out, left.start)
+        a = out[lo:left.end]
+        b = out[i + 2:right.end].strip()
+        lt, rt = derive_ptype(a), derive_ptype(b)
         l_arr = isinstance(lt, tuple) and lt[0] == "array"
         r_arr = isinstance(rt, tuple) and rt[0] == "array"
         if l_arr and rt in ("scalar", "decimal"):
-            repl = f"array_append({left[1]}, {right[1]})"
+            repl = f"array_append({a}, {b})"
         elif r_arr and lt in ("scalar", "decimal"):
-            repl = f"array_prepend({right[1]}, {left[1]})"
+            repl = f"array_prepend({b}, {a})"
         else:
             continue
-        out = out[:left[0]] + repl + out[right[0]:]
-        pos = left[0] + len(repl)
+        out = out[:lo] + repl + out[right.end:]
+        pos = lo + len(repl)
 
 
 # ---------------------------------------------------------------------------
@@ -771,20 +597,6 @@ def _numeric_literal_scales(exprs):
     return scales
 
 
-def _array_ctor_elems(e: str):
-    e = e.strip()
-    if not _ARRAY_CTOR.match(e):
-        return None
-    open_i = e.index("[")
-    try:
-        if balanced(e, open_i) != len(e):
-            return None
-    except ValueError:
-        return None
-    inner = e[open_i + 1:-1].strip()
-    return split_top(inner) if inner else []
-
-
 _ARRAY_POS_HEAD = re.compile(r"\bARRAY_POSITION\s*\(", re.IGNORECASE)
 _DEC38 = "DECIMAL(38,18)"
 
@@ -806,10 +618,10 @@ def rewrite_decimal_array_ops(masked: str) -> str:
         args = split_top(out[open_i + 1:past - 1])
         if len(args) != 2:
             continue
-        elems = _array_ctor_elems(args[0])
-        if elems is None:
+        c = ctor_at(args[0])
+        if c is None or c.head != "ARRAY" or c.end != len(args[0]):
             continue
-        scales = _numeric_literal_scales(elems + [args[1]])
+        scales = _numeric_literal_scales(c.parts + [args[1]])
         if scales is None or len(scales) <= 1:
             continue
         repl = (f"ARRAY_POSITION(CAST({args[0]} AS "
@@ -827,19 +639,20 @@ def rewrite_decimal_array_ops(masked: str) -> str:
         om = cmp_op.match(out, m.end())
         if om is None:
             continue
-        left = _operand_back(out, m.end())
-        right = _operand_fwd(out, om.end())
+        left = operand_back(out, m.end())
+        right = operand_fwd(out, om.end())
         if left is None or right is None:
             continue
-        le = _array_ctor_elems(left[1])
-        re_ = _array_ctor_elems(right[1])
-        if le is None or re_ is None:
+        lc, rc = ctor_at(out, left.start), ctor_at(out, right.start)
+        if not (lc is not None and lc.head == "ARRAY"
+                and lc.end == left.end and rc is not None
+                and rc.head == "ARRAY" and rc.end == right.end):
             continue
-        scales = _numeric_literal_scales(le + re_)
+        scales = _numeric_literal_scales(lc.parts + rc.parts)
         if scales is None or len(scales) <= 1:
             continue
-        repl = (f"CAST({left[1]} AS ARRAY<{_DEC38}>) "
+        repl = (f"CAST({out[left.start:left.end]} AS ARRAY<{_DEC38}>) "
                 f"{om.group(1)} "
-                f"CAST({right[1]} AS ARRAY<{_DEC38}>)")
-        out = out[:left[0]] + repl + out[right[0]:]
-        pos = left[0] + len(repl)
+                f"CAST({out[right.start:right.end]} AS ARRAY<{_DEC38}>)")
+        out = out[:left.start] + repl + out[right.end:]
+        pos = left.start + len(repl)

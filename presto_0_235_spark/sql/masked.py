@@ -6,12 +6,21 @@ the text as \\x00<kind><n>\\x00 placeholders, so every paren, comma and
 operator seen here is code.
 
 - balanced / balanced_back: bracket matching in either direction.
-- split_top: the top-level comma split.
+- split_top: the top-level split on commas (or on another separator,
+  `||` say); with angles=True '<' and '>' nest too, for type
+  spellings. angle_close: the '>' closing a type spelling's '<'.
+- ctor_at: the constructor reader. The head and the inside of an
+  ARRAY[...], MAP(...), ROW(...), any other `head(...)` call or a bare
+  paren group, and where it ends.
+- split_cast: a CAST body's operand and target, split at its last
+  top-level AS.
 - stash_lit / lit_of: append a string literal to the stash, read one
   back.
-- operand_fwd / operand_back / operand_span: the typed-operand scanner,
-  the one place a masked operand's Presto static type is derived;
-  decimal_cast_type reads a decimal CAST's (p, s) through it.
+- operand_fwd / operand_back / operand_span: the operand scanner, the
+  one place a masked operand's extent and Presto static type are
+  derived; decimal_cast_type reads a decimal CAST's (p, s) through it.
+  unary_start extends an operand over the unary signs before it;
+  skip_signs steps over the ones after an operator.
 - literal / literal_span: the literal reader, the one place a numeric
   literal's exact value and Presto type are read. Every constant fold
   in the front door reads its literals here; INTEGRAL_RANGE is the one
@@ -20,7 +29,9 @@ operator seen here is code.
 The scanner parses one grammar in both directions and reports an
 operand's extent with three facts: its Presto static type, whether it
 is a numeric literal, and which binary operators a parenthesized chain
-holds. Each rewrite pass keeps its own domain rules as filters on those
+holds. Untyped operands (names, calls and constructors with any head,
+subscripts, typed literals of a non-numeric type) scan too, with type
+None. Each rewrite pass keeps its own domain rules as filters on those
 facts; the scanner itself takes no mode.
 """
 
@@ -64,19 +75,101 @@ def balanced_back(s: str, j: int) -> int:
     raise ValueError("unbalanced parentheses in SQL")
 
 
-def split_top(s: str) -> list[str]:
-    """Split on commas at bracket depth 0; parts come back stripped."""
+def split_top(s: str, sep: str = ",", angles: bool = False) -> list[str]:
+    """Split on `sep` at bracket depth 0; parts come back stripped.
+    With angles, '<' and '>' nest as brackets too: a type spelling
+    (MAP<VARCHAR, ARRAY<INT>>), where they never compare."""
+    opens, closes = ("([<", ")]>") if angles else ("([", ")]")
     parts, depth, start = [], 0, 0
     for j, c in enumerate(s):
-        if c in "([":
+        if c in opens:
             depth += 1
-        elif c in ")]":
+        elif c in closes:
             depth -= 1
-        elif c == "," and depth == 0:
+        elif c == sep[0] and depth == 0 and j >= start \
+                and s.startswith(sep, j):
             parts.append(s[start:j])
-            start = j + 1
+            start = j + len(sep)
     parts.append(s[start:])
     return [p.strip() for p in parts]
+
+
+def angle_close(s: str, open_i: int) -> int:
+    """Index just past the '>' closing the '<' at s[open_i] in a type
+    spelling; '(' ')' nest inside it (ARRAY<DECIMAL(10, 2)>)."""
+    depth = 0
+    for k in range(open_i, len(s)):
+        c = s[k]
+        if c in "<(":
+            depth += 1
+        elif c in ">)":
+            depth -= 1
+            if depth == 0:
+                if c == ">":
+                    return k + 1
+                break
+    raise ValueError("unbalanced <> in a type")
+
+
+class Ctor(NamedTuple):
+    """A bracket group with its head, read by ctor_at.
+
+    head:  the upper-cased head ('ARRAY', 'MAP', 'ROW', 'CAST', any
+           call's name), '' for a bare paren group.
+    inner: the text between the brackets.
+    end:   the index just past the closing bracket."""
+
+    head: str
+    inner: str
+    end: int
+
+    @property
+    def parts(self) -> list[str]:
+        """The top-level comma parts of inner; [] when it is blank."""
+        return split_top(self.inner) if self.inner.strip() else []
+
+
+# ARRAY takes square brackets and nothing else does; a paren group's
+# head is any identifier, or none
+_CTOR_HEAD = re.compile(
+    r"(ARRAY)\s*\[|(?!ARRAY\s*\()([A-Za-z_]\w*)?\s*\(", re.IGNORECASE)
+
+
+def ctor_at(s: str, i: int = 0):
+    """The Ctor starting exactly at s[i], or None: `ARRAY[...]`,
+    `head(...)` or a bare `(...)`. None too when its bracket does not
+    close. The group may end before the text does; a caller wanting
+    the whole text compares end with its length."""
+    m = _CTOR_HEAD.match(s, i)
+    if m is None:
+        return None
+    try:
+        end = balanced(s, m.end() - 1)
+    except ValueError:
+        return None
+    return Ctor((m.group(1) or m.group(2) or "").upper(),
+                s[m.end():end - 1], end)
+
+
+_AS = re.compile(r"\bAS\s+", re.IGNORECASE)
+
+
+def split_cast(body: str):
+    """(operand, target) of a CAST whose parenthesized body is `body`,
+    split at its last top-level AS and stripped; None without one."""
+    cut, depth, k = None, 0, 0
+    for m in _AS.finditer(body):
+        for c in body[k:m.start()]:
+            if c in "([":
+                depth += 1
+            elif c in ")]":
+                depth -= 1
+        k = m.start()
+        if depth == 0:
+            cut = m
+    if cut is None:
+        return None
+    return body[:cut.start()].strip(), body[cut.end():].strip()
 
 
 def stash_lit(stash: list[tuple[str, str]], text: str) -> str:
@@ -123,18 +216,30 @@ _AGGREGATES = ("COUNT", "SUM", "MIN", "MAX", "AVG")
 _HEAD_FWD = re.compile(
     r"(TRY_CAST|CAST|count|sum|min|max|avg|nan|infinity)\s*\(",
     re.IGNORECASE)
-_HEAD_BACK = re.compile(
-    r"(?<![\w.\x00])(TRY_CAST|CAST|count|sum|min|max|avg|nan|infinity)"
-    r"\s*$", re.IGNORECASE)
 _NUM_FWD = re.compile(r"\d+(?:\.\d+)?(?:[eE][+-]?\d+)?")
 # a numeric typed literal `T '<n>'` (SqlBase.g4 typeConstructor; no
 # space needed before the quote)
 _TYPED_HEADS = "TINYINT|SMALLINT|INTEGER|INT|BIGINT|REAL|DOUBLE|DECIMAL"
 _TYPED_FWD = re.compile(rf"({_TYPED_HEADS})\s*(\x00s\d+\x00)", re.IGNORECASE)
-_TYPED_BACK = re.compile(rf"\b(?:{_TYPED_HEADS})\s*$", re.IGNORECASE)
-_STR_FWD = re.compile(r"\x00s\d+\x00")
+_STR_FWD = re.compile(r"\s*\x00s\d+\x00")
+_NAME_FWD = re.compile(r"[A-Za-z_]\w*(?:\.\w+)*")
+# the last token before j: a numeric literal, a string placeholder or
+# a (dotted) name
 _TOKEN_BACK = re.compile(
-    r"(?:\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|\x00s\d+\x00)$")
+    r"(?:\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|\x00s\d+\x00"
+    r"|(?<![\w.\x00])[A-Za-z_][\w.]*)$")
+# the word a bracket group or a string placeholder may hang off
+_HEAD_BACK = re.compile(r"(?<![\w.\x00])[A-Za-z_][\w.]*\s*$")
+# SqlBase.g4's reserved words that never name an operand, head a call
+# or head a typed literal (the call-shaped CAST, EXTRACT, EXISTS, ...
+# and the literal NULL, TRUE, FALSE are operands)
+_RESERVED = frozenset(
+    "ALTER AND AS BETWEEN BY CASE CONSTRAINT CREATE CROSS CUBE "
+    "DEALLOCATE DELETE DESCRIBE DISTINCT DROP ELSE END ESCAPE EXCEPT "
+    "EXECUTE FOR FROM FULL GROUP HAVING IN INNER INSERT INTERSECT INTO "
+    "IS JOIN LEFT LIKE NATURAL NOT ON OR ORDER OUTER PREPARE RECURSIVE "
+    "RIGHT ROLLUP SELECT TABLE THEN UESCAPE UNION USING VALUES WHEN "
+    "WHERE WITH".split())
 _CAST_TAIL = re.compile(
     r"\bAS\s+(TINYINT|SMALLINT|INTEGER|INT|BIGINT|DOUBLE|FLOAT|REAL"
     r"|DECIMAL(?:\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\))?"
@@ -310,14 +415,31 @@ def _call(masked: str, start: int, name: str, open_i: int, past: int,
     return Operand(start, past, _agg_type(name, arg))
 
 
+def _skip_ws(masked: str, i: int) -> int:
+    while i < len(masked) and masked[i].isspace():
+        i += 1
+    return i
+
+
+def _skip_ws_back(masked: str, j: int) -> int:
+    while j > 0 and masked[j - 1].isspace():
+        j -= 1
+    return j
+
+
 def operand_fwd(masked: str, i: int, stash=None):
-    """The operand starting at i (whitespace already skipped), or
-    None. Forms: numeric literals, numeric typed literals `T '<n>'`,
+    """The operand starting at i (after any whitespace), or None.
+    Typed forms: numeric literals, numeric typed literals `T '<n>'`,
     string literals, (TRY_)CAST(... AS T), count/sum/min/max/avg calls
     with an OVER suffix absorbed, nan()/infinity(), and parenthesized
-    `+ - * / %` chains. An identifier or '.' just before i declines:
-    the text is part of a longer name or a call. The stash is read
-    only to type a DECIMAL '<n>'."""
+    `+ - * / %` chains. Untyped forms (type None): a dotted name, a
+    call with any head, a typed literal with any head, a bare paren
+    group of two or more parts (a row), and any of these or a call
+    with subscripts `[...]` after it (ARRAY[...] is a subscript of the
+    name ARRAY). A reserved word declines, and so does an identifier
+    or '.' just before the operand: the text is part of a longer name
+    or a call. The stash is read only to type a DECIMAL '<n>'."""
+    i = _skip_ws(masked, i)
     if i >= len(masked) or (i > 0 and masked[i - 1] in _IDENTCH):
         return None
     if masked[i] == "(":
@@ -326,9 +448,13 @@ def operand_fwd(masked: str, i: int, stash=None):
         except ValueError:
             return None
         inner = operand_span(masked, i + 1, past - 1, stash)
-        if inner is None:
+        if inner is not None:
+            op = Operand(i, past, inner.type, inner.lit, inner.ops)
+        elif len(split_top(masked[i + 1:past - 1])) > 1:
+            op = Operand(i, past, None)
+        else:
             return None
-        return Operand(i, past, inner.type, inner.lit, inner.ops)
+        return _subscripts(masked, op)
     m = _TYPED_FWD.match(masked, i)
     if m is not None:
         head = m.group(1).upper()
@@ -344,20 +470,20 @@ def operand_fwd(masked: str, i: int, stash=None):
         except ValueError:
             return None
         op = _call(masked, i, m.group(1), m.end() - 1, past, stash)
-        if op is None or m.group(1).upper() not in _AGGREGATES:
-            return op
-        om = OVER_FWD.match(masked, past)
-        if om is not None:
-            if om.group(1) == "(":
-                try:
-                    op.end = balanced(masked, om.end() - 1)
-                except ValueError:
-                    return None
-            else:
-                op.end = om.end()
-        elif _SUFFIX_STOP.match(masked, past):
-            return None
-        return op
+        if op is not None and m.group(1).upper() in _AGGREGATES:
+            om = OVER_FWD.match(masked, past)
+            if om is not None:
+                if om.group(1) == "(":
+                    try:
+                        op.end = balanced(masked, om.end() - 1)
+                    except ValueError:
+                        return None
+                else:
+                    op.end = om.end()
+            elif _SUFFIX_STOP.match(masked, past):
+                return None
+        if op is not None:
+            return _subscripts(masked, op)
     m = _NUM_FWD.match(masked, i)
     if m is not None:
         if m.end() < len(masked) and masked[m.end()] in _IDENTCH:
@@ -367,14 +493,43 @@ def operand_fwd(masked: str, i: int, stash=None):
     m = _STR_FWD.match(masked, i)
     if m is not None:
         return Operand(i, m.end(), "varchar")
-    return None
+    m = _NAME_FWD.match(masked, i)
+    if m is None or m.group(0).upper() in _RESERVED:
+        return None
+    end = m.end()
+    k = _skip_ws(masked, end)
+    if masked[k:k + 1] == "(":
+        try:
+            end = balanced(masked, k)
+        except ValueError:
+            return None
+    elif "." not in m.group(0):
+        sm = _STR_FWD.match(masked, end)
+        end = sm.end() if sm is not None else end
+    return _subscripts(masked, Operand(i, end, None))
+
+
+def _subscripts(masked: str, op):
+    """op with the subscripts `[...]` written after it; untyped when
+    there are any; None when one does not close."""
+    k = _skip_ws(masked, op.end)
+    if masked[k:k + 1] != "[":
+        return op
+    while masked[k:k + 1] == "[":
+        try:
+            end = balanced(masked, k)
+        except ValueError:
+            return None
+        k = _skip_ws(masked, end)
+    return Operand(op.start, end, None)
 
 
 def operand_back(masked: str, j: int, stash=None):
-    """The operand ending just before j (masked[j - 1] is its last
-    character), or None. Reading back only finds where such an operand
-    would start; the operand itself is operand_fwd's from there, kept
-    when it ends exactly at j, so both directions parse one grammar."""
+    """The operand ending just before j (after any whitespace before
+    j), or None. Reading back only finds where such an operand would
+    start; the operand itself is operand_fwd's from there, kept when
+    it ends exactly there, so both directions parse one grammar."""
+    j = _skip_ws_back(masked, j)
     try:
         start = _start_back(masked, j)
     except ValueError:
@@ -385,17 +540,64 @@ def operand_back(masked: str, j: int, stash=None):
     return op if op is not None and op.end == j else None
 
 
+def unary_start(masked: str, start: int) -> int:
+    """Where the operand starting at `start` begins once the unary
+    signs written before it count in. SqlBase.g4 binds a unary sign
+    tighter than every binary operator, and a '+' or '-' is unary when
+    no operand ends just before it: no name, number, string or bracket
+    group, only an operator, an opening bracket, a comma, a reserved
+    word other than the END closing a CASE, or the start of the
+    text."""
+    while True:
+        j = _skip_ws_back(masked, start)
+        if j == 0 or masked[j - 1] not in "+-":
+            return start
+        p = _skip_ws_back(masked, j - 1)
+        if p > 0 and (masked[p - 1] in _IDENTCH or masked[p - 1] in ")]"):
+            hm = _HEAD_BACK.search(masked, 0, p)
+            word = "" if hm is None else hm.group(0).upper()
+            if word not in _RESERVED or word == "END":
+                return start
+        start = j - 1
+
+
+def skip_signs(masked: str, i: int, hi: int | None = None) -> int:
+    """The index past the whitespace and unary signs from i (before
+    hi): where the operand they prefix starts."""
+    if hi is None:
+        hi = len(masked)
+    while i < hi and (masked[i].isspace() or masked[i] in "+-"):
+        i += 1
+    return i
+
+
+def _head_back(masked: str, k: int) -> int:
+    """The start of the non-reserved word a bracket group or a string
+    placeholder at k hangs off, else k."""
+    hm = _HEAD_BACK.search(masked, 0, k)
+    if hm is None or hm.group(0).rstrip().upper() in _RESERVED:
+        return k
+    return hm.start()
+
+
 def _start_back(masked: str, j: int):
-    """The start of the candidate operand ending at j: the last bracket
-    group with its call head (or the aggregate call before an OVER
-    window), else a numeric literal or a string placeholder with its
-    typed-literal head."""
+    """The start of the candidate operand ending at j: the trailing
+    bracket group (with the groups it subscripts) and its head (or the
+    aggregate call before an OVER window), else a numeric literal, a
+    name, or a string placeholder with its typed-literal head."""
     if j <= 0:
         return None
-    k = balanced_back(masked, j) if masked[j - 1] == ")" else j
+    k = j
+    while k > 0 and masked[k - 1] in ")]":
+        closer = masked[k - 1]
+        k = balanced_back(masked, k)
+        h = _skip_ws_back(masked, k)
+        if closer == ")" or not (h > 0 and masked[h - 1] in ")]"):
+            break
+        k = h
     wm = _OVER_BACK.search(masked, 0, k)
     if wm is not None:
-        k = len(masked[:wm.start()].rstrip())
+        k = _skip_ws_back(masked, wm.start())
         if k == 0 or masked[k - 1] != ")":
             return None
         k = balanced_back(masked, k)
@@ -403,11 +605,9 @@ def _start_back(masked: str, j: int):
         m = _TOKEN_BACK.search(masked, 0, j)
         if m is None:
             return None
-        hm = _TYPED_BACK.search(masked, 0, m.start()) \
-            if masked[j - 1] == "\x00" else None
-        return (hm or m).start()
-    hm = _HEAD_BACK.search(masked, 0, k)
-    return hm.start() if hm else k
+        return _head_back(masked, m.start()) \
+            if masked[j - 1] == "\x00" else m.start()
+    return _head_back(masked, k)
 
 
 def operand_span(masked: str, lo: int = 0, hi: int | None = None,
@@ -422,8 +622,7 @@ def operand_span(masked: str, lo: int = 0, hi: int | None = None,
     lit = True
     i = lo
     while True:
-        while i < hi and (masked[i].isspace() or masked[i] in "+-"):
-            i += 1  # unary sign: negation keeps the type
+        i = skip_signs(masked, i, hi)  # negation keeps the type
         op = operand_fwd(masked, i, stash)
         if op is None or op.end > hi:
             return None

@@ -204,3 +204,16 @@ def test_unknown_array_distinct(spark):
     assert _one(spark, "SELECT CAST(NULL AS ARRAY(UNKNOWN)) "
                        "IS DISTINCT FROM CAST(NULL AS ARRAY(UNKNOWN))"
                 ) is False
+
+
+# SqlBase.g4 binds a unary sign tighter than CONCAT, so a signed or
+# parenthesized element is one operand of `||` (ArrayConcatFunction's
+# element append / prepend)
+@pytest.mark.parametrize("expr,expected", [
+    ("-1 || ARRAY[2]", [-1, 2]),
+    ("ARRAY[1] || -2", [1, -2]),
+    ("ARRAY[1] || (-2)", [1, -2]),
+    ("(-1) || ARRAY[2]", [-1, 2]),
+])
+def test_signed_element_concat(spark, expr, expected):
+    assert _one(spark, f"SELECT {expr}") == expected

@@ -156,6 +156,11 @@ def test_try_unsupported_shape_raises_loudly():
 
     with _pytest.raises(TryShapeNotSupportedError, match="TRY shape not supported"):
         presto_to_spark_sql("SELECT TRY(regexp_extract(x, p))")
+    # a sign after a reserved word or an operator is unary, no split
+    # point for the arithmetic lowering
+    for body in ("CASE WHEN c THEN 1 ELSE -1 END", "a || -1"):
+        with _pytest.raises(TryShapeNotSupportedError):
+            presto_to_spark_sql(f"SELECT TRY({body})")
     # r11: json_parse gained a real absorber (Spark try_parse_json);
     # r13 added the jackson-strict trailing-content guard, absorbed
     # to NULL under TRY

@@ -282,6 +282,12 @@ def test_negated_decimal_cast_rewrite_boundaries():
     assert presto_to_spark_sql(
         "SELECT b -CAST(a AS DECIMAL(38,0)) FROM t"
     ) == "SELECT b -CAST(a AS DECIMAL(38,0)) FROM t"
+    # so is the END closing a CASE
+    assert presto_to_spark_sql(
+        "SELECT CASE WHEN c THEN a ELSE b END - CAST(x AS DECIMAL(38,2)) "
+        "FROM t"
+    ) == ("SELECT CASE WHEN c THEN a ELSE b END - "
+          "CAST(x AS DECIMAL(38,2)) FROM t")
     # closing paren before the '-' is binary too
     assert presto_to_spark_sql(
         "SELECT f(x) - CAST(a AS DECIMAL(38,0)) FROM t"

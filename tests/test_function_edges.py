@@ -781,6 +781,10 @@ VALUE_CASES += [
           Decimal("90.6"), f"{DO}:87"),
     _case("dec_sub_zero_scale16", "DECIMAL '.1234567890123456' - DECIMAL '.1234567890123456'",
           Decimal("0"), f"{DO}:90"),
+    # a minus after the END closing a CASE is binary: no negation
+    # lowering may take it for a sign
+    _case("dec_sub_after_case_end", "CASE WHEN true THEN CAST(1 AS DECIMAL(38,2)) END - CAST('0.5' AS DECIMAL(38,2))",
+          Decimal("0.50"), f"{DO}:87"),
     # multiply (:138-167)
     _case("dec_mul_38digit_by3", "DECIMAL '12345678901234567890123456789012345678' * DECIMAL '3'",
           Decimal("37037036703703703670370370367037037034"), f"{DO}:155"),

@@ -134,12 +134,15 @@ def test_entry_smoke(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
-def test_tpcds_q68_limit_cut_is_not_a_tie():
-    """sql_tpcds_q68's ORDER BY is a unique key over its un-LIMITed
-    result at sf0.01, so the LIMIT keeps the same rows on any engine.
-    Its inner query groups by (order, customer, ship nation): without
-    ship_nation in the ORDER BY, orders shipped from several nations
-    tie."""
+@pytest.mark.parametrize("name", [
+    "sql_tpcds_q37", "sql_tpcds_q68", "sql_tpcds_q82"])
+def test_limit_cut_is_not_a_tie(name):
+    """The query's ORDER BY is a unique key over its un-LIMITed result
+    at sf0.01, so the LIMIT keeps the same rows on any engine.
+    sql_tpcds_q68's inner query groups by (order, customer, ship
+    nation): without ship_nation in the ORDER BY, orders shipped from
+    several nations tie. q37 and q82 group by (p_name, p_brand,
+    p_retailprice): without p_retailprice, same-named parts tie."""
     import os
 
     import duckdb
@@ -153,7 +156,7 @@ def test_tpcds_q68_limit_cut_is_not_a_tie():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{sf}/{t}.parquet')")
-    body, cut = _QUERIES["sql_tpcds_q68"].oracle.split("\nORDER BY ")
+    body, cut = _QUERIES[name].oracle.split("\nORDER BY ")
     keys = cut.split("\nLIMIT")[0]
     unlimited = "SELECT " + keys + "\nFROM" + body.split("\nFROM", 1)[1]
     n, distinct = con.execute(

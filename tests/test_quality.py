@@ -8,11 +8,15 @@
 - Partition invariance: results must be identical at any shuffle
   width — the property that makes answers stable from local[8] to a
   1000-executor cluster.
+- Module boundaries: no front-door module reaches into another's
+  private names; what the passes share lives in sql/masked.py.
 """
 
 from __future__ import annotations
 
+import ast
 import hashlib
+import os
 import zlib
 
 from pyspark.sql import functions as F
@@ -185,3 +189,24 @@ def test_worker_package_ships_and_closures_shrink(spark):
     # contract), from the repo when the test itself runs there
     assert worker.q.endswith("presto_0_235_spark/operators/qdigest.py")
     assert worker.u.endswith("presto_0_235_spark/functions/udfs.py")
+
+
+def test_sql_modules_import_no_private_names():
+    """A `from presto_0_235_spark.sql.<m> import _name` between two
+    front-door modules is a reader one pass borrows from another;
+    shared readers are public and live in sql/masked.py."""
+    import presto_0_235_spark.sql as sql_pkg
+
+    sql_dir = os.path.dirname(sql_pkg.__file__)
+    borrowed = []
+    for name in sorted(os.listdir(sql_dir)):
+        if not name.endswith(".py"):
+            continue
+        with open(os.path.join(sql_dir, name)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "") \
+                    .startswith("presto_0_235_spark.sql."):
+                borrowed += [f"{name}: {node.module}.{a.name}"
+                             for a in node.names if a.name.startswith("_")]
+    assert borrowed == []
